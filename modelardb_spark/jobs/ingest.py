@@ -6,14 +6,27 @@ Run via spark-submit (north rule):
         --events /root/testdata/sf0.1/events.parquet --out /tmp/mdb
 
 Resume design: the unit of work is the UTC day (= the segment salt, so
-segments and all rollup windows are self-contained per day). Days are
-processed in chunks; each completed chunk dynamically overwrites
-exactly its partition directories and records one checkpoint row per
-day with lineage (input snapshot id) and metrics (rows in/out, wall
-ms). A killed job re-runs only days without a `done` checkpoint for
-the same snapshot, and because writes are per-partition overwrites the
-final tables are identical to a single uninterrupted run (test:
-tests/test_resume.py).
+segments and all rollup windows are self-contained per day). One pass
+over the input, projected to the columns the fit needs, writes the
+`time_series` table and observes which days hold data. Days are
+processed in chunks; each chunk reads the same projection filtered to
+its days, with the chunk's `ts` range pushed down to the scan. Each
+completed chunk dynamically overwrites exactly its partition
+directories and records one checkpoint row per day with lineage (input
+snapshot id) and metrics (rows in/out, wall ms). A killed job re-runs
+only days without a `done` checkpoint for the same snapshot, and
+because writes are per-partition overwrites the final tables are
+identical to a single uninterrupted run (test: tests/test_resume.py).
+The contract is that `snapshot_id` names an immutable input: a re-run
+under the same id must be given the same rows, since nothing of the
+input is kept between runs.
+
+Layout: every table holds one data file per day partition. The fitted
+segments are rebalanced by day once; the segments write and the
+map-only 1m tier inherit that clustering, and the 1h and 1d outputs are
+rebalanced the same way. AQE packs small days into one task and splits
+a day past its advisory partition size (README.md "Scale design" has
+why the file count matters).
 """
 
 from __future__ import annotations
@@ -21,13 +34,13 @@ from __future__ import annotations
 import argparse
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampType
 
 from modelardb_spark.config import EngineConfig
 from modelardb_spark.io.checkpoints import CheckpointStore
-from modelardb_spark.io.tables import DAY_MS, TableCatalog, with_part_key
-from modelardb_spark.operators.fit import fit_segments_wide
+from modelardb_spark.io.tables import DAY_MS, model_type_table, with_part_key
 from modelardb_spark.operators.rollup import (
     HOUR_MS,
     MINUTE_MS,
@@ -39,6 +52,16 @@ from modelardb_spark.operators.series import derive_series_wide
 
 def _day_of_ts(col):
     return (F.unix_millis(F.col(col).cast("timestamp")) / DAY_MS).cast("long")
+
+
+def _ts_bounds(ts_type, days: list[int]):
+    """[lo, hi) literals of the input's own `ts` type around the sorted
+    `days`: compared with the bare column, they reach the scan as
+    pushed filters. TIMESTAMP_NTZ values map to days through the
+    session time zone, so their range is widened by a day each side."""
+    pad = 0 if isinstance(ts_type, TimestampType) else 1
+    lo, hi = (days[0] - pad) * DAY_MS, (days[-1] + 1 + pad) * DAY_MS
+    return [F.timestamp_millis(F.lit(ms)).cast(ts_type) for ms in (lo, hi)]
 
 
 def ingest(
@@ -78,25 +101,32 @@ def ingest(
     catalog = make_catalog(out_root, fmt, catalog_kind)
     ckpt = CheckpointStore(out_root)
 
-    # Stage the input day-partitioned ONCE per snapshot so that each
-    # chunk's read prunes to exactly its partition directories instead
-    # of rescanning the full input per chunk (O(1) passes over the
-    # input instead of O(#chunks)). Resumed runs reuse the staging.
-    staged_name = "staged_transcripts"
-    staged_manifest = catalog.read_manifest(staged_name)
-    if staged_manifest is None or staged_manifest.get("snapshot_id") != snapshot_id:
-        catalog.overwrite(
-            transcripts.withColumn("part_day", _day_of_ts("ts")),
-            staged_name,
-            ["part_day"],
-        )
-        catalog.write_manifest(staged_name, {"snapshot_id": snapshot_id})
-    staged = catalog.read(spark, staged_name)
+    # the columns derive+fit read; each chunk re-reads them for its days
+    turns = transcripts.select("conv_id", "ts", "tool")
+    ts_type = turns.schema["ts"].dataType
 
-    # day inventory from the partition directory listing — no data scan
-    days = [int(v) for v in catalog.list_partitions(staged_name, "part_day")]
+    # metadata tables (reference storage schema: time_series with
+    # per-series scaling + model_type, JDBCStorage.scala:47-52). The
+    # time_series write is the one pass over the input that also
+    # observes the day inventory.
+    from modelardb_spark.operators.transform import time_series_metadata
+
+    inventory = Observation("inventory")
+    series_keys = turns.observe(
+        inventory, F.collect_set(_day_of_ts("ts")).alias("days")
+    ).select(
+        "conv_id",
+        F.explode(F.array(*[F.lit(m) for m in cfg.metrics])).alias("metric"),
+    )
+    # scaling={} -> factor 1.0 recorded for every series (the ingest
+    # path applies no scaling; the table records what WAS applied)
+    catalog.overwrite(time_series_metadata(series_keys, scaling={}), "time_series")
+    # on an empty input AQE replaces the plan under the metadata
+    # distinct with an empty relation, and the observed row has no fields
+    days = [] if turns.isEmpty() else sorted(inventory.get["days"])
+
     done = ckpt.done_partitions("segments", snapshot_id)
-    todo = sorted(d for d in days if str(d) not in done)
+    todo = [d for d in days if str(d) not in done]
     metrics = {"days_total": len(days), "days_skipped": len(days) - len(todo)}
 
     chunks = [todo[i : i + chunk_days] for i in range(0, len(todo), chunk_days)]
@@ -105,11 +135,13 @@ def ingest(
         if fail_after_chunks is not None and ci >= fail_after_chunks:
             raise RuntimeError("injected failure for resume test")
         t0 = time.time()
-        # partition-column filter -> directory pruning: only this
-        # chunk's files are listed and read
-        part = staged.where(
-            F.col("part_day").isin([int(d) for d in chunk])
-        ).drop("part_day")
+        # the ts range lets the scan skip files and row groups; the day
+        # filter decides which rows belong to the chunk
+        lo, hi = _ts_bounds(ts_type, chunk)
+        part = turns.where(
+            (F.col("ts") >= lo) & (F.col("ts") < hi)
+            & _day_of_ts("ts").isin(chunk)
+        )
         if grouped:
             from modelardb_spark.operators.groupfit import fit_segments_grouped
 
@@ -129,13 +161,24 @@ def ingest(
             segments = with_part_key(
                 fit_segments_from_transcripts(part, cfg), cfg.conv_buckets
             )
-        segments = segments.persist()
-        seg_rows = segments.count()
+        # one task per day: the segments and the map-only 1m tier then
+        # write one file per day
+        segments = segments.hint("rebalance", "part_day").persist()
+        # "n" counts stored values on both the per-series and the
+        # group segment schemas (group seg_cnt is a per-member array);
+        # this collect also fills the cache the writes below read
+        stats = {
+            r["part_day"]: r
+            for r in segments.groupBy("part_day")
+            .agg(F.count("*").alias("segs"), F.sum("n").alias("points"))
+            .collect()
+        }
         # sort within files so parquet row-group min/max stats prune by
         # model type, conversation, and time (Iceberg analogue:
-        # write-ordered-by)
+        # write-ordered-by); part_day leads because the partitioned
+        # writer needs rows grouped by it and re-sorts otherwise
         catalog.overwrite_partitions(
-            segments.sortWithinPartitions("mtid", "conv_id", "start_ms"),
+            segments.sortWithinPartitions("part_day", "mtid", "conv_id", "start_ms"),
             "segments",
             ["part_day"],
         )
@@ -159,22 +202,16 @@ def ingest(
         catalog.overwrite_partitions(r1m, "rollup_1m", ["part_day"])
         r1h = _tier(HOUR_MS).withColumn(
             "part_day", (F.col("window_ms") / DAY_MS).cast("long")
-        ).persist()
+        ).hint("rebalance", "part_day").persist()
         catalog.overwrite_partitions(r1h, "rollup_1h", ["part_day"])
         r1d = rollup_cascade(r1h, DAY_MS).withColumn(
             "part_day", (F.col("window_ms") / DAY_MS).cast("long")
-        )
+        ).hint("rebalance", "part_day")
         catalog.overwrite_partitions(r1d, "rollup_1d", ["part_day"])
 
         wall_ms = int((time.time() - t0) * 1000)
-        # "n" counts stored values on both the per-series and the
-        # group segment schemas (group seg_cnt is a per-member array)
-        per_day = segments.groupBy("part_day").agg(
-            F.count("*").alias("segs"), F.sum("n").alias("points")
-        )
-        stats = {str(r["part_day"]): r for r in per_day.collect()}
         for d in chunk:
-            r = stats.get(str(d))
+            r = stats.get(d)
             ckpt.record(
                 "segments",
                 partition_id=str(d),
@@ -183,26 +220,10 @@ def ingest(
                 rows_out=int(r["segs"]) if r else 0,
                 wall_ms=wall_ms // max(1, len(chunk)),
             )
-        rows_out_total += seg_rows
+        rows_out_total += sum(int(r["segs"]) for r in stats.values())
         segments.unpersist()
         r1h.unpersist()
 
-    # metadata tables (reference storage schema: time_series with
-    # per-series scaling + model_type, JDBCStorage.scala:47-52)
-    from modelardb_spark.io.tables import model_type_table
-    from modelardb_spark.operators.transform import time_series_metadata
-
-    series_keys = (
-        staged.select("conv_id")
-        .distinct()
-        .select(
-            "conv_id",
-            F.explode(F.array(*[F.lit(m) for m in cfg.metrics])).alias("metric"),
-        )
-    )
-    # scaling={} -> factor 1.0 recorded for every series (the ingest
-    # path applies no scaling; the table records what WAS applied)
-    catalog.overwrite(time_series_metadata(series_keys, scaling={}), "time_series")
     catalog.overwrite(model_type_table(spark), "model_type")
 
     catalog.write_manifest(

@@ -4,13 +4,15 @@ reconstructing points where the model allows.
 This is the engine's headline capability, the Spark-first re-expression
 of the reference's 40 time-cube UDAFs + COUNT_S/MIN_S/MAX_S/SUM_S/AVG_S
 (SparkUDAF.scala:34-394, splitting engine Segment.cube,
-Segment.java:122-155). Instead of custom UDAFs, each segment is split
-at window boundaries with ``explode(sequence(...))`` and the per-
-(segment ∩ window) partial aggregate is a *closed-form column
-expression* for PMC/Swing segments — whole-stage-codegen'd, no Python —
-while Gorilla/raw segments take a vectorized `mapInPandas` decode path
-(NumPy ``reduceat`` per window). Catalyst's hash aggregation supplies
-the partial/final merge the reference hand-wrote as Aggregators.
+Segment.java:122-155). One `mapInPandas` kernel (`_fused_partials`)
+reads every segment once and emits one partial row per (segment ∩
+window): PMC/Swing segments take NumPy closed forms that match the
+Catalyst column expressions of `_analytic_partials` bit for bit, and
+Gorilla/raw segments are decoded in lockstep and reduced per window
+with ``reduceat``. Catalyst's hash aggregation supplies the
+partial/final merge the reference hand-wrote as Aggregators, in one
+exchange; the finest tier (window == bin) skips it and is map-only.
+`rollup_cascade` re-aggregates a finer tier into a coarser one.
 
 Counts are pure timestamp arithmetic ``(sub_end - sub_start)/interval
 + 1`` and therefore always exact (SparkUDAF.scala:34-55 semantics).

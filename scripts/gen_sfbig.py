@@ -95,9 +95,9 @@ def gen_embeddings(rng: np.random.Generator, n: int, dim: int = 64):
 
 
 def gen_events(rng: np.random.Generator, n: int, n_users: int):
-    days_ms = 30 * 86_400_000_000  # microseconds over 30 days
+    days_us = 30 * 86_400_000_000  # microseconds over 30 days
     base = np.datetime64("2024-01-01T00:00:00", "us")
-    ts = base + np.sort(rng.integers(0, days_ms, size=n))
+    ts = base + np.sort(rng.integers(0, days_us, size=n))
     return pa.table(
         {
             "event_id": pa.array(np.arange(n), pa.int64()),

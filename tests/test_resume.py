@@ -81,23 +81,84 @@ def test_resume_after_injected_failure(spark, transcripts, tmp_path, fmt):
     assert all(r["rows_out"] > 0 for r in rows)
 
 
-def test_staged_input_prunes_partitions(spark, transcripts, tmp_path):
-    """Chunk reads must hit only the chunk's staged partition dirs —
-    O(1) passes over the input, not O(#chunks) full rescans."""
-    root = str(tmp_path / "staged")
-    ingest(spark, transcripts, root, EngineConfig(), snapshot_id="s1", chunk_days=2)
-    catalog = TableCatalog(root)
-    days = [int(d) for d in catalog.list_partitions("staged_transcripts", "part_day")]
-    assert len(days) > 2
-    staged = catalog.read(spark, "staged_transcripts")
-    one = staged.where(F.col("part_day") == days[0])
-    plan = one._jdf.queryExecution().executedPlan().toString()
-    # partition-column filter shows up as a PartitionFilter (directory
-    # pruning), not a post-scan data filter; the pruned scan reads only
-    # this day's files
-    assert "PartitionFilters" in plan
-    pf = plan.split("PartitionFilters", 1)[1].split("]", 1)[0]
-    assert "part_day" in pf and f"= {days[0]}" in pf
+def test_chunk_scan_pushes_ts_bounds(spark, transcripts, tmp_path, monkeypatch):
+    """Each chunk reads the input itself, not a staged copy: its scan
+    carries the chunk's ts range as pushed filters, so a chunk skips
+    the files and row groups outside its days."""
+    import modelardb_spark.operators.fit as fitmod
+
+    src = str(tmp_path / "in.parquet")
+    transcripts.write.parquet(src)
+    chunk_inputs = []
+    fit = fitmod.fit_segments_from_transcripts
+
+    def spy(part, cfg):
+        chunk_inputs.append(part)
+        return fit(part, cfg)
+
+    monkeypatch.setattr(fitmod, "fit_segments_from_transcripts", spy)
+    root = str(tmp_path / "out")
+    ingest(spark, spark.read.parquet(src), root, EngineConfig(),
+           snapshot_id="s1", chunk_days=2)
+    assert not os.path.exists(os.path.join(root, "staged_transcripts"))
+    days = sorted(int(d) for d in TableCatalog(root).list_partitions("segments", "part_day"))
+    assert len(chunk_inputs) == (len(days) + 1) // 2 > 1
+    ts_text = spark._jvm.java.sql.Timestamp
+    for i, part in enumerate(chunk_inputs):
+        chunk = days[2 * i : 2 * i + 2]
+        plan = part._jdf.queryExecution().executedPlan().toString()
+        pushed = plan.split("PushedFilters: [", 1)[1].split("]", 1)[0]
+        lo = ts_text(chunk[0] * DAY_MS).toString()
+        hi = ts_text((chunk[-1] + 1) * DAY_MS).toString()
+        assert f"GreaterThanOrEqual(ts,{lo})" in pushed, pushed
+        assert f"LessThan(ts,{hi})" in pushed, pushed
+
+
+@pytest.fixture(scope="module")
+def ingested(spark, transcripts, tmp_path_factory):
+    root = str(tmp_path_factory.mktemp("layout"))
+    ingest(spark, transcripts, root, EngineConfig(), snapshot_id="s1")
+    return root
+
+
+def _data_files(table_root):
+    """{part_day directory: its data files} of one table."""
+    return {
+        d: sorted(f for f in os.listdir(os.path.join(table_root, d))
+                  if not f.startswith((".", "_")))
+        for d in os.listdir(table_root) if d.startswith("part_day=")
+    }
+
+
+def test_one_data_file_per_day(ingested):
+    for name in ("segments", "rollup_1m", "rollup_1h", "rollup_1d"):
+        files = _data_files(os.path.join(ingested, name))
+        assert len(files) > 2, name
+        assert {d: len(f) for d, f in files.items()} == dict.fromkeys(files, 1), name
+
+
+def test_segment_files_keep_write_order(ingested):
+    """Rows within each segment file are ordered by (mtid, conv_id,
+    start_ms), so row-group min/max statistics prune on those columns."""
+    import pyarrow.parquet as pq
+
+    base = os.path.join(ingested, "segments")
+    for d, files in _data_files(base).items():
+        for f in files:
+            t = pq.read_table(os.path.join(base, d, f),
+                              columns=["mtid", "conv_id", "start_ms"])
+            keys = list(zip(*(t.column(c).to_pylist() for c in t.column_names)))
+            assert keys == sorted(keys), f"{d}/{f}"
+
+
+def test_empty_input_ingests_no_days(spark, transcripts, tmp_path):
+    """An input without rows yields no days and an empty time_series
+    table, also when the rows are filtered out only at run time."""
+    root = str(tmp_path / "empty")
+    m = ingest(spark, transcripts.where(F.col("conv_id") == "absent"), root,
+               EngineConfig(), snapshot_id="s1")
+    assert (m["days_total"], m["segments_written"]) == (0, 0)
+    assert TableCatalog(root).read(spark, "time_series").count() == 0
 
 
 def test_ingest_rejects_multi_day_salt(spark, transcripts, tmp_path):
