@@ -12,11 +12,17 @@ mtid, model)`` represents ``n = (end - start) / interval + 1`` points at
   unrounded doubles;
 - Gorilla (mtid 4): the decompressed array;
 - raw (mtid 1): the stored float32 array.
+
+`segment_partials` is the one batched aggregate kernel: per
+(segment ∩ window) count/min/max/sum for every model type, with
+``window_ms=None`` as the whole-segment case. `segment_agg` is the
+scalar per-segment form the fit uses.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 
 from modelardb_spark.models.cascade import (
     MTID_GORILLA,
@@ -60,8 +66,9 @@ def decode_dense_matrix(
     (n_segments, max(lengths)) float32 matrix, row i valid to
     lengths[i]. Gorilla rows decode in vectorized lockstep
     (gorilla_decompress_matrix); raw rows are plain frombuffer casts.
-    This is the Arrow-batch fast path used by grid and the dense
-    rollup partials — no per-value Python anywhere."""
+    Used by grid, the DECODE_SEGMENT SQL function and, through
+    `decode_member_matrix`, by `segment_partials` — no per-value
+    Python anywhere."""
     n = len(models)
     lengths = np.asarray(lengths, dtype=np.int64)
     if n == 0:
@@ -99,6 +106,171 @@ def segment_grid(
     return ts, decode_values(mtid, model, start_ms, end_ms, interval_ms)
 
 
+def decode_member_matrix(
+    seg: pd.DataFrame,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """Batched decode of DENSE (Gorilla / raw) segment rows: returns
+    ``(values, n, start_ms, interval_ms)`` with `values` an
+    (rows, max(n)) float32 matrix, row i valid to n[i].
+
+    Rows with ``goff, gsize`` columns are members of interleaved group
+    segments: each group payload decodes once and member i takes every
+    gsize-th value from offset goff. Members exploded from one group
+    row arrive consecutively and share (group key, start_ms, end_ms),
+    where the group key is ``ukey`` (dimension groups, whose members'
+    conv_id differs) or else ``conv_id``; such runs decode once, and a
+    non-adjacent duplicate only costs a redundant decode. Rows with
+    gsize 1, and frames without the columns (per-series segments),
+    never merge: two metrics of one conversation can share
+    (conv_id, start_ms, end_ms)."""
+    start = seg["start_ms"].to_numpy().astype(np.int64)
+    end = seg["end_ms"].to_numpy().astype(np.int64)
+    si = seg["interval_ms"].to_numpy().astype(np.int64)
+    n_ts = (end - start) // si + 1
+    rows = len(seg)
+    if "gsize" in seg.columns:
+        gsize = seg["gsize"].to_numpy().astype(np.int64)
+        goff = seg["goff"].to_numpy().astype(np.int64)
+    else:
+        gsize = np.ones(rows, dtype=np.int64)
+        goff = np.zeros(rows, dtype=np.int64)
+    first = gsize == 1
+    first[0] = True
+    if not first.all():
+        key = seg["ukey" if "ukey" in seg.columns else "conv_id"].to_numpy()
+        first[1:] |= (
+            (key[1:] != key[:-1])
+            | (start[1:] != start[:-1])
+            | (end[1:] != end[:-1])
+        )
+    uniq = np.flatnonzero(first)
+    models = list(seg["model"])
+    mat = decode_dense_matrix(
+        seg["mtid"].to_numpy()[uniq],
+        [models[i] for i in uniq],
+        (n_ts * gsize)[uniq],
+    )
+    if (gsize == 1).all():
+        return mat, n_ts, start, si
+    cols = goff[:, None] + gsize[:, None] * np.arange(
+        int(n_ts.max()), dtype=np.int64
+    )
+    np.clip(cols, 0, mat.shape[1] - 1, out=cols)  # inactive tail lanes
+    return mat[(np.cumsum(first) - 1)[:, None], cols], n_ts, start, si
+
+
+def _decoded_partials(seg: pd.DataFrame, window_ms: int | None):
+    """Gorilla/raw rows: decode, then one ``reduceat`` family over the
+    runs of equal (row, window)."""
+    vals, n_ts, start, si = decode_member_matrix(seg)
+    idx = np.arange(vals.shape[1], dtype=np.int64)
+    mask = idx[None, :] < n_ts[:, None]
+    vals = vals[mask]
+    row = np.repeat(np.arange(len(seg)), n_ts)
+    if window_ms is None:
+        wins = start[row]
+    else:
+        ts = (start[:, None] + si[:, None] * idx[None, :])[mask]
+        wins = (ts // window_ms) * window_ms
+    new = np.empty(vals.size, dtype=bool)
+    new[0] = True
+    new[1:] = (row[1:] != row[:-1]) | (wins[1:] != wins[:-1])
+    starts = np.flatnonzero(new)
+    return (
+        row[starts],
+        wins[starts],
+        np.diff(np.append(starts, vals.size)).astype(np.int64),
+        np.minimum.reduceat(vals, starts),
+        np.maximum.reduceat(vals, starts),
+        np.add.reduceat(vals.astype(np.float64), starts),
+    )
+
+
+def _closed_form_partials(seg: pd.DataFrame, window_ms: int | None):
+    """PMC/Swing rows, operation for operation on the same
+    float64/float32 arithmetic as the Catalyst column expressions of
+    the parity oracle (tests/test_plans.py), so the partials are
+    bit-identical to them:
+
+      cnt  = long((sub_end - sub_start) / interval + 1)   [double div]
+      PMC  : vmin = vmax = float32(p0);  vsum = p0 * cnt
+      Swing: first/last = p0 * sub + p1 (float64),
+             min/max by slope sign cast to float32,
+             vsum = (first + last) / 2.0 * cnt
+    """
+    mt = seg["mtid"].to_numpy()
+    s, e, iv = (
+        seg[c].to_numpy().astype(np.int64)
+        for c in ("start_ms", "end_ms", "interval_ms")
+    )
+    p0 = seg["p0"].to_numpy().astype(np.float64)
+    p1 = seg["p1"].to_numpy().astype(np.float64)
+    if window_ms is None:
+        row = np.arange(s.size)
+        win, ss, se = s, s, e
+    else:
+        # window explode: floor-div == Spark's floor(double-div) for
+        # these magnitudes (an integer ms >= 1 away from a window
+        # boundary can never cross it under ~1e-10 double error)
+        w = window_ms
+        nwin = e // w - s // w + 1
+        row = np.repeat(np.arange(s.size), nwin)
+        k = np.arange(row.size, dtype=np.int64) - (np.cumsum(nwin) - nwin)[row]
+        win = (s // w * w)[row] + w * k
+        ss = np.maximum(s[row], win)
+        se = np.minimum(e[row], win + w - iv[row])
+    cnt = ((se - ss) / iv[row] + 1.0).astype(np.int64)
+    pm = mt[row] == MTID_PMC
+    p0g, p1g = p0[row], p1[row]
+    first = p0g * ss + p1g
+    last = p0g * se + p1g
+    p0f = p0g.astype(np.float32)
+    sw_min = np.where(p0g == 0, p1g, np.where(p0g > 0, first, last))
+    sw_max = np.where(p0g == 0, p1g, np.where(p0g < 0, first, last))
+    return (
+        row,
+        win,
+        cnt,
+        np.where(pm, p0f, sw_min.astype(np.float32)),
+        np.where(pm, p0f, sw_max.astype(np.float32)),
+        np.where(pm, p0g * cnt, (first + last) / 2.0 * cnt),
+    )
+
+
+def segment_partials(seg: pd.DataFrame, window_ms: int | None = None):
+    """Per-(segment ∩ window) (count, min, max, sum) of a batch of
+    segment rows: the one implementation of aggregate-on-model (the
+    reference's Segment.cube and SparkUDAF.scala:34-184). Behind every
+    rollup tier, the group and dimension-group rollups and the
+    COUNT_S..AVG_S SQL aggregates.
+
+    `seg` carries ``mtid, model, start_ms, end_ms, interval_ms, p0,
+    p1`` (PMC: p0 = constant; Swing: p0 = slope a, p1 = intercept b)
+    and, for group members, the ``goff, gsize`` columns
+    `decode_member_matrix` reads. PMC/Swing rows take closed forms on
+    p0/p1; Gorilla/raw rows decode and reduce per window.
+    ``window_ms=None`` is one window per segment, keyed by its start:
+    the whole-segment aggregate.
+
+    Returns arrays ``(row, window_ms, cnt, vmin, vmax, vsum)``, one
+    entry per (segment ∩ window), `row` indexing `seg`: the dense rows
+    first, then the PMC/Swing rows, each in (row, window) order. That
+    order is the order in which a following aggregation adds the vsum
+    partials, so it fixes the last bits of the stored sums.
+    """
+    mt = seg["mtid"].to_numpy()
+    ana = (mt == MTID_PMC) | (mt == MTID_SWING)
+    parts = []
+    if not ana.all():
+        dense = np.flatnonzero(~ana)
+        row, *rest = _decoded_partials(seg.iloc[dense], window_ms)
+        parts.append((dense[row], *rest))
+    closed = np.flatnonzero(ana)  # runs on an empty batch too
+    row, *rest = _closed_form_partials(seg.iloc[closed], window_ms)
+    parts.append((closed[row], *rest))
+    return tuple(np.concatenate(col) for col in zip(*parts))
+
+
 def segment_agg_batch(
     mtids: np.ndarray,
     models: list[bytes],
@@ -107,86 +279,51 @@ def segment_agg_batch(
     sis: np.ndarray,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     """Vectorized `segment_agg` over a batch of segment rows: returns
-    (counts, mins, maxs, sums) arrays, bit-identical per row to the
-    scalar path. PMC constants decode as one big-endian frombuffer;
-    Swing (a, b) pairs decode per serialized width (8/12/16 B,
-    swing_model) with the closed-form endpoint min/max and trapezoid
-    sum; the dense rest (Gorilla/raw) is ONE `decode_dense_matrix`
-    lockstep call. This is the Arrow-batch body of the registered
-    COUNT_S..AVG_S SQL aggregates (SparkUDAF.scala:34-184) — no
-    per-segment Python loop."""
+    (counts, mins, maxs, sums) arrays, one entry per row. The model
+    parameters decode from the bytes (PMC constants as one big-endian
+    frombuffer, Swing (a, b) per serialized width, 8/12/16 B per
+    swing_model), then `segment_partials` runs with one window per
+    segment. The Arrow-batch body of the COUNT_S..AVG_S SQL aggregates
+    (SparkUDAF.scala:34-184)."""
     mtids = np.asarray(mtids, dtype=np.int64)
-    starts = np.asarray(starts, dtype=np.int64)
-    ends = np.asarray(ends, dtype=np.int64)
-    sis = np.asarray(sis, dtype=np.int64)
-    counts = (ends - starts) // sis + 1
     n = mtids.size
-    mins = np.empty(n, dtype=np.float64)
-    maxs = np.empty(n, dtype=np.float64)
-    sums = np.empty(n, dtype=np.float64)
-
+    p0 = np.full(n, np.nan)
+    p1 = np.full(n, np.nan)
     pmc = np.flatnonzero(mtids == MTID_PMC)
     if pmc.size:
-        c = np.frombuffer(
-            b"".join(models[i] for i in pmc), dtype=">f4"
-        ).astype(np.float64)
-        mins[pmc] = c
-        maxs[pmc] = c
-        sums[pmc] = c * counts[pmc]
-
+        p0[pmc] = np.frombuffer(b"".join(models[i] for i in pmc), dtype=">f4")
     sw = np.flatnonzero(mtids == MTID_SWING)
-    if sw.size:
-        a = np.empty(sw.size, dtype=np.float64)
-        b = np.empty(sw.size, dtype=np.float64)
-        widths = np.array([len(models[i]) for i in sw], dtype=np.int64)
-        for width, dt in (
-            (8, np.dtype([("a", ">f4"), ("b", ">f4")])),
-            (12, np.dtype([("a", ">f4"), ("b", ">f8")])),
-            (16, np.dtype([("a", ">f8"), ("b", ">f8")])),
-        ):
-            sel = np.flatnonzero(widths == width)
-            if sel.size:
-                rec = np.frombuffer(
-                    b"".join(models[sw[i]] for i in sel), dtype=dt
-                )
-                a[sel] = rec["a"].astype(np.float64)
-                b[sel] = rec["b"].astype(np.float64)
-        first = a * starts[sw] + b
-        last = a * ends[sw] + b
-        f32_first = first.astype(np.float32).astype(np.float64)
-        f32_last = last.astype(np.float32).astype(np.float64)
-        up = a > 0
-        mins[sw] = np.where(up, f32_first, f32_last)
-        maxs[sw] = np.where(up, f32_last, f32_first)
-        sums[sw] = (first + last) / 2.0 * counts[sw]
-
-    dense = np.flatnonzero(np.isin(mtids, (MTID_GORILLA, MTID_RAW)))
-    if dense.size:
-        lens = counts[dense]
-        mat = decode_dense_matrix(
-            mtids[dense], [models[i] for i in dense], lens
+    widths = np.array([len(models[i]) for i in sw], dtype=np.int64)
+    for width, dt in (
+        (8, np.dtype([("a", ">f4"), ("b", ">f4")])),
+        (12, np.dtype([("a", ">f4"), ("b", ">f8")])),
+        (16, np.dtype([("a", ">f8"), ("b", ">f8")])),
+    ):
+        sel = sw[widths == width]
+        if sel.size:
+            rec = np.frombuffer(b"".join(models[i] for i in sel), dtype=dt)
+            p0[sel] = rec["a"]
+            p1[sel] = rec["b"]
+    row, _, cnt, vmin, vmax, vsum = segment_partials(
+        pd.DataFrame(
+            {
+                "mtid": mtids,
+                "model": models,
+                "start_ms": starts,
+                "end_ms": ends,
+                "interval_ms": sis,
+                "p0": p0,
+                "p1": p1,
+            }
         )
-        valid = np.arange(mat.shape[1])[None, :] < lens[:, None]
-        mins[dense] = np.where(valid, mat, np.float32(np.inf)).min(axis=1)
-        maxs[dense] = np.where(valid, mat, np.float32(-np.inf)).max(axis=1)
-        # mask the padding (lockstep Gorilla rows carry garbage past
-        # lengths[i]); pairwise blocking may differ from the scalar
-        # path by <1 ulp — the SQL surface rounds at 6
-        sums[dense] = (
-            np.where(valid, mat, np.float32(0)).astype(np.float64).sum(axis=1)
-        )
-
-    known = (
-        (mtids == MTID_PMC)
-        | (mtids == MTID_SWING)
-        | (mtids == MTID_GORILLA)
-        | (mtids == MTID_RAW)
     )
-    if not known.all():
-        raise ValueError(
-            f"unknown mtid(s) {sorted(set(mtids[~known].tolist()))}"
-        )
-    return counts, mins, maxs, sums
+    order = np.argsort(row)  # one partial per row: a permutation
+    return (
+        cnt[order],
+        vmin[order].astype(np.float64),
+        vmax[order].astype(np.float64),
+        vsum[order],
+    )
 
 
 def segment_agg(

@@ -31,10 +31,13 @@ Scale design:
   emitted with pure NumPy across ALL groups in the batch; only
   genuinely mixed runs enter the per-run cascade.
 - **Aggregate-on-model columns**: seg_cnt/min/max/sum and decoded
-  model parameters (p0, p1) are materialized at fit time, so rollups
-  and min/max/sum/avg queries are plain Catalyst aggregations and
-  never re-enter Python for PMC/Swing segments (the reference's
-  SparkUDAF.scala layer becomes schema design).
+  model parameters (p0, p1) are materialized at fit time. Whole-series
+  aggregates (`segment_aggregates`) are plain Catalyst aggregations
+  over the seg_* columns; the windowed rollups run the
+  `models.segment.segment_partials` kernel in one Python pass, which
+  takes the PMC/Swing closed forms from p0/p1 without touching their
+  model bytes and decodes only Gorilla/raw (the reference's
+  SparkUDAF.scala layer becomes schema plus one NumPy kernel).
 """
 
 from __future__ import annotations

@@ -73,9 +73,10 @@ from modelardb_spark.models.gorilla import (
     gorilla_decompress,
 )
 from modelardb_spark.models.pmc_mean import pmc_model, pmc_prefix, pmc_value
+from modelardb_spark.models.segment import decode_member_matrix
 from modelardb_spark.models.swing import swing_minmax, swing_model, swing_sum
 from modelardb_spark.models.uncompressed import raw_decode, raw_model
-from modelardb_spark.operators.rollup import ROLLUP_SCHEMA
+from modelardb_spark.operators.rollup import merge_partials, window_partials
 
 GROUP_SEGMENT_SCHEMA = StructType(
     [
@@ -711,50 +712,6 @@ _POINT_SCHEMA = StructType(
 )
 
 
-def _decode_member_batch(pdf: pd.DataFrame):
-    """Whole-batch decode of exploded dense group members: the
-    interleaved payload of each UNIQUE segment decodes once (members
-    exploded from one group row arrive consecutively, so consecutive
-    (conv_id, start, end) runs collapse; a non-adjacent duplicate only
-    costs a redundant decode, never correctness), then a strided
-    gather per member — returns (member_matrix (S, max_ts), n_ts,
-    start, si)."""
-    from modelardb_spark.models.segment import decode_dense_matrix
-
-    # members of one group row share `ukey` (the group key) even when
-    # their logical conv_id differs (dimension-driven cross-entity
-    # groups); per-conversation groups fall back to conv_id
-    conv = (
-        pdf["ukey"] if "ukey" in pdf.columns else pdf["conv_id"]
-    ).to_numpy()
-    start = pdf["start_ms"].to_numpy().astype(np.int64)
-    end = pdf["end_ms"].to_numpy().astype(np.int64)
-    si = pdf["interval_ms"].to_numpy().astype(np.int64)
-    gsize = pdf["gsize"].to_numpy().astype(np.int64)
-    goff = pdf["goff"].to_numpy().astype(np.int64)
-    n_ts = (end - start) // si + 1
-    totals = n_ts * gsize
-
-    first = np.ones(len(pdf), dtype=bool)
-    if len(pdf) > 1:
-        first[1:] = (
-            (conv[1:] != conv[:-1])
-            | (start[1:] != start[:-1])
-            | (end[1:] != end[:-1])
-        )
-    uniq = np.flatnonzero(first)
-    seg_of_row = np.cumsum(first) - 1
-    models = list(pdf["model"])
-    mat = decode_dense_matrix(
-        pdf["mtid"].to_numpy()[uniq], [models[i] for i in uniq], totals[uniq]
-    )
-    max_ts = int(n_ts.max()) if len(pdf) else 0
-    cols = goff[:, None] + gsize[:, None] * np.arange(max_ts, dtype=np.int64)
-    np.clip(cols, 0, mat.shape[1] - 1, out=cols)  # inactive tail lanes
-    member = mat[seg_of_row[:, None], cols]
-    return member, n_ts, start, si
-
-
 def grid_group(
     gseg: DataFrame, metrics: tuple[str, ...] = ("turn_rate", "tool_usage")
 ) -> DataFrame:
@@ -786,7 +743,7 @@ def grid_group(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            member, n_ts, start, si = _decode_member_batch(pdf)
+            member, n_ts, start, si = decode_member_matrix(pdf)
             idx = np.arange(member.shape[1], dtype=np.int64)
             mask = idx[None, :] < n_ts[:, None]
             yield pd.DataFrame(
@@ -810,75 +767,18 @@ def rollup_from_group_segments(
     window_ms: int,
     metrics: tuple[str, ...] = ("turn_rate", "tool_usage"),
 ) -> DataFrame:
-    """Windowed rollup straight from group segments: PMC members use
-    the closed-form splitting partials (pure JVM, shared with the
-    per-series path); dense members decode once with the group stride
-    and reduce per window (NumPy reduceat)."""
+    """Windowed rollup straight from group segments: the exploded
+    members run through the same partials kernel as per-series
+    segments (closed forms for PMC/Swing, dense members decode once
+    with the group stride), one final hash aggregation."""
     return _rollup_from_exploded(explode_group_segments(gseg, metrics), window_ms)
 
 
 def _rollup_from_exploded(exploded: DataFrame, window_ms: int) -> DataFrame:
     """Shared rollup tail over an EXPLODED group-segment frame (per-
-    conversation or dimension-driven): analytic closed forms for
-    PMC/Swing members AND the strided dense decode run in ONE
-    mapInPandas pass (round 7 — the former analytic Catalyst branch
-    re-ran the whole group fit a second time), one final hash
-    aggregation."""
-    from modelardb_spark.operators.rollup import _analytic_partial_block
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for full in batches:
-            if len(full) == 0:
-                continue
-            mt = full["mtid"].to_numpy()
-            frames = []
-            ana_m = (mt == MTID_PMC) | (mt == MTID_SWING)
-            if ana_m.any():
-                frames.append(
-                    _analytic_partial_block(full[ana_m], window_ms)
-                )
-            pdf = full[~ana_m]
-            if len(pdf):
-                member, n_ts, start, si = _decode_member_batch(pdf)
-                idx = np.arange(member.shape[1], dtype=np.int64)
-                mask = idx[None, :] < n_ts[:, None]
-                vals = member[mask]
-                ts = (start[:, None] + si[:, None] * idx[None, :])[mask]
-                seg_id = np.repeat(np.arange(len(pdf)), n_ts)
-                wins = (ts // window_ms) * window_ms
-                new = np.empty(vals.size, dtype=bool)
-                new[0] = True
-                new[1:] = (seg_id[1:] != seg_id[:-1]) | (wins[1:] != wins[:-1])
-                starts = np.flatnonzero(new)
-                counts = np.diff(np.concatenate((starts, [vals.size])))
-                frames.append(pd.DataFrame(
-                    {
-                        "conv_id": pdf["conv_id"].to_numpy()[seg_id[starts]],
-                        "metric": pdf["metric"].to_numpy()[seg_id[starts]],
-                        "window_ms": wins[starts],
-                        "cnt": counts.astype(np.int64),
-                        "vmin": np.minimum.reduceat(vals, starts),
-                        "vmax": np.maximum.reduceat(vals, starts),
-                        "vsum": np.add.reduceat(vals.astype(np.float64), starts),
-                    }
-                ))
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
-
-    cols = [
-        "conv_id", "metric", "start_ms", "end_ms", "interval_ms",
-        "mtid", "model", "goff", "gsize", "p0", "p1",
-    ] + (["ukey"] if "ukey" in exploded.columns else [])
-    partials = exploded.select(*cols).mapInPandas(run, ROLLUP_SCHEMA)
-    return (
-        partials.groupBy("conv_id", "metric", "window_ms")
-        .agg(
-            F.sum("cnt").alias("cnt"),
-            F.min("vmin").alias("vmin"),
-            F.max("vmax").alias("vmax"),
-            F.sum("vsum").alias("vsum"),
-        )
-        .withColumn("mean", F.col("vsum") / F.col("cnt"))
+    conversation or dimension-driven)."""
+    return merge_partials(
+        window_partials(exploded, window_ms), "conv_id", "metric", "window_ms"
     )
 
 
@@ -1016,26 +916,19 @@ def rollup_adaptive(
     window_ms: int,
     metrics: tuple[str, ...] = ("turn_rate", "tool_usage"),
 ) -> DataFrame:
-    """Rollup over an adaptive fit. The union is RE-AGGREGATED: with
-    per-day routing a conversation may sit in the group path on one
-    day and per-series on the next, so a window spanning a routing
-    boundary has partial rows in both branches; the merge (sum/min/max
-    are associative over disjoint point sets) is exact for every
-    window width, not just salt-aligned ones."""
-    from modelardb_spark.operators.rollup import rollup_from_segments
-
-    u = rollup_from_group_segments(gseg, window_ms, metrics).unionByName(
-        rollup_from_segments(pseg, window_ms)
-    )
-    return (
-        u.groupBy("conv_id", "metric", "window_ms")
-        .agg(
-            F.sum("cnt").alias("cnt"),
-            F.min("vmin").alias("vmin"),
-            F.max("vmax").alias("vmax"),
-            F.sum("vsum").alias("vsum"),
-        )
-        .withColumn("mean", F.col("vsum") / F.col("cnt"))
+    """Rollup over an adaptive fit: the group and per-series PARTIALS
+    are unioned and aggregated once. With per-day routing a
+    conversation may sit in the group path on one day and per-series
+    on the next, so a window spanning a routing boundary has partial
+    rows in both branches; the merge (sum/min/max are associative over
+    disjoint point sets) is exact for every window width, not just
+    salt-aligned ones."""
+    return merge_partials(
+        window_partials(explode_group_segments(gseg, metrics), window_ms)
+        .unionByName(window_partials(pseg, window_ms)),
+        "conv_id",
+        "metric",
+        "window_ms",
     )
 
 

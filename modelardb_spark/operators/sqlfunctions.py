@@ -45,10 +45,9 @@ from modelardb_spark.models.segment import segment_agg_batch
 
 
 def _seg_agg_arrays(mtid, model, start, end, si):
-    """Vectorized per-group aggregate arrays: one `segment_agg_batch`
-    call per Arrow batch (mtid-partitioned closed forms + a single
-    lockstep dense decode) — replaces the per-segment Python loop the
-    round-2 verdict flagged."""
+    """Per-segment (counts, mins, maxs, sums) arrays of one Arrow
+    batch: one `segment_agg_batch` call, i.e. the `segment_partials`
+    kernel with one window per segment."""
     return segment_agg_batch(
         mtid.to_numpy(),
         [bytes(m) for m in model],

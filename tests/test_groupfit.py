@@ -68,13 +68,15 @@ def test_group_grid_reconstructs_exactly(spark, wide, gseg):
     assert got == want
 
 
-def test_group_rollup_matches_raw(spark, wide, gseg):
+def _assert_rollup_matches_raw(wide, got, window_ms):
     raw = (
         _narrow(wide)
         .groupBy(
             "conv_id",
             "metric",
-            ((F.col("bin_ms") / HOUR_MS).cast("long") * HOUR_MS).alias("window_ms"),
+            ((F.col("bin_ms") / window_ms).cast("long") * window_ms).alias(
+                "window_ms"
+            ),
         )
         .agg(
             F.count("*").alias("cnt"),
@@ -83,7 +85,6 @@ def test_group_rollup_matches_raw(spark, wide, gseg):
             F.sum(F.col("value").cast("double")).alias("vsum"),
         )
     )
-    got = rollup_from_group_segments(gseg, HOUR_MS, METRICS)
     a = {
         (r["conv_id"], r["metric"], r["window_ms"]): (
             r["cnt"], r["vmin"], r["vmax"], round(r["vsum"], 6),
@@ -97,6 +98,51 @@ def test_group_rollup_matches_raw(spark, wide, gseg):
         for r in got.collect()
     }
     assert a == b
+
+
+def test_group_rollup_matches_raw(spark, wide, gseg):
+    _assert_rollup_matches_raw(
+        wide, rollup_from_group_segments(gseg, HOUR_MS, METRICS), HOUR_MS
+    )
+
+
+def test_rollup_adaptive_merges_across_routing_boundary(spark):
+    """Per-day routing groups a conversation on a day its members move
+    together and fits it per series on a day they do not. A 7-day
+    window holding both days has partials from both branches and must
+    still equal the raw-points rollup."""
+    from modelardb_spark.operators.groupfit import (
+        fit_segments_adaptive,
+        rollup_adaptive,
+    )
+
+    day, week = 86_400_000, 7 * 86_400_000
+    base = 1_704_067_200_000  # 2024-01-01: days 0 and 1 share one week
+    rows = []
+    for conv, together in (("a", (True, False)), ("b", (False, True)),
+                           ("c", (True, True))):
+        for d, same in enumerate(together):
+            for i in range(90):
+                x = float(i % 7 + 1)
+                rows.append((conv, base + d * day + i * 60_000, x,
+                             2 * x if same else 8 - x))
+    wide = spark.createDataFrame(
+        rows, "conv_id string, bin_ms long, turn_rate double, tool_usage double"
+    )
+    g, p = fit_segments_adaptive(wide, CFG, METRICS, per_day=True)
+
+    def days(segs):
+        return {
+            (r[0], (r[1] - base) // day)
+            for r in segs.select("conv_id", "start_ms").collect()
+        }
+
+    grouped, single = days(g), days(p)
+    assert grouped == {("a", 0), ("b", 1), ("c", 0), ("c", 1)}
+    assert single == {("a", 1), ("b", 0)}
+    _assert_rollup_matches_raw(
+        wide, rollup_adaptive(g, p, week, METRICS), week
+    )
 
 
 def test_group_compression_beats_per_series(spark, wide, gseg):

@@ -256,10 +256,13 @@ def test_segment_agg_matches_grid():
 
 
 def test_segment_agg_batch_matches_scalar():
-    """The vectorized batch aggregate (one frombuffer per model family
-    + one lockstep dense decode) must agree with the scalar
-    `segment_agg` per row across every mtid and Swing width."""
+    """The vectorized batch aggregate (model-byte decode per family,
+    then the `segment_partials` kernel with one window per segment)
+    must agree with the scalar `segment_agg` per row across every mtid
+    and Swing width. The fit produces PMC, 16-byte Swing and Gorilla;
+    8- and 12-byte Swing and raw segments are built by hand."""
     from modelardb_spark.models.segment import segment_agg_batch
+    from modelardb_spark.models.uncompressed import raw_model
 
     rng = np.random.default_rng(33)
     v = np.concatenate(
@@ -271,19 +274,36 @@ def test_segment_agg_batch_matches_scalar():
         ]
     )
     t = ts_of(v.size)
-    segs = fit_run(t, v)
-    assert len({s.mtid for s in segs}) >= 3  # PMC, Swing, dense
-    counts, mins, maxs, sums = segment_agg_batch(
-        np.array([s.mtid for s in segs]),
-        [s.model for s in segs],
-        np.array([s.start_ms for s in segs]),
-        np.array([s.end_ms for s in segs]),
-        np.array([INTERVAL] * len(segs)),
+    rows = [
+        (s.mtid, s.model, s.start_ms, s.end_ms) for s in fit_run(t, v)
+    ]
+    start = 1_704_672_000_000
+    end = start + 49 * INTERVAL
+    for a, b in [
+        (2.0**-30, 3.5),  # a and b float32-exact: 8 bytes
+        (-(2.0**-31), 1.0),
+        (0.0, -2.25),
+        (2.0**-30, 0.1),  # only a float32-exact: 12 bytes
+        (-(2.0**-32), 7.3),
+    ]:
+        rows.append((MTID_SWING, swing_model(a, b), start, end))
+    rows.append(
+        (MTID_RAW, raw_model(rng.normal(0, 5, size=50), 50), start, end)
     )
-    for i, s in enumerate(segs):
-        cnt, lo, hi, total = segment_agg(
-            s.mtid, s.model, s.start_ms, s.end_ms, INTERVAL
-        )
+    widths = {len(m) for mt, m, _, _ in rows if mt == MTID_SWING}
+    assert widths == {8, 12, 16}, widths
+    assert {mt for mt, _, _, _ in rows} == {
+        MTID_RAW, MTID_PMC, MTID_SWING, MTID_GORILLA
+    }
+    counts, mins, maxs, sums = segment_agg_batch(
+        np.array([r[0] for r in rows]),
+        [r[1] for r in rows],
+        np.array([r[2] for r in rows]),
+        np.array([r[3] for r in rows]),
+        np.array([INTERVAL] * len(rows)),
+    )
+    for i, (mtid, model, s_ms, e_ms) in enumerate(rows):
+        cnt, lo, hi, total = segment_agg(mtid, model, s_ms, e_ms, INTERVAL)
         assert counts[i] == cnt
         assert mins[i] == lo
         assert maxs[i] == hi

@@ -89,6 +89,41 @@ def test_rollup_cascade_matches_direct(series, segments):
     assert _mismatches(direct, cascaded, ["conv_id", "metric", "window_ms"]).count() == 0
 
 
+def test_rollup_never_merges_per_series_rows_sharing_keys(spark):
+    """turn_rate and tool_usage segments of one conversation can share
+    (conv_id, start_ms, end_ms). Adjacent in one batch, each must still
+    decode its own payload: only members of one GROUP row share one."""
+    from modelardb_spark.models.gorilla import gorilla_compress
+
+    rng = np.random.default_rng(11)
+    iv, base = MINUTE_MS, 1_704_672_000_000
+    seg_rows, pts = [], []
+    for conv in ("a", "b"):
+        s, n = base, 150
+        for metric in ("turn_rate", "tool_usage"):
+            vals = rng.integers(0, 9, size=n).astype(np.float32)
+            seg_rows.append((conv, metric, s, s + (n - 1) * iv, iv, 4,
+                             gorilla_compress(vals)))
+            pts += [(conv, metric, s + i * iv, float(v))
+                    for i, v in enumerate(vals)]
+    seg = spark.createDataFrame(
+        seg_rows,
+        "conv_id string, metric string, start_ms long, end_ms long, "
+        "interval_ms long, mtid int, model binary",
+    ).select(
+        "*", F.lit(None).cast("double").alias("p0"),
+        F.lit(None).cast("double").alias("p1"),
+    ).coalesce(1)
+    series = spark.createDataFrame(
+        pts, "conv_id string, metric string, bin_ms long, value float"
+    )
+    for window_ms in (MINUTE_MS, HOUR_MS):
+        ours = rollup_from_segments(seg, window_ms)
+        raw = _raw_rollup(series, window_ms)
+        keys = ["conv_id", "metric", "window_ms"]
+        assert _mismatches(ours, raw, keys).count() == 0, window_ms
+
+
 def test_segment_aggregates_match_raw(series, segments):
     ours = segment_aggregates(segments)
     raw = series.groupBy("conv_id", "metric").agg(

@@ -152,6 +152,29 @@ def test_rollup_is_single_hash_agg_pair(spark, sf_small, tmp_path):
         "Exchange hashpartitioning"
     )
 
+    # the adaptive rollup unions the group and per-series partials and
+    # aggregates them ONCE: one partial/final HashAggregate pair
+    from modelardb_spark.operators.groupfit import (
+        fit_segments_adaptive,
+        rollup_adaptive,
+    )
+
+    g, ps = fit_segments_adaptive(
+        derive_series_wide(transcripts_from_events(spark, sf_small)),
+        per_day=True,
+    )
+    g.write.parquet(str(tmp_path / "adaptive_g"))
+    ps.write.parquet(str(tmp_path / "adaptive_p"))
+    plan = _plan(
+        rollup_adaptive(
+            spark.read.parquet(str(tmp_path / "adaptive_g")),
+            spark.read.parquet(str(tmp_path / "adaptive_p")),
+            HOUR_MS,
+        )
+    )
+    assert plan.count("HashAggregate") == 2, plan
+    assert "SortAggregate" not in plan
+
 
 def test_segment_sql_aggregates_decompose_partial_final(spark, sf_small, tmp_path):
     """segment_sql rewrites the *_S aggregates into built-in aggregates
@@ -281,21 +304,85 @@ def test_duplicate_clusters_severs_lsh_lineage(spark, sf_small):
         assert marker not in plan_d, f"LSH lineage leaked into plan: {marker}"
 
 
-def test_fused_partials_match_branch_partials(spark):
-    """The round-7 fused rollup kernel (dense decode + NumPy closed
-    forms in one pass) must produce bit-identical partials to the
-    two-branch plan (Catalyst closed forms ∪ dense decode) — including
-    the SWING closed forms, which the driver fixtures never produce
-    (they contain only PMC/Gorilla segments)."""
+def _closed_form_oracle(segments, window_ms):
+    """Catalyst column expressions of the per-(segment ∩ window)
+    PMC/Swing closed forms: the parity oracle of the NumPy kernel."""
+    w = F.lit(window_ms)
+    split = segments.where(F.col("mtid").isin(2, 3)).select(
+        "conv_id",
+        "metric",
+        "mtid",
+        "p0",
+        "p1",
+        "interval_ms",
+        F.explode(
+            F.sequence(
+                (F.floor(F.col("start_ms") / w) * w).cast("long"),
+                (F.floor(F.col("end_ms") / w) * w).cast("long"),
+                w,
+            )
+        ).alias("window_ms"),
+        "start_ms",
+        "end_ms",
+    ).select(
+        "conv_id",
+        "metric",
+        "mtid",
+        "p0",
+        "p1",
+        "interval_ms",
+        "window_ms",
+        F.greatest("start_ms", "window_ms").alias("sub_start"),
+        F.least(
+            F.col("end_ms"), F.col("window_ms") + w - F.col("interval_ms")
+        ).alias("sub_end"),
+    )
+    cnt = ((F.col("sub_end") - F.col("sub_start")) / F.col("interval_ms") + 1).cast(
+        "long"
+    )
+    first = F.col("p0") * F.col("sub_start") + F.col("p1")
+    last = F.col("p0") * F.col("sub_end") + F.col("p1")
+    is_pmc = F.col("mtid") == 2
+    # Swing min/max at the endpoints by slope sign, evaluated at float32
+    # like grid values (SwingFilterModelType.java:205-225); PMC constant
+    swing_min = (
+        F.when(F.col("p0") == 0, F.col("p1"))
+        .when(F.col("p0") > 0, first)
+        .otherwise(last)
+        .cast("float")
+    )
+    swing_max = (
+        F.when(F.col("p0") == 0, F.col("p1"))
+        .when(F.col("p0") < 0, first)
+        .otherwise(last)
+        .cast("float")
+    )
+    # Swing sum: trapezoid of the unrounded doubles (:227-233);
+    # PMC sum: cnt * constant (PMC_MeanModelType.java:133-135)
+    return split.select(
+        "conv_id",
+        "metric",
+        "window_ms",
+        cnt.alias("cnt"),
+        F.when(is_pmc, F.col("p0").cast("float")).otherwise(swing_min).alias("vmin"),
+        F.when(is_pmc, F.col("p0").cast("float")).otherwise(swing_max).alias("vmax"),
+        F.when(is_pmc, F.col("p0") * cnt)
+        .otherwise((first + last) / 2.0 * cnt)
+        .alias("vsum"),
+    )
+
+
+def test_window_partials_match_oracle_and_scalar_decode(spark):
+    """The rollup kernel's partials, bit for bit: PMC/Swing rows equal
+    the Catalyst closed-form oracle (including the SWING closed forms,
+    which the sf* test tables never produce), and Gorilla/raw rows
+    equal the per-segment scalar `decode_values` reduced per window."""
     import numpy as np
 
     from modelardb_spark.models.gorilla import gorilla_compress
-    from modelardb_spark.operators.rollup import (
-        HOUR_MS,
-        _analytic_partials,
-        _dense_partials,
-        _fused_partials,
-    )
+    from modelardb_spark.models.segment import decode_values
+    from modelardb_spark.models.uncompressed import raw_model
+    from modelardb_spark.operators.rollup import window_partials
 
     iv = 60_000
     base = 1_704_672_000_000
@@ -305,19 +392,19 @@ def test_fused_partials_match_branch_partials(spark):
         s = base + i * 37 * iv
         n = int(rng.integers(1, 200))
         e = s + (n - 1) * iv
-        kind = i % 3
+        kind = i % 4
         if kind == 0:  # PMC
             rows.append(("c%d" % (i % 5), "m", s, e, iv, 2, b"\x00" * 4,
                          float(rng.normal()), float("nan")))
         elif kind == 1:  # SWING — slopes incl. 0, +, -
-            slope = [0.0, 1.7e-7, -2.3e-7][i % 3 if i % 9 else 0]
             slope = float(rng.choice([0.0, 2.5e-7, -1.5e-7]))
             rows.append(("c%d" % (i % 5), "m", s, e, iv, 3, b"\x00" * 4,
                          slope, float(rng.normal() * 10)))
-        else:  # GORILLA
+        else:  # GORILLA, RAW
             vals = rng.normal(size=n).astype(np.float32)
-            rows.append(("c%d" % (i % 5), "m", s, e, iv, 4,
-                         gorilla_compress(vals), float("nan"), float("nan")))
+            model = gorilla_compress(vals) if kind == 2 else raw_model(vals, n)
+            rows.append(("c%d" % (i % 5), "m", s, e, iv, 4 if kind == 2 else 1,
+                         model, float("nan"), float("nan")))
     seg = spark.createDataFrame(
         rows,
         "conv_id string, metric string, start_ms long, end_ms long, "
@@ -330,11 +417,21 @@ def test_fused_partials_match_branch_partials(spark):
             for r in df.collect()
         )
 
-    fused = snap(_fused_partials(seg, HOUR_MS))
-    branched = snap(
-        _analytic_partials(seg, HOUR_MS).unionByName(
-            _dense_partials(seg, HOUR_MS)
-        )
+    closed = snap(window_partials(seg.where(F.col("mtid").isin(2, 3)), HOUR_MS))
+    assert len(closed) > 0
+    assert closed == snap(_closed_form_oracle(seg, HOUR_MS))
+
+    want = []
+    for conv, met, s, e, si, mtid, model, _, _ in rows:
+        if mtid not in (1, 4):
+            continue
+        v = decode_values(mtid, model, s, e, si)
+        win = (s + si * np.arange(v.size)) // HOUR_MS * HOUR_MS
+        for w in np.unique(win):
+            x = v[win == w]
+            want.append((conv, met, int(w), int(x.size), float(x.min()),
+                         float(x.max()), float(x.astype(np.float64).sum())))
+    dense = window_partials(seg.where(F.col("mtid").isin(1, 4)), HOUR_MS)
+    assert snap(dense) == sorted(
+        tuple(repr(x) if isinstance(x, float) else x for x in r) for r in want
     )
-    assert len(fused) > 0
-    assert fused == branched

@@ -31,6 +31,31 @@ def _frame(spark, items):
     )
 
 
+def _await_finals_batch_done(spark, q, out_root, timeout_s=120):
+    """Block until the micro-batch that wrote the newest finalized rows
+    has completed. The emit_temporary sink writes the finals before it
+    reconciles the temporaries, so a stop() issued as soon as the
+    finals are readable can interrupt the batch between the two writes
+    and leave its temporaries unreconciled until the batch replays."""
+    import time as _time
+
+    newest = (
+        spark.read.parquet(f"{out_root}/segments_stream")
+        .agg(F.max("batch"))
+        .first()[0]
+    )
+    assert newest is not None, "no finalized segments were written"
+    deadline = _time.time() + timeout_s
+    while _time.time() < deadline:
+        if q.exception():
+            raise AssertionError(str(q.exception())[:2000])
+        done = q.lastProgress
+        if done is not None and done.batchId >= newest:
+            return
+        _time.sleep(0.5)
+    raise AssertionError(f"micro-batch {newest} did not complete")
+
+
 def test_segments_span_micro_batches(spark, tmp_path):
     # conversation 'x': one 20-bin run with varying counts, split across
     # drops MID-RUN and MID-BIN (bin 9 has turns in both drops); then a
@@ -380,6 +405,7 @@ def test_temporary_segments_visible_mid_stream(spark, tmp_path):
             except Exception:
                 pass
             _time.sleep(2)
+        _await_finals_batch_done(spark, q, out_root)
     finally:
         q.stop()
 
@@ -505,6 +531,7 @@ def test_temporary_reconcile_with_escaped_conv_id(spark, tmp_path):
             except Exception:
                 pass
             _time.sleep(2)
+        _await_finals_batch_done(spark, q, out_root)
     finally:
         q.stop()
     # no stale temporaries: every grid point appears exactly once
