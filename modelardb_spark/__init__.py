@@ -17,7 +17,13 @@ Layout:
   jobs/       spark-submit entry points (ingest pipeline, resumable)
 """
 
+from modelardb_spark import zipstamp
 from modelardb_spark.config import EngineConfig
+
+# every engine UDF imports the package when a worker unpickles it, so
+# from then on that worker's per-task import-cache invalidation skips
+# re-reading unchanged zip archives (pyspark.zip, --py-files)
+zipstamp.install()
 
 __all__ = ["EngineConfig"]
 __version__ = "0.1.0"

@@ -26,6 +26,7 @@ import shutil
 import time
 from dataclasses import dataclass
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -45,8 +46,14 @@ MODEL_TYPES: list[tuple[int, str]] = [
 
 
 def model_type_table(spark: SparkSession) -> DataFrame:
-    """The `model_type` metadata table (mtid -> implementation name)."""
-    return spark.createDataFrame(MODEL_TYPES, "mtid INT, name STRING")
+    """The `model_type` metadata table (mtid -> implementation name).
+
+    Built from an Arrow table, so it plans as a `LocalTableScan`: from
+    a list of tuples Spark ships a pickled RDD (`Scan ExistingRDD`)
+    and every write of this 4-row table ran a Python-worker job."""
+    mtids, names = zip(*MODEL_TYPES)
+    table = pa.table({"mtid": pa.array(mtids, pa.int32()), "name": names})
+    return spark.createDataFrame(table, "mtid INT, name STRING")
 
 
 def with_part_key(df: DataFrame, buckets: int = 32) -> DataFrame:

@@ -196,17 +196,20 @@ def gorilla_decompress_matrix(
 ) -> np.ndarray:
     """Decompress MANY streams in lockstep — the vectorized form of
     `gorilla_decompress` for the dense grid/rollup paths. Returns an
-    (n_segments, max(lengths)) float32 matrix; row i is valid up to
-    lengths[i] (the tail is unspecified).
+    (n_segments, max(lengths)) float32 matrix in input row order; row
+    i is valid up to lengths[i] (the tail is unspecified).
 
-    All segments of an Arrow batch advance one VALUE per iteration;
-    every bit-level operation (control bits, window headers, xor
-    payloads) is a NumPy gather over per-segment bit cursors, so the
-    Python-level loop runs `max(lengths)` times (<= length_bound)
-    instead of `sum(lengths)` times with per-bit integer ops. Inactive
-    lanes (shorter segments / non-'11' control paths) read garbage at
-    a frozen cursor and discard it — their cursors never advance, so
-    correctness is unaffected.
+    Lanes are sorted longest first and their streams laid back to back
+    in one byte buffer (one ``b"".join``), each lane keeping an
+    absolute bit cursor into it. Every lane reads its first value in
+    round 0; round i then touches only the lanes with more than i
+    values, which are a prefix of the sorted order, so the work is
+    proportional to the values decoded, not to n_segments *
+    max(lengths). Every bit-level operation (control bits, window
+    headers, xor payloads) is a NumPy gather over the prefix's
+    cursors; lanes on a path that does not read a field (non-'11'
+    control bits) gather garbage at a cursor they do not advance and
+    discard it.
 
     Bit-identical to the scalar decoder including the
     `significantBits == 0 -> 32` reference quirk
@@ -215,61 +218,70 @@ def gorilla_decompress_matrix(
     lengths = np.asarray(lengths, dtype=np.int64)
     if n_seg == 0:
         return np.zeros((0, 0), dtype=np.float32)
-    max_bytes = max(len(m) for m in models)
-    # +8 pad so a 5-byte gather at the last bit never leaves the row
-    buf = np.zeros((n_seg, max_bytes + 8), dtype=np.uint8)
-    for i, m in enumerate(models):
-        buf[i, : len(m)] = np.frombuffer(m, dtype=np.uint8)
-    max_n = int(lengths.max())
-    out = np.zeros((n_seg, max_n), dtype=np.uint32)
-    pos = np.zeros(n_seg, dtype=np.int64)
-    rows = np.arange(n_seg)
+    order = np.argsort(-lengths, kind="stable")
+    sizes = np.fromiter(map(len, models), dtype=np.int64, count=n_seg)[order]
+    # +8 pad so a 5-byte gather at the last bit never leaves the buffer
+    buf = np.frombuffer(
+        b"".join([models[i] for i in order.tolist()]) + bytes(8),
+        dtype=np.uint8,
+    )
+    pos = (np.cumsum(sizes) - sizes) * 8
+    max_n = int(lengths[order[0]])
+    # active[i] = lanes with more than i values = prefix length in round i
+    active = n_seg - np.searchsorted(
+        lengths[order[::-1]], np.arange(max_n), side="right"
+    )
     u64 = np.uint64
 
-    def read(k) -> np.ndarray:
-        """k bits (scalar or per-lane array, <= 32) at each lane's
-        cursor; cursors are NOT advanced (caller adds masked width)."""
-        byte_idx = pos >> 3
+    def read(p: np.ndarray, k) -> np.ndarray:
+        """k bits (scalar or per-lane array, <= 32) at each cursor in
+        `p`; cursors are NOT advanced (caller adds masked width)."""
+        byte_idx = p >> 3
         b = (
-            (buf[rows, byte_idx].astype(np.uint64) << u64(32))
-            | (buf[rows, byte_idx + 1].astype(np.uint64) << u64(24))
-            | (buf[rows, byte_idx + 2].astype(np.uint64) << u64(16))
-            | (buf[rows, byte_idx + 3].astype(np.uint64) << u64(8))
-            | buf[rows, byte_idx + 4].astype(np.uint64)
+            (buf[byte_idx].astype(np.uint64) << u64(32))
+            | (buf[byte_idx + 1].astype(np.uint64) << u64(24))
+            | (buf[byte_idx + 2].astype(np.uint64) << u64(16))
+            | (buf[byte_idx + 3].astype(np.uint64) << u64(8))
+            | buf[byte_idx + 4].astype(np.uint64)
         )
-        off = (pos & 7).astype(np.uint64)
+        off = (p & 7).astype(np.uint64)
         kk = np.asarray(k, dtype=np.uint64)
         return (
             (b >> (u64(40) - off - kk)) & ((u64(1) << kk) - u64(1))
         ).astype(np.uint32)
 
-    last = read(32)
+    # rounds x lanes, so each round writes one contiguous row
+    out = np.zeros((max_n, n_seg), dtype=np.uint32)
+    last = read(pos, 32)
     pos += 32
-    out[:, 0] = last
+    out[0] = last
     sig = np.zeros(n_seg, dtype=np.int64)
     trail = np.zeros(n_seg, dtype=np.int64)
     for i in range(1, max_n):
-        active = lengths > i
-        m1 = (read(1) == 1) & active
-        pos += active  # every active lane consumed the control bit
-        m_new = np.zeros(n_seg, dtype=bool)
-        if m1.any():
-            m_new = (read(1) == 1) & m1
-            pos += m1  # the second control bit ('10' vs '11')
+        a = int(active[i])
+        p = pos[:a]  # views: in-place updates advance the lanes
+        m1 = read(p, 1) == 1
+        p += 1  # every active lane consumed the control bit
+        if not m1.any():
+            out[i, :a] = last[:a]
+            continue
+        m_new = (read(p, 1) == 1) & m1
+        p += m1  # the second control bit ('10' vs '11')
         if m_new.any():
-            lead = read(5)
-            pos += 5 * m_new
-            sig_v = read(6).astype(np.int64)
-            pos += 6 * m_new
-            sig_v = np.where(sig_v == 0, 32, sig_v)  # reference quirk
-            sig = np.where(m_new, sig_v, sig)
-            trail = np.where(m_new, 32 - sig_v - lead.astype(np.int64), trail)
-        k = np.where(m1, sig, 0)
-        xor = read(k) << trail.astype(np.uint32)
-        pos += k
-        last = last ^ np.where(m1, xor, 0).astype(np.uint32)
-        out[:, i] = last
-    return out.view(np.float32)
+            lead = read(p, 5).astype(np.int64)
+            p += 5 * m_new
+            sig_v = read(p, 6).astype(np.int64)
+            p += 6 * m_new
+            sig_v[sig_v == 0] = 32  # reference quirk
+            sig[:a] = np.where(m_new, sig_v, sig[:a])
+            trail[:a] = np.where(m_new, 32 - sig_v - lead, trail[:a])
+        k = np.where(m1, sig[:a], 0)
+        last[:a] ^= np.where(m1, read(p, k) << trail[:a].astype(np.uint32), 0)
+        p += k
+        out[i, :a] = last[:a]
+    res = np.empty((n_seg, max_n), dtype=np.uint32)
+    res[order] = out.T
+    return res.view(np.float32)
 
 
 def gorilla_decompress_batch(

@@ -65,7 +65,10 @@ def decode_dense_matrix(
     """Batched decode of DENSE (Gorilla / raw) segments: returns an
     (n_segments, max(lengths)) float32 matrix, row i valid to
     lengths[i]. Gorilla rows decode in vectorized lockstep
-    (gorilla_decompress_matrix); raw rows are plain frombuffer casts.
+    (gorilla_decompress_matrix): round i touches only the rows with
+    more than i values, so a batch of mostly 1-value segments costs
+    one gather round plus a few narrow ones. Raw rows are plain
+    frombuffer casts.
     Used by grid, the DECODE_SEGMENT SQL function and, through
     `decode_member_matrix`, by `segment_partials` — no per-value
     Python anywhere."""

@@ -88,10 +88,11 @@ def materialize_members(members: DataFrame) -> DataFrame:
     already applies (fine to ~tens of millions of series); beyond
     that, skip this and pass broadcast_registry=False so the registry
     stays distributed end to end. The round trip is Arrow both ways
-    (toPandas + createDataFrame-from-pandas) — a collect() of Row
-    objects re-pickles per row and cannot sustain that scale."""
+    (toArrow + createDataFrame-from-Arrow): lossless for every column
+    type, where a pandas hop would turn a nullable integer column into
+    float64, and without the per-row pickling of a collect() of Rows."""
     spark = members.sparkSession
-    return spark.createDataFrame(members.toPandas(), schema=members.schema)
+    return spark.createDataFrame(members.toArrow(), schema=members.schema)
 
 
 def _expand_ranges(starts, lens):

@@ -16,6 +16,7 @@ from modelardb_spark.operators.dimgroup import (
     dim_group_members,
     explode_dim_group_segments,
     fit_segments_dim_grouped,
+    materialize_members,
     rollup_from_dim_group_segments,
 )
 from modelardb_spark.operators.rollup import HOUR_MS, MINUTE_MS
@@ -45,6 +46,16 @@ def test_member_registry_stable_and_bounded(spark, series):
         assert len(ms) <= 8
         assert all(r["gsize"] == len(ms) for r in ms)
         assert sorted(r["midx"] for r in ms) == list(range(len(ms)))
+
+
+def test_materialize_members_lossless(spark):
+    """The registry round trip keeps a nullable bigint column exact,
+    null included (a pandas hop would make it float64)."""
+    rows = [("a", 2**53 + 1, 0), ("b", None, 1), ("c", -7, 2)]
+    df = spark.createDataFrame(rows, "gkey STRING, big BIGINT, midx INT")
+    out = materialize_members(df)
+    assert out.schema == df.schema
+    assert sorted(out.collect()) == sorted(df.collect())
 
 
 def test_dim_group_rollup_matches_raw(spark, series):

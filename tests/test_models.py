@@ -324,7 +324,7 @@ def test_raw_fallback_for_single_point_flush():
 def test_gorilla_batch_decode_bit_identical():
     """The lockstep batch decoder must reproduce the scalar decoder
     bit-for-bit on mixed streams (repeats, counts, random floats,
-    single values)."""
+    single values) and on skewed lengths in shuffled order."""
     import numpy as np
 
     from modelardb_spark.models.gorilla import (
@@ -350,6 +350,19 @@ def test_gorilla_batch_decode_bit_identical():
         models.append(m)
         lens.append(n)
         scalar.append(gorilla_decompress(m, n))
+    # skewed lengths in shuffled order, the stored-segment shape:
+    # thousands of 1-value streams, a few of 50+ values
+    for i in range(3000):
+        n = int(rng.integers(50, 80)) if i % 500 == 7 else 1
+        v = rng.normal(0, 100, n).astype(np.float32)
+        m = gorilla_compress(v)
+        models.append(m)
+        lens.append(n)
+        scalar.append(gorilla_decompress(m, n))
+    perm = rng.permutation(len(models))
+    models = [models[i] for i in perm]
+    lens = [lens[i] for i in perm]
+    scalar = [scalar[i] for i in perm]
     batch = gorilla_decompress_batch(models, np.array(lens))
     for a, b in zip(scalar, batch):
         np.testing.assert_array_equal(a, b)

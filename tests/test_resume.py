@@ -219,6 +219,18 @@ def test_ingest_writes_metadata_tables(spark, transcripts, tmp_path):
     assert mt[1].endswith("uncompressed") and mt[4].endswith("gorilla")
 
 
+def test_model_type_table_is_local(spark):
+    """The 4-row model_type table plans as a local relation, with no
+    pickled Python RDD behind it, and keeps its rows and schema."""
+    from modelardb_spark.io.tables import MODEL_TYPES, model_type_table
+
+    df = model_type_table(spark)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan and "LocalTableScan" in plan
+    assert df.schema == spark.createDataFrame([], "mtid INT, name STRING").schema
+    assert [tuple(r) for r in df.collect()] == MODEL_TYPES
+
+
 def test_grouped_ingest_same_rollups(spark, transcripts, tmp_path):
     """grouped=True writes GROUP segments: identical rollup tables at
     bound 0 (the compression trade-off is workload-dependent and
