@@ -683,12 +683,11 @@ def _q_lossy_bound_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
     point, and emit any point whose percentage error
     (Static.java:106-119 semantics: approx==real -> 0, real==0 -> inf)
     exceeds the bound. MUST be empty — the oracle is the empty set."""
-    from modelardb_spark.operators.fit import fit_segments_wide
-    from modelardb_spark.operators.series import derive_series_wide
+    from modelardb_spark.operators.fit import fit_segments_from_transcripts
 
     lossy = EngineConfig(error_bound=5.0)
     t = transcripts_from_events(spark, sf_dir)
-    seg = fit_segments_wide(derive_series_wide(t, lossy), lossy)
+    seg = fit_segments_from_transcripts(t, lossy)
     approx = grid(seg).select(
         "conv_id", "metric", "bin_ms", F.col("value").alias("approx_f")
     )
@@ -787,12 +786,9 @@ def _q_rollup_1h_lossy(spark: SparkSession, sf_dir: str) -> DataFrame:
     the generator). The within-bound guarantee is separately asserted
     by lossy_bound_violations and test_pipeline.py."""
     lossy = EngineConfig(error_bound=5.0)
-    from modelardb_spark.operators.fit import fit_segments_wide
-    from modelardb_spark.operators.series import derive_series_wide
+    from modelardb_spark.operators.fit import fit_segments_from_transcripts
 
-    seg = fit_segments_wide(
-        derive_series_wide(transcripts_from_events(spark, sf_dir), lossy), lossy
-    )
+    seg = fit_segments_from_transcripts(transcripts_from_events(spark, sf_dir), lossy)
     return _std_rollup(rollup_from_segments(seg, HOUR_MS))
 
 

@@ -283,11 +283,3 @@ def gorilla_decompress_matrix(
     res[order] = out.T
     return res.view(np.float32)
 
-
-def gorilla_decompress_batch(
-    models: list[bytes], lengths: np.ndarray
-) -> list[np.ndarray]:
-    """List-of-arrays convenience wrapper over the matrix decoder."""
-    lengths = np.asarray(lengths, dtype=np.int64)
-    res = gorilla_decompress_matrix(models, lengths)
-    return [res[i, : lengths[i]] for i in range(len(models))]

@@ -126,12 +126,6 @@ def _minhash_from_arrays(
     ).select("doc_id", F.col("bb.band").alias("band"), F.col("bb.band_hash").alias("band_hash"))
 
 
-def minhash_signatures(docs: DataFrame, bands: int = BANDS, rows: int = ROWS_PER_BAND) -> DataFrame:
-    """(doc_id, band, band_hash): md5-based minhash signature folded
-    into one hash per band. Map-only up to the consumer's first join."""
-    return _minhash_from_arrays(shingle_arrays(docs), bands, rows)
-
-
 def minhash_lsh_pairs(
     docs: DataFrame,
     jaccard_threshold: float = 0.5,

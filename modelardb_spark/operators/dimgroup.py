@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from modelardb_spark.config import DEFAULT_CONFIG, EngineConfig
+from modelardb_spark.operators.fit import fit_arranged
 from modelardb_spark.operators.groupfit import (
     GROUP_SEGMENT_SCHEMA,
     _GCOLS,
@@ -113,11 +114,11 @@ def _expand_ranges(starts, lens):
     return np.cumsum(out)
 
 
-def _fit_dim_group_batches(
+def _fit_dim_group_runs(
     error_bound: float, length_bound: int, interval_ms: int
 ):
-    """mapInPandas kernel over rows sorted by (gkey, salt, bin_ms,
-    midx): split into runs of a stable active-member set, reshape each
+    """Per-run body of `fit_segments_dim_grouped` over rows sorted by
+    (gkey, salt, bin_ms, midx): split into runs of a stable active-member set, reshape each
     run's rows into the (T, K) interleaved matrix, and hand it to the
     shared group cascade.
 
@@ -132,10 +133,9 @@ def _fit_dim_group_batches(
     from modelardb_spark.models.cascade import MTID_GORILLA as _MTID_G
     from modelardb_spark.models.gorilla import gorilla_compress_rows
 
-    def process(pdf: pd.DataFrame, out: dict[str, list]) -> list[pd.DataFrame]:
+    def fit(pdf: pd.DataFrame) -> Iterator[pd.DataFrame]:
+        out: dict[str, list] = {c: [] for c in _GCOLS}
         n = len(pdf)
-        if n == 0:
-            return []
         gkey = pdf["gkey"].to_numpy()
         salt = pdf["salt"].to_numpy()
         ts = pdf["bin_ms"].to_numpy().astype(np.int64)
@@ -251,38 +251,11 @@ def _fit_dim_group_batches(
                 interval_ms,
                 out,
             )
-        return bulk_frames
+        if out["n"]:
+            yield pd.DataFrame(out, columns=_GCOLS)
+        yield from bulk_frames
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out: dict[str, list] = {c: [] for c in _GCOLS}
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            gk = pdf["gkey"].to_numpy()
-            salt = pdf["salt"].to_numpy()
-            key_change = np.zeros(len(pdf), dtype=bool)
-            if len(pdf) > 1:
-                key_change[1:] = (gk[1:] != gk[:-1]) | (salt[1:] != salt[:-1])
-            boundaries = np.flatnonzero(key_change)
-            if boundaries.size == 0:
-                carry = pdf
-                continue
-            cut = boundaries[-1]
-            carry = pdf.iloc[cut:]
-            bulk = process(pdf.iloc[:cut], out)
-            if out["n"]:
-                yield pd.DataFrame({c: out[c] for c in _GCOLS}, columns=_GCOLS)
-                out = {c: [] for c in _GCOLS}
-            yield from bulk
-        if carry is not None and len(carry):
-            bulk = process(carry, out)
-            if out["n"]:
-                yield pd.DataFrame({c: out[c] for c in _GCOLS}, columns=_GCOLS)
-            yield from bulk
-
-    return run
+    return fit
 
 
 def fit_segments_dim_grouped(
@@ -295,21 +268,16 @@ def fit_segments_dim_grouped(
     shuffle, keyed on (gkey, salt-day) with the usual day salting, so a
     hot dimension member never exceeds one day x `max_group_size`
     members per task."""
-    salt_ms = cfg.salt_days * 86_400_000
-    rows = (
-        series.join(members, ["conv_id", "metric"])
-        .withColumn("salt", (F.col("bin_ms") / F.lit(salt_ms)).cast("long"))
-        .select("gkey", "salt", "bin_ms", "midx", "value", "gsize")
+    rows = series.join(members, ["conv_id", "metric"]).select(
+        "gkey", "bin_ms", "midx", "value", "gsize"
     )
-    num = cfg.shuffle_partitions or int(
-        series.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    arranged = rows.repartition(num, "gkey", "salt").sortWithinPartitions(
-        "gkey", "salt", "bin_ms", "midx"
-    )
-    return arranged.mapInPandas(
-        _fit_dim_group_batches(cfg.error_bound, cfg.length_bound, cfg.interval_ms),
+    return fit_arranged(
+        rows,
+        cfg,
+        ["gkey"],
+        _fit_dim_group_runs(cfg.error_bound, cfg.length_bound, cfg.interval_ms),
         GROUP_SEGMENT_SCHEMA,
+        extra=["midx"],
     )
 
 

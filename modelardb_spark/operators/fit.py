@@ -1,19 +1,26 @@
 """Model-fitting operator: series points -> compressed segments.
 
 The one genuinely custom operator of the engine (reference:
-core/SegmentGenerator.java). Physical shape:
+core/SegmentGenerator.java). Every fit entry point (`fit_segments`,
+`fit_segments_wide`, `fit_segments_from_transcripts`, and the group
+fits `fit_segments_grouped` / `fit_segments_dim_grouped`) shares one
+physical shape, built by `fit_arranged`:
 
-    series.repartition(conv_id, metric, salt)
-          .sortWithinPartitions(conv_id, metric, salt, bin_ms)
-          .mapInPandas(fit_batches)
+    frame.withColumn(salt)
+         .repartition(num, *keys, salt)
+         .sortWithinPartitions(*keys, salt, bin_ms, *extra)
+         .mapInPandas(kernel)
 
 rather than groupBy().applyInPandas(): a transcripts workload has a
 huge number of *small* series groups (conversations), and per-group
 Arrow round trips dominate. mapInPandas processes a whole 64k-row
-Arrow batch of many groups in one Python call; group boundaries are
-found vectorized, and a group split across two batches is stitched by
-carrying the tail rows forward (batches arrive in partition-sort
-order).
+Arrow batch of many groups in one Python call. A key run split across
+two or more Arrow batches (batches arrive in partition-sort order) is
+stitched back together by `key_runs`, the one carry loop: it yields
+frames that hold only complete runs of (keys, salt), and each entry
+point supplies only the per-run body that fits such a frame
+(`_fit_runs`, `_fit_runs_wide`, `_fit_runs_turns`, and the group
+bodies), whose run boundaries are then found vectorized.
 
 Scale design:
 - **Salting**: the shuffle key includes ``salt = bin_ms div (salt_days
@@ -42,7 +49,7 @@ Scale design:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator, Sequence
 
 import numpy as np
 import pandas as pd
@@ -266,138 +273,139 @@ def _flush(out: dict[str, list], interval_ms: int) -> pd.DataFrame | None:
     return df
 
 
-def _fit_batches(error_bound: float, length_bound: int, interval_ms: int):
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def key_change(pdf: pd.DataFrame, keys: Sequence[str]) -> np.ndarray:
+    """Row mask: True where any of `keys` differs from the row before."""
+    change = np.zeros(len(pdf), dtype=bool)
+    for k in keys:
+        col = pdf[k].to_numpy()
+        change[1:] |= col[1:] != col[:-1]
+    return change
+
+
+def key_runs(
+    batches: Iterable[pd.DataFrame], keys: Sequence[str]
+) -> Iterator[pd.DataFrame]:
+    """Re-cut a stream of frames sorted by `keys` into frames that hold
+    only complete runs of equal keys. The trailing run of each batch
+    may continue in the next batch, so it is held back and stitched to
+    the front of the next one; the last held-back run is yielded at the
+    end. Empty batches contribute nothing."""
+    carry: pd.DataFrame | None = None
+    for pdf in batches:
+        if not len(pdf):
+            continue
+        if carry is not None:
+            pdf = pd.concat([carry, pdf], ignore_index=True)
+        boundaries = np.flatnonzero(key_change(pdf, keys))
+        if boundaries.size == 0:
+            carry = pdf
+            continue
+        cut = boundaries[-1]
+        carry = pdf.iloc[cut:]
+        yield pdf.iloc[:cut]
+    if carry is not None:
+        yield carry
+
+
+def fit_arranged(
+    frame: DataFrame,
+    cfg: EngineConfig,
+    keys: Sequence[str],
+    fit_runs: Callable[[pd.DataFrame], Iterable[pd.DataFrame]],
+    schema: StructType,
+    extra: Sequence[str] = (),
+) -> DataFrame:
+    """The one physical shape of every fit: add the day `salt`, shuffle
+    once on (keys, salt), sort each partition by (keys, salt, bin_ms,
+    *extra), then run `fit_runs` over every `key_runs` frame of the
+    partition's Arrow batches in one `mapInPandas`."""
+    salt_ms = cfg.salt_days * 86_400_000
+    keyed = frame.withColumn("salt", (F.col("bin_ms") / F.lit(salt_ms)).cast("long"))
+    num = cfg.shuffle_partitions or int(
+        frame.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
+    )
+    run_keys = [*keys, "salt"]
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for runs in key_runs(batches, run_keys):
+            yield from fit_runs(runs)
+
+    arranged = keyed.repartition(num, *run_keys).sortWithinPartitions(
+        *run_keys, "bin_ms", *extra
+    )
+    return arranged.mapInPandas(kernel, schema)
+
+
+def _fit_runs(error_bound: float, length_bound: int, interval_ms: int):
+    """Per-run body of `fit_segments`: rows sorted by (conv_id, metric,
+    salt, bin_ms) with one `value` column."""
+
+    def fit(pdf: pd.DataFrame) -> Iterator[pd.DataFrame]:
         out: dict[str, list] = {c: [] for c in _COLS}
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            conv = pdf["conv_id"].to_numpy()
-            metric = pdf["metric"].to_numpy()
-            salt = pdf["salt"].to_numpy()
-            # hold back the trailing (possibly incomplete) group; it is
-            # stitched to the next batch of this partition
-            key_change = np.zeros(len(pdf), dtype=bool)
-            if len(pdf) > 1:
-                key_change[1:] = (
-                    (conv[1:] != conv[:-1])
-                    | (metric[1:] != metric[:-1])
-                    | (salt[1:] != salt[:-1])
-                )
-            boundaries = np.flatnonzero(key_change)
-            if boundaries.size == 0:
-                carry = pdf
-                continue
-            cut = boundaries[-1]
-            carry = pdf.iloc[cut:]
-            head = pdf.iloc[:cut]
-            ts = head["bin_ms"].to_numpy().astype(np.int64)
-            vals = head["value"].to_numpy().astype(np.float32)
-            keep = ~np.isnan(vals)
-            _fit_sorted_block(
-                conv[:cut][keep],
-                metric[:cut][keep],
-                salt[:cut][keep],
-                ts[keep],
-                vals[keep],
-                error_bound,
-                length_bound,
-                interval_ms,
-                out,
-            )
-            df = _flush(out, interval_ms)
-            if df is not None:
-                yield df
-        if carry is not None and len(carry):
-            ts = carry["bin_ms"].to_numpy().astype(np.int64)
-            vals = carry["value"].to_numpy().astype(np.float32)
-            keep = ~np.isnan(vals)
-            _fit_sorted_block(
-                carry["conv_id"].to_numpy()[keep],
-                carry["metric"].to_numpy()[keep],
-                carry["salt"].to_numpy()[keep],
-                ts[keep],
-                vals[keep],
-                error_bound,
-                length_bound,
-                interval_ms,
-                out,
-            )
-            df = _flush(out, interval_ms)
-            if df is not None:
-                yield df
+        vals = pdf["value"].to_numpy().astype(np.float32)
+        keep = ~np.isnan(vals)
+        _fit_sorted_block(
+            pdf["conv_id"].to_numpy()[keep],
+            pdf["metric"].to_numpy()[keep],
+            pdf["salt"].to_numpy()[keep],
+            pdf["bin_ms"].to_numpy().astype(np.int64)[keep],
+            vals[keep],
+            error_bound,
+            length_bound,
+            interval_ms,
+            out,
+        )
+        df = _flush(out, interval_ms)
+        if df is not None:
+            yield df
 
-    return run
+    return fit
 
 
-def _fit_batches_wide(
+def _fit_runs_wide(
     metrics: tuple[str, ...], error_bound: float, length_bound: int, interval_ms: int
 ):
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """Per-run body of `fit_segments_wide`: rows sorted by (conv_id,
+    salt, bin_ms), one column per metric; each metric column is fitted
+    over the shared timestamp grid."""
+
+    def fit(pdf: pd.DataFrame) -> Iterator[pd.DataFrame]:
         out: dict[str, list] = {c: [] for c in _COLS}
-        carry: pd.DataFrame | None = None
+        conv = pdf["conv_id"].to_numpy()
+        salt = pdf["salt"].to_numpy()
+        ts = pdf["bin_ms"].to_numpy().astype(np.int64)
+        for m in metrics:
+            vals = pdf[m].to_numpy().astype(np.float32)
+            keep = ~np.isnan(vals)
+            _fit_sorted_block(
+                conv[keep],
+                np.full(int(keep.sum()), m, dtype=object),
+                salt[keep],
+                ts[keep],
+                vals[keep],
+                error_bound,
+                length_bound,
+                interval_ms,
+                out,
+            )
+        df = _flush(out, interval_ms)
+        if df is not None:
+            yield df
 
-        def process(pdf: pd.DataFrame) -> None:
-            conv = pdf["conv_id"].to_numpy()
-            salt = pdf["salt"].to_numpy()
-            ts = pdf["bin_ms"].to_numpy().astype(np.int64)
-            for m in metrics:
-                vals = pdf[m].to_numpy().astype(np.float32)
-                keep = ~np.isnan(vals)
-                _fit_sorted_block(
-                    conv[keep],
-                    np.full(int(keep.sum()), m, dtype=object),
-                    salt[keep],
-                    ts[keep],
-                    vals[keep],
-                    error_bound,
-                    length_bound,
-                    interval_ms,
-                    out,
-                )
-
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            conv = pdf["conv_id"].to_numpy()
-            salt = pdf["salt"].to_numpy()
-            key_change = np.zeros(len(pdf), dtype=bool)
-            if len(pdf) > 1:
-                key_change[1:] = (conv[1:] != conv[:-1]) | (salt[1:] != salt[:-1])
-            boundaries = np.flatnonzero(key_change)
-            if boundaries.size == 0:
-                carry = pdf
-                continue
-            cut = boundaries[-1]
-            carry = pdf.iloc[cut:]
-            process(pdf.iloc[:cut])
-            df = _flush(out, interval_ms)
-            if df is not None:
-                yield df
-        if carry is not None and len(carry):
-            process(carry)
-            df = _flush(out, interval_ms)
-            if df is not None:
-                yield df
-
-    return run
+    return fit
 
 
-def _fit_batches_turns(error_bound: float, length_bound: int, interval_ms: int):
-    """Kernel for the FUSED derive+fit path: input rows are raw turns
-    (conv_id, salt, bin_ms, tool_flag) sorted by (conv, salt, bin); the
-    per-bin aggregation (turn_rate = count, tool_usage = sum of flags)
-    happens vectorized here (one reduceat family), then the same
-    `_fit_sorted_block` fits both metric columns. Output rows are
-    identical to `_fit_batches_wide` over `derive_series_wide`."""
+def _fit_runs_turns(error_bound: float, length_bound: int, interval_ms: int):
+    """Per-run body of the FUSED derive+fit path: input rows are raw
+    turns (conv_id, salt, bin_ms, tool_flag) sorted by (conv, salt,
+    bin); the per-bin aggregation (turn_rate = count, tool_usage = sum
+    of flags) happens vectorized here (one reduceat family), then the
+    same `_fit_sorted_block` fits both metric columns. Output rows are
+    identical to `_fit_runs_wide` over `derive_series_wide`."""
 
-    def process(pdf: pd.DataFrame, out: dict[str, list]) -> None:
+    def fit(pdf: pd.DataFrame) -> Iterator[pd.DataFrame]:
         n = len(pdf)
-        if n == 0:
-            return
+        out: dict[str, list] = {c: [] for c in _COLS}
         conv = pdf["conv_id"].to_numpy()
         salt = pdf["salt"].to_numpy()
         ts = pdf["bin_ms"].to_numpy().astype(np.int64)
@@ -424,36 +432,11 @@ def _fit_batches_turns(error_bound: float, length_bound: int, interval_ms: int):
                 interval_ms,
                 out,
             )
+        df = _flush(out, interval_ms)
+        if df is not None:
+            yield df
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out: dict[str, list] = {c: [] for c in _COLS}
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            conv = pdf["conv_id"].to_numpy()
-            salt = pdf["salt"].to_numpy()
-            key_change = np.zeros(len(pdf), dtype=bool)
-            if len(pdf) > 1:
-                key_change[1:] = (conv[1:] != conv[:-1]) | (salt[1:] != salt[:-1])
-            boundaries = np.flatnonzero(key_change)
-            if boundaries.size == 0:
-                carry = pdf
-                continue
-            cut = boundaries[-1]
-            carry = pdf.iloc[cut:]
-            process(pdf.iloc[:cut], out)
-            df = _flush(out, interval_ms)
-            if df is not None:
-                yield df
-        if carry is not None and len(carry):
-            process(carry, out)
-            df = _flush(out, interval_ms)
-            if df is not None:
-                yield df
-
-    return run
+    return fit
 
 
 def fit_segments_from_transcripts(
@@ -477,7 +460,6 @@ def fit_segments_from_transcripts(
     more than the saved exchange; at the transcripts workload's ~1-2
     turns/bin the single exchange wins."""
     iv = cfg.interval_ms
-    salt_ms = cfg.salt_days * 86_400_000
     rows = transcripts.select(
         "conv_id",
         (
@@ -487,15 +469,12 @@ def fit_segments_from_transcripts(
         .otherwise(F.lit(0))
         .cast("tinyint")
         .alias("tool_flag"),
-    ).withColumn("salt", (F.col("bin_ms") / F.lit(salt_ms)).cast("long"))
-    num = cfg.shuffle_partitions or int(
-        transcripts.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
     )
-    arranged = rows.repartition(num, "conv_id", "salt").sortWithinPartitions(
-        "conv_id", "salt", "bin_ms"
-    )
-    return arranged.mapInPandas(
-        _fit_batches_turns(cfg.error_bound, cfg.length_bound, cfg.interval_ms),
+    return fit_arranged(
+        rows,
+        cfg,
+        ["conv_id"],
+        _fit_runs_turns(cfg.error_bound, cfg.length_bound, cfg.interval_ms),
         SEGMENT_SCHEMA,
     )
 
@@ -509,18 +488,11 @@ def fit_segments_wide(
     active bin carries every metric's value; Python fits each metric
     column over the shared timestamp grid. Output rows are identical to
     `fit_segments` on the unpivoted series."""
-    salt_ms = cfg.salt_days * 86_400_000
-    keyed = wide_series.withColumn(
-        "salt", (F.col("bin_ms") / F.lit(salt_ms)).cast("long")
-    )
-    num = cfg.shuffle_partitions or int(
-        wide_series.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    arranged = keyed.repartition(num, "conv_id", "salt").sortWithinPartitions(
-        "conv_id", "salt", "bin_ms"
-    )
-    return arranged.mapInPandas(
-        _fit_batches_wide(metrics, cfg.error_bound, cfg.length_bound, cfg.interval_ms),
+    return fit_arranged(
+        wide_series,
+        cfg,
+        ["conv_id"],
+        _fit_runs_wide(metrics, cfg.error_bound, cfg.length_bound, cfg.interval_ms),
         SEGMENT_SCHEMA,
     )
 
@@ -530,17 +502,10 @@ def fit_segments(
 ) -> DataFrame:
     """series_points -> segments (SEGMENT_SCHEMA). One shuffle on the
     salted series key; fitting runs in sorted Arrow batches."""
-    salt_ms = cfg.salt_days * 86_400_000
-    keyed = series.withColumn(
-        "salt", (F.col("bin_ms") / F.lit(salt_ms)).cast("long")
-    )
-    num = cfg.shuffle_partitions or int(
-        series.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    arranged = keyed.repartition(num, "conv_id", "metric", "salt").sortWithinPartitions(
-        "conv_id", "metric", "salt", "bin_ms"
-    )
-    return arranged.mapInPandas(
-        _fit_batches(cfg.error_bound, cfg.length_bound, cfg.interval_ms),
+    return fit_arranged(
+        series,
+        cfg,
+        ["conv_id", "metric"],
+        _fit_runs(cfg.error_bound, cfg.length_bound, cfg.interval_ms),
         SEGMENT_SCHEMA,
     )

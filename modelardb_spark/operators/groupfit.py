@@ -76,6 +76,7 @@ from modelardb_spark.models.pmc_mean import pmc_model, pmc_prefix, pmc_value
 from modelardb_spark.models.segment import decode_member_matrix
 from modelardb_spark.models.swing import swing_minmax, swing_model, swing_sum
 from modelardb_spark.models.uncompressed import raw_decode, raw_model
+from modelardb_spark.operators.fit import fit_arranged
 from modelardb_spark.operators.rollup import merge_partials, window_partials
 
 GROUP_SEGMENT_SCHEMA = StructType(
@@ -458,18 +459,19 @@ def _fit_group_run_dynamic(
         backoff = _REJOIN_BACKOFF_TS
 
 
-def _fit_group_batches(
+def _fit_group_runs(
     metrics: tuple[str, ...],
     error_bound: float,
     length_bound: int,
     interval_ms: int,
     split_fraction: float | None = None,
 ):
-    from modelardb_spark.models.cascade import MTID_GORILLA as _MTID_G
-
+    """Per-run body of `fit_segments_grouped`: rows sorted by (conv_id,
+    salt, bin_ms), one column per member metric."""
     n_metrics = len(metrics)
 
-    def process(pdf: pd.DataFrame, out: dict[str, list]) -> pd.DataFrame | None:
+    def fit(pdf: pd.DataFrame) -> Iterator[pd.DataFrame]:
+        out: dict[str, list] = {c: [] for c in _GCOLS}
         conv = pdf["conv_id"].to_numpy()
         salt = pdf["salt"].to_numpy()
         ts = pdf["bin_ms"].to_numpy().astype(np.int64)
@@ -478,8 +480,6 @@ def _fit_group_batches(
         )
         active = ~np.isnan(vals)  # (rows, M)
         n = len(pdf)
-        if n == 0:
-            return None
         brk = np.zeros(n, dtype=bool)
         if n > 1:
             brk[1:] = (
@@ -521,7 +521,7 @@ def _fit_group_batches(
                         "start_ms": ts[bidx],
                         "end_ms": ts[bidx],
                         "interval_ms": np.full(m, interval_ms, dtype=np.int64),
-                        "mtid": np.full(m, _MTID_G, dtype=np.int32),
+                        "mtid": np.full(m, MTID_GORILLA, dtype=np.int32),
                         "model": gorilla_compress_rows(v2),
                         "n": np.full(m, 2, dtype=np.int64),
                         "group_size": np.full(m, 2, dtype=np.int32),
@@ -557,41 +557,12 @@ def _fit_group_batches(
                 _fit_group_run(*args)
             else:
                 _fit_group_run_dynamic(*args, split_fraction)
-        return bulk_frame
+        if out["n"]:
+            yield pd.DataFrame(out, columns=_GCOLS)
+        if bulk_frame is not None:
+            yield bulk_frame
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        out: dict[str, list] = {c: [] for c in _GCOLS}
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            conv = pdf["conv_id"].to_numpy()
-            salt = pdf["salt"].to_numpy()
-            key_change = np.zeros(len(pdf), dtype=bool)
-            if len(pdf) > 1:
-                key_change[1:] = (conv[1:] != conv[:-1]) | (salt[1:] != salt[:-1])
-            boundaries = np.flatnonzero(key_change)
-            if boundaries.size == 0:
-                carry = pdf
-                continue
-            cut = boundaries[-1]
-            carry = pdf.iloc[cut:]
-            bulk = process(pdf.iloc[:cut], out)
-            if out["n"]:
-                yield pd.DataFrame({c: out[c] for c in _GCOLS}, columns=_GCOLS)
-                out = {c: [] for c in _GCOLS}
-            if bulk is not None:
-                yield bulk
-        if carry is not None and len(carry):
-            bulk = process(carry, out)
-            if out["n"]:
-                yield pd.DataFrame({c: out[c] for c in _GCOLS}, columns=_GCOLS)
-                out = {c: [] for c in _GCOLS}
-            if bulk is not None:
-                yield bulk
-
-    return run
+    return fit
 
 
 def fit_segments_grouped(
@@ -601,26 +572,18 @@ def fit_segments_grouped(
     dynamic_split_fraction: float | None = None,
 ) -> DataFrame:
     """Wide series (one row per active bin, one column per metric) ->
-    GROUP segments. Same single-shuffle physical shape as
-    fit_segments_wide: repartition by (conv, salt), sort within
-    partitions, fit in sorted Arrow batches.
+    GROUP segments, in the shared `fit_arranged` shape: one shuffle on
+    (conv_id, salt), fitted in sorted Arrow batches.
 
     With `dynamic_split_fraction` set, the fit runs the reference's
     ratio-feedback dynamic split/join inside each run (see
     `_fit_group_run_dynamic`); pass `DYNAMIC_SPLIT_FRACTION` for the
     reference default of 10."""
-    salt_ms = cfg.salt_days * 86_400_000
-    keyed = wide_series.withColumn(
-        "salt", (F.col("bin_ms") / F.lit(salt_ms)).cast("long")
-    )
-    num = cfg.shuffle_partitions or int(
-        wide_series.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    arranged = keyed.repartition(num, "conv_id", "salt").sortWithinPartitions(
-        "conv_id", "salt", "bin_ms"
-    )
-    return arranged.mapInPandas(
-        _fit_group_batches(
+    return fit_arranged(
+        wide_series,
+        cfg,
+        ["conv_id"],
+        _fit_group_runs(
             metrics,
             cfg.error_bound,
             cfg.length_bound,

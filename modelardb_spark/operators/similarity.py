@@ -27,6 +27,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from modelardb_spark.operators.fit import key_change, key_runs
 from modelardb_spark.operators.scanpar import fan_out
 
 
@@ -421,50 +422,21 @@ def embedding_near_dup(
         split vectorized inside the task (a groupBy().applyInPandas
         here paid ~1 ms of pandas overhead per cell — 2k+ cells at the
         default LSH parameters made SMALL corpora slower than the
-        round-6 plan); an incomplete trailing cell carries into the
-        next Arrow batch."""
+        round-6 plan); `key_runs` stitches a cell split across Arrow
+        batches."""
         import pandas as pd
 
-        carry = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            n = len(pdf)
-            if n == 0:
-                continue
-            t = pdf["tbl"].to_numpy()
-            bkt = pdf["bucket"].to_numpy()
-            gi = pdf["gi"].to_numpy()
-            gj = pdf["gj"].to_numpy()
-            change = np.zeros(n, dtype=bool)
-            if n > 1:
-                change[1:] = (
-                    (t[1:] != t[:-1])
-                    | (bkt[1:] != bkt[:-1])
-                    | (gi[1:] != gi[:-1])
-                    | (gj[1:] != gj[:-1])
-                )
-            bounds = np.flatnonzero(change)
-            if bounds.size == 0:
-                carry = pdf
-                continue
-            cut = bounds[-1]
-            carry = pdf.iloc[cut:]
-            head = pdf.iloc[:cut]
-            starts = np.concatenate(([0], bounds[bounds < cut]))
-            ends = np.concatenate((starts[1:], [cut]))
+        cell = ["tbl", "bucket", "gi", "gj"]
+        for block in key_runs(batches, cell):
+            starts = np.flatnonzero(key_change(block, cell))
+            bounds = np.concatenate(([0], starts, [len(block)]))
             outs = []
-            for s, e in zip(starts, ends):
-                res = _cell_pairs(head.iloc[s:e])
+            for s, e in zip(bounds[:-1], bounds[1:]):
+                res = _cell_pairs(block.iloc[s:e])
                 if res is not None:
                     outs.append(res)
             if outs:
                 yield pd.concat(outs, ignore_index=True)
-        if carry is not None and len(carry):
-            res = _cell_pairs(carry)
-            if res is not None:
-                yield res
 
     n_tasks = emb.sparkSession.sparkContext.defaultParallelism
     arranged = fanned.repartition(

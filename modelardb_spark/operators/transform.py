@@ -22,14 +22,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def scale_series(series: DataFrame, scaling_factor: float) -> DataFrame:
-    """Uniform scaling factor (value * sf at read time, float32 like
-    the reference)."""
-    return series.withColumn(
-        "value", (F.col("value") * F.lit(scaling_factor)).cast("float")
-    )
-
-
 def derived_rollup(
     rollup: DataFrame, derived: dict[str, tuple[str, float]]
 ) -> DataFrame:

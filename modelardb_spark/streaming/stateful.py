@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from modelardb_spark.config import DEFAULT_CONFIG, EngineConfig
-from modelardb_spark.operators.fit import SEGMENT_SCHEMA, _fit_sorted_block, _flush
+from modelardb_spark.operators.fit import SEGMENT_SCHEMA, _fit_runs_wide
 from modelardb_spark.sources.readers import TRANSCRIPT_SCHEMA
 
 #: open-run state per conversation: the unfinalized bins ride as a
@@ -65,46 +65,18 @@ def _state_bins(blob, n_bins: int) -> np.ndarray:
     return dod_decompress(bytes(blob), int(n_bins))
 
 
-def _fit_closed(conv: str, bins, tr, tu, cfg: EngineConfig) -> pd.DataFrame | None:
-    """Fit a CLOSED run list (may contain several gap-separated runs)
-    through the same vectorized block fitter as the batch path."""
-    if not len(bins):
-        return None
-    out: dict[str, list] = {c: [] for c in [f.name for f in SEGMENT_SCHEMA.fields]}
-    bins = np.asarray(bins, dtype=np.int64)
-    salt_ms = cfg.salt_days * 86_400_000
-    salt = bins // salt_ms
-    conv_arr = np.full(bins.size, conv, dtype=object)
-    for metric, vals in (("turn_rate", tr), ("tool_usage", tu)):
-        v = np.asarray(vals, dtype=np.float32)
-        keep = ~np.isnan(v)
-        _fit_sorted_block(
-            conv_arr[keep],
-            np.full(int(keep.sum()), metric, dtype=object),
-            salt[keep],
-            bins[keep],
-            v[keep],
-            cfg.error_bound,
-            cfg.length_bound,
-            cfg.interval_ms,
-            out,
-        )
-    return _flush(out, cfg.interval_ms)
-
-
-def _fit_closed_grouped(
-    conv: str, bins, tr, tu, cfg: EngineConfig
+def _fit_closed(
+    conv: str, bins, tr, tu, cfg: EngineConfig, grouped: bool
 ) -> pd.DataFrame | None:
-    """Grouped variant of `_fit_closed`: the closed runs go through the
-    multi-series GROUP cascade (one interleaved model row covers both
-    metrics — the reference streams groups through the same
-    SegmentGenerator as batch ingest). The state already holds the wide
-    frame the group fitter consumes; every active bin carries BOTH
-    counts (0 is a value, not a gap), so the active set is stable."""
+    """Fit a CLOSED run list (may contain several gap-separated runs)
+    through the same per-run body as the batch path: the per-series
+    wide fit, or with `grouped` the multi-series GROUP cascade (one
+    interleaved model row covers both metrics — the reference streams
+    groups through the same SegmentGenerator as batch ingest). Every
+    active bin carries BOTH counts (0 is a value, not a gap), so the
+    group's active set is stable."""
     if not len(bins):
         return None
-    from modelardb_spark.operators.groupfit import _fit_group_batches
-
     bins = np.asarray(bins, dtype=np.int64)
     salt_ms = cfg.salt_days * 86_400_000
     pdf = pd.DataFrame(
@@ -116,10 +88,14 @@ def _fit_closed_grouped(
             "tool_usage": np.asarray(tu, dtype=np.float64),
         }
     )
-    runner = _fit_group_batches(
-        cfg.metrics, cfg.error_bound, cfg.length_bound, cfg.interval_ms
-    )
-    frames = list(runner(iter([pdf])))
+    bounds = (cfg.error_bound, cfg.length_bound, cfg.interval_ms)
+    if grouped:
+        from modelardb_spark.operators.groupfit import _fit_group_runs
+
+        fit = _fit_group_runs(cfg.metrics, *bounds)
+    else:
+        fit = _fit_runs_wide(("turn_rate", "tool_usage"), *bounds)
+    frames = list(fit(pdf))
     return pd.concat(frames, ignore_index=True) if frames else None
 
 
@@ -138,7 +114,6 @@ def _stateful_fit(
 ):
     iv = cfg.interval_ms
     salt_ms = cfg.salt_days * 86_400_000
-    fit_closed = _fit_closed_grouped if grouped else _fit_closed
 
     def fn(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -148,7 +123,7 @@ def _stateful_fit(
             # idle flush: the open run finalizes (maximum_latency analogue)
             blob, n_bins, tr, tu = state.get
             state.remove()
-            df = fit_closed(conv, _state_bins(blob, n_bins), tr, tu, cfg)
+            df = _fit_closed(conv, _state_bins(blob, n_bins), tr, tu, cfg, grouped)
             if emit_temporary:
                 df = _flag(df, False)
             if df is not None:
@@ -199,8 +174,13 @@ def _stateful_fit(
             if idx.size:
                 closed_upto = int(idx[-1]) + 1
         if closed_upto:
-            df = fit_closed(
-                conv, bins[:closed_upto], tr[:closed_upto], tu[:closed_upto], cfg
+            df = _fit_closed(
+                conv,
+                bins[:closed_upto],
+                tr[:closed_upto],
+                tu[:closed_upto],
+                cfg,
+                grouped,
             )
             if emit_temporary:
                 df = _flag(df, False)
@@ -224,7 +204,9 @@ def _stateful_fit(
             # still in state — never overlapping the finalized prefix,
             # replaced when this conversation next emits
             tmp = _flag(
-                fit_closed(conv, open_bins, tr[closed_upto:], tu[closed_upto:], cfg),
+                _fit_closed(
+                    conv, open_bins, tr[closed_upto:], tu[closed_upto:], cfg, grouped
+                ),
                 True,
             )
             if tmp is not None:

@@ -10,7 +10,7 @@ import pytest
 
 from modelardb_spark.models import fit_run, segment_agg
 from modelardb_spark.models.pmc_mean import pmc_value
-from modelardb_spark.operators.fit import _fit_batches
+from modelardb_spark.operators.fit import _fit_runs, key_runs
 
 INTERVAL = 60_000
 DAY = 86_400_000
@@ -44,7 +44,7 @@ def _run_batches(pdf, bound=0.0, batch_size=None):
     pdf = pdf.sort_values(["conv_id", "metric", "salt", "bin_ms"]).reset_index(
         drop=True
     )
-    fn = _fit_batches(bound, 50, INTERVAL)
+    fit = _fit_runs(bound, 50, INTERVAL)
     if batch_size is None:
         batches = [pdf]
     else:
@@ -52,7 +52,8 @@ def _run_batches(pdf, bound=0.0, batch_size=None):
             pdf.iloc[i : i + batch_size].reset_index(drop=True)
             for i in range(0, len(pdf), batch_size)
         ]
-    outs = list(fn(iter(batches)))
+    runs = key_runs(iter(batches), ["conv_id", "metric", "salt"])
+    outs = [df for run in runs for df in fit(run)]
     return pd.concat(outs, ignore_index=True) if outs else pd.DataFrame()
 
 

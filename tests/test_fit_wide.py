@@ -3,6 +3,9 @@ fit_segments on the unpivoted series."""
 
 from __future__ import annotations
 
+import pytest
+
+from modelardb_spark.config import EngineConfig
 from modelardb_spark.operators.fit import (
     fit_segments,
     fit_segments_from_transcripts,
@@ -26,13 +29,15 @@ def _rows(df):
     )
 
 
-def test_wide_equals_narrow(spark):
+@pytest.mark.parametrize("error_bound", [0.0, 5.0])
+def test_wide_equals_narrow(spark, error_bound):
+    cfg = EngineConfig(error_bound=error_bound)
     t = synthetic_transcripts(
         spark, n_convs=12, turns_per_conv=300, mega_convs=1, mega_factor=4
     ).cache()
-    narrow = fit_segments(derive_series(t))
-    wide = fit_segments_wide(derive_series_wide(t))
-    fused = fit_segments_from_transcripts(t)
+    narrow = fit_segments(derive_series(t, cfg), cfg)
+    wide = fit_segments_wide(derive_series_wide(t, cfg), cfg)
+    fused = fit_segments_from_transcripts(t, cfg)
     assert _rows(wide) == _rows(narrow)
     # the FUSED derive+fit (one shuffle, per-bin aggregation inside the
     # kernel) must emit exactly the same segment rows

@@ -330,7 +330,7 @@ def test_gorilla_batch_decode_bit_identical():
     from modelardb_spark.models.gorilla import (
         gorilla_compress,
         gorilla_decompress,
-        gorilla_decompress_batch,
+        gorilla_decompress_matrix,
     )
 
     rng = np.random.default_rng(13)
@@ -363,9 +363,9 @@ def test_gorilla_batch_decode_bit_identical():
     models = [models[i] for i in perm]
     lens = [lens[i] for i in perm]
     scalar = [scalar[i] for i in perm]
-    batch = gorilla_decompress_batch(models, np.array(lens))
-    for a, b in zip(scalar, batch):
-        np.testing.assert_array_equal(a, b)
+    matrix = gorilla_decompress_matrix(models, np.array(lens))
+    for a, row, n in zip(scalar, matrix, lens):
+        np.testing.assert_array_equal(a, row[:n])
 
 
 def test_gorilla_compress_rows_wire_identical():

@@ -127,7 +127,7 @@ def test_group_fit_roundtrip_property(rows, gaps_between):
 
     from modelardb_spark.operators.groupfit import (
         DYNAMIC_SPLIT_FRACTION,
-        _fit_group_batches,
+        _fit_group_runs,
         decode_group_values,
     )
 
@@ -155,13 +155,13 @@ def _roundtrip_group_paths(pdf, bins):
 
     from modelardb_spark.operators.groupfit import (
         DYNAMIC_SPLIT_FRACTION,
-        _fit_group_batches,
+        _fit_group_runs,
         decode_group_values,
     )
 
     for split_fraction in (None, DYNAMIC_SPLIT_FRACTION):
-        run = _fit_group_batches(("m0", "m1"), 0.0, 50, INTERVAL, split_fraction)
-        frames = list(run(iter([pdf])))
+        fit = _fit_group_runs(("m0", "m1"), 0.0, 50, INTERVAL, split_fraction)
+        frames = list(fit(pdf))
         segs = pd.concat(frames, ignore_index=True) if frames else None
         out = {0: {}, 1: {}}
         if segs is not None and len(segs):
@@ -204,7 +204,7 @@ def test_dim_group_fit_roundtrip_property(rows):
     bound 0, each exactly once, with absent members in `gaps`."""
     import pandas as pd
 
-    from modelardb_spark.operators.dimgroup import _fit_dim_group_batches
+    from modelardb_spark.operators.dimgroup import _fit_dim_group_runs
     from modelardb_spark.operators.groupfit import decode_group_values
 
     recs = []
@@ -217,8 +217,8 @@ def test_dim_group_fit_roundtrip_property(rows):
     pdf = pd.DataFrame(
         recs, columns=["gkey", "salt", "bin_ms", "midx", "value", "gsize"]
     )
-    run = _fit_dim_group_batches(0.0, 50, INTERVAL)
-    frames = list(run(iter([pdf])))
+    fit = _fit_dim_group_runs(0.0, 50, INTERVAL)
+    frames = list(fit(pdf))
     segs = pd.concat(frames, ignore_index=True) if frames else None
     out = {0: {}, 1: {}, 2: {}}
     if segs is not None and len(segs):

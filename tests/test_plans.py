@@ -80,11 +80,24 @@ def test_restrict_pushes_bounds_to_parquet(spark, sf_small, tmp_path):
     assert "end_ms" in pushed and "start_ms" in pushed, pushed
 
 
-def test_fused_fit_is_single_exchange(spark, sf_small):
+def test_fused_fit_is_single_exchange(spark, sf_small, tmp_path):
     """The FUSED derive+fit must shuffle exactly once (the fit
     repartition) with no hash-aggregate stage at all — the two-step
-    path pays a derive aggregation exchange on top."""
-    from modelardb_spark.operators.fit import fit_segments_from_transcripts
+    path pays a derive aggregation exchange on top. Every fit entry
+    point shares that shape: over an exchange-free input it plans
+    exactly one hash exchange and one MapInPandas."""
+    from modelardb_spark.operators.dimensions import conversation_dimensions
+    from modelardb_spark.operators.dimgroup import (
+        dim_group_members,
+        fit_segments_dim_grouped,
+        materialize_members,
+    )
+    from modelardb_spark.operators.fit import (
+        fit_segments,
+        fit_segments_from_transcripts,
+    )
+    from modelardb_spark.operators.groupfit import fit_segments_grouped
+    from modelardb_spark.operators.series import derive_series
 
     # cached frames from other modules would splice InMemoryRelations
     # into these plans and change the exchange counts
@@ -105,6 +118,26 @@ def test_fused_fit_is_single_exchange(spark, sf_small):
     # and the fused scan still prunes the text payload
     scan = fused[fused.index("ReadSchema"):][:400]
     assert "props" not in scan, scan
+
+    t = transcripts_from_events(spark, sf_small)
+    derive_series(t).write.parquet(str(tmp_path / "narrow"))
+    derive_series_wide(t).write.parquet(str(tmp_path / "wide"))
+    narrow = spark.read.parquet(str(tmp_path / "narrow"))
+    wide = spark.read.parquet(str(tmp_path / "wide"))
+    members = materialize_members(
+        dim_group_members(narrow, conversation_dimensions(narrow))
+    )
+    fits = {
+        "fit_segments": fit_segments(narrow),
+        "fit_segments_wide": fit_segments_wide(wide),
+        "fit_segments_from_transcripts": fit_segments_from_transcripts(t),
+        "fit_segments_grouped": fit_segments_grouped(wide),
+        "fit_segments_dim_grouped": fit_segments_dim_grouped(narrow, members),
+    }
+    for name, df in fits.items():
+        plan = _plan(df)
+        assert plan.count("Exchange hashpartitioning") == 1, (name, plan)
+        assert plan.count("MapInPandas") == 1, (name, plan)
 
 
 def test_data_points_tvf_pushes_window_to_scan(spark, sf_small, tmp_path):
