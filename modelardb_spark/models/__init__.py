@@ -23,7 +23,6 @@ from modelardb_spark.models.cascade import (
 from modelardb_spark.models.segment import (
     decode_values,
     segment_agg,
-    segment_grid,
 )
 
 __all__ = [
@@ -32,7 +31,6 @@ __all__ = [
     "fit_run",
     "FittedSegment",
     "decode_values",
-    "segment_grid",
     "segment_agg",
     "MTID_RAW",
     "MTID_PMC",

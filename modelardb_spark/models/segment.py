@@ -1,5 +1,4 @@
-"""Segment decoding: grid (point reconstruction) and closed-form
-aggregates.
+"""Segment decoding: point reconstruction and closed-form aggregates.
 
 Mirrors the reference's Segment hierarchy (core/models/Segment.java and
 the per-model subclasses): a segment ``(start_ms, end_ms, interval_ms,
@@ -13,10 +12,13 @@ mtid, model)`` represents ``n = (end - start) / interval + 1`` points at
 - Gorilla (mtid 4): the decompressed array;
 - raw (mtid 1): the stored float32 array.
 
-`segment_partials` is the one batched aggregate kernel: per
-(segment ∩ window) count/min/max/sum for every model type, with
-``window_ms=None`` as the whole-segment case. `segment_agg` is the
-scalar per-segment form the fit uses.
+Two batched kernels cover every model type: `segment_points`
+reconstructs every point of a batch of segment rows (behind `grid`,
+`grid_group` and the DECODE_SEGMENT SQL function), and
+`segment_partials` computes per (segment ∩ window) count/min/max/sum,
+with ``window_ms=None`` as the whole-segment case. `model_params` is
+the one decoder of PMC/Swing model bytes into ``(p0, p1)``.
+`segment_agg` is the scalar per-segment form the fit uses.
 """
 
 from __future__ import annotations
@@ -69,9 +71,8 @@ def decode_dense_matrix(
     more than i values, so a batch of mostly 1-value segments costs
     one gather round plus a few narrow ones. Raw rows are plain
     frombuffer casts.
-    Used by grid, the DECODE_SEGMENT SQL function and, through
-    `decode_member_matrix`, by `segment_partials` — no per-value
-    Python anywhere."""
+    Called through `decode_member_matrix`, behind `segment_points` and
+    `segment_partials` — no per-value Python anywhere."""
     n = len(models)
     lengths = np.asarray(lengths, dtype=np.int64)
     if n == 0:
@@ -98,15 +99,6 @@ def decode_dense_matrix(
         v = raw_decode(models[i])[: lengths[i]]
         out[i, : v.size] = v
     return out
-
-
-def segment_grid(
-    mtid: int, model: bytes, start_ms: int, end_ms: int, interval_ms: int
-) -> tuple[np.ndarray, np.ndarray]:
-    """(timestamps_ms, values) for every point of the segment."""
-    n = segment_length(start_ms, end_ms, interval_ms)
-    ts = start_ms + interval_ms * np.arange(n, dtype=np.int64)
-    return ts, decode_values(mtid, model, start_ms, end_ms, interval_ms)
 
 
 def decode_member_matrix(
@@ -274,20 +266,53 @@ def segment_partials(seg: pd.DataFrame, window_ms: int | None = None):
     return tuple(np.concatenate(col) for col in zip(*parts))
 
 
-def segment_agg_batch(
-    mtids: np.ndarray,
-    models: list[bytes],
-    starts: np.ndarray,
-    ends: np.ndarray,
-    sis: np.ndarray,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Vectorized `segment_agg` over a batch of segment rows: returns
-    (counts, mins, maxs, sums) arrays, one entry per row. The model
-    parameters decode from the bytes (PMC constants as one big-endian
-    frombuffer, Swing (a, b) per serialized width, 8/12/16 B per
-    swing_model), then `segment_partials` runs with one window per
-    segment. The Arrow-batch body of the COUNT_S..AVG_S SQL aggregates
-    (SparkUDAF.scala:34-184)."""
+def segment_points(seg: pd.DataFrame):
+    """Every point of a batch of segment rows: the one implementation
+    of point reconstruction (the reference's Segment.grid,
+    Segment.java:97-108, which ViewDataPoint.scala calls). It runs
+    behind `grid`, `grid_group` and the DECODE_SEGMENT SQL function.
+
+    `seg` carries the columns `segment_partials` reads. PMC rows take
+    ``float32(p0)``; Swing rows take ``float32(p0 * bin_ms + p1)``
+    evaluated in float64, the arithmetic of a Catalyst
+    ``CAST(p0 * bin_ms + p1 AS FLOAT)``, so the values are bit-identical
+    to it; Gorilla/raw rows (group members with their stride too) go
+    through `decode_member_matrix`.
+
+    Returns arrays ``(row, bin_ms, value)``, one entry per point, `row`
+    indexing `seg`, in (row, bin_ms) order.
+    """
+    start = seg["start_ms"].to_numpy().astype(np.int64)
+    end = seg["end_ms"].to_numpy().astype(np.int64)
+    si = seg["interval_ms"].to_numpy().astype(np.int64)
+    n_ts = (end - start) // si + 1
+    row = np.repeat(np.arange(len(seg)), n_ts)
+    k = np.arange(row.size, dtype=np.int64) - (np.cumsum(n_ts) - n_ts)[row]
+    bin_ms = start[row] + si[row] * k
+    value = np.empty(row.size, dtype=np.float32)
+    mt = seg["mtid"].to_numpy()
+    ana = (mt == MTID_PMC) | (mt == MTID_SWING)
+    on_ana = ana[row]
+    r = row[on_ana]
+    p0 = seg["p0"].to_numpy().astype(np.float64)[r]
+    p1 = seg["p1"].to_numpy().astype(np.float64)[r]
+    value[on_ana] = np.where(
+        mt[r] == MTID_PMC, p0, p0 * bin_ms[on_ana] + p1
+    ).astype(np.float32)
+    if not ana.all():
+        vals, n_d, _, _ = decode_member_matrix(seg.iloc[np.flatnonzero(~ana)])
+        value[~on_ana] = vals[np.arange(vals.shape[1]) < n_d[:, None]]
+    return row, bin_ms, value
+
+
+def model_params(
+    mtids: np.ndarray, models: list[bytes]
+) -> tuple[np.ndarray, np.ndarray]:
+    """``(p0, p1)`` of each segment, decoded from its model bytes: the
+    PMC constant as one big-endian frombuffer (p1 NaN), the Swing
+    ``(a, b)`` per serialized width, 8/12/16 B per `swing_model`. NaN
+    for Gorilla/raw rows. These are the values the fit stores in the
+    p0/p1 columns."""
     mtids = np.asarray(mtids, dtype=np.int64)
     n = mtids.size
     p0 = np.full(n, np.nan)
@@ -307,6 +332,23 @@ def segment_agg_batch(
             rec = np.frombuffer(b"".join(models[i] for i in sel), dtype=dt)
             p0[sel] = rec["a"]
             p1[sel] = rec["b"]
+    return p0, p1
+
+
+def segment_agg_batch(
+    mtids: np.ndarray,
+    models: list[bytes],
+    starts: np.ndarray,
+    ends: np.ndarray,
+    sis: np.ndarray,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """Vectorized `segment_agg` over a batch of segment rows: returns
+    (counts, mins, maxs, sums) arrays, one entry per row. The model
+    parameters decode from the bytes (`model_params`), then
+    `segment_partials` runs with one window per segment. The
+    Arrow-batch body of the COUNT_S..AVG_S SQL aggregates
+    (SparkUDAF.scala:34-184)."""
+    p0, p1 = model_params(mtids, models)
     row, _, cnt, vmin, vmax, vsum = segment_partials(
         pd.DataFrame(
             {

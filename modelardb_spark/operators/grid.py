@@ -1,27 +1,22 @@
 """Grid operator: segments -> reconstructed data points.
 
 The reference's DataPoint view (ViewDataPoint.scala + Segment.grid,
-Segment.java:97-108). Hybrid execution:
+Segment.java:97-108). One `mapInPandas` pass of the
+`models.segment.segment_points` kernel reconstructs every model type:
+PMC/Swing rows from their p0/p1 columns, Gorilla/raw rows (and
+exploded group members, with the group stride) by lockstep decode.
 
-- PMC / Swing segments (mtid 2/3): pure JVM plan —
-  ``explode(sequence(start_ms, end_ms, interval))`` and the value as a
-  column expression over the materialized model parameters
-  (float32(p0) / float32(p0*t + p1)), inside whole-stage codegen.
-- Gorilla / raw segments (mtid 1/4): vectorized `mapInPandas` decode
-  (Arrow batches, NumPy bit decoding per segment).
-
-Point-time predicates should be applied by the caller as segment-bound
-overlap predicates *before* gridding (the reference's
+Catalyst cannot push a point-level predicate through the `mapInPandas`
+node, so point-time predicates should be applied by the caller as
+segment-bound overlap predicates *before* gridding (the reference's
 timestamp-predicate mapping, ViewDataPoint.scala:47-78) — see
-`restrict`. Residual exact filtering after gridding is cheap and
-Catalyst re-applies pushed filters anyway.
+`restrict` and the DATA_POINTS SQL table function.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -33,8 +28,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from modelardb_spark.models import MTID_GORILLA, MTID_PMC, MTID_RAW, MTID_SWING
-from modelardb_spark.models.segment import decode_dense_matrix
+from modelardb_spark.models.segment import segment_points
+from modelardb_spark.operators.rollup import _KERNEL_COLS
 
 POINT_SCHEMA = StructType(
     [
@@ -59,55 +54,25 @@ def restrict(segments: DataFrame, lo_ms: int | None, hi_ms: int | None) -> DataF
     return df
 
 
-def _decode_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Whole-batch vectorized decode: one lockstep Gorilla pass + one
-    masked flatten per Arrow batch (no per-segment Python loop)."""
+def _points(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in batches:
-        n_seg = len(pdf)
-        if n_seg == 0:
+        if len(pdf) == 0:
             continue
-        start = pdf["start_ms"].to_numpy().astype(np.int64)
-        end = pdf["end_ms"].to_numpy().astype(np.int64)
-        si = pdf["interval_ms"].to_numpy().astype(np.int64)
-        lens = (end - start) // si + 1
-        mat = decode_dense_matrix(pdf["mtid"].to_numpy(), list(pdf["model"]), lens)
-        idx = np.arange(mat.shape[1], dtype=np.int64)
-        mask = idx[None, :] < lens[:, None]
+        row, bin_ms, value = segment_points(pdf)
         yield pd.DataFrame(
             {
-                "conv_id": np.repeat(pdf["conv_id"].to_numpy(), lens),
-                "metric": np.repeat(pdf["metric"].to_numpy(), lens),
-                "bin_ms": (start[:, None] + si[:, None] * idx[None, :])[mask],
-                "value": mat[mask],
+                "conv_id": pdf["conv_id"].to_numpy()[row],
+                "metric": pdf["metric"].to_numpy()[row],
+                "bin_ms": bin_ms,
+                "value": value,
             }
         )
 
 
 def grid(segments: DataFrame) -> DataFrame:
-    """segments -> (conv_id, metric, bin_ms, value float32)."""
-    analytic = segments.where(F.col("mtid").isin(MTID_PMC, MTID_SWING))
-    dense = segments.where(F.col("mtid").isin(MTID_RAW, MTID_GORILLA))
-
-    exploded = analytic.select(
-        "conv_id",
-        "metric",
-        "mtid",
-        "p0",
-        "p1",
-        F.explode(
-            F.sequence(F.col("start_ms"), F.col("end_ms"), F.col("interval_ms"))
-        ).alias("bin_ms"),
-    )
-    analytic_points = exploded.select(
-        "conv_id",
-        "metric",
-        "bin_ms",
-        F.when(F.col("mtid") == MTID_PMC, F.col("p0"))
-        .otherwise(F.col("p0") * F.col("bin_ms") + F.col("p1"))
-        .cast("float")
-        .alias("value"),
-    )
-    dense_points = dense.select(
-        "conv_id", "metric", "start_ms", "end_ms", "interval_ms", "mtid", "model"
-    ).mapInPandas(_decode_batch, POINT_SCHEMA)
-    return analytic_points.unionByName(dense_points)
+    """segments -> (conv_id, metric, bin_ms, value float32). Frames of
+    exploded group members keep their ``goff, gsize`` (and dimension
+    groups' ``ukey``) columns, so members decode with the group
+    stride."""
+    member = [c for c in ("goff", "gsize", "ukey") if c in segments.columns]
+    return segments.select(*_KERNEL_COLS, *member).mapInPandas(_points, POINT_SCHEMA)

@@ -23,8 +23,8 @@ Reference semantics re-expressed Spark-first:
 - *Explode*: at query time each group segment fans out to one logical
   segment per present tid (SegmentGroup.explode, :51-111) carrying
   (group_offset, group_size) so the decoder strides the interleaved
-  payload. Implemented as a JVM-side posexplode — no Python until the
-  dense decode itself.
+  payload. Implemented as a JVM-side posexplode; the members then run
+  through the same point and partials kernels as per-series segments.
 
 Model cascade for groups — the reference's any-model-on-group-stream
 contract (core/SegmentGenerator.java:154-167 iterates every configured
@@ -70,13 +70,12 @@ from modelardb_spark.models.errors import outside_bound_vec
 from modelardb_spark.models.gorilla import (
     gorilla_compress,
     gorilla_compress_rows,
-    gorilla_decompress,
 )
 from modelardb_spark.models.pmc_mean import pmc_model, pmc_prefix, pmc_value
-from modelardb_spark.models.segment import decode_member_matrix
 from modelardb_spark.models.swing import swing_minmax, swing_model, swing_sum
-from modelardb_spark.models.uncompressed import raw_decode, raw_model
+from modelardb_spark.models.uncompressed import raw_model
 from modelardb_spark.operators.fit import fit_arranged
+from modelardb_spark.operators.grid import grid
 from modelardb_spark.operators.rollup import merge_partials, window_partials
 
 GROUP_SEGMENT_SCHEMA = StructType(
@@ -637,92 +636,13 @@ def explode_group_segments(
     )
 
 
-def decode_group_values(
-    mtid: int,
-    model: bytes,
-    n_ts: int,
-    gsize: int,
-    goff: int,
-    start_ms: int = 0,
-    interval_ms: int = 1,
-) -> np.ndarray:
-    """Member values of a group segment: decode the interleaved payload
-    and stride by (goff, gsize). PMC is the shared constant; Swing is
-    the shared line float32(a*t + b), identical for every member."""
-    if mtid == MTID_PMC:
-        return np.full(n_ts, pmc_value(model), dtype=np.float32)
-    if mtid == MTID_SWING:
-        from modelardb_spark.models.swing import swing_decode
-
-        a, b = swing_decode(model)
-        t = start_ms + interval_ms * np.arange(n_ts, dtype=np.float64)
-        return (a * t + b).astype(np.float32)
-    total = n_ts * gsize
-    if mtid == MTID_GORILLA:
-        return gorilla_decompress(model, total)[goff::gsize]
-    if mtid == MTID_RAW:
-        return raw_decode(model)[:total][goff::gsize]
-    raise ValueError(f"unsupported group mtid {mtid}")
-
-
-_POINT_SCHEMA = StructType(
-    [
-        StructField("conv_id", StringType(), False),
-        StructField("metric", StringType(), False),
-        StructField("bin_ms", LongType(), False),
-        StructField("value", FloatType(), False),
-    ]
-)
-
-
 def grid_group(
     gseg: DataFrame, metrics: tuple[str, ...] = ("turn_rate", "tool_usage")
 ) -> DataFrame:
-    """Group segments -> reconstructed per-series points. PMC members
-    take the JVM explode path (value = p0 column expression); dense
-    members decode vectorized with the group stride."""
-    exploded = explode_group_segments(gseg, metrics)
-    analytic = exploded.where(F.col("mtid").isin(MTID_PMC, MTID_SWING))
-    analytic_points = analytic.select(
-        "conv_id",
-        "metric",
-        "mtid",
-        "p0",
-        "p1",
-        F.explode(
-            F.sequence(F.col("start_ms"), F.col("end_ms"), F.col("interval_ms"))
-        ).alias("bin_ms"),
-    ).select(
-        "conv_id",
-        "metric",
-        "bin_ms",
-        F.when(F.col("mtid") == MTID_PMC, F.col("p0"))
-        .otherwise(F.col("p0") * F.col("bin_ms") + F.col("p1"))
-        .cast("float")
-        .alias("value"),
-    )
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            member, n_ts, start, si = decode_member_matrix(pdf)
-            idx = np.arange(member.shape[1], dtype=np.int64)
-            mask = idx[None, :] < n_ts[:, None]
-            yield pd.DataFrame(
-                {
-                    "conv_id": np.repeat(pdf["conv_id"].to_numpy(), n_ts),
-                    "metric": np.repeat(pdf["metric"].to_numpy(), n_ts),
-                    "bin_ms": (start[:, None] + si[:, None] * idx[None, :])[mask],
-                    "value": member[mask],
-                }
-            )
-
-    dense = exploded.where(~F.col("mtid").isin(MTID_PMC, MTID_SWING)).select(
-        "conv_id", "metric", "start_ms", "end_ms", "interval_ms",
-        "mtid", "model", "goff", "gsize",
-    )
-    return analytic_points.unionByName(dense.mapInPandas(decode, _POINT_SCHEMA))
+    """Group segments -> reconstructed per-series points: the exploded
+    members run through the same point kernel as per-series segments
+    (dense members decode once with the group stride)."""
+    return grid(explode_group_segments(gseg, metrics))
 
 
 def rollup_from_group_segments(

@@ -252,41 +252,26 @@ def segment_sql(spark: SparkSession, sql: str):
 
 def _make_decode_udf():
     """Pandas UDF: one segment row -> its full decoded float32 value
-    array (dense mtids decode in one lockstep matrix per Arrow batch;
-    analytic mtids take closed forms — callers normally route those
-    through pure-SQL CASE arms instead)."""
+    array. Each Arrow batch decodes ``(p0, p1)`` from the model bytes
+    (`model_params`) and runs the `segment_points` kernel once, for
+    every model type."""
     import numpy as np
 
-    from modelardb_spark.models import MTID_GORILLA, MTID_PMC, MTID_RAW, MTID_SWING
-    from modelardb_spark.models.segment import decode_dense_matrix
-    from modelardb_spark.models.swing import swing_decode
+    from modelardb_spark.models.segment import model_params, segment_points
 
     @pandas_udf("array<float>")
     def decode_segment(mtid: pd.Series, model: pd.Series, start: pd.Series,
                        end: pd.Series, si: pd.Series) -> pd.Series:
-        mt = mtid.to_numpy()
-        s = start.to_numpy().astype(np.int64)
-        e = end.to_numpy().astype(np.int64)
-        iv = si.to_numpy().astype(np.int64)
-        n = (e - s) // iv + 1
+        if len(mtid) == 0:
+            return pd.Series([], dtype=object)
         models = [bytes(m) for m in model]
-        out: list = [None] * len(models)
-        dense = np.flatnonzero(np.isin(mt, (MTID_GORILLA, MTID_RAW)))
-        if dense.size:
-            mat = decode_dense_matrix(
-                mt[dense], [models[i] for i in dense], n[dense]
-            )
-            for j, i in enumerate(dense):
-                out[i] = mat[j, : n[i]]
-        for i in np.flatnonzero(mt == MTID_PMC):
-            from modelardb_spark.models.pmc_mean import pmc_value
-
-            out[i] = np.full(n[i], pmc_value(models[i]), dtype=np.float32)
-        for i in np.flatnonzero(mt == MTID_SWING):
-            a, b = swing_decode(models[i])
-            t = s[i] + iv[i] * np.arange(n[i], dtype=np.float64)
-            out[i] = (a * t + b).astype(np.float32)
-        return pd.Series(out)
+        p0, p1 = model_params(mtid.to_numpy(), models)
+        seg = pd.DataFrame({"mtid": mtid.to_numpy(), "model": models,
+                            "start_ms": start.to_numpy(), "end_ms": end.to_numpy(),
+                            "interval_ms": si.to_numpy(), "p0": p0, "p1": p1})
+        row, _, value = segment_points(seg)
+        cuts = np.cumsum(np.bincount(row, minlength=len(seg)))[:-1]
+        return pd.Series(np.split(value, cuts))
 
     return decode_segment
 
@@ -298,10 +283,10 @@ def register_point_function(spark: SparkSession, segment_view: str = "segments")
     predicate evaluated BEFORE any reconstruction (Catalyst pushes it
     into the segment scan), the grid indexes are clamped to the window
     (Segment.java:73-95 outward rounding -> only in-window points are
-    ever generated), and dense segments decode through the vectorized
-    DECODE_SEGMENT pandas UDF with the ORIGINAL segment start so the
-    stream offsets stay correct (the reference's temporal-offset
-    discipline). PMC/Swing rows never leave SQL."""
+    ever generated), and every segment decodes through the vectorized
+    DECODE_SEGMENT pandas UDF (the `segment_points` kernel) with the
+    ORIGINAL segment start so the stream offsets stay correct (the
+    reference's temporal-offset discipline)."""
     spark.udf.register("DECODE_SEGMENT", _make_decode_udf())
     spark.sql(
         f"""
@@ -310,14 +295,10 @@ def register_point_function(spark: SparkSession, segment_view: str = "segments")
         RETURN
         SELECT conv_id, metric,
                start_ms + i * interval_ms AS bin_ms,
-               CASE WHEN mtid = 2 THEN CAST(p0 AS FLOAT)
-                    WHEN mtid = 3 THEN CAST(p0 * (start_ms + i * interval_ms) + p1 AS FLOAT)
-                    ELSE vals[CAST(i AS INT)] END AS value
+               vals[CAST(i AS INT)] AS value
         FROM (
           SELECT *,
-                 CASE WHEN mtid IN (1, 4)
-                      THEN DECODE_SEGMENT(mtid, model, start_ms, end_ms, interval_ms)
-                 END AS vals,
+                 DECODE_SEGMENT(mtid, model, start_ms, end_ms, interval_ms) AS vals,
                  GREATEST(0L, CAST(ceil((lo - start_ms) / CAST(interval_ms AS DOUBLE)) AS BIGINT)) AS i_lo,
                  LEAST((end_ms - start_ms) DIV interval_ms,
                        CAST(floor((hi - start_ms) / CAST(interval_ms AS DOUBLE)) AS BIGINT)) AS i_hi

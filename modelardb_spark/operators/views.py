@@ -25,8 +25,12 @@ def register_views(
     point_view: str = "data_points",
 ) -> None:
     """Register the two-view surface. The point view carries both the
-    epoch-millis and a timestamp column; predicates on it are pushed to
-    the segment scan by Catalyst through the view definition."""
+    epoch-millis and a timestamp column. Its rows come out of one
+    `mapInPandas` point kernel, which Catalyst cannot push predicates
+    through: a filter on the point view runs after every segment is
+    reconstructed. To prune segments first, restrict the segments
+    (`grid.restrict`) or query the DATA_POINTS(lo, hi) table
+    function."""
     segments.createOrReplaceTempView(segment_view)
     pts = grid(segments).withColumn(
         "ts", F.timestamp_millis(F.col("bin_ms"))

@@ -5,17 +5,28 @@ production cascade in modelardb_spark.models.
 Follows core/SegmentGenerator.java + the three model types append-by-
 append (group size 1), so its emitted (start, end, mtid, length) stream
 is what the reference would produce for the same run.
+
+Also holds the scalar reference decoders (`segment_grid`,
+`decode_group_values`) that the batched point kernel
+(`models.segment.segment_points`) is checked against.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
+from modelardb_spark.models.cascade import (
+    MTID_GORILLA,
+    MTID_PMC,
+    MTID_RAW,
+    MTID_SWING,
+)
 from modelardb_spark.models.errors import outside_percentage_error_bound
-from modelardb_spark.models.gorilla import gorilla_compress
-from modelardb_spark.models.pmc_mean import pmc_model
-from modelardb_spark.models.swing import swing_model
-from modelardb_spark.models.uncompressed import raw_model
+from modelardb_spark.models.gorilla import gorilla_compress, gorilla_decompress
+from modelardb_spark.models.pmc_mean import pmc_model, pmc_value
+from modelardb_spark.models.segment import decode_values, segment_length
+from modelardb_spark.models.swing import swing_decode, swing_model
+from modelardb_spark.models.uncompressed import raw_decode, raw_model
 
 F32 = np.float32
 
@@ -355,3 +366,30 @@ def oracle_fit_group_run(ts_ms, vals2d, error_bound=0.0, length_bound=50, n_gaps
         out.append((ts[pos], ts[pos + seg_ts - 1], mtid, bytes(model), length))
         pos += seg_ts
     return out
+
+
+def segment_grid(mtid, model, start_ms, end_ms, interval_ms):
+    """(timestamps_ms, values) for every point of one segment."""
+    n = segment_length(start_ms, end_ms, interval_ms)
+    ts = start_ms + interval_ms * np.arange(n, dtype=np.int64)
+    return ts, decode_values(mtid, model, start_ms, end_ms, interval_ms)
+
+
+def decode_group_values(
+    mtid, model, n_ts, gsize, goff, start_ms=0, interval_ms=1
+):
+    """Member values of a group segment: decode the interleaved payload
+    and stride by (goff, gsize). PMC is the shared constant; Swing is
+    the shared line float32(a*t + b), identical for every member."""
+    if mtid == MTID_PMC:
+        return np.full(n_ts, pmc_value(model), dtype=np.float32)
+    if mtid == MTID_SWING:
+        a, b = swing_decode(model)
+        t = start_ms + interval_ms * np.arange(n_ts, dtype=np.float64)
+        return (a * t + b).astype(np.float32)
+    total = n_ts * gsize
+    if mtid == MTID_GORILLA:
+        return gorilla_decompress(model, total)[goff::gsize]
+    if mtid == MTID_RAW:
+        return raw_decode(model)[:total][goff::gsize]
+    raise ValueError(f"unsupported group mtid {mtid}")

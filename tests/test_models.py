@@ -19,12 +19,11 @@ from modelardb_spark.models import (
     outside_percentage_error_bound,
     percentage_error,
     segment_agg,
-    segment_grid,
 )
 from modelardb_spark.models.gorilla import gorilla_compress, gorilla_decompress
 from modelardb_spark.models.pmc_mean import pmc_prefix
 from modelardb_spark.models.swing import swing_fit, swing_model, swing_verify
-from tests.reference_oracle import oracle_fit_run
+from tests.reference_oracle import oracle_fit_run, segment_grid
 
 INTERVAL = 60_000
 

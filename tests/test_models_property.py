@@ -9,13 +9,13 @@ import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from modelardb_spark.models import (
-    fit_run,
-    outside_percentage_error_bound,
+from modelardb_spark.models import fit_run, outside_percentage_error_bound
+from modelardb_spark.models.gorilla import gorilla_compress, gorilla_decompress
+from tests.reference_oracle import (
+    decode_group_values,
+    oracle_fit_run,
     segment_grid,
 )
-from modelardb_spark.models.gorilla import gorilla_compress, gorilla_decompress
-from tests.reference_oracle import oracle_fit_run
 
 INTERVAL = 60_000
 
@@ -128,7 +128,6 @@ def test_group_fit_roundtrip_property(rows, gaps_between):
     from modelardb_spark.operators.groupfit import (
         DYNAMIC_SPLIT_FRACTION,
         _fit_group_runs,
-        decode_group_values,
     )
 
     # build the wide frame with optional >1-bin jumps between rows
@@ -156,7 +155,6 @@ def _roundtrip_group_paths(pdf, bins):
     from modelardb_spark.operators.groupfit import (
         DYNAMIC_SPLIT_FRACTION,
         _fit_group_runs,
-        decode_group_values,
     )
 
     for split_fraction in (None, DYNAMIC_SPLIT_FRACTION):
@@ -205,7 +203,6 @@ def test_dim_group_fit_roundtrip_property(rows):
     import pandas as pd
 
     from modelardb_spark.operators.dimgroup import _fit_dim_group_runs
-    from modelardb_spark.operators.groupfit import decode_group_values
 
     recs = []
     for i, vals in enumerate(rows):

@@ -337,6 +337,14 @@ def test_duplicate_clusters_severs_lsh_lineage(spark, sf_small):
         assert marker not in plan_d, f"LSH lineage leaked into plan: {marker}"
 
 
+def _snap(df):
+    """Sorted rows with floats as repr: equality is bit-for-bit."""
+    return sorted(
+        tuple(repr(x) if isinstance(x, float) else x for x in r)
+        for r in df.collect()
+    )
+
+
 def _closed_form_oracle(segments, window_ms):
     """Catalyst column expressions of the per-(segment ∩ window)
     PMC/Swing closed forms: the parity oracle of the NumPy kernel."""
@@ -444,15 +452,9 @@ def test_window_partials_match_oracle_and_scalar_decode(spark):
         "interval_ms long, mtid int, model binary, p0 double, p1 double",
     )
 
-    def snap(df):
-        return sorted(
-            tuple(repr(x) if isinstance(x, float) else x for x in r)
-            for r in df.collect()
-        )
-
-    closed = snap(window_partials(seg.where(F.col("mtid").isin(2, 3)), HOUR_MS))
+    closed = _snap(window_partials(seg.where(F.col("mtid").isin(2, 3)), HOUR_MS))
     assert len(closed) > 0
-    assert closed == snap(_closed_form_oracle(seg, HOUR_MS))
+    assert closed == _snap(_closed_form_oracle(seg, HOUR_MS))
 
     want = []
     for conv, met, s, e, si, mtid, model, _, _ in rows:
@@ -465,6 +467,171 @@ def test_window_partials_match_oracle_and_scalar_decode(spark):
             want.append((conv, met, int(w), int(x.size), float(x.min()),
                          float(x.max()), float(x.astype(np.float64).sum())))
     dense = window_partials(seg.where(F.col("mtid").isin(1, 4)), HOUR_MS)
-    assert snap(dense) == sorted(
+    assert _snap(dense) == sorted(
         tuple(repr(x) if isinstance(x, float) else x for x in r) for r in want
     )
+
+
+def _point_oracle(segments):
+    """Catalyst ``explode(sequence)`` form of PMC/Swing point
+    reconstruction: the parity oracle of the NumPy point kernel."""
+    return (
+        segments.where(F.col("mtid").isin(2, 3))
+        .select(
+            "conv_id",
+            "metric",
+            "mtid",
+            "p0",
+            "p1",
+            F.explode(
+                F.sequence(F.col("start_ms"), F.col("end_ms"), F.col("interval_ms"))
+            ).alias("bin_ms"),
+        )
+        .select(
+            "conv_id",
+            "metric",
+            "bin_ms",
+            F.when(F.col("mtid") == 2, F.col("p0"))
+            .otherwise(F.col("p0") * F.col("bin_ms") + F.col("p1"))
+            .cast("float")
+            .alias("value"),
+        )
+    )
+
+
+def test_segment_points_match_oracle_and_scalar_decode(spark):
+    """The point kernel, bit for bit. PMC rows and Swing rows (positive,
+    negative and zero slope; 8-, 12- and 16-byte models) equal the
+    Catalyst oracle through `grid` and through DECODE_SEGMENT, which
+    decodes (p0, p1) from the model bytes. Gorilla/raw rows and strided
+    group members equal the scalar reference decoders slot for slot, in
+    batches where dense and analytic rows interleave; an empty batch
+    gives no points."""
+    import numpy as np
+    import pandas as pd
+
+    from modelardb_spark.models.gorilla import gorilla_compress
+    from modelardb_spark.models.segment import segment_points
+    from modelardb_spark.models.swing import swing_decode, swing_model
+    from modelardb_spark.models.uncompressed import raw_model
+    from modelardb_spark.operators.grid import grid
+    from modelardb_spark.operators.sqlfunctions import _make_decode_udf
+    from tests.reference_oracle import decode_group_values, segment_grid
+
+    iv = 60_000
+    base = 1_704_672_000_000
+    swings = [
+        (2.0**-30, 3.5),  # 8 bytes
+        (-(2.0**-31), 1.0),  # 8 bytes
+        (0.0, -2.25),  # 8 bytes
+        (2.0**-30, 0.1),  # 12 bytes
+        (-(2.0**-32), 7.3),  # 12 bytes
+        (0.0, 0.1),  # 12 bytes
+        (1e-9, 0.1),  # 16 bytes
+        (-3e-10, 2.0),  # 16 bytes
+    ]
+    rng = np.random.default_rng(8)
+    cols = ["conv_id", "metric", "start_ms", "end_ms", "interval_ms",
+            "mtid", "model", "p0", "p1"]
+    rows = []
+    for i in range(48):
+        s = base + i * 37 * iv
+        n = int(rng.integers(1, 120))
+        e = s + (n - 1) * iv
+        kind = i % 4
+        if kind == 0:  # PMC
+            c = np.float32(rng.normal())
+            model, p0, p1 = np.array([c], ">f4").tobytes(), float(c), float("nan")
+            mtid = 2
+        elif kind == 1:  # Swing
+            model = swing_model(*swings[(i // 4) % len(swings)])
+            (p0, p1), mtid = swing_decode(model), 3
+        else:  # Gorilla, raw
+            vals = rng.normal(size=n).astype(np.float32)
+            model = gorilla_compress(vals) if kind == 2 else raw_model(vals, n)
+            p0 = p1 = float("nan")
+            mtid = 4 if kind == 2 else 1
+        rows.append((f"r{i:02d}", "m", s, e, iv, mtid, model, p0, p1))
+    assert {len(swing_model(a, b)) for a, b in swings} == {8, 12, 16}
+
+    # NumPy kernel: every row's points, slot for slot
+    pdf = pd.DataFrame(rows, columns=cols)
+    row, bin_ms, value = segment_points(pdf)
+    assert (np.diff(row) >= 0).all()
+    for i, (_, _, s, e, si, mtid, model, _, _) in enumerate(rows):
+        ts, want = segment_grid(mtid, model, s, e, si)
+        np.testing.assert_array_equal(bin_ms[row == i], ts)
+        if mtid in (1, 4):
+            assert value[row == i].tobytes() == want.tobytes(), i
+    empty = segment_points(pdf.iloc[:0])
+    assert [a.size for a in empty] == [0, 0, 0]
+
+    # group members with a stride, dense groups around an analytic one
+    grows = []
+    for g, mtid in enumerate((4, 2, 1, 4)):
+        n_ts, gsize = int(rng.integers(1, 30)), 3
+        s = base + g * 100 * iv
+        inter = rng.normal(size=n_ts * gsize).astype(np.float32)
+        model = {4: gorilla_compress(inter), 1: raw_model(inter, inter.size),
+                 2: inter[:1].astype(">f4").tobytes()}[mtid]
+        p0 = float(inter[0]) if mtid == 2 else float("nan")
+        for goff in range(gsize):
+            grows.append((f"g{g}", f"m{goff}", s, s + (n_ts - 1) * iv, iv,
+                          mtid, model, p0, float("nan"), goff, gsize))
+    gdf = pd.DataFrame(grows, columns=cols + ["goff", "gsize"])
+    row, bin_ms, value = segment_points(gdf)
+    for i, r in enumerate(grows):
+        n_ts = (r[3] - r[2]) // iv + 1
+        want = decode_group_values(r[5], r[6], n_ts, r[10], r[9], r[2], iv)
+        assert value[row == i].tobytes() == want.tobytes(), i
+
+    # Spark: grid() and DECODE_SEGMENT against the Catalyst oracle
+    seg = spark.createDataFrame(
+        rows,
+        "conv_id string, metric string, start_ms long, end_ms long, "
+        "interval_ms long, mtid int, model binary, p0 double, p1 double",
+    )
+    decode = _make_decode_udf()
+    decoded = seg.select(
+        "conv_id",
+        "metric",
+        "start_ms",
+        "interval_ms",
+        F.posexplode(
+            decode("mtid", "model", "start_ms", "end_ms", "interval_ms")
+        ).alias("k", "value"),
+    ).select(
+        "conv_id",
+        "metric",
+        (F.col("start_ms") + F.col("k") * F.col("interval_ms")).alias("bin_ms"),
+        "value",
+    )
+    points = grid(seg)
+    analytic = [r[0] for r in rows if r[5] in (2, 3)]
+    oracle = _snap(_point_oracle(seg))
+    assert len(oracle) > 0
+    assert _snap(points.where(F.col("conv_id").isin(analytic))) == oracle
+    assert _snap(decoded.where(F.col("conv_id").isin(analytic))) == oracle
+    assert _snap(decoded) == _snap(points)
+
+
+def test_grid_plans_the_fit_once(spark, sf_small, tmp_path):
+    """`grid` and `grid_group` are one mapInPandas over their input, with
+    no union of per-model branches: over an unpersisted fit, each plan
+    holds the fit's one exchange and MapInPandas once, plus the point
+    kernel."""
+    from modelardb_spark.operators.fit import fit_segments_from_transcripts
+    from modelardb_spark.operators.grid import grid
+    from modelardb_spark.operators.groupfit import fit_segments_grouped, grid_group
+
+    spark.catalog.clearCache()
+    t = transcripts_from_events(spark, sf_small)
+    derive_series_wide(t).write.parquet(str(tmp_path / "wide"))
+    wide = spark.read.parquet(str(tmp_path / "wide"))
+    for name, pts in {
+        "grid": grid(fit_segments_from_transcripts(t)),
+        "grid_group": grid_group(fit_segments_grouped(wide)),
+    }.items():
+        plan = _plan(pts)
+        assert plan.count("Exchange hashpartitioning") == 1, (name, plan)
+        assert plan.count("MapInPandas") == 2, (name, plan)
