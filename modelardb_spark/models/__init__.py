@@ -20,10 +20,7 @@ from modelardb_spark.models.cascade import (
     FittedSegment,
     fit_run,
 )
-from modelardb_spark.models.segment import (
-    decode_values,
-    segment_agg,
-)
+from modelardb_spark.models.segment import decode_values
 
 __all__ = [
     "percentage_error",
@@ -31,7 +28,6 @@ __all__ = [
     "fit_run",
     "FittedSegment",
     "decode_values",
-    "segment_agg",
     "MTID_RAW",
     "MTID_PMC",
     "MTID_SWING",

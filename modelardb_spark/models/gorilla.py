@@ -73,8 +73,8 @@ def gorilla_compress(values: np.ndarray) -> bytes:
 def gorilla_compress_rows(mat: np.ndarray) -> list[bytes]:
     """Compress M independent k-value float32 streams in lockstep —
     the vectorized (encoder) twin of `gorilla_decompress_matrix`, used
-    by the single-timestamp group fast paths where millions of tiny
-    streams are emitted per batch.
+    by the single-timestamp group emitter (`groupfit._single_ts_rows`),
+    where millions of tiny streams are emitted per batch.
 
     All rows advance one VALUE per iteration; the emitted chunk of each
     row (control bits + optional window header + xor payload, <= 45

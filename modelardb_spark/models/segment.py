@@ -17,8 +17,8 @@ reconstructs every point of a batch of segment rows (behind `grid`,
 `grid_group` and the DECODE_SEGMENT SQL function), and
 `segment_partials` computes per (segment ∩ window) count/min/max/sum,
 with ``window_ms=None`` as the whole-segment case. `model_params` is
-the one decoder of PMC/Swing model bytes into ``(p0, p1)``.
-`segment_agg` is the scalar per-segment form the fit uses.
+the one decoder of PMC/Swing model bytes into ``(p0, p1)``. The fit
+computes its own whole-segment aggregates (`models.cascade.fit_segment`).
 """
 
 from __future__ import annotations
@@ -34,7 +34,7 @@ from modelardb_spark.models.cascade import (
 )
 from modelardb_spark.models.gorilla import gorilla_decompress
 from modelardb_spark.models.pmc_mean import pmc_value
-from modelardb_spark.models.swing import swing_decode, swing_minmax, swing_sum
+from modelardb_spark.models.swing import swing_decode
 from modelardb_spark.models.uncompressed import raw_decode
 
 
@@ -342,9 +342,9 @@ def segment_agg_batch(
     ends: np.ndarray,
     sis: np.ndarray,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Vectorized `segment_agg` over a batch of segment rows: returns
-    (counts, mins, maxs, sums) arrays, one entry per row. The model
-    parameters decode from the bytes (`model_params`), then
+    """Whole-segment (count, min, max, sum) of a batch of segment rows:
+    returns (counts, mins, maxs, sums) arrays, one entry per row. The
+    model parameters decode from the bytes (`model_params`), then
     `segment_partials` runs with one window per segment. The
     Arrow-batch body of the COUNT_S..AVG_S SQL aggregates
     (SparkUDAF.scala:34-184)."""
@@ -370,25 +370,3 @@ def segment_agg_batch(
         vsum[order],
     )
 
-
-def segment_agg(
-    mtid: int, model: bytes, start_ms: int, end_ms: int, interval_ms: int
-) -> tuple[int, float, float, float]:
-    """Closed-form (count, min, max, sum) without gridding where the
-    model allows (the reference's aggregate-on-model capability,
-    SparkUDAF.scala:34-184 backed by the per-model Segment methods)."""
-    n = segment_length(start_ms, end_ms, interval_ms)
-    if mtid == MTID_PMC:
-        v = pmc_value(model)
-        return n, v, v, float(v) * n
-    if mtid == MTID_SWING:
-        a, b = swing_decode(model)
-        lo, hi = swing_minmax(a, b, start_ms, end_ms)
-        return n, lo, hi, swing_sum(a, b, start_ms, end_ms, n)
-    values = decode_values(mtid, model, start_ms, end_ms, interval_ms)
-    return (
-        n,
-        float(values.min()),
-        float(values.max()),
-        float(values.sum(dtype=np.float64)),
-    )

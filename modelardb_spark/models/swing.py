@@ -19,7 +19,10 @@ lines always pass through the pivot ``(t0, v0)``, so tightening the
 upper (lower) bound is equivalent to a running min (max) over candidate
 slopes — identical to the reference's conditional updates in exact
 arithmetic, and any float-level divergence is caught by the float32
-re-verification above.
+re-verification above. The same search serves a group run: the N
+same-timestamp appends the reference feeds the filter for a (T, N)
+member matrix (SegmentGenerator.java:154-167) constrain the line to the
+band ``[max_i(v_i - dev_i), min_i(v_i + dev_i)]`` at each timestamp.
 """
 
 from __future__ import annotations
@@ -34,50 +37,54 @@ from modelardb_spark.models.errors import outside_bound_vec
 def swing_fit(
     timestamps: np.ndarray, values: np.ndarray, error_bound: float
 ) -> tuple[int, float, float]:
-    """Fit a line to the maximal prefix of (timestamps, values).
+    """Fit one line to the maximal prefix of a run: 1-D `values`, or a
+    (T, N) matrix of N members sharing `timestamps`.
 
-    Returns ``(prefix_len, a, b)`` where the line is ``a*t + b`` in
-    float64; ``prefix_len < 2`` means no line can be fitted.
+    Slopes come from the per-timestamp bands. The pivot is the first
+    member's first value and must lie in every member's band at t0, and
+    a timestamp whose members' bands do not overlap ends the prefix.
+    Point i >= 2 is rejected by the reference's per-point test
+    ``uba + dev < v or lba - dev > v`` against the bounds as of point
+    i-1, for every member. With N = 1 every band is the point's own
+    ``[v - dev, v + dev]``, so both extra checks always pass.
+
+    Returns ``(prefix_timestamps, a, b)`` where the line is ``a*t + b``
+    in float64; ``prefix_timestamps < 2`` means no line can be fitted.
     """
     t = np.asarray(timestamps, dtype=np.float64)
-    v = np.asarray(values, dtype=np.float32).astype(np.float64)
-    n = v.size
+    n = t.size
     if n < 2:
         return n, 0.0, 0.0
-
-    t0, v0 = t[0], v[0]
+    v = np.asarray(values, dtype=np.float32).astype(np.float64).reshape(n, -1)
     dev = np.abs(v * (error_bound / 100.1))
-    dt = t[1:] - t0
+    if v.shape[1] == 1:  # one member's band is its own [v - dev, v + dev]
+        lo_k, hi_k = (v - dev)[:, 0], (v + dev)[:, 0]
+    else:
+        lo_k, hi_k = (v - dev).max(axis=1), (v + dev).min(axis=1)
+    infeasible = ~(lo_k <= hi_k)
+    t0, v0 = t[0], v[0, 0]
+    if infeasible[0] or infeasible[1] or not (lo_k[0] <= v0 <= hi_k[0]):
+        return 1, 0.0, 0.0
 
-    # candidate slopes from pivoting each point's +/- deviation band
-    slope_up = ((v[1:] + dev[1:]) - v0) / dt
-    slope_lo = ((v[1:] - dev[1:]) - v0) / dt
-    hi = np.minimum.accumulate(slope_up)
-    lo = np.maximum.accumulate(slope_lo)
+    # candidate slopes from pivoting each timestamp's band
+    dt = t[1:] - t0
+    hi = np.minimum.accumulate((hi_k[1:] - v0) / dt)
+    lo = np.maximum.accumulate((lo_k[1:] - v0) / dt)
 
     # check point i (i >= 2) against the bounds as of point i-1, using the
     # reference's exact evaluation form a*t + b with b = v0 - a*t0
+    prefix = n
     if n > 2:
-        hi_prev, lo_prev = hi[:-1], lo[:-1]
-        ti, vi, di = t[2:], v[2:], dev[2:]
+        hi_prev, lo_prev = hi[:-1, None], lo[:-1, None]
+        ti, vi, di = t[2:, None], v[2:], dev[2:]
         uba = hi_prev * ti + (v0 - hi_prev * t0)
         lba = lo_prev * ti + (v0 - lo_prev * t0)
-        fail = (uba + di < vi) | (lba - di > vi)
-        if fail.any():
-            k = int(np.argmax(fail))  # first failing point index - 2
-            prefix = k + 2
-            hi_a, lo_a = hi[k], lo[k]
-        else:
-            prefix = n
-            hi_a, lo_a = hi[-1], lo[-1]
-    else:
-        prefix = 2
-        hi_a, lo_a = hi[0], lo[0]
-
-    hi_b = v0 - hi_a * t0
-    lo_b = v0 - lo_a * t0
+        fail = (uba + di < vi) | (lba - di > vi) | infeasible[2:, None]
+        if fail.any():  # first failing timestamp: row of the first flag
+            prefix = int(np.argmax(fail)) // fail.shape[1] + 2
+    hi_a, lo_a = hi[prefix - 2], lo[prefix - 2]
     a = (lo_a + hi_a) / 2.0
-    b = (lo_b + hi_b) / 2.0
+    b = ((v0 - lo_a * t0) + (v0 - hi_a * t0)) / 2.0
     return prefix, a, b
 
 
@@ -89,10 +96,13 @@ def swing_verify(
     error_bound: float,
 ) -> bool:
     """Float32-precision verification pass (reference :144-174): every
-    point must be within the bound of float32(a*t + b)."""
+    point (every member's, for a (T, N) `values`) must be within the
+    bound of float32(a*t + b)."""
     t = np.asarray(timestamps, dtype=np.float64)
     approx = (a * t + b).astype(np.float32)
     v = np.asarray(values, dtype=np.float32)
+    if v.ndim == 2:
+        approx = approx[:, None]
     return not outside_bound_vec(error_bound, approx, v).any()
 
 

@@ -44,6 +44,7 @@ from modelardb_spark.operators.groupfit import (
     _GCOLS,
     _fit_group_run,
     _rollup_from_exploded,
+    _single_ts_rows,
 )
 
 
@@ -85,10 +86,9 @@ def materialize_members(members: DataFrame) -> DataFrame:
     the explode-side broadcast each replay the whole scan. Collecting
     the registry once and re-creating it as a local relation removes
     the duplicate series scans from every dimension-group plan. Same
-    small-data posture as the broadcast `explode_dim_group_segments`
-    already applies (fine to ~tens of millions of series); beyond
-    that, skip this and pass broadcast_registry=False so the registry
-    stays distributed end to end. The round trip is Arrow both ways
+    small-data posture as the registry broadcast in
+    `explode_dim_group_segments` (fine to ~tens of millions of
+    series). The round trip is Arrow both ways
     (toArrow + createDataFrame-from-Arrow): lossless for every column
     type, where a pandas hop would turn a nullable integer column into
     float64, and without the per-row pickling of a collect() of Rows."""
@@ -96,42 +96,20 @@ def materialize_members(members: DataFrame) -> DataFrame:
     return spark.createDataFrame(members.toArrow(), schema=members.schema)
 
 
-def _expand_ranges(starts, lens):
-    """Vectorized concatenation of integer ranges (see dedup)."""
-    lens = np.asarray(lens, dtype=np.int64)
-    starts = np.asarray(starts, dtype=np.int64)
-    nz = lens > 0
-    if not nz.all():
-        starts, lens = starts[nz], lens[nz]
-    n = int(lens.sum())
-    if n == 0:
-        return np.empty(0, dtype=np.int64)
-    out = np.ones(n, dtype=np.int64)
-    firsts = np.cumsum(lens) - lens
-    out[firsts[0]] = starts[0]
-    if starts.size > 1:
-        out[firsts[1:]] = starts[1:] - (starts[:-1] + lens[:-1] - 1)
-    return np.cumsum(out)
-
-
 def _fit_dim_group_runs(
     error_bound: float, length_bound: int, interval_ms: int
 ):
     """Per-run body of `fit_segments_dim_grouped` over rows sorted by
-    (gkey, salt, bin_ms, midx): split into runs of a stable active-member set, reshape each
-    run's rows into the (T, K) interleaved matrix, and hand it to the
-    shared group cascade.
+    (gkey, salt, bin_ms, midx): split into runs of a stable
+    active-member set, reshape each run's rows into the (T, K)
+    interleaved matrix, and hand it to the shared group cascade.
 
-    Round 7: run detection is fully vectorized (a uint64 member
-    bitmask per bin replaces the per-bin Python comparison loop), and
-    single-timestamp runs — the dominant shape on sparse-activity
-    series — emit in bulk per member-count class with the lockstep
-    Gorilla row encoder (`gorilla_compress_rows`), exactly like the
-    conversation-group fast path; the reference fold always selects
-    Gorilla for a 1-ts run (Swing's NaN ratio hands the fold on), so
-    the bulk rows are byte-identical to the per-run cascade."""
-    from modelardb_spark.models.cascade import MTID_GORILLA as _MTID_G
-    from modelardb_spark.models.gorilla import gorilla_compress_rows
+    Run detection is vectorized (a uint64 member bitmask per bin
+    replaces the per-bin comparison while member indexes stay below
+    64), and single-timestamp runs — the dominant shape on
+    sparse-activity series — emit in bulk per member-count class
+    through `groupfit._single_ts_rows`, like the conversation-group
+    path."""
 
     def fit(pdf: pd.DataFrame) -> Iterator[pd.DataFrame]:
         out: dict[str, list] = {c: [] for c in _GCOLS}
@@ -184,56 +162,8 @@ def _fit_dim_group_runs(
         rb = np.flatnonzero(brk)
         run_lens = np.diff(np.append(rb, n_bins))
         singles = run_lens == 1
-        bulk_frames: list[pd.DataFrame] = []
-        if vector_ok and singles.any():
-            sbin = rb[singles]  # bin index of each single-bin run
-            gap_cache: dict[tuple[int, int], list[int]] = {}
-            for k in np.unique(bin_k[sbin]):
-                sel = sbin[bin_k[sbin] == k]
-                k = int(k)
-                m = sel.size
-                ridx = _expand_ranges(bstart[sel], np.full(m, k))
-                vm = val[ridx].reshape(m, k)
-                tids_m = midx[ridx].reshape(m, k).tolist()
-                gs = gsize[bstart[sel]]
-                gaps_col = []
-                for row_t, g in zip(tids_m, gs.tolist()):
-                    key = (g, tuple(row_t))
-                    gp = gap_cache.get(key)
-                    if gp is None:
-                        present = set(row_t)
-                        gp = [t for t in range(g) if t not in present]
-                        gap_cache[key] = gp
-                    gaps_col.append(gp)
-                vlist = vm.tolist()
-                bulk_frames.append(
-                    pd.DataFrame(
-                        {
-                            "conv_id": b_gkey[sel],
-                            "start_ms": b_ts[sel],
-                            "end_ms": b_ts[sel],
-                            "interval_ms": np.full(m, interval_ms, dtype=np.int64),
-                            "mtid": np.full(m, _MTID_G, dtype=np.int32),
-                            "model": gorilla_compress_rows(vm),
-                            "n": np.full(m, k, dtype=np.int64),
-                            "group_size": np.full(m, k, dtype=np.int32),
-                            "tids": tids_m,
-                            "gaps": gaps_col,
-                            "seg_cnt": [[1] * k] * m,
-                            "seg_min": vlist,
-                            "seg_max": vlist,
-                            "seg_sum": vm.astype(np.float64).tolist(),
-                            "p0": np.full(m, np.nan),
-                            "p1": np.full(m, np.nan),
-                        },
-                        columns=_GCOLS,
-                    )
-                )
-            loop_runs = np.flatnonzero(~singles)
-        else:
-            loop_runs = np.arange(run_lens.size)
         run_ends = np.append(rb, n_bins)[1:]
-        for r in loop_runs:
+        for r in np.flatnonzero(~singles):
             first_bin, last_bin = rb[r], run_ends[r] - 1
             r0, r1 = bstart[first_bin], bend[last_bin]
             k = int(bin_k[first_bin])
@@ -253,7 +183,14 @@ def _fit_dim_group_runs(
             )
         if out["n"]:
             yield pd.DataFrame(out, columns=_GCOLS)
-        yield from bulk_frames
+        sbin = rb[singles]  # bin index of each single-bin run
+        for k in np.unique(bin_k[sbin]):
+            sel = sbin[bin_k[sbin] == k]
+            rows = bstart[sel][:, None] + np.arange(k)
+            yield _single_ts_rows(
+                b_gkey[sel], b_ts[sel], val[rows], midx[rows], gsize[bstart[sel]],
+                interval_ms,
+            )
 
     return fit
 
@@ -281,19 +218,15 @@ def fit_segments_dim_grouped(
     )
 
 
-def explode_dim_group_segments(
-    gseg: DataFrame, members: DataFrame, broadcast_registry: bool = True
-) -> DataFrame:
+def explode_dim_group_segments(gseg: DataFrame, members: DataFrame) -> DataFrame:
     """Group segment -> one logical segment per present member, mapped
     back to its real (conv_id, metric) through the registry
     (SegmentGroup.explode:51-111 with the reference's gid -> tid
     mapping). `ukey` keeps the group key so the decoder still collapses
     one payload per group row.
 
-    The registry is O(#series) metadata; broadcast it (default) while
-    it fits executor memory (~tens of millions of series). Beyond
-    that, pass False — the join then shuffles on (gkey, tid), a key
-    the exploded side is already clustered by."""
+    The registry is O(#series) metadata and is broadcast, which holds
+    while it fits executor memory (~tens of millions of series)."""
     e = gseg.select(
         F.col("conv_id").alias("gkey"),
         "start_ms",
@@ -310,11 +243,9 @@ def explode_dim_group_segments(
         "seg_max",
         "seg_sum",
     )
-    reg = members.select(
-        "gkey", F.col("midx").alias("tid"), "conv_id", "metric"
+    reg = F.broadcast(
+        members.select("gkey", F.col("midx").alias("tid"), "conv_id", "metric")
     )
-    if broadcast_registry:
-        reg = F.broadcast(reg)
     return (
         e.join(reg, ["gkey", "tid"])
         .select(
@@ -342,10 +273,7 @@ def rollup_from_dim_group_segments(
     gseg: DataFrame,
     members: DataFrame,
     window_ms: int,
-    broadcast_registry: bool = True,
 ) -> DataFrame:
-    """Windowed rollup straight from dimension-group segments — the
-    shared analytic/dense tail over the registry-mapped explode."""
-    return _rollup_from_exploded(
-        explode_dim_group_segments(gseg, members, broadcast_registry), window_ms
-    )
+    """Windowed rollup straight from dimension-group segments: the
+    shared partials tail over the registry-mapped explode."""
+    return _rollup_from_exploded(explode_dim_group_segments(gseg, members), window_ms)

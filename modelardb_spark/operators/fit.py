@@ -36,9 +36,12 @@ Scale design:
   always picks Gorilla, whose 1-value stream is the raw 4 bytes) and
   exactly-constant runs (PMC always wins the fold for n >= 2) are
   emitted with pure NumPy across ALL groups in the batch; only
-  genuinely mixed runs enter the per-run cascade.
-- **Aggregate-on-model columns**: seg_cnt/min/max/sum and decoded
-  model parameters (p0, p1) are materialized at fit time. Whole-series
+  genuinely mixed runs enter the per-run cascade
+  (`models.cascade.fit_run`, the same cascade the group fits run on
+  their member matrices).
+- **Aggregate-on-model columns**: seg_cnt/min/max/sum and the model
+  parameters (p0, p1) are materialized at fit time; the cascade returns
+  them with every fitted segment. Whole-series
   aggregates (`segment_aggregates`) are plain Catalyst aggregations
   over the seg_* columns; the windowed rollups run the
   `models.segment.segment_partials` kernel in one Python pass, which
@@ -67,10 +70,12 @@ from pyspark.sql.types import (
 )
 
 from modelardb_spark.config import DEFAULT_CONFIG, EngineConfig
-from modelardb_spark.models import MTID_PMC, MTID_SWING, fit_run, segment_agg
-from modelardb_spark.models.cascade import MTID_GORILLA
-from modelardb_spark.models.pmc_mean import pmc_value
-from modelardb_spark.models.swing import swing_decode
+from modelardb_spark.models.cascade import (
+    MTID_GORILLA,
+    MTID_PMC,
+    FittedSegment,
+    fit_run,
+)
 
 SEGMENT_SCHEMA = StructType(
     [
@@ -86,7 +91,7 @@ SEGMENT_SCHEMA = StructType(
         StructField("seg_min", FloatType(), False),
         StructField("seg_max", FloatType(), False),
         StructField("seg_sum", DoubleType(), False),
-        # decoded model parameters for JVM-side grid/rollup:
+        # model parameters for the point and partials kernels:
         # PMC: p0 = constant; Swing: p0 = slope a, p1 = intercept b
         StructField("p0", DoubleType(), True),
         StructField("p1", DoubleType(), True),
@@ -182,64 +187,28 @@ def _fit_sorted_block(
         out["p1"].append(np.full(m, np.nan))
 
     # --- case C: the full cascade per remaining run ---
-    if general.any():
-        g_conv, g_metric = [], []
-        g_start, g_end, g_mtid, g_model = [], [], [], []
-        g_n, g_min, g_max, g_sum, g_p0, g_p1 = [], [], [], [], [], []
-        for ridx in np.flatnonzero(general):
-            s, e = run_start[ridx], run_end_incl[ridx] + 1
-            run_t = ts[s:e]
-            run_v = vals[s:e]
-            cid = conv[s]
-            met = metric[s]
-            pos = 0
-            for seg in fit_run(run_t, run_v, error_bound, length_bound):
-                if seg.mtid == MTID_PMC:
-                    p0, p1 = float(pmc_value(seg.model)), np.nan
-                    cnt, lo, hi, total = segment_agg(
-                        seg.mtid, seg.model, seg.start_ms, seg.end_ms, interval_ms
-                    )
-                elif seg.mtid == MTID_SWING:
-                    a, b = swing_decode(seg.model)
-                    p0, p1 = float(a), float(b)
-                    cnt, lo, hi, total = segment_agg(
-                        seg.mtid, seg.model, seg.start_ms, seg.end_ms, interval_ms
-                    )
-                else:
-                    # Gorilla and raw are lossless: aggregates from the
-                    # source slice equal aggregates from the decode
-                    p0, p1 = np.nan, np.nan
-                    sl = run_v[pos : pos + seg.n]
-                    cnt = seg.n
-                    lo, hi = float(sl.min()), float(sl.max())
-                    total = float(sl.sum(dtype=np.float64))
-                g_conv.append(cid)
-                g_metric.append(met)
-                g_start.append(seg.start_ms)
-                g_end.append(seg.end_ms)
-                g_mtid.append(seg.mtid)
-                g_model.append(seg.model)
-                g_n.append(seg.n)
-                g_min.append(np.float32(lo))
-                g_max.append(np.float32(hi))
-                g_sum.append(total)
-                g_p0.append(p0)
-                g_p1.append(p1)
-                pos += seg.n
-        if g_n:
-            out["conv_id"].append(np.asarray(g_conv, dtype=object))
-            out["metric"].append(np.asarray(g_metric, dtype=object))
-            out["start_ms"].append(np.asarray(g_start, dtype=np.int64))
-            out["end_ms"].append(np.asarray(g_end, dtype=np.int64))
-            out["mtid"].append(np.asarray(g_mtid, dtype=np.int32))
-            out["model"].append(g_model)
-            out["n"].append(np.asarray(g_n, dtype=np.int64))
-            out["seg_cnt"].append(np.asarray(g_n, dtype=np.int64))
-            out["seg_min"].append(np.asarray(g_min, dtype=np.float32))
-            out["seg_max"].append(np.asarray(g_max, dtype=np.float32))
-            out["seg_sum"].append(np.asarray(g_sum, dtype=np.float64))
-            out["p0"].append(np.asarray(g_p0, dtype=np.float64))
-            out["p1"].append(np.asarray(g_p1, dtype=np.float64))
+    segs: list[FittedSegment] = []
+    owner: list[int] = []
+    for ridx in np.flatnonzero(general):
+        s, e = run_start[ridx], run_end_incl[ridx] + 1
+        for seg in fit_run(ts[s:e], vals[s:e], error_bound, length_bound):
+            segs.append(seg)
+            owner.append(s)
+    if segs:
+        start, end, mtid, model, cnt, p0, p1, mins, maxs, sums = zip(*segs)
+        out["conv_id"].append(conv[owner])
+        out["metric"].append(metric[owner])
+        out["start_ms"].append(np.asarray(start, dtype=np.int64))
+        out["end_ms"].append(np.asarray(end, dtype=np.int64))
+        out["mtid"].append(np.asarray(mtid, dtype=np.int32))
+        out["model"].append(model)
+        out["n"].append(np.asarray(cnt, dtype=np.int64))
+        out["seg_cnt"].append(np.asarray(cnt, dtype=np.int64))
+        out["seg_min"].append(np.concatenate(mins))
+        out["seg_max"].append(np.concatenate(maxs))
+        out["seg_sum"].append(np.concatenate(sums))
+        out["p0"].append(np.asarray(p0, dtype=np.float64))
+        out["p1"].append(np.asarray(p1, dtype=np.float64))
 
 
 def _flush(out: dict[str, list], interval_ms: int) -> pd.DataFrame | None:

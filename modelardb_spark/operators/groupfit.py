@@ -28,19 +28,17 @@ Reference semantics re-expressed Spark-first:
 
 Model cascade for groups — the reference's any-model-on-group-stream
 contract (core/SegmentGenerator.java:154-167 iterates every configured
-model type over the interleaved DataPoint stream): PMC-Mean (the
+model type over the interleaved DataPoint stream): each run of a fixed
+active-member set goes through the one cascade,
+`models.cascade.fit_run`, on its (T, N) member matrix. PMC-Mean's
 shared constant must satisfy the bound for every member's value at
-every timestamp) -> Swing (one shared line: the N same-timestamp
-appends the reference feeds SwingFilterModelType.java:36-103
-constrain the line to the interval [max_i(v_i - dev_i),
-min_i(v_i + dev_i)] at each timestamp, which is exactly how
-`_group_swing_fit` runs the filter — sequential-append parity at the
-float level is guaranteed the same way as per-series Swing, by the
-float32 re-verification pass, reference :144-174) -> Gorilla on the
-interleaved stream (GorillaModelType appends all N values per
-timestamp into one XOR stream) -> raw fallback. Selection uses the
-reference fold and ratio formula INCLUDING the 4-bytes-per-gap-entry
-term (ModelType.java:49-54).
+every timestamp; Swing fits one shared line (`models.swing.swing_fit`:
+the N same-timestamp appends constrain it to the interval
+[max_i(v_i - dev_i), min_i(v_i + dev_i)] at each timestamp); Gorilla
+runs over the interleaved stream; raw is the fallback. Selection uses
+the reference fold and ratio formula INCLUDING the 4-bytes-per-gap-entry
+term (ModelType.java:49-54). Single-timestamp runs, where the fold
+always picks Gorilla, emit in bulk through `_single_ts_rows`.
 """
 
 from __future__ import annotations
@@ -64,16 +62,14 @@ from pyspark.sql.types import (
 )
 
 from modelardb_spark.config import DEFAULT_CONFIG, EngineConfig
-from modelardb_spark.models import MTID_PMC, MTID_RAW, MTID_SWING
-from modelardb_spark.models.cascade import MTID_GORILLA, _ratio
-from modelardb_spark.models.errors import outside_bound_vec
-from modelardb_spark.models.gorilla import (
-    gorilla_compress,
-    gorilla_compress_rows,
+from modelardb_spark.models.cascade import (
+    MTID_GORILLA,
+    FittedSegment,
+    fit_run,
+    fit_segment,
 )
-from modelardb_spark.models.pmc_mean import pmc_model, pmc_prefix, pmc_value
-from modelardb_spark.models.swing import swing_minmax, swing_model, swing_sum
-from modelardb_spark.models.uncompressed import raw_model
+from modelardb_spark.models.errors import outside_bound_vec
+from modelardb_spark.models.gorilla import gorilla_compress_rows
 from modelardb_spark.operators.fit import fit_arranged
 from modelardb_spark.operators.grid import grid
 from modelardb_spark.operators.rollup import merge_partials, window_partials
@@ -106,200 +102,32 @@ GROUP_SEGMENT_SCHEMA = StructType(
 _GCOLS = [f.name for f in GROUP_SEGMENT_SCHEMA.fields]
 
 
-def _group_swing_fit(
-    ts: np.ndarray, vals2d: np.ndarray, error_bound: float
-) -> tuple[int, float, float]:
-    """Swing filter over a group run: fit ONE line within the bound of
-    EVERY member at every timestamp; returns (prefix_timestamps, a, b).
-
-    Equivalent to the reference's sequential same-timestamp appends
-    (SwingFilterModelType.java:36-103 fed the interleaved group stream
-    by SegmentGenerator.java:154-167): the N points at timestamp t_k
-    jointly require line(t_k) in [max_i(v_i - dev_i),
-    min_i(v_i + dev_i)], so the filter runs on that interval sequence
-    with the usual pivot through the first member's first value. Like
-    per-series `swing_fit` this is a vectorized reformulation whose
-    float-level divergences are caught by the caller's float32
-    re-verification."""
-    n_ts, n_mem = vals2d.shape
-    if n_ts < 2:
-        return n_ts, 0.0, 0.0
-    t = ts.astype(np.float64)
-    v = vals2d.astype(np.float64)
-    dev = np.abs(v * (error_bound / 100.1))
-    lo_k = (v - dev).max(axis=1)
-    hi_k = (v + dev).min(axis=1)
-    feasible = lo_k <= hi_k
-    t0 = t[0]
-    v0 = float(vals2d[0, 0])
-    # the pivot (t0, first member's value) must satisfy every member's
-    # band at t0, and timestamp 1 must be feasible for the line to
-    # cover two whole timestamps
-    if not (feasible[0] and lo_k[0] <= v0 <= hi_k[0] and feasible[1]):
-        return 1, 0.0, 0.0
-    dt = t[1:] - t0
-    slope_up = (hi_k[1:] - v0) / dt
-    slope_lo = (lo_k[1:] - v0) / dt
-    hi = np.minimum.accumulate(slope_up)
-    lo = np.maximum.accumulate(slope_lo)
-    if n_ts > 2:
-        hi_prev, lo_prev = hi[:-1], lo[:-1]
-        tk = t[2:]
-        uba = hi_prev * tk + (v0 - hi_prev * t0)
-        lba = lo_prev * tk + (v0 - lo_prev * t0)
-        fail = (uba < lo_k[2:]) | (lba > hi_k[2:]) | ~feasible[2:]
-        if fail.any():
-            k = int(np.argmax(fail))
-            prefix = k + 2
-            hi_a, lo_a = hi[k], lo[k]
-        else:
-            prefix = n_ts
-            hi_a, lo_a = hi[-1], lo[-1]
-    else:
-        prefix = 2
-        hi_a, lo_a = hi[0], lo[0]
-    a = (lo_a + hi_a) / 2.0
-    b = ((v0 - lo_a * t0) + (v0 - hi_a * t0)) / 2.0
-    return prefix, a, b
-
-
-def _group_swing_candidate(
-    ts: np.ndarray,
-    vals2d: np.ndarray,
-    error_bound: float,
-    gap_bytes: float,
-) -> tuple[int, float, bytes | None, float, float]:
-    """(prefix_ts, ratio, model, a, b) for the group Swing candidate:
-    doubling-window prefix search + float32 re-verification over EVERY
-    member value of the covered prefix (reference :144-174); an
-    unverifiable line is invalid (ratio NaN), exactly like per-series
-    `_swing_candidate`."""
-    limit = 128
-    n_ts = vals2d.shape[0]
-    while True:
-        m = min(limit, n_ts)
-        prefix, a, b = _group_swing_fit(ts[:m], vals2d[:m], error_bound)
-        if prefix < m or m == n_ts:
-            break
-        limit *= 2
-    if prefix < 2:
-        return prefix, float("nan"), None, 0.0, 0.0
-    approx = (a * ts[:prefix].astype(np.float64) + b).astype(np.float32)
-    rep = np.repeat(approx, vals2d.shape[1])
-    flat = np.ascontiguousarray(vals2d[:prefix]).reshape(-1)
-    if outside_bound_vec(error_bound, rep, flat).any():
-        return prefix, float("nan"), None, a, b
-    model = swing_model(a, b)
-    n_vals = prefix * vals2d.shape[1]
-    return prefix, _ratio(n_vals, float(len(model)) + gap_bytes), model, a, b
-
-
-def _fit_one_group_segment(
+def _append_segment(
+    out: dict[str, list],
     conv: str,
-    ts: np.ndarray,
-    vals2d: np.ndarray,
-    inter: np.ndarray,
-    pos: int,
+    seg: FittedSegment,
     tids: list[int],
     gaps: list[int],
-    error_bound: float,
-    max_vals: int,
     interval_ms: int,
-    out: dict[str, list],
-) -> tuple[int, float]:
-    """Fit and emit EXACTLY ONE group segment at timestamp index `pos`
-    of the run; returns (covered_timestamps, stored_compression_ratio).
-    The ratio (16 x values / (24 + payload + 4 x gap entries),
-    ModelType.java:49-54) feeds the dynamic split trigger."""
-    n_mem = vals2d.shape[1]
-    gap_bytes = 4.0 * len(gaps)
-    rest = inter[pos * n_mem :]
-    # PMC: shared constant within bound of every member value.
-    # Doubling-window prefix search (cascade._pmc_candidate
-    # pattern): a short segment scans one small window instead of
-    # the whole remaining run every iteration (O(run) total, not
-    # O(run^2)).
-    limit = 128
-    while True:
-        window = rest[: min(limit, rest.size)]
-        p = pmc_prefix(window, error_bound)
-        if p < window.size or window.size == rest.size:
-            break
-        limit *= 2
-    p_n = (p // n_mem) * n_mem
-    pmc_ratio = (
-        _ratio(p_n, 4.0 + gap_bytes) if p_n >= n_mem else float("nan")
-    )
-    # Swing: one shared line over all members' same-timestamp bands
-    sw_ts, sw_ratio, sw_model, sw_a, sw_b = _group_swing_candidate(
-        ts[pos:], vals2d[pos:], error_bound, gap_bytes
-    )
-    # Gorilla over the interleaved stream
-    g_n = min(rest.size, max_vals)
-    g_bytes = gorilla_compress(rest[:g_n])
-    gor_ratio = _ratio(g_n, float(len(g_bytes)) + gap_bytes)
-
-    # reference fold (SegmentGenerator.java:230-233): NaN < x false
-    candidates = [
-        (MTID_PMC, p_n, pmc_ratio),
-        (MTID_SWING, sw_ts * n_mem, sw_ratio),
-        (MTID_GORILLA, g_n, gor_ratio),
-    ]
-    best = candidates[0]
-    for cand in candidates:
-        if not (cand[2] < best[2]):
-            best = cand
-    mtid, length, ratio = best
-    if not (ratio == ratio) or length == 0:
-        length = min(rest.size, max_vals)
-        mtid = MTID_RAW
-
-    seg_ts = length // n_mem
-    block = rest[:length].reshape(seg_ts, n_mem)
-    p1 = float("nan")
-    if mtid == MTID_PMC:
-        model = pmc_model(rest, length)
-        const = np.float32(pmc_value(model))
-        p0 = float(const)
-        # aggregates describe the RECONSTRUCTION (constant)
-        mins = np.full(n_mem, const, dtype=np.float32)
-        maxs = mins
-        sums = np.full(n_mem, float(const) * seg_ts, dtype=np.float64)
-    elif mtid == MTID_SWING:
-        model = sw_model
-        p0, p1 = sw_a, sw_b
-        s_ms, e_ms = int(ts[pos]), int(ts[pos + seg_ts - 1])
-        lo_v, hi_v = swing_minmax(sw_a, sw_b, s_ms, e_ms)
-        mins = np.full(n_mem, lo_v, dtype=np.float32)
-        maxs = np.full(n_mem, hi_v, dtype=np.float32)
-        sums = np.full(
-            n_mem, swing_sum(sw_a, sw_b, s_ms, e_ms, seg_ts), dtype=np.float64
-        )
-    else:
-        model = g_bytes if mtid == MTID_GORILLA else raw_model(rest, length)
-        p0 = float("nan")
-        mins = block.min(axis=0)
-        maxs = block.max(axis=0)
-        sums = block.sum(axis=0, dtype=np.float64)
-
+) -> None:
+    """Append one fitted group segment as a GROUP_SEGMENT_SCHEMA row."""
+    n_mem = len(tids)
     out["conv_id"].append(conv)
-    out["start_ms"].append(int(ts[pos]))
-    out["end_ms"].append(int(ts[pos + seg_ts - 1]))
+    out["start_ms"].append(seg.start_ms)
+    out["end_ms"].append(seg.end_ms)
     out["interval_ms"].append(interval_ms)
-    out["mtid"].append(mtid)
-    out["model"].append(model)
-    out["n"].append(length)
+    out["mtid"].append(seg.mtid)
+    out["model"].append(seg.model)
+    out["n"].append(seg.n)
     out["group_size"].append(n_mem)
     out["tids"].append(list(tids))
     out["gaps"].append(gaps)
-    out["seg_cnt"].append([seg_ts] * n_mem)
-    out["seg_min"].append([float(x) for x in mins])
-    out["seg_max"].append([float(x) for x in maxs])
-    out["seg_sum"].append([float(x) for x in sums])
-    out["p0"].append(p0)
-    out["p1"].append(p1)
-    stored_ratio = (16.0 * length) / (24.0 + len(model) + 4.0 * len(gaps))
-    return seg_ts, stored_ratio
+    out["seg_cnt"].append([seg.n // n_mem] * n_mem)
+    out["seg_min"].append(seg.mins.tolist())
+    out["seg_max"].append(seg.maxs.tolist())
+    out["seg_sum"].append(seg.sums.tolist())
+    out["p0"].append(seg.p0)
+    out["p1"].append(seg.p1)
 
 
 def _fit_group_run(
@@ -317,20 +145,61 @@ def _fit_group_run(
 
     `vals2d` is (T, N) float32 for the present members only;
     `tids`/`all_tids` give present members / the full group."""
-    n_ts, n_mem = vals2d.shape
-    inter = np.ascontiguousarray(vals2d).reshape(-1)  # row-major interleave
     gaps = [t for t in all_tids if t not in tids]
-    # length_bound counts stored VALUES (data points incl. every member,
-    # like the reference's per-DataPoint accounting), floored to whole
-    # timestamps so a segment always covers full grid rows
-    max_vals = max(n_mem, (length_bound // n_mem) * n_mem)
-    pos = 0  # timestamp index
-    while pos < n_ts:
-        seg_ts, _ = _fit_one_group_segment(
-            conv, ts, vals2d, inter, pos, tids, gaps,
-            error_bound, max_vals, interval_ms, out,
-        )
-        pos += seg_ts
+    for seg in fit_run(ts, vals2d, error_bound, length_bound, 4.0 * len(gaps)):
+        _append_segment(out, conv, seg, tids, gaps, interval_ms)
+
+
+def _single_ts_rows(
+    key: np.ndarray,
+    ts: np.ndarray,
+    vals: np.ndarray,
+    tids: np.ndarray,
+    gsize: np.ndarray,
+    interval_ms: int,
+) -> pd.DataFrame:
+    """GROUP rows for single-timestamp runs of k present members each:
+    `vals` and `tids` are (m, k), `gsize` is each group's full member
+    count. The reference fold always selects Gorilla for a 1-timestamp
+    run (Swing needs 2 timestamps, and its NaN ratio hands the fold on
+    to Gorilla, whose length is k), so every row is closed-form and the
+    models encode in lockstep (`gorilla_compress_rows`), byte-identical
+    to `fit_segment` on each run."""
+    m, k = vals.shape
+    tid_rows = tids.tolist()
+    if (gsize == k).all():
+        gaps: list[list[int]] = [[]] * m
+    else:
+        cache: dict[tuple[int, ...], list[int]] = {}
+        gaps = []
+        for row, g in zip(tid_rows, gsize.tolist()):
+            ck = (g, *row)
+            gp = cache.get(ck)
+            if gp is None:
+                gp = cache[ck] = [t for t in range(g) if t not in row]
+            gaps.append(gp)
+    vlist = vals.tolist()
+    return pd.DataFrame(
+        {
+            "conv_id": key,
+            "start_ms": ts,
+            "end_ms": ts,
+            "interval_ms": np.full(m, interval_ms, dtype=np.int64),
+            "mtid": np.full(m, MTID_GORILLA, dtype=np.int32),
+            "model": gorilla_compress_rows(vals),
+            "n": np.full(m, k, dtype=np.int64),
+            "group_size": np.full(m, k, dtype=np.int32),
+            "tids": tid_rows,
+            "gaps": gaps,
+            "seg_cnt": [[1] * k] * m,
+            "seg_min": vlist,
+            "seg_max": vlist,
+            "seg_sum": vals.astype(np.float64).tolist(),
+            "p0": np.full(m, np.nan),
+            "p1": np.full(m, np.nan),
+        },
+        columns=_GCOLS,
+    )
 
 
 def _split_subsets(
@@ -401,8 +270,9 @@ def _fit_group_run_dynamic(
     actually compressed badly. At bound 0 both paths reconstruct
     exactly, so the trigger only moves stored bytes."""
     n_ts, n_mem = vals2d.shape
-    inter = np.ascontiguousarray(vals2d).reshape(-1)
+    vals2d = np.ascontiguousarray(vals2d)
     gaps = [t for t in all_tids if t not in tids]
+    gap_bytes = 4.0 * len(gaps)
     max_vals = max(n_mem, (length_bound // n_mem) * n_mem)
     all_idx = list(range(n_mem))
 
@@ -410,11 +280,11 @@ def _fit_group_run_dynamic(
     backoff = _REJOIN_BACKOFF_TS
     pos = 0
     while pos < n_ts:
-        seg_ts, ratio = _fit_one_group_segment(
-            conv, ts, vals2d, inter, pos, tids, gaps,
-            error_bound, max_vals, interval_ms, out,
-        )
-        pos += seg_ts
+        seg = fit_segment(ts[pos:], vals2d[pos:], error_bound, max_vals, gap_bytes)
+        _append_segment(out, conv, seg, tids, gaps, interval_ms)
+        pos += seg.n // n_mem
+        # the stored ratio (ModelType.java:49-54) feeds the split trigger
+        ratio = (16.0 * seg.n) / (24.0 + len(seg.model) + gap_bytes)
         trigger = (
             n_mem > 1
             and pos < n_ts
@@ -490,57 +360,12 @@ def _fit_group_runs(
         bounds = np.concatenate(([0], np.flatnonzero(brk), [n]))
         bounds = np.unique(bounds)
         all_tids = list(range(n_metrics))
-
-        # --- bulk fast path: single-timestamp runs with every metric
-        # active (the dominant case on sparse-activity series: measured
-        # 996k of 998k runs at the 1M-turn fixture). The reference fold
-        # for a 1-ts run always selects Gorilla over the interleaved
-        # row (Swing needs 2 timestamps -> NaN ratio; the NaN-fold
-        # quirk then hands the window to Gorilla, exactly like the
-        # per-series singles case in operators/fit.py), so the segment
-        # is closed-form and every column vectorizes. 1-ts runs cannot
-        # trigger the dynamic split (pos == n_ts), and the ratio list
-        # is per-run state, so the bulk path is valid for the dynamic
-        # cascade too.
-        lens = np.diff(bounds)
         starts = bounds[:-1]
-        is_bulk = np.zeros(lens.size, dtype=bool)
-        bulk_frame = None
-        if n_metrics == 2:
-            is_bulk = (lens == 1) & active[starts].all(axis=1)
-            bidx = starts[is_bulk]
-            if bidx.size:
-                v2 = vals[bidx]  # (M, 2) float32
-                vlist = v2.tolist()  # python floats, exact f32 values
-                m = bidx.size
-                svals = v2.astype(np.float64)
-                bulk_frame = pd.DataFrame(
-                    {
-                        "conv_id": conv[bidx],
-                        "start_ms": ts[bidx],
-                        "end_ms": ts[bidx],
-                        "interval_ms": np.full(m, interval_ms, dtype=np.int64),
-                        "mtid": np.full(m, MTID_GORILLA, dtype=np.int32),
-                        "model": gorilla_compress_rows(v2),
-                        "n": np.full(m, 2, dtype=np.int64),
-                        "group_size": np.full(m, 2, dtype=np.int32),
-                        "tids": [[0, 1]] * m,
-                        "gaps": [[]] * m,
-                        "seg_cnt": [[1, 1]] * m,
-                        "seg_min": vlist,
-                        "seg_max": vlist,
-                        "seg_sum": svals.tolist(),
-                        "p0": np.full(m, np.nan),
-                        "p1": np.full(m, np.nan),
-                    },
-                    columns=_GCOLS,
-                )
-
-        for ridx in np.flatnonzero(~is_bulk):
+        n_act = active[starts].sum(axis=1)
+        single = (np.diff(bounds) == 1) & (n_act > 0)
+        for ridx in np.flatnonzero(~single & (n_act > 0)):
             s, e = bounds[ridx], bounds[ridx + 1]
             tids = [int(j) for j in np.flatnonzero(active[s])]
-            if not tids:
-                continue
             args = (
                 conv[s],
                 ts[s:e],
@@ -558,8 +383,21 @@ def _fit_group_runs(
                 _fit_group_run_dynamic(*args, split_fraction)
         if out["n"]:
             yield pd.DataFrame(out, columns=_GCOLS)
-        if bulk_frame is not None:
-            yield bulk_frame
+        # single-timestamp runs (the dominant case on sparse-activity
+        # series) emit in bulk per present-member count; they cannot
+        # trigger the dynamic split, so this holds for both cascades
+        srow, sk = starts[single], n_act[single]
+        for k in np.unique(sk):
+            sel = srow[sk == k]
+            act = active[sel]
+            yield _single_ts_rows(
+                conv[sel],
+                ts[sel],
+                vals[sel][act].reshape(-1, k),
+                np.nonzero(act)[1].reshape(-1, k),
+                np.full(sel.size, n_metrics),
+                interval_ms,
+            )
 
     return fit
 
@@ -717,7 +555,6 @@ def fit_segments_adaptive(
     metrics: tuple[str, ...] = ("turn_rate", "tool_usage"),
     threshold: float = 0.2,
     per_day: bool = False,
-    broadcast_routing: bool = True,
     checkpoint: str = "local",
 ) -> tuple[DataFrame, DataFrame]:
     """Route each conversation (or, with per_day=True, each
@@ -729,14 +566,10 @@ def fit_segments_adaptive(
     ratio, never correctness. Segments never span a salt day, so
     per-day routing cannot split a segment.
 
-    `broadcast_routing` (default True) broadcasts the routing frame —
-    one boolean per conversation(-day), tiny relative to the bins — so
-    the join adds NO exchange of point-sized rows (measured ~17%
-    end-to-end at sf0.1: the bins then shuffle once, for the fit,
-    instead of twice). Set False when the conversation(-day) count
-    itself is too large to broadcast (billions of keys): the join
-    falls back to a shuffle join on the same keys the fit shuffles on,
-    so the routing exchange co-locates with the fit exchange.
+    The routing frame — one boolean per conversation(-day), tiny
+    relative to the bins — is broadcast, so the join adds NO exchange
+    of point-sized rows (measured ~17% end-to-end at sf0.1: the bins
+    then shuffle once, for the fit, instead of twice).
 
     `checkpoint` picks how the shared routed frame is materialized for
     the two branches: "local" (default) = localCheckpoint — executor-
@@ -749,21 +582,20 @@ def fit_segments_adaptive(
     setting on preemptible/spot clusters."""
     from modelardb_spark.operators.fit import fit_segments_wide
 
-    def _route(frame):
-        return F.broadcast(frame) if broadcast_routing else frame
-
     if per_day:
         salt_ms = cfg.salt_days * 86_400_000
         keyed = wide_series.withColumn(
             "salt", (F.col("bin_ms") / F.lit(salt_ms)).cast("long")
         )
         routed = keyed.join(
-            _route(correlated_conversations(keyed, metrics, threshold, per_day=True)),
+            F.broadcast(
+                correlated_conversations(keyed, metrics, threshold, per_day=True)
+            ),
             ["conv_id", "salt"],
         ).drop("salt")
     else:
         routed = wide_series.join(
-            _route(correlated_conversations(wide_series, metrics, threshold)),
+            F.broadcast(correlated_conversations(wide_series, metrics, threshold)),
             "conv_id",
         )
     # both branches consume the SAME routed frame: a (lazy) checkpoint

@@ -8,7 +8,9 @@ is what the reference would produce for the same run.
 
 Also holds the scalar reference decoders (`segment_grid`,
 `decode_group_values`) that the batched point kernel
-(`models.segment.segment_points`) is checked against.
+(`models.segment.segment_points`) is checked against, and the scalar
+per-segment aggregate `segment_agg` that the batched aggregates and the
+fit's own aggregates are checked against.
 """
 
 from __future__ import annotations
@@ -25,7 +27,12 @@ from modelardb_spark.models.errors import outside_percentage_error_bound
 from modelardb_spark.models.gorilla import gorilla_compress, gorilla_decompress
 from modelardb_spark.models.pmc_mean import pmc_model, pmc_value
 from modelardb_spark.models.segment import decode_values, segment_length
-from modelardb_spark.models.swing import swing_decode, swing_model
+from modelardb_spark.models.swing import (
+    swing_decode,
+    swing_minmax,
+    swing_model,
+    swing_sum,
+)
 from modelardb_spark.models.uncompressed import raw_decode, raw_model
 
 F32 = np.float32
@@ -254,9 +261,13 @@ def _group_swing_prefix(ts, v2d, bound):
     """Sequential Swing interval filter over a group run: ONE line within
     the bound of EVERY member at every timestamp, pivoted through
     (t0, first member's value) — SwingFilterModelType.java:36-103 under
-    same-timestamp appends. Returns (prefix_timestamps, a, b). The slope
-    bookkeeping mirrors the engine's accumulate formulation exactly so
-    float-level decisions agree."""
+    same-timestamp appends. Returns (prefix_timestamps, a, b). It keeps
+    the per-timestamp band form of the rejection test (the line leaves
+    [max_i(v_i - dev_i), min_i(v_i + dev_i)]), while the engine's
+    `models.swing.swing_fit` applies the reference's per-point test
+    ``uba + dev < v or lba - dev > v`` to every member; the two agree in
+    exact arithmetic, and the parity tests check that they pick the
+    same prefixes."""
     n_ts, n_mem = v2d.shape
     if n_ts < 2:
         return n_ts, 0.0, 0.0
@@ -393,3 +404,25 @@ def decode_group_values(
     if mtid == MTID_RAW:
         return raw_decode(model)[:total][goff::gsize]
     raise ValueError(f"unsupported group mtid {mtid}")
+
+
+def segment_agg(mtid, model, start_ms, end_ms, interval_ms):
+    """Closed-form (count, min, max, sum) of one segment without
+    gridding where the model allows (the reference's aggregate-on-model
+    capability, SparkUDAF.scala:34-184 backed by the per-model Segment
+    methods)."""
+    n = segment_length(start_ms, end_ms, interval_ms)
+    if mtid == MTID_PMC:
+        v = pmc_value(model)
+        return n, v, v, float(v) * n
+    if mtid == MTID_SWING:
+        a, b = swing_decode(model)
+        lo, hi = swing_minmax(a, b, start_ms, end_ms)
+        return n, lo, hi, swing_sum(a, b, start_ms, end_ms, n)
+    values = decode_values(mtid, model, start_ms, end_ms, interval_ms)
+    return (
+        n,
+        float(values.min()),
+        float(values.max()),
+        float(values.sum(dtype=np.float64)),
+    )

@@ -8,9 +8,10 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from modelardb_spark.models import fit_run, segment_agg
+from modelardb_spark.models import fit_run
 from modelardb_spark.models.pmc_mean import pmc_value
 from modelardb_spark.operators.fit import _fit_runs, key_runs
+from tests.reference_oracle import segment_agg
 
 INTERVAL = 60_000
 DAY = 86_400_000

@@ -248,6 +248,33 @@ def test_ratio_feedback_split_beats_static_group(spark):
     assert got == want
 
 
+def _bound_check(points, real, bound):
+    """(changed, violations) of reconstructed `points` against `real`,
+    both (conv_id, metric, bin_ms, value): how many points differ from
+    their raw value, and how many break the reference percentage-error
+    semantics (Static.java:106-119: approx==real -> 0, real==0 -> inf
+    unless equal). Both sides must cover the same points."""
+    j = points.select(
+        "conv_id", "metric", "bin_ms", F.col("value").alias("approx_f")
+    ).join(
+        real.select("conv_id", "metric", "bin_ms", F.col("value").alias("real_f")),
+        ["conv_id", "metric", "bin_ms"],
+    )
+    real_d = F.col("real_f").cast("double")
+    approx_d = F.col("approx_f").cast("double")
+    pct = (
+        F.when(approx_d == real_d, F.lit(0.0))
+        .when(real_d == 0.0, F.lit(float("inf")))
+        .otherwise(F.abs((real_d - approx_d) / real_d) * 100.0)
+    )
+    assert j.count() == points.count() == real.count()
+    row = j.agg(
+        F.sum((approx_d != real_d).cast("long")).alias("changed"),
+        F.sum((pct > bound).cast("long")).alias("violations"),
+    ).first()
+    return row["changed"], row["violations"]
+
+
 def test_group_lossy_bound_holds_on_all_group_paths(spark, wide):
     """At a 5% bound, every point reconstructed from GROUP segments —
     static, ratio-feedback dynamic, and dimension-driven — must satisfy
@@ -260,24 +287,10 @@ def test_group_lossy_bound_holds_on_all_group_paths(spark, wide):
     from modelardb_spark.operators.groupfit import DYNAMIC_SPLIT_FRACTION
 
     lossy = EngineConfig(error_bound=5.0)
-    real = _narrow(wide).select(
-        "conv_id", "metric", "bin_ms", F.col("value").alias("real_f")
-    )
+    real = _narrow(wide)
 
     def violations(points):
-        j = points.select(
-            "conv_id", "metric", "bin_ms", F.col("value").alias("approx_f")
-        ).join(real, ["conv_id", "metric", "bin_ms"])
-        real_d = F.col("real_f").cast("double")
-        approx_d = F.col("approx_f").cast("double")
-        pct = (
-            F.when(approx_d == real_d, F.lit(0.0))
-            .when(real_d == 0.0, F.lit(float("inf")))
-            .otherwise(F.abs((real_d - approx_d) / real_d) * 100.0)
-        )
-        # anti-join both ways must also be empty (same coverage)
-        assert j.count() == points.count() == real.count()
-        return j.where(pct > 5.0).count()
+        return _bound_check(points, real, 5.0)[1]
 
     assert violations(grid_group(fit_segments_grouped(wide, lossy, METRICS))) == 0
     assert (
@@ -308,6 +321,66 @@ def test_group_lossy_bound_holds_on_all_group_paths(spark, wide):
         SF.col("vmin").alias("value"),
     )
     assert violations(pts) == 0
+
+
+def test_lossy_fits_approximate_within_bound(spark):
+    """On an input whose bins vary within 5%, the 5%-bound fits must
+    actually approximate (some reconstructed value differs from its raw
+    value) and still hold the bound on every point: the fused
+    per-series fit through `grid`, and the static, ratio-feedback
+    dynamic and dimension group fits through their explodes."""
+    from modelardb_spark.operators.dimgroup import (
+        dim_group_members,
+        explode_dim_group_segments,
+        fit_segments_dim_grouped,
+    )
+    from modelardb_spark.operators.fit import fit_segments_from_transcripts
+    from modelardb_spark.operators.groupfit import DYNAMIC_SPLIT_FRACTION
+    from modelardb_spark.operators.grid import grid
+    from modelardb_spark.operators.series import derive_series
+
+    # 60-62 turns per minute for 40 minutes; every turn but at most one
+    # per minute calls a tool, so both metrics of every conversation
+    # stay within 5% of each other
+    rng = np.random.default_rng(11)
+    t0 = pd.Timestamp("2024-01-08 10:00:00")
+    rows = [
+        (f"conv-{c}", t0 + pd.Timedelta(minutes=m, milliseconds=900 * i),
+         None if i < skip else "search")
+        for c in range(3)
+        for m in range(40)
+        for skip, k in [(int(rng.integers(0, 2)), 60 + int(rng.integers(0, 3)))]
+        for i in range(k)
+    ]
+    t = spark.createDataFrame(
+        pd.DataFrame(rows, columns=["conv_id", "ts", "tool"]),
+        "conv_id string, ts timestamp, tool string",
+    )
+    lossy = EngineConfig(error_bound=5.0)
+    narrow = derive_series(t, lossy)
+    wide = derive_series_wide(t, lossy)
+    dims = spark.createDataFrame(
+        [(f"conv-{c}", "web") for c in range(3)], "conv_id string, channel string"
+    )
+    members = dim_group_members(narrow, dims, by="channel", max_group_size=8)
+    paths = {
+        "per_series": grid(fit_segments_from_transcripts(t, lossy)),
+        "static": grid_group(fit_segments_grouped(wide, lossy, METRICS)),
+        "dynamic": grid_group(
+            fit_segments_grouped(
+                wide, lossy, METRICS, dynamic_split_fraction=DYNAMIC_SPLIT_FRACTION
+            )
+        ),
+        "dimension": grid(
+            explode_dim_group_segments(
+                fit_segments_dim_grouped(narrow, members, lossy), members
+            )
+        ),
+    }
+    for name, points in paths.items():
+        changed, violations = _bound_check(points, narrow, 5.0)
+        assert changed > 0, name
+        assert violations == 0, name
 
 
 def test_gap_protocol_explode(spark):

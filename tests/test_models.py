@@ -18,12 +18,16 @@ from modelardb_spark.models import (
     fit_run,
     outside_percentage_error_bound,
     percentage_error,
-    segment_agg,
 )
 from modelardb_spark.models.gorilla import gorilla_compress, gorilla_decompress
 from modelardb_spark.models.pmc_mean import pmc_prefix
 from modelardb_spark.models.swing import swing_fit, swing_model, swing_verify
-from tests.reference_oracle import oracle_fit_run, segment_grid
+from tests.reference_oracle import (
+    oracle_fit_group_run,
+    oracle_fit_run,
+    segment_agg,
+    segment_grid,
+)
 
 INTERVAL = 60_000
 
@@ -232,6 +236,27 @@ def test_cascade_matches_oracle_randomized(bound):
         ours = fit_run(t, v, error_bound=bound)
         ref = oracle_fit_run(t, v, error_bound=bound)
         assert [(s.start_ms, s.end_ms, s.mtid, s.model, s.n) for s in ours] == ref
+    # the same cascade over N = 2..4 members, against the sequential
+    # group replay (gap entries count 4 bytes each in the ratio)
+    mtids = set()
+    for trial in range(30):
+        n_ts = int(rng.integers(1, 200))
+        n_mem = 2 + trial % 3
+        base = np.arange(n_ts) * rng.uniform(-0.3, 0.3) + 100.0
+        if trial % 3 == 0:
+            base = np.round(base / 4.0)
+        spread = (0.0, rng.uniform(0.0, 0.02), 0.5)[trial % 3]
+        jitter = rng.uniform(-spread, spread, size=(n_ts, n_mem))
+        v2d = (base[:, None] * (1.0 + jitter)).astype(np.float32)
+        n_gaps = int(rng.integers(0, 3))
+        t = ts_of(n_ts)
+        ours = fit_run(t, v2d, bound, 50, gap_bytes=4.0 * n_gaps)
+        ref = oracle_fit_group_run(t, v2d, bound, 50, n_gaps)
+        assert [(s.start_ms, s.end_ms, s.mtid, s.model, s.n) for s in ours] == ref
+        mtids |= {s.mtid for s in ours}
+    assert {MTID_PMC, MTID_GORILLA} <= mtids
+    if bound:
+        assert MTID_SWING in mtids
 
 
 # --------------------------------------------------- closed-form aggs
