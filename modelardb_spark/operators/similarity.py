@@ -1,22 +1,38 @@
 """Similarity search over an embedding column (`array<float>`).
 
-- `cosine_topk`: brute-force exact top-k — the correctness baseline.
-  The dot product is a JVM-side `aggregate(zip_with(...))` fold (no
-  Python); the self-join broadcasts the (small) query side.
-- `lsh_buckets` / `lsh_buckets_multi` / `lsh_topk`: the scale path —
-  random-hyperplane LSH: each vector is reduced to a B-bit sign
-  signature; candidates share a signature bucket, so the join is a key
-  join with O(n) shuffle volume instead of an O(n^2) cross product.
-  Hyperplanes are generated deterministically from a seed via md5
-  folding, so the DuckDB oracle reproduces the buckets bit-exactly.
-- `embedding_near_dup`: LSH-bucketed near-duplicate pairs (multi-table
-  for recall, exact cosine verification on candidates only, no driver
-  collect); `embedding_near_dup_bruteforce` is the small-data exact
-  baseline kept for recall measurement.
+Exact search, a broadcast block compare:
+- `cosine_topk`: brute-force top-k, the correctness baseline. The
+  query side is collected to the driver and broadcast as one NumPy
+  matrix; a `mapInPandas` scores every corpus batch against it with one
+  BLAS matmul and emits its local top-k per query; one window merges
+  the local lists.
+- `embedding_near_dup_bruteforce`: every pair at or above a cosine
+  threshold, the same compare with the whole corpus broadcast — the
+  small-data baseline for recall measurement only.
 
-Norms and dots are computed in float64 from float32 inputs with a
-fixed left-to-right fold in both engines; outputs are rounded for
-hash portability.
+Approximate search, the scale paths:
+- `lsh_buckets_multi`: random-hyperplane LSH, `tables` B-bit sign
+  signatures per vector in one map-only BLAS pass. Candidates share a
+  signature bucket, so the join is a key join with O(n) shuffle volume
+  instead of an O(n^2) cross product. Hyperplanes are generated
+  deterministically from a seed via md5 folding, so the DuckDB oracle
+  reproduces the buckets bit-exactly.
+- `lsh_topk`: exact rank within each single-table bucket;
+  `lsh_topk_multi`: candidates from the union of `tables` tables,
+  re-scored and ranked per query.
+- `embedding_near_dup`: multi-table LSH near-duplicate pairs, verified
+  with the exact cosine; no driver collect.
+- `ivf_centroids` / `ivf_train` / `ivf_assign` / `ivf_topk`: an
+  inverted-file index over Lloyd-trained cells; each query ranks the
+  corpus vectors of its `n_probe` nearest cells.
+
+Every path is built from one set of kernels. NumPy side: `_matrix`,
+`_norms`, `_cosines` (the cosine block), `_best` (the top-k order) and
+`_local_topk` (top-k per query, self excluded). Catalyst side: `_rank`
+(the per-query window), `_score` (the exact JVM re-score of id pairs)
+and `_slices` (hot-bucket hash slicing). Norms and dots are float64
+from float32 inputs; every cosine is rounded to 6 decimals and ties go
+to the lower id, in both engines.
 """
 
 from __future__ import annotations
@@ -24,11 +40,41 @@ from __future__ import annotations
 import hashlib
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    StructField,
+    StructType,
+)
 
 from modelardb_spark.operators.fit import key_change, key_runs
 from modelardb_spark.operators.scanpar import fan_out
+
+#: queries scored per matmul in `_local_topk`: bounds one task's
+#: (queries x neighbors) cosine block
+_QUERY_BLOCK = 4096
+
+#: raw-cosine prefilter margin below a round-6 threshold t. A cosine
+#: whose 6-decimal rounding is >= t is >= t - 5e-7 before rounding, and
+#: two float64 evaluations of one cosine in different summation orders
+#: (BLAS here, the left-to-right `_dot` fold in the re-score) differ by
+#: at most ~2 * dim * 2^-53 (< 1e-13 at dim 64, by Cauchy-Schwarz). So
+#: every pair the exact round-6 compare keeps has a raw BLAS cosine
+#: >= t - _ROUND_MARGIN, and prefiltering there loses none.
+_ROUND_MARGIN = 1e-4
+
+_TOPK_SCHEMA = StructType(
+    [
+        StructField("query_id", LongType(), False),
+        StructField("neighbor_id", LongType(), False),
+        StructField("cosine", DoubleType(), False),
+    ]
+)
 
 
 def load_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -47,20 +93,129 @@ def with_norm(emb: DataFrame) -> DataFrame:
     return emb.withColumn("norm", F.sqrt(_dot(F.col("embedding"), F.col("embedding"))))
 
 
-def _query_matrix(queries: DataFrame):
-    """Collect the (small) query side to a normalized NumPy matrix —
-    the broadcast dimension of the block nested-loop join. Arrow
-    transfer (toPandas) instead of row-by-row collect: the brute-force
-    baseline pulls the whole corpus through here."""
-    pdf = queries.select("vec_id", "embedding").toPandas()
-    ids = pdf["vec_id"].to_numpy().astype(np.int64)
-    m = (
-        np.array(list(pdf["embedding"]), dtype=np.float64)
-        if len(pdf)
-        else np.empty((0, 0), dtype=np.float64)
+# -- NumPy kernels (mapInPandas / applyInPandas bodies) ---------------------
+
+
+def _matrix(col) -> np.ndarray:
+    """An embedding column (pandas Series of arrays) as a float64
+    matrix; (0, 0) when empty."""
+    if not len(col):
+        return np.empty((0, 0), dtype=np.float64)
+    return np.array(list(col), dtype=np.float64)
+
+
+def _norms(m: np.ndarray) -> np.ndarray:
+    return np.sqrt((m * m).sum(axis=1))
+
+
+def _cosines(left, right, lnorm, rnorm) -> np.ndarray:
+    """(len(left), len(right)) cosine block. The BLAS summation order,
+    and so the last bit, depends on which side is `left`: each caller
+    keeps one orientation."""
+    return (left @ right.T) / np.outer(lnorm, rnorm)
+
+
+def _best(sims: np.ndarray, ids: np.ndarray, k: int) -> np.ndarray:
+    """Column indices of the `k` best entries of every row of `sims`:
+    cosine descending, ties to the lower id (`ids` labels the
+    columns)."""
+    return np.lexsort((ids[None, :].repeat(sims.shape[0], 0), -sims), axis=1)[:, :k]
+
+
+def _local_topk(qid, m_q, q_norm, nid, m_n, n_norm, k: int):
+    """(query_id, neighbor_id, cosine) frame: the round-6 top-`k`
+    neighbors of every query among the given neighbors, self excluded,
+    ties to the lower neighbor id. Queries are scored `_QUERY_BLOCK` at
+    a time, so the cosine block stays bounded however many queries a
+    task holds."""
+    import pandas as pd
+
+    kk = min(k, nid.size)
+    out = {
+        "query_id": [np.empty(0, np.int64)],
+        "neighbor_id": [np.empty(0, np.int64)],
+        "cosine": [np.empty(0, np.float64)],
+    }
+    for lo in range(0, qid.size if kk else 0, _QUERY_BLOCK):
+        q = slice(lo, lo + _QUERY_BLOCK)
+        sims = _cosines(m_q[q], m_n, q_norm[q], n_norm)
+        sims[np.equal.outer(qid[q], nid)] = -np.inf  # exclude self
+        sims = np.round(sims, 6)
+        order = _best(sims, nid, kk)
+        cos = np.take_along_axis(sims, order, axis=1).ravel()
+        keep = cos > -np.inf
+        out["query_id"].append(np.repeat(qid[q], kk)[keep])
+        out["neighbor_id"].append(nid[order].ravel()[keep])
+        out["cosine"].append(cos[keep])
+    return pd.DataFrame({c: np.concatenate(v) for c, v in out.items()})
+
+
+def _collect_matrix(frame: DataFrame, id_col: str):
+    """(ids, matrix, norms) of a small (`id_col`, embedding) frame,
+    collected to the driver over Arrow — the broadcast side of a block
+    compare (the brute-force baseline pulls the whole corpus through
+    here)."""
+    pdf = frame.select(id_col, "embedding").toPandas()
+    m = _matrix(pdf["embedding"])
+    return pdf[id_col].to_numpy().astype(np.int64), m, _norms(m)
+
+
+# -- Catalyst plans ---------------------------------------------------------
+
+
+def _rank(scored: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, rank, cosine): the `k` best rows of
+    every query, cosine descending, ties to the lower neighbor id."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id")
     )
-    norms = np.sqrt((m * m).sum(axis=1))
-    return ids, m, norms
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", "cosine")
+    )
+
+
+def _score(pairs: DataFrame, a: str, left: DataFrame, b: str, right: DataFrame):
+    """(a, b, cosine): the exact round-6 cosine of every id pair, `a`
+    looked up in `left` and `b` in `right` (vec_id, embedding frames),
+    as one whole-stage-codegen JVM expression (no Python)."""
+
+    def side(frame, key, tag):
+        return with_norm(frame).select(
+            F.col("vec_id").alias(key),
+            F.col("embedding").alias(f"_e{tag}"),
+            F.col("norm").alias(f"_n{tag}"),
+        )
+
+    cos = _dot(F.col("_ea"), F.col("_eb")) / (F.col("_na") * F.col("_nb"))
+    return (
+        pairs.join(side(left, a, "a"), a)
+        .join(side(right, b, "b"), b)
+        .select(a, b, F.round(cos, 6).alias("cosine"))
+    )
+
+
+def _slices(rows: DataFrame, keys: list[str], cap: int, sized=None) -> DataFrame:
+    """`rows` plus bsize, n_slices and slc: a bucket (`keys`) of bsize
+    rows is hash-cut into n_slices = ceil(bsize / cap) slices and slc
+    is this row's slice. Sizes are counted over `sized` (default
+    `rows`); the size table has one row per bucket, so it is
+    broadcast."""
+    sizes = (rows if sized is None else sized).groupBy(*keys).agg(
+        F.count("*").alias("bsize")
+    )
+    n_slices = F.greatest(F.lit(1), F.ceil(F.col("bsize") / F.lit(cap)))
+    return (
+        rows.join(F.broadcast(sizes), keys)
+        .withColumn("n_slices", n_slices.cast("int"))
+        .withColumn(
+            "slc", F.pmod(F.xxhash64("vec_id"), F.col("n_slices")).cast("int")
+        )
+    )
+
+
+# -- Exact search -----------------------------------------------------------
 
 
 def cosine_topk(emb: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
@@ -72,64 +227,19 @@ def cosine_topk(emb: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     its LOCAL top-k per query, so the final shuffle carries
     O(queries x k x partitions) rows instead of O(queries x n) — the
     global top-k is a subset of the union of local top-ks."""
-    from pyspark.sql import Window
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    qids, qm, qnorms = _query_matrix(queries)
-    sc = emb.sparkSession.sparkContext
-    bq = sc.broadcast((qids, qm, qnorms))
-    schema = StructType(
-        [
-            StructField("query_id", LongType(), False),
-            StructField("neighbor_id", LongType(), False),
-            StructField("cosine", DoubleType(), False),
-        ]
-    )
+    bq = emb.sparkSession.sparkContext.broadcast(_collect_matrix(queries, "vec_id"))
 
     def run(batches):
-        import pandas as pd
-
-        ids_q, m_q, n_q = bq.value
+        qid, m_q, q_norm = bq.value
         for pdf in batches:
             nid = pdf["vec_id"].to_numpy().astype(np.int64)
-            block = np.array(list(pdf["embedding"]), dtype=np.float64)
-            bnorm = np.sqrt((block * block).sum(axis=1))
-            sims = (m_q @ block.T) / np.outer(n_q, bnorm)  # queries x block
-            sims[np.equal.outer(ids_q, nid)] = -np.inf  # exclude self
-            sims = np.round(sims, 6)
-            kk = min(k, nid.size)
-            # local top-k per query with (cosine desc, neighbor asc) ties
-            order = np.lexsort((nid[None, :].repeat(len(ids_q), 0), -sims), axis=1)[
-                :, :kk
-            ]
-            rows_q = np.repeat(ids_q, kk)
-            rows_n = nid[order].ravel()
-            rows_c = np.take_along_axis(sims, order, axis=1).ravel()
-            keep = rows_c > -np.inf
-            yield pd.DataFrame(
-                {
-                    "query_id": rows_q[keep],
-                    "neighbor_id": rows_n[keep],
-                    "cosine": rows_c[keep],
-                }
-            )
+            m_n = _matrix(pdf["embedding"])
+            yield _local_topk(qid, m_q, q_norm, nid, m_n, _norms(m_n), k)
 
     local = fan_out(emb.select("vec_id", "embedding"), "vec_id").mapInPandas(
-        run, schema
+        run, _TOPK_SCHEMA
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return _rank(local, k)
 
 
 def embedding_near_dup_bruteforce(emb: DataFrame, threshold: float = 0.95) -> DataFrame:
@@ -139,10 +249,7 @@ def embedding_near_dup_bruteforce(emb: DataFrame, threshold: float = 0.95) -> Da
     the small-data ORACLE BASELINE for recall measurement only (see
     tests/test_traindata_ops.py); the production path is
     `embedding_near_dup` (LSH-bucketed, collect-free)."""
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
-    ids, m, norms = _query_matrix(emb)
-    bq = emb.sparkSession.sparkContext.broadcast((ids, m, norms))
+    bq = emb.sparkSession.sparkContext.broadcast(_collect_matrix(emb, "vec_id"))
     schema = StructType(
         [
             StructField("vec_a", LongType(), False),
@@ -161,20 +268,14 @@ def embedding_near_dup_bruteforce(emb: DataFrame, threshold: float = 0.95) -> Da
         chunk = max(1, (32 << 20) // max(8 * ids_all.size, 1))
         for pdf in batches:
             aid_b = pdf["vec_id"].to_numpy().astype(np.int64)
-            block_b = np.array(list(pdf["embedding"]), dtype=np.float64)
+            block_b = _matrix(pdf["embedding"])
             for lo in range(0, aid_b.size, chunk):
                 aid = aid_b[lo : lo + chunk]
                 block = block_b[lo : lo + chunk]
-                bnorm = np.sqrt((block * block).sum(axis=1))
-                sims = (block @ m_all.T) / np.outer(bnorm, n_all)
-                # round only the rare survivors, not the whole
-                # (block x n) matrix: a 1e-4 margin below the threshold
-                # provably covers every value that could round UP to it
-                # (round-6 moves a value by at most 5e-7), then the
-                # exact round-6 compare re-applies on the gathered
-                # candidates — same result set, ~n^2 fewer np.round
-                # calls
-                mask = (sims >= threshold - 1e-4) & (
+                sims = _cosines(block, m_all, _norms(block), n_all)
+                # round only the rare survivors of the margin prefilter,
+                # not the whole (block x n) matrix
+                mask = (sims >= threshold - _ROUND_MARGIN) & (
                     aid[:, None] < ids_all[None, :]
                 )
                 ai, bi = np.nonzero(mask)
@@ -191,6 +292,9 @@ def embedding_near_dup_bruteforce(emb: DataFrame, threshold: float = 0.95) -> Da
     return fan_out(emb.select("vec_id", "embedding"), "vec_id").mapInPandas(
         run, schema
     )
+
+
+# -- LSH --------------------------------------------------------------------
 
 
 def table_seed(seed: int, table: int) -> int:
@@ -215,19 +319,6 @@ def hyperplanes(dim: int, bits: int = 16, seed: int = 42) -> list[list[float]]:
     return planes
 
 
-def lsh_buckets(
-    emb: DataFrame, bits: int = 16, seed: int = 42, dim: int | None = None
-) -> DataFrame:
-    """(vec_id, bucket): single-table sign-of-projection signature —
-    one-table projection of `lsh_buckets_multi`, so every LSH path
-    computes signatures with the SAME arithmetic (one broadcast BLAS
-    matmul; sign parity with the oracle's left-to-right fold is pinned
-    by tests/test_traindata_ops.py::test_lsh_projection_sign_margin)."""
-    return lsh_buckets_multi(emb, bits, tables=1, seed=seed, dim=dim).select(
-        "vec_id", "bucket"
-    )
-
-
 def lsh_buckets_multi(
     emb: DataFrame,
     bits: int = 8,
@@ -239,7 +330,8 @@ def lsh_buckets_multi(
     """(vec_id, tbl, bucket): multi-table LSH — `tables` independent
     signatures per vector, computed in ONE map-only pass. Multi-table
     is the recall lever: a near pair only needs to collide in one
-    table.
+    table. Every LSH path computes its signatures here, with the same
+    arithmetic.
 
     Physical shape: all tables' hyperplanes form one broadcast
     (tables*bits, dim) matrix; a vectorized mapInPandas computes every
@@ -247,15 +339,8 @@ def lsh_buckets_multi(
     JVM fold expressions this replaces generated pathological
     whole-stage-codegen compile times). Sign parity with the oracle's
     left-to-right list_reduce holds because projections are O(0.1-10)
-    while cross-summation-order error is ~1e-13 — verified empirically
-    on the driver datasets by the oracle hash checks."""
-    from pyspark.sql.types import (
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
+    while cross-summation-order error is ~1e-13 — pinned on the
+    fixture by tests/test_traindata_ops.py::test_lsh_projection_sign_margin."""
     if dim is None:
         # arrays carry no width in the Spark schema; pass `dim` to skip
         # this one-row probe job when the caller knows it
@@ -269,7 +354,6 @@ def lsh_buckets_multi(
     ).reshape(tables * bits, dim)
     weights = (1 << np.arange(bits, dtype=np.int64))
     bq = emb.sparkSession.sparkContext.broadcast((planes, weights, tables, bits))
-    from pyspark.sql.types import ArrayType, FloatType
 
     fields = [
         StructField("vec_id", LongType(), False),
@@ -278,8 +362,8 @@ def lsh_buckets_multi(
     ]
     if with_embedding:
         # carry the vector alongside its signatures so a consumer that
-        # needs both (the in-bucket near-dup prefilter) avoids a join
-        # back against the corpus
+        # needs both (the in-bucket scorers) avoids a join back against
+        # the corpus
         fields.append(StructField("embedding", ArrayType(FloatType()), False))
     schema = StructType(fields)
 
@@ -289,8 +373,7 @@ def lsh_buckets_multi(
         m_p, w, n_t, n_b = bq.value
         for pdf in batches:
             vid = pdf["vec_id"].to_numpy().astype(np.int64)
-            block = np.array(list(pdf["embedding"]), dtype=np.float64)
-            proj = block @ m_p.T  # (rows, tables*bits)
+            proj = _matrix(pdf["embedding"]) @ m_p.T  # (rows, tables*bits)
             sig = ((proj > 0).reshape(-1, n_t, n_b) * w).sum(axis=2)
             out = {
                 "vec_id": np.repeat(vid, n_t),
@@ -329,35 +412,23 @@ def embedding_near_dup(
     its bucket's vectors (carried out of the signature pass — no join
     back) and PREFILTERS all pairs with one NumPy/BLAS block matmul
     (guide §4.2), emitting only pairs whose raw cosine clears
-    `threshold - 1e-4`; round-6 rounding moves a value by at most
-    5e-7, so no pair that finally rounds to >= threshold can be lost.
-    The few surviving pairs are deduped (DISTINCT over survivors, not
-    over all collisions) and re-scored with the SAME exact JVM fold +
-    round-6 expression as before — the final filter re-applies
-    exactly, so the result is bit-identical to the round-6 plan while
-    the shuffles carry survivors instead of candidates.
+    `threshold - _ROUND_MARGIN`, which provably loses no pair that
+    finally rounds to >= threshold. The few surviving pairs are deduped
+    (DISTINCT over survivors, not over all collisions) and re-scored
+    with the SAME exact JVM fold + round-6 expression (`_score`) — the
+    final filter re-applies exactly, so the result is bit-identical to
+    the round-6 plan while the shuffles carry survivors instead of
+    candidates.
 
     A hot bucket of B rows is hash-cut into ceil(B / max_task_rows)
     slices and the all-pairs compare runs as the (upper-triangular)
     slice grid, so no task ever holds more than ~2 slices of vectors —
     the same cap discipline as `lsh_topk`. Recall is tuned with
     (bits, tables); see tests/test_traindata_ops.py."""
-    from pyspark.sql.types import LongType, StructField, StructType
-
     rows = lsh_buckets_multi(
         emb, bits, tables, seed, dim=dim, with_embedding=True
     )
-    sizes = rows.groupBy("tbl", "bucket").agg(F.count("*").alias("bsize"))
-    n_slices = F.greatest(
-        F.lit(1), F.ceil(F.col("bsize") / F.lit(max_task_rows))
-    ).cast("int")
-    sliced = (
-        rows.join(F.broadcast(sizes), ["tbl", "bucket"])
-        .withColumn("n_slices", n_slices)
-        .withColumn(
-            "slc", F.pmod(F.xxhash64("vec_id"), F.col("n_slices")).cast("int")
-        )
-    )
+    sliced = _slices(rows, ["tbl", "bucket"], max_task_rows)
     # upper-triangular slice grid: a row of slice s is the LEFT side of
     # cells (s, j >= s) and the RIGHT side of cells (i < s, s); the
     # diagonal cell carries both roles so P == 1 keeps one copy per row
@@ -391,7 +462,7 @@ def embedding_near_dup(
             StructField("vec_b", LongType(), False),
         ]
     )
-    margin = threshold - 1e-4
+    margin = threshold - _ROUND_MARGIN
 
     def _cell_pairs(pdf):
         """All surviving pairs of ONE (tbl, bucket, gi, gj) cell."""
@@ -402,12 +473,10 @@ def embedding_near_dup(
         if not lmask.any() or not rmask.any():
             return None
         vid = pdf["vec_id"].to_numpy().astype(np.int64)
-        emb_col = np.array(list(pdf["embedding"]), dtype=np.float64)
-        norms = np.sqrt((emb_col * emb_col).sum(axis=1))
+        m = _matrix(pdf["embedding"])
+        norms = _norms(m)
         lid, rid = vid[lmask], vid[rmask]
-        sims = (emb_col[lmask] @ emb_col[rmask].T) / np.outer(
-            norms[lmask], norms[rmask]
-        )
+        sims = _cosines(m[lmask], m[rmask], norms[lmask], norms[rmask])
         mask = (sims >= margin) & (lid[:, None] != rid[None, :])
         ai, bi = np.nonzero(mask)
         if ai.size == 0:
@@ -443,30 +512,11 @@ def embedding_near_dup(
         n_tasks, F.pmod(F.xxhash64("tbl", "bucket", "gi", "gj"), F.lit(n_tasks))
     ).sortWithinPartitions("tbl", "bucket", "gi", "gj")
     pairs = arranged.mapInPandas(prefilter_cells, pair_schema).distinct()
-    base = with_norm(emb)
-    a = base.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col("embedding").alias("ea"),
-        F.col("norm").alias("na"),
-    )
-    b = base.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("embedding").alias("eb"),
-        F.col("norm").alias("nb"),
-    )
-    scored = (
-        pairs.join(a, "vec_a")
-        .join(b, "vec_b")
-        .select(
-            "vec_a",
-            "vec_b",
-            F.round(_dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb")), 6)
-            .alias("cosine"),
-        )
-    )
-    return scored.where(F.col("cosine") >= threshold).select(
-        "vec_a", "vec_b", "cosine"
-    )
+    scored = _score(pairs, "vec_a", emb, "vec_b", emb)
+    return scored.where(F.col("cosine") >= threshold)
+
+
+# -- IVF --------------------------------------------------------------------
 
 
 def ivf_centroids(emb: DataFrame, n_cells: int = 16) -> DataFrame:
@@ -478,8 +528,6 @@ def ivf_centroids(emb: DataFrame, n_cells: int = 16) -> DataFrame:
     ordered = emb.select("vec_id", "embedding").orderBy(
         F.md5(F.col("vec_id").cast("string")), F.col("vec_id")
     )
-    from pyspark.sql import Window
-
     w = Window.orderBy(F.md5(F.col("vec_id").cast("string")), F.col("vec_id"))
     return (
         ordered.limit(n_cells)
@@ -543,29 +591,20 @@ def ivf_train(
     # when the corpus outgrows memory). fan_out: the assignment matmul
     # must not run single-task over a one-split file scan.
     corpus = fan_out(emb.select("embedding")).persist()
-    seed_rows = ivf_centroids(emb, n_cells).orderBy("cell").collect()
-    cells = np.array([r["cell"] for r in seed_rows], dtype=np.int64)
-    cm = np.array(
-        [[float(v) for v in r["embedding"]] for r in seed_rows], dtype=np.float64
-    )
+    cells, cm, _ = _collect_matrix(ivf_centroids(emb, n_cells).orderBy("cell"), "cell")
     dim = cm.shape[1]
     sc = spark.sparkContext
     for _ in range(max(0, iters)):
-        norms = np.sqrt((cm * cm).sum(axis=1))
-        bq = sc.broadcast((cells, cm, norms))
+        bq = sc.broadcast((cells, cm, _norms(cm)))
 
         def partials(batches):
             cl, m_c, n_c = bq.value
             for pdf in batches:
                 if not len(pdf):
                     continue
-                block = np.array(list(pdf["embedding"]), dtype=np.float64)
-                bnorm = np.sqrt((block * block).sum(axis=1))
-                sims = np.round((block @ m_c.T) / np.outer(bnorm, n_c), 6)
-                order = np.lexsort(
-                    (cl[None, :].repeat(block.shape[0], 0), -sims), axis=1
-                )[:, 0]
-                assigned = cl[order]
+                block = _matrix(pdf["embedding"])
+                sims = np.round(_cosines(block, m_c, _norms(block), n_c), 6)
+                assigned = cl[_best(sims, cl, 1)[:, 0]]
                 q = np.floor(block * quant + 0.5).astype(np.int64)
                 out = {"cell": [], "cnt": [], "qsum": []}
                 for c in np.unique(assigned):
@@ -600,28 +639,12 @@ def ivf_train(
     return spark.createDataFrame(rows, "cell int, embedding array<double>")
 
 
-def _centroid_matrix(cents: DataFrame):
-    rows = cents.select("cell", "embedding").collect()  # K rows only
-    cells = np.array([r["cell"] for r in rows], dtype=np.int64)
-    m = np.array([r["embedding"] for r in rows], dtype=np.float64)
-    norms = np.sqrt((m * m).sum(axis=1))
-    return cells, m, norms
-
-
 def ivf_assign(emb: DataFrame, cents: DataFrame, n_probe: int = 1) -> DataFrame:
     """(vec_id, cell[, probe_rank]): nearest `n_probe` centroids per
     vector by round-6 cosine (ties to the lower cell id — the same
     deterministic rule the SQL oracle uses). The centroid matrix is a
     K-row broadcast; assignment is a map-only NumPy block matmul."""
-    from pyspark.sql.types import (
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    cells, cm, cnorms = _centroid_matrix(cents)
-    bq = emb.sparkSession.sparkContext.broadcast((cells, cm, cnorms))
+    bq = emb.sparkSession.sparkContext.broadcast(_collect_matrix(cents, "cell"))
     schema = StructType(
         [
             StructField("vec_id", LongType(), False),
@@ -637,16 +660,12 @@ def ivf_assign(emb: DataFrame, cents: DataFrame, n_probe: int = 1) -> DataFrame:
         p = min(n_probe, cl.size)
         for pdf in batches:
             vid = pdf["vec_id"].to_numpy().astype(np.int64)
-            block = np.array(list(pdf["embedding"]), dtype=np.float64)
-            bnorm = np.sqrt((block * block).sum(axis=1))
-            sims = np.round((block @ m_c.T) / np.outer(bnorm, n_c), 6)
-            order = np.lexsort((cl[None, :].repeat(vid.size, 0), -sims), axis=1)[
-                :, :p
-            ]
+            block = _matrix(pdf["embedding"])
+            sims = np.round(_cosines(block, m_c, _norms(block), n_c), 6)
             yield pd.DataFrame(
                 {
                     "vec_id": np.repeat(vid, p),
-                    "cell": cl[order].ravel().astype(np.int32),
+                    "cell": cl[_best(sims, cl, p)].ravel().astype(np.int32),
                     "probe_rank": np.tile(
                         np.arange(1, p + 1, dtype=np.int32), vid.size
                     ),
@@ -675,8 +694,6 @@ def ivf_topk(
     for the cell assignment plus O(candidates) for the probe join —
     never O(n^2); recall is tuned with (n_cells, n_probe,
     train_iters)."""
-    from pyspark.sql import Window
-
     cents = (
         ivf_train(emb, n_cells, iters=train_iters)
         if train_iters > 0
@@ -686,7 +703,6 @@ def ivf_topk(
     probes = ivf_assign(queries, cents, n_probe=n_probe).select(
         F.col("vec_id").alias("query_id"), "cell"
     )
-    base = with_norm(emb)
     cand = (
         probes.join(corpus.withColumnRenamed("vec_id", "neighbor_id"), "cell")
         .where(F.col("query_id") != F.col("neighbor_id"))
@@ -696,35 +712,10 @@ def ivf_topk(
     # query embeddings come from the QUERIES frame (they may not exist
     # in the corpus; a corpus lookup would silently drop or mis-score
     # external queries)
-    q = with_norm(queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("eq"),
-        F.col("norm").alias("nq"),
-    )
-    n = base.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("en"),
-        F.col("norm").alias("nn"),
-    )
-    scored = (
-        cand.join(q, "query_id")
-        .join(n, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                _dot(F.col("eq"), F.col("en")) / (F.col("nq") * F.col("nn")), 6
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return _rank(_score(cand, "query_id", queries, "neighbor_id", emb), k)
+
+
+# -- LSH top-k --------------------------------------------------------------
 
 
 def lsh_topk(
@@ -739,7 +730,8 @@ def lsh_topk(
 ) -> DataFrame:
     """Approximate top-k: exact ranking *within* each LSH bucket (each
     vector lives in exactly one bucket, so bucket-local rank == final
-    rank).
+    rank). The one-table signature pass carries each vector with its
+    bucket, so no join back against `emb` is needed.
 
     Scale shape — no task ever materializes an unbounded bucket: a
     bucket of size B is cut into ``P = ceil(B / max_task_rows)``
@@ -767,87 +759,25 @@ def lsh_topk(
     the unrestricted run filtered afterwards — at a fraction of the
     in-bucket compare cost when the query set is small (ann_recall
     measures 20 queries against a whole corpus)."""
-    from pyspark.sql import Window
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    local_schema = StructType(
-        [
-            StructField("query_id", LongType(), False),
-            StructField("neighbor_id", LongType(), False),
-            StructField("cosine", DoubleType(), False),
-        ]
-    )
-    block_rows = 4096
     cap = max_task_rows
 
     def score(pdf):
-        import pandas as pd
-
         if enforce_cap and len(pdf) > 4 * cap + 64:
             raise ValueError(
                 f"lsh_topk task got {len(pdf)} rows > cap bound {4 * cap + 64}"
             )
-        empty = pd.DataFrame(
-            {"query_id": [], "neighbor_id": [], "cosine": []}
-        ).astype(
-            {"query_id": np.int64, "neighbor_id": np.int64, "cosine": np.float64}
+        q, n = pdf[pdf["is_q"]], pdf[pdf["is_n"]]
+        m_q, m_n = _matrix(q["embedding"]), _matrix(n["embedding"])
+        return _local_topk(
+            q["vec_id"].to_numpy().astype(np.int64), m_q, _norms(m_q),
+            n["vec_id"].to_numpy().astype(np.int64), m_n, _norms(m_n), k,
         )
-        q_rows = pdf[pdf["is_q"]]
-        n_rows = pdf[pdf["is_n"]]
-        if q_rows.empty or n_rows.empty:
-            return empty
-        qid = q_rows["vec_id"].to_numpy().astype(np.int64)
-        nid = n_rows["vec_id"].to_numpy().astype(np.int64)
-        m_n = np.array(list(n_rows["embedding"]), dtype=np.float64)
-        n_norm = np.sqrt((m_n * m_n).sum(axis=1))
-        m_q = np.array(list(q_rows["embedding"]), dtype=np.float64)
-        q_norm = np.sqrt((m_q * m_q).sum(axis=1))
-        kk = min(k, nid.size)
-        outs = []
-        for lo in range(0, qid.size, block_rows):
-            hi = min(lo + block_rows, qid.size)
-            sims = (m_q[lo:hi] @ m_n.T) / np.outer(q_norm[lo:hi], n_norm)
-            sims[np.equal.outer(qid[lo:hi], nid)] = -np.inf  # exclude self
-            sims = np.round(sims, 6)
-            order = np.lexsort(
-                (nid[None, :].repeat(hi - lo, 0), -sims), axis=1
-            )[:, :kk]
-            rows_c = np.take_along_axis(sims, order, axis=1).ravel()
-            keep = rows_c > -np.inf
-            outs.append(
-                pd.DataFrame(
-                    {
-                        "query_id": np.repeat(qid[lo:hi], kk)[keep],
-                        "neighbor_id": nid[order].ravel()[keep],
-                        "cosine": rows_c[keep],
-                    }
-                )
-            )
-        return pd.concat(outs, ignore_index=True) if outs else empty
 
-    buckets = lsh_buckets(emb, bits, seed, dim=dim)
-    base = emb.select("vec_id", "embedding").join(buckets, "vec_id")
-    # per-bucket slice count from the (<= 2^bits rows) size table
-    sizes = buckets.groupBy("bucket").agg(F.count("*").alias("bsize"))
-    sliced = (
-        base.join(F.broadcast(sizes), "bucket")
-        .withColumn(
-            "n_slices",
-            F.greatest(
-                F.lit(1), F.ceil(F.col("bsize") / F.lit(cap))
-            ).cast("int"),
-        )
-        .withColumn(
-            "slc", F.pmod(F.xxhash64("vec_id"), F.col("n_slices")).cast("int")
-        )
-        .withColumn(
-            "isq", F.lit(True) if query_pred is None else query_pred
-        )
+    rows = lsh_buckets_multi(
+        emb, bits, tables=1, seed=seed, dim=dim, with_embedding=True
+    )
+    sliced = _slices(rows, ["bucket"], cap).withColumn(
+        "isq", F.lit(True) if query_pred is None else query_pred
     )
     # a QUERY row serves as query in (qs=slc, ns=*) and as neighbor in
     # (qs=*, ns=slc); the diagonal combo carries both roles so a
@@ -880,16 +810,9 @@ def lsh_topk(
         F.col("c.is_n").alias("is_n"),
     )
     local = fanned.groupBy("bucket", "qs", "ns").applyInPandas(
-        lambda key, pdf: score(pdf), local_schema
+        lambda key, pdf: score(pdf), _TOPK_SCHEMA
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        local.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return _rank(local, k)
 
 
 def lsh_topk_multi(
@@ -931,8 +854,7 @@ def lsh_topk_multi(
     `lsh_topk` (one bucket per vector, rank exact WITHIN the bucket)
     the union of tables requires a global per-query re-rank — the
     extra window is the price of the recall."""
-    from pyspark.sql import Window
-
+    keys = ["tbl", "bucket"]
     sigs = lsh_buckets_multi(emb, bits, tables, seed, dim=dim)
     if queries is None:
         qsigs = sigs
@@ -940,25 +862,14 @@ def lsh_topk_multi(
         qsigs = sigs.join(
             queries.select(F.col("vec_id")), "vec_id", "left_semi"
         )
-    # per-(tbl,bucket) sizes: <= tables x 2^bits rows, broadcastable
-    # (1M rows even at 16 tables x 16 bits)
-    sizes = sigs.groupBy("tbl", "bucket").agg(F.count("*").alias("bsize"))
-    n_slices = F.greatest(
-        F.lit(1), F.ceil(F.col("bsize") / F.lit(max_task_rows))
-    ).cast("int")
-    nside = (
-        sigs.join(F.broadcast(sizes), ["tbl", "bucket"])
-        .withColumn(
-            "slc", F.pmod(F.xxhash64("vec_id"), n_slices).cast("int")
-        )
-    )
-    qside = (
-        qsigs.join(F.broadcast(sizes), ["tbl", "bucket"])
-        .withColumn("slc", F.explode(F.sequence(F.lit(0), n_slices - 1)))
+    nside = _slices(sigs, keys, max_task_rows)
+    # every query row meets each slice of its bucket
+    qside = _slices(qsigs, keys, max_task_rows, sized=sigs).withColumn(
+        "slc", F.explode(F.sequence(F.lit(0), F.col("n_slices") - 1))
     )
     cand = (
         qside.alias("x")
-        .join(nside.alias("y"), ["tbl", "bucket", "slc"])
+        .join(nside.alias("y"), [*keys, "slc"])
         .where(F.col("x.vec_id") != F.col("y.vec_id"))
         .select(
             F.col("x.vec_id").alias("query_id"),
@@ -966,29 +877,4 @@ def lsh_topk_multi(
         )
         .distinct()
     )
-    qe = with_norm(emb).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("_qe"),
-        F.col("norm").alias("_qn"),
-    )
-    ne = with_norm(emb).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("_ne"),
-        F.col("norm").alias("_nn"),
-    )
-    scored = (
-        cand.join(qe, "query_id")
-        .join(ne, "neighbor_id")
-        .withColumn(
-            "cosine",
-            F.round(_dot(F.col("_qe"), F.col("_ne")) / (F.col("_qn") * F.col("_nn")), 6),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"), "cosine")
-    )
+    return _rank(_score(cand, "query_id", emb, "neighbor_id", emb), k)

@@ -3,6 +3,8 @@ text stats, multimodal plumbing."""
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -97,6 +99,74 @@ def test_cosine_topk_self_consistency(spark, sf_small):
         cos = [r["cosine"] for r in rows]
         assert cos == sorted(cos, reverse=True)
         assert all(r["neighbor_id"] != q for r in rows)
+    # an empty query side is an empty result, not a failed task
+    assert cosine_topk(emb, emb.where("vec_id < 0"), k=3).collect() == []
+
+
+def _oracle_topk(qids, qvecs, nids, nvecs, k):
+    """Plain-Python top-k per query, self excluded: (q, n, cosine)
+    sorted by cosine desc, then neighbor id."""
+    out = []
+    for q, qv in zip(qids, qvecs):
+        cands = []
+        for n, nv in zip(nids, nvecs):
+            if n != q:
+                dot = sum(a * b for a, b in zip(qv, nv))
+                norm = math.sqrt(sum(a * a for a in qv)) * math.sqrt(
+                    sum(b * b for b in nv)
+                )
+                cands.append((-float(np.round(dot / norm, 6)), n))
+        out += [(q, n, -c) for c, n in sorted(cands)[:k]]
+    return out
+
+
+def test_local_topk_matches_python_oracle():
+    """The shared top-k kernel against a plain-Python oracle. Integer
+    vectors keep every dot product and squared norm exact, so both
+    sides round the same cosine."""
+    from modelardb_spark.operators.similarity import (
+        _QUERY_BLOCK,
+        _local_topk,
+        _matrix,
+        _norms,
+    )
+
+    def run(qids, qv, nids, nv, k):
+        qids, nids = np.asarray(qids, np.int64), np.asarray(nids, np.int64)
+        m_q, m_n = _matrix(qv), _matrix(nv)
+        pdf = _local_topk(qids, m_q, _norms(m_q), nids, m_n, _norms(m_n), k)
+        assert list(pdf.columns) == ["query_id", "neighbor_id", "cosine"]
+        return list(
+            zip(pdf["query_id"].tolist(), pdf["neighbor_id"].tolist(),
+                pdf["cosine"].tolist())
+        )
+
+    # tie broken by neighbor id: 7 and 3 are the same vector
+    nids, nv = [7, 3, 5, 1], [[1, 0], [1, 0], [0, 1], [1, 1]]
+    got = run([1, 9], [[1, 1], [2, 0]], nids, nv, 2)
+    assert got == _oracle_topk([1, 9], [[1, 1], [2, 0]], nids, nv, 2)
+    assert got[2:] == [(9, 3, 1.0), (9, 7, 1.0)]
+    # self excluded: query 1 never lists itself
+    assert all(n != q for q, n, _ in got)
+    # k above the neighbor count returns every other neighbor
+    got = run([1], [[1, 1]], nids, nv, 10)
+    assert got == _oracle_topk([1], [[1, 1]], nids, nv, 10)
+    assert len(got) == 3
+    # empty query side, empty neighbor side
+    assert run([], [], nids, nv, 3) == []
+    assert run([1], [[1, 1]], [], [], 3) == []
+    # more queries than one block, so the blocking runs
+    rng = np.random.default_rng(3)
+    n_q = _QUERY_BLOCK + 37
+    qv = rng.integers(-5, 6, size=(n_q, 4))
+    qv[(qv == 0).all(axis=1), 0] = 1  # no zero vectors
+    nids = np.arange(0, 2 * n_q, 97)
+    nv = qv[np.arange(nids.size) % n_q]
+    qids = np.arange(n_q)
+    got = run(qids, qv, nids, nv, 3)
+    assert got == _oracle_topk(
+        qids.tolist(), qv.tolist(), nids.tolist(), nv.tolist(), 3
+    )
 
 
 def test_lsh_topk_approximates_brute_force(spark, sf_small):
@@ -152,7 +222,7 @@ def test_lsh_topk_multi_bounded_hot_bucket(spark):
     candidate set)."""
     from pyspark.sql import functions as F
 
-    from modelardb_spark.operators.similarity import lsh_buckets_multi
+    from modelardb_spark.operators.similarity import _slices, lsh_buckets_multi
 
     base = np.linspace(0.1, 1.0, 64)
     rows = [
@@ -161,16 +231,13 @@ def test_lsh_topk_multi_bounded_hot_bucket(spark):
     ]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>").cache()
     cap = 64
-    # (a) replicate the operator's slicing and measure the worst group
+    # (a) run the operator's slicing and measure the worst group
     sigs = lsh_buckets_multi(emb, bits=4, tables=4, seed=42)
-    sizes = sigs.groupBy("tbl", "bucket").agg(F.count("*").alias("bsize"))
-    hot = sizes.agg(F.max("bsize")).first()[0]
+    sliced = _slices(sigs, ["tbl", "bucket"], cap)
+    hot = sliced.agg(F.max("bsize")).first()[0]
     assert hot == 600  # the plant really made every table one hot bucket
-    n_slices = F.greatest(F.lit(1), F.ceil(F.col("bsize") / F.lit(cap))).cast("int")
     worst = (
-        sigs.join(sizes, ["tbl", "bucket"])
-        .withColumn("slc", F.pmod(F.xxhash64("vec_id"), n_slices).cast("int"))
-        .groupBy("tbl", "bucket", "slc")
+        sliced.groupBy("tbl", "bucket", "slc")
         .count()
         .agg(F.max("count"))
         .first()[0]
