@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from modelardb_spark.config import EngineConfig
+from modelardb_spark.jobs.ingest import fit_turns
 from modelardb_spark.operators.fit import fit_segments
 from modelardb_spark.operators.grid import grid
 from modelardb_spark.operators.rollup import (
@@ -143,14 +144,9 @@ def _series(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # FUSED derive+fit: one shuffle of minimal turn rows, per-bin
-    # aggregation inside the fit kernel; identical segment rows to the
+    # the ingest job's FUSED derive+fit; identical segment rows to the
     # two-step and narrow paths (tests/test_fit_wide.py)
-    from modelardb_spark.operators.fit import fit_segments_from_transcripts
-
-    return fit_segments_from_transcripts(
-        transcripts_from_events(spark, sf_dir), CFG
-    )
+    return fit_turns(transcripts_from_events(spark, sf_dir), CFG)
 
 
 def _std_rollup(df: DataFrame) -> DataFrame:
@@ -188,16 +184,18 @@ def _q_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_rollup_1m(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _std_rollup(rollup_from_segments(_segments(spark, sf_dir), MINUTE_MS))
+    seg = _segments(spark, sf_dir)
+    return _std_rollup(rollup_from_segments(seg, MINUTE_MS, CFG.interval_ms))
 
 
 def _q_rollup_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _std_rollup(rollup_from_segments(_segments(spark, sf_dir), HOUR_MS))
+    seg = _segments(spark, sf_dir)
+    return _std_rollup(rollup_from_segments(seg, HOUR_MS, CFG.interval_ms))
 
 
 def _q_rollup_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exercises the cascading maintenance path (1h tier -> 1d tier)
-    r1h = rollup_from_segments(_segments(spark, sf_dir), HOUR_MS)
+    r1h = rollup_from_segments(_segments(spark, sf_dir), HOUR_MS, CFG.interval_ms)
     return _std_rollup(rollup_cascade(r1h, DAY_MS))
 
 
@@ -635,7 +633,7 @@ def _q_hour_of_day_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     family) computed from the 1h rollup tier."""
     from modelardb_spark.operators.rollup import calendar_rollup
 
-    r1h = rollup_from_segments(_segments(spark, sf_dir), HOUR_MS)
+    r1h = rollup_from_segments(_segments(spark, sf_dir), HOUR_MS, CFG.interval_ms)
     cube = calendar_rollup(r1h, "hour_of_day")
     return cube.select(
         "conv_id",
@@ -683,11 +681,8 @@ def _q_lossy_bound_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
     point, and emit any point whose percentage error
     (Static.java:106-119 semantics: approx==real -> 0, real==0 -> inf)
     exceeds the bound. MUST be empty — the oracle is the empty set."""
-    from modelardb_spark.operators.fit import fit_segments_from_transcripts
-
     lossy = EngineConfig(error_bound=5.0)
-    t = transcripts_from_events(spark, sf_dir)
-    seg = fit_segments_from_transcripts(t, lossy)
+    seg = fit_turns(transcripts_from_events(spark, sf_dir), lossy)
     approx = grid(seg).select(
         "conv_id", "metric", "bin_ms", F.col("value").alias("approx_f")
     )
@@ -735,7 +730,7 @@ def _q_windowed_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     lo = 1_704_672_000_000  # 2024-01-08T00:00Z
     hi = 1_705_276_799_999  # 2024-01-14T23:59:59.999Z
     seg = restrict(_segments(spark, sf_dir), lo, hi)
-    r = rollup_from_segments(seg, HOUR_MS)
+    r = rollup_from_segments(seg, HOUR_MS, CFG.interval_ms)
     return _std_rollup(r.where((F.col("window_ms") >= lo) & (F.col("window_ms") <= hi)))
 
 
@@ -759,7 +754,7 @@ def _q_derived_rollup_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     extra fit, zero reconstruction, zero storage."""
     from modelardb_spark.operators.transform import derived_rollup
 
-    r1h = rollup_from_segments(_segments(spark, sf_dir), HOUR_MS)
+    r1h = rollup_from_segments(_segments(spark, sf_dir), HOUR_MS, CFG.interval_ms)
     d = derived_rollup(r1h, {"turn_rate_x10": ("turn_rate", 10.0)})
     return _std_rollup(d)
 
@@ -786,10 +781,8 @@ def _q_rollup_1h_lossy(spark: SparkSession, sf_dir: str) -> DataFrame:
     the generator). The within-bound guarantee is separately asserted
     by lossy_bound_violations and test_pipeline.py."""
     lossy = EngineConfig(error_bound=5.0)
-    from modelardb_spark.operators.fit import fit_segments_from_transcripts
-
-    seg = fit_segments_from_transcripts(transcripts_from_events(spark, sf_dir), lossy)
-    return _std_rollup(rollup_from_segments(seg, HOUR_MS))
+    seg = fit_turns(transcripts_from_events(spark, sf_dir), lossy)
+    return _std_rollup(rollup_from_segments(seg, HOUR_MS, lossy.interval_ms))
 
 
 def _gsegments(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -798,12 +791,7 @@ def _gsegments(spark: SparkSession, sf_dir: str) -> DataFrame:
     row covers N series with the reference's gaps-as-absent-tids
     protocol and query-time explode (TimeSeriesGroup.java:153-176,
     SegmentGroup.java:51-111)."""
-    from modelardb_spark.operators.groupfit import fit_segments_grouped
-    from modelardb_spark.operators.series import derive_series_wide
-
-    return fit_segments_grouped(
-        derive_series_wide(transcripts_from_events(spark, sf_dir), CFG), CFG
-    )
+    return fit_turns(transcripts_from_events(spark, sf_dir), CFG, grouped=True)
 
 
 def _q_group_rollup_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -811,11 +799,10 @@ def _q_group_rollup_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     stride decode / closed-form partials); at bound 0 it must equal the
     raw-points rollup exactly — the hash check validates the whole
     group compress -> explode -> reconstruct path."""
-    from modelardb_spark.operators.groupfit import rollup_from_group_segments
+    from modelardb_spark.operators.groupfit import explode_group_segments
 
-    return _std_rollup(
-        rollup_from_group_segments(_gsegments(spark, sf_dir), HOUR_MS)
-    )
+    g = explode_group_segments(_gsegments(spark, sf_dir))
+    return _std_rollup(rollup_from_segments(g, HOUR_MS, CFG.interval_ms))
 
 
 def _q_group_data_points(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -871,16 +858,14 @@ def _q_ratio_routed_rollup_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     bytes (asserted in tests/test_groupfit.py), never correctness."""
     from modelardb_spark.operators.groupfit import (
         DYNAMIC_SPLIT_FRACTION,
-        fit_segments_grouped,
-        rollup_from_group_segments,
+        explode_group_segments,
     )
-    from modelardb_spark.operators.series import derive_series_wide
 
-    wide = derive_series_wide(transcripts_from_events(spark, sf_dir), CFG)
-    g = fit_segments_grouped(
-        wide, CFG, dynamic_split_fraction=DYNAMIC_SPLIT_FRACTION
+    t = transcripts_from_events(spark, sf_dir)
+    g = fit_turns(t, CFG, grouped=True, dynamic_split_fraction=DYNAMIC_SPLIT_FRACTION)
+    return _std_rollup(
+        rollup_from_segments(explode_group_segments(g), HOUR_MS, CFG.interval_ms)
     )
-    return _std_rollup(rollup_from_group_segments(g, HOUR_MS))
 
 
 def _q_dim_group_rollup_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -893,9 +878,9 @@ def _q_dim_group_rollup_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     from modelardb_spark.operators.dimensions import conversation_dimensions
     from modelardb_spark.operators.dimgroup import (
         dim_group_members,
+        explode_dim_group_segments,
         fit_segments_dim_grouped,
         materialize_members,
-        rollup_from_dim_group_segments,
     )
 
     s = _series(spark, sf_dir)
@@ -906,8 +891,8 @@ def _q_dim_group_rollup_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     members = materialize_members(
         dim_group_members(s, dims, by="channel", max_group_size=8)
     )
-    g = fit_segments_dim_grouped(s, members, CFG)
-    return _std_rollup(rollup_from_dim_group_segments(g, members, HOUR_MS))
+    g = explode_dim_group_segments(fit_segments_dim_grouped(s, members, CFG), members)
+    return _std_rollup(rollup_from_segments(g, HOUR_MS, CFG.interval_ms))
 
 
 def _q_group_compression_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -939,8 +924,8 @@ def _q_tiered_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     seg = _segments(spark, sf_dir).persist()
-    r1m = rollup_from_segments(seg, MINUTE_MS)
-    r1h = rollup_from_segments(seg, HOUR_MS)
+    r1m = rollup_from_segments(seg, MINUTE_MS, CFG.interval_ms)
+    r1h = rollup_from_segments(seg, HOUR_MS, CFG.interval_ms)
     r1d = rollup_cascade(r1h, DAY_MS)
     out = tiered_rollup_view(
         r1m,
@@ -1059,7 +1044,7 @@ def _q_dim_filtered_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     seg = _segments(spark, sf_dir)
     dims = conversation_dimensions(seg)
     kept = dim_restrict(seg, dims, channel="web")
-    r = _std_rollup(rollup_from_segments(kept, HOUR_MS))
+    r = _std_rollup(rollup_from_segments(kept, HOUR_MS, CFG.interval_ms))
     return with_dimensions(r, dims).select(
         "conv_id", "metric", "window_ms", "cnt", "vmin", "vmax", "vsum",
         "mean", "channel",
@@ -1070,9 +1055,9 @@ def _q_busiest_hours(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Plain Spark SQL over the engine's rollup view — the reference
     delegates all joins/sorts/limits to the host engine (SURVEY.md
     §2.5); this query demonstrates the same delegation here."""
-    rollup_from_segments(_segments(spark, sf_dir), HOUR_MS).createOrReplaceTempView(
-        "rollup_1h_v"
-    )
+    rollup_from_segments(
+        _segments(spark, sf_dir), HOUR_MS, CFG.interval_ms
+    ).createOrReplaceTempView("rollup_1h_v")
     return spark.sql(
         """
         SELECT window_ms, CAST(SUM(vsum) AS BIGINT) AS turns,

@@ -9,8 +9,9 @@ local[$SPARK_GRAFT_CPUS]; prints ONE JSON line:
 
 The headline number is ingested-to-rolled-up throughput (turns/sec) on
 a deterministic synthetic transcripts table (BASELINE.json metric),
-measured over derive -> gap-split -> fit -> segments -> 1m/1h/1d
-rollups, all materialized.
+measured over the ingest job's own tier pipeline
+(`modelardb_spark.jobs.ingest.tiers`: fit -> day-keyed segments ->
+1m/1h/1d rollups), each frame counted instead of written.
 
 --scaling: the same headline pipeline at local[1] vs local[4] (the
 sandbox's only unsaturated 4x rung; override with BENCH_SCALE_N/_4N)
@@ -64,17 +65,14 @@ def _spark(cores: str, master: str | None = None):
 
 
 def headline_pipeline(spark, n_convs: int = SYN_CONVS, turns: int = SYN_TURNS) -> tuple[int, float]:
-    """Synthetic transcripts -> rollup tiers; returns (turns, seconds)."""
-    from modelardb_spark.operators.fit import fit_segments_from_transcripts
-    from modelardb_spark.operators.rollup import (
-        DAY_MS,
-        HOUR_MS,
-        MINUTE_MS,
-        rollup_cascade,
-        rollup_from_segments,
-    )
+    """Synthetic transcripts -> rollup tiers; returns (turns, seconds).
+    Runs the ingest job's own pipeline (`jobs.ingest.tiers`) and counts
+    each frame it yields instead of writing it."""
+    from modelardb_spark.config import EngineConfig
+    from modelardb_spark.jobs.ingest import tiers
     from modelardb_spark.operators.transcripts import synthetic_transcripts
 
+    cfg = EngineConfig()
     t = synthetic_transcripts(
         spark, n_convs=n_convs, turns_per_conv=turns, mega_convs=4, mega_factor=25
     )
@@ -82,34 +80,19 @@ def headline_pipeline(spark, n_convs: int = SYN_CONVS, turns: int = SYN_TURNS) -
     n_turns = t.count()  # materialize input outside the timed window
     # warmup: spin up Python workers + codegen before the timed window
     warm = synthetic_transcripts(spark, n_convs=32, turns_per_conv=20, mega_convs=0)
-    rollup_from_segments(fit_segments_from_transcripts(warm), HOUR_MS).count()
+    for _, frame in tiers(warm, cfg):
+        frame.count()
     verbose = os.environ.get("BENCH_VERBOSE") == "1"
 
-    def mark(label, t_prev):
+    t0 = tm = time.time()
+    for name, frame in tiers(t, cfg):
+        frame.count()
         now = time.time()
         if verbose:
-            print(f"  [stage] {label}: {now - t_prev:.2f}s", file=sys.stderr)
-        return now
-
-    t0 = time.time()
-    # FUSED derive+fit: one shuffle of minimal turn rows; the per-bin
-    # aggregation runs inside the fit kernel (round-3 lever)
-    segments = fit_segments_from_transcripts(t).persist()
-    segments.count()
-    tm = mark("derive+fit", t0)
-    # 1m tier: map-only (window == bin width -> no shuffle, no cache)
-    rollup_from_segments(segments, MINUTE_MS).count()
-    tm = mark("rollup_1m", tm)
-    # 1h tier directly from the (compressed, small) segments table;
-    # 1d cascades from 1h — never re-shuffles point-sized data
-    r1h = rollup_from_segments(segments, HOUR_MS).persist()
-    r1h.count()
-    tm = mark("rollup_1h", tm)
-    rollup_cascade(r1h, DAY_MS).count()
-    mark("rollup_1d", tm)
+            print(f"  [stage] {name}: {now - tm:.2f}s", file=sys.stderr)
+        tm = now
     dt = time.time() - t0
-    for df in (segments, r1h, t):
-        df.unpersist()
+    t.unpersist()
     return n_turns, dt
 
 

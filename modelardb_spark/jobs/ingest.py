@@ -21,6 +21,11 @@ The contract is that `snapshot_id` names an immutable input: a re-run
 under the same id must be given the same rows, since nothing of the
 input is kept between runs.
 
+Tiers: `tiers` is the one derive -> fit -> 1m/1h/1d pipeline (fit via
+`fit_turns`, 1m/1h via `rollup_from_segments`, 1d cascaded from 1h).
+`ingest` writes each frame it yields and `bench.headline_pipeline`
+counts them, so the bench measures this code minus the writes.
+
 Layout: every table holds one data file per day partition. The fitted
 segments are rebalanced by day once; the segments write and the
 map-only 1m tier inherit that clustering, and the 1h and 1d outputs are
@@ -33,14 +38,20 @@ from __future__ import annotations
 
 import argparse
 import time
+from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import TimestampType
 
+import modelardb_spark.operators.fit as fitmod
 from modelardb_spark.config import EngineConfig
 from modelardb_spark.io.checkpoints import CheckpointStore
 from modelardb_spark.io.tables import DAY_MS, model_type_table, with_part_key
+from modelardb_spark.operators.groupfit import (
+    explode_group_segments,
+    fit_segments_grouped,
+)
 from modelardb_spark.operators.rollup import (
     HOUR_MS,
     MINUTE_MS,
@@ -62,6 +73,66 @@ def _ts_bounds(ts_type, days: list[int]):
     pad = 0 if isinstance(ts_type, TimestampType) else 1
     lo, hi = (days[0] - pad) * DAY_MS, (days[-1] + 1 + pad) * DAY_MS
     return [F.timestamp_millis(F.lit(ms)).cast(ts_type) for ms in (lo, hi)]
+
+
+def fit_turns(
+    turns: DataFrame,
+    cfg: EngineConfig,
+    grouped: bool = False,
+    dynamic_split_fraction: float | None = None,
+) -> DataFrame:
+    """Turns (conv_id, ts, tool) -> segments. Per series: the fused
+    derive+fit (one shuffle of minimal turn rows), looked up on
+    `operators.fit` at each call so a wrapper installed there sees
+    every fit. `grouped=True`: the wide series fitted as one group per
+    conversation (groupfit.py), with the ratio-feedback dynamic
+    split/join when `dynamic_split_fraction` is set."""
+    if not grouped:
+        return fitmod.fit_segments_from_transcripts(turns, cfg)
+    return fit_segments_grouped(
+        derive_series_wide(turns, cfg), cfg, dynamic_split_fraction=dynamic_split_fraction
+    )
+
+
+def tiers(
+    turns: DataFrame,
+    cfg: EngineConfig,
+    grouped: bool = False,
+    dynamic_split_fraction: float | None = None,
+) -> Iterator[tuple[str, DataFrame]]:
+    """Yields ("segments" | "rollup_1m" | "rollup_1h" | "rollup_1d",
+    frame), each keyed by `part_day` with one task per day. Take each
+    frame in turn: later tiers read the persisted segments and 1h
+    frames, which are released when the generator closes. 1m is
+    map-only at a 1-minute fit interval; 1h comes from the segments
+    (small shuffle) and 1d from 1h, so point-sized data is never
+    re-shuffled."""
+    # one task per day: the segments and the map-only 1m tier then
+    # write one file per day
+    segments = with_part_key(
+        fit_turns(turns, cfg, grouped, dynamic_split_fraction), cfg.conv_buckets
+    ).hint("rebalance", "part_day").persist()
+    members = explode_group_segments(segments) if grouped else segments
+
+    def by_day(tier: DataFrame) -> DataFrame:
+        return tier.withColumn("part_day", (F.col("window_ms") / DAY_MS).cast("long"))
+
+    r1h = None
+    try:
+        yield "segments", segments
+        yield "rollup_1m", by_day(
+            rollup_from_segments(members, MINUTE_MS, cfg.interval_ms)
+        )
+        r1h = by_day(rollup_from_segments(members, HOUR_MS, cfg.interval_ms))
+        r1h = r1h.hint("rebalance", "part_day").persist()
+        yield "rollup_1h", r1h
+        yield "rollup_1d", by_day(rollup_cascade(r1h, DAY_MS)).hint(
+            "rebalance", "part_day"
+        )
+    finally:
+        segments.unpersist()
+        if r1h is not None:
+            r1h.unpersist()
 
 
 def ingest(
@@ -142,72 +213,27 @@ def ingest(
             (F.col("ts") >= lo) & (F.col("ts") < hi)
             & _day_of_ts("ts").isin(chunk)
         )
-        if grouped:
-            from modelardb_spark.operators.groupfit import fit_segments_grouped
-
-            segments = with_part_key(
-                fit_segments_grouped(
-                    derive_series_wide(part, cfg),
-                    cfg,
-                    dynamic_split_fraction=dynamic_split_fraction,
-                ),
-                cfg.conv_buckets,
-            )
-        else:
-            # fused derive+fit: one shuffle of minimal turn rows per
-            # chunk instead of a derive exchange plus a fit exchange
-            from modelardb_spark.operators.fit import fit_segments_from_transcripts
-
-            segments = with_part_key(
-                fit_segments_from_transcripts(part, cfg), cfg.conv_buckets
-            )
-        # one task per day: the segments and the map-only 1m tier then
-        # write one file per day
-        segments = segments.hint("rebalance", "part_day").persist()
-        # "n" counts stored values on both the per-series and the
-        # group segment schemas (group seg_cnt is a per-member array);
-        # this collect also fills the cache the writes below read
-        stats = {
-            r["part_day"]: r
-            for r in segments.groupBy("part_day")
-            .agg(F.count("*").alias("segs"), F.sum("n").alias("points"))
-            .collect()
-        }
-        # sort within files so parquet row-group min/max stats prune by
-        # model type, conversation, and time (Iceberg analogue:
-        # write-ordered-by); part_day leads because the partitioned
-        # writer needs rows grouped by it and re-sorts otherwise
-        catalog.overwrite_partitions(
-            segments.sortWithinPartitions("part_day", "mtid", "conv_id", "start_ms"),
-            "segments",
-            ["part_day"],
-        )
-
-        # 1m tier is map-only (window == bin) and written straight out;
-        # 1h comes from the compressed segments (small shuffle);
-        # 1d cascades from 1h — point-sized data is never re-shuffled
-        if grouped:
-            from modelardb_spark.operators.groupfit import (
-                rollup_from_group_segments,
-            )
-
-            def _tier(window_ms):
-                return rollup_from_group_segments(segments, window_ms)
-        else:
-            def _tier(window_ms):
-                return rollup_from_segments(segments, window_ms)
-        r1m = _tier(MINUTE_MS).withColumn(
-            "part_day", (F.col("window_ms") / DAY_MS).cast("long")
-        )
-        catalog.overwrite_partitions(r1m, "rollup_1m", ["part_day"])
-        r1h = _tier(HOUR_MS).withColumn(
-            "part_day", (F.col("window_ms") / DAY_MS).cast("long")
-        ).hint("rebalance", "part_day").persist()
-        catalog.overwrite_partitions(r1h, "rollup_1h", ["part_day"])
-        r1d = rollup_cascade(r1h, DAY_MS).withColumn(
-            "part_day", (F.col("window_ms") / DAY_MS).cast("long")
-        ).hint("rebalance", "part_day")
-        catalog.overwrite_partitions(r1d, "rollup_1d", ["part_day"])
+        for name, frame in tiers(part, cfg, grouped, dynamic_split_fraction):
+            if name == "segments":
+                # "n" counts stored values on both the per-series and
+                # the group segment schemas (group seg_cnt is a
+                # per-member array); this collect also fills the cache
+                # the writes read
+                stats = {
+                    r["part_day"]: r
+                    for r in frame.groupBy("part_day")
+                    .agg(F.count("*").alias("segs"), F.sum("n").alias("points"))
+                    .collect()
+                }
+                # sort within files so parquet row-group min/max stats
+                # prune by model type, conversation, and time (Iceberg
+                # analogue: write-ordered-by); part_day leads because
+                # the partitioned writer needs rows grouped by it and
+                # re-sorts otherwise
+                frame = frame.sortWithinPartitions(
+                    "part_day", "mtid", "conv_id", "start_ms"
+                )
+            catalog.overwrite_partitions(frame, name, ["part_day"])
 
         wall_ms = int((time.time() - t0) * 1000)
         for d in chunk:
@@ -221,8 +247,6 @@ def ingest(
                 wall_ms=wall_ms // max(1, len(chunk)),
             )
         rows_out_total += sum(int(r["segs"]) for r in stats.values())
-        segments.unpersist()
-        r1h.unpersist()
 
     catalog.overwrite(model_type_table(spark), "model_type")
 

@@ -70,13 +70,13 @@ def prepare_session(
                 spark, "segments"
             )
     elif events is not None:
-        from modelardb_spark.operators.fit import fit_segments_from_transcripts
+        from modelardb_spark.jobs.ingest import fit_turns
         from modelardb_spark.operators.transcripts import transcripts_from_events
 
         import os
 
         sf_dir = os.path.dirname(os.path.abspath(events))
-        seg = fit_segments_from_transcripts(transcripts_from_events(spark, sf_dir), cfg)
+        seg = fit_turns(transcripts_from_events(spark, sf_dir), cfg)
     else:
         raise ValueError("one of --events / --segments-dir is required")
     register_views(spark, seg)

@@ -18,7 +18,11 @@ Physical shape mirrors `fit_segments_grouped`: one shuffle keyed on
 within a bin arrive sorted by member index — a run of bins with a
 stable active set is ALREADY the row-major interleaved payload, so the
 fit consumes it with a plain reshape (no per-value Python). Active-set
-change detection is a per-BIN comparison, not per-row.
+change detection is a per-BIN comparison, not per-row. At query time
+`explode_dim_group_segments` maps each member back to its real
+(conv_id, metric), and the members roll up through the one rollup
+entry, `rollup_from_segments(explode_dim_group_segments(g, members),
+w, interval_ms)`.
 
 Trade-off (documented, the reference shares it): grouping only pays
 when members are actually aligned on the grid — sparse, weakly-
@@ -43,7 +47,6 @@ from modelardb_spark.operators.groupfit import (
     GROUP_SEGMENT_SCHEMA,
     _GCOLS,
     _fit_group_run,
-    _rollup_from_exploded,
     _single_ts_rows,
 )
 
@@ -267,13 +270,3 @@ def explode_dim_group_segments(gseg: DataFrame, members: DataFrame) -> DataFrame
             F.col("gkey").alias("ukey"),
         )
     )
-
-
-def rollup_from_dim_group_segments(
-    gseg: DataFrame,
-    members: DataFrame,
-    window_ms: int,
-) -> DataFrame:
-    """Windowed rollup straight from dimension-group segments: the
-    shared partials tail over the registry-mapped explode."""
-    return _rollup_from_exploded(explode_dim_group_segments(gseg, members), window_ms)

@@ -76,6 +76,7 @@ from modelardb_spark.models.cascade import (
     FittedSegment,
     fit_run,
 )
+from modelardb_spark.operators.series import bin_col
 
 SEGMENT_SCHEMA = StructType(
     [
@@ -428,12 +429,9 @@ def fit_segments_from_transcripts(
     two-step path's map-side partial aggregation shrinks the shuffle
     more than the saved exchange; at the transcripts workload's ~1-2
     turns/bin the single exchange wins."""
-    iv = cfg.interval_ms
     rows = transcripts.select(
         "conv_id",
-        (
-            F.floor(F.unix_millis(F.col("ts").cast("timestamp")) / iv) * iv
-        ).alias("bin_ms"),
+        bin_col(cfg.interval_ms),
         F.when(F.col("tool").isNotNull(), F.lit(1))
         .otherwise(F.lit(0))
         .cast("tinyint")

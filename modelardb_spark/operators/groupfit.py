@@ -24,7 +24,10 @@ Reference semantics re-expressed Spark-first:
   segment per present tid (SegmentGroup.explode, :51-111) carrying
   (group_offset, group_size) so the decoder strides the interleaved
   payload. Implemented as a JVM-side posexplode; the members then run
-  through the same point and partials kernels as per-series segments.
+  through the same point and partials kernels as per-series segments:
+  `grid(explode_group_segments(g))` reconstructs points and
+  `rollup_from_segments(explode_group_segments(g), w, interval_ms)`
+  rolls up, map-only at the fit interval like per-series segments.
 
 Model cascade for groups — the reference's any-model-on-group-stream
 contract (core/SegmentGenerator.java:154-167 iterates every configured
@@ -481,26 +484,6 @@ def grid_group(
     members run through the same point kernel as per-series segments
     (dense members decode once with the group stride)."""
     return grid(explode_group_segments(gseg, metrics))
-
-
-def rollup_from_group_segments(
-    gseg: DataFrame,
-    window_ms: int,
-    metrics: tuple[str, ...] = ("turn_rate", "tool_usage"),
-) -> DataFrame:
-    """Windowed rollup straight from group segments: the exploded
-    members run through the same partials kernel as per-series
-    segments (closed forms for PMC/Swing, dense members decode once
-    with the group stride), one final hash aggregation."""
-    return _rollup_from_exploded(explode_group_segments(gseg, metrics), window_ms)
-
-
-def _rollup_from_exploded(exploded: DataFrame, window_ms: int) -> DataFrame:
-    """Shared rollup tail over an EXPLODED group-segment frame (per-
-    conversation or dimension-driven)."""
-    return merge_partials(
-        window_partials(exploded, window_ms), "conv_id", "metric", "window_ms"
-    )
 
 
 def correlated_conversations(

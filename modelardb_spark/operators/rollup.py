@@ -11,8 +11,10 @@ take NumPy closed forms on their p0/p1 columns, Gorilla/raw segments
 (and exploded group members, with the group stride) decode in
 lockstep and reduce per window with ``reduceat``. `merge_partials` is
 the partial/final merge the reference hand-wrote as Aggregators:
-Catalyst's hash aggregation, one exchange; the finest tier (window ==
-bin) skips it and is map-only. `rollup_cascade` and `calendar_rollup`
+Catalyst's hash aggregation, one exchange. `rollup_from_segments` is
+the one rollup entry for per-series segments and exploded (dimension-)
+group members; at the fit interval (the finest tier) it skips the
+merge and is map-only. `rollup_cascade` and `calendar_rollup`
 re-aggregate a finer tier with the same merge, and
 `segment_aggregates` merges the fit-time seg_* columns.
 
@@ -105,10 +107,12 @@ def merge_partials(partials: DataFrame, *keys) -> DataFrame:
 
 
 def rollup_from_segments(
-    segments: DataFrame, window_ms: int, interval_ms: int = MINUTE_MS
+    segments: DataFrame, window_ms: int, interval_ms: int
 ) -> DataFrame:
     """segments -> (conv_id, metric, window_ms, cnt, vmin, vmax, vsum,
-    mean).
+    mean). `segments` are per-series segments or exploded group members
+    (`groupfit.explode_group_segments`,
+    `dimgroup.explode_dim_group_segments`), fitted at `interval_ms`.
 
     General case: one shuffle (the final groupBy) over map-side
     partials. When `window_ms == interval_ms` (the finest tier), every

@@ -23,32 +23,31 @@ from pyspark.sql import functions as F
 from modelardb_spark.config import DEFAULT_CONFIG, EngineConfig
 
 
+def bin_col(interval_ms: int):
+    """Each turn's `ts` floored to the start of its `interval_ms` bin,
+    in epoch millis: the one bin expression behind every derive and
+    fit path. The cast covers TIMESTAMP_NTZ inputs; the session time
+    zone is UTC, so the value is time-zone independent."""
+    return (
+        F.floor(F.unix_millis(F.col("ts").cast("timestamp")) / interval_ms)
+        * interval_ms
+    ).alias("bin_ms")
+
+
 def derive_series(
     transcripts: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG
 ) -> DataFrame:
     """transcripts -> (conv_id, metric, bin_ms bigint, value float).
 
-    One shuffle: groupBy(conv_id, bin); the two metrics are produced by
-    a single aggregation then unpivoted JVM-side with `stack` (no
+    The `stack` unpivot of `derive_series_wide`: one shuffle (the
+    groupBy on conv_id and bin), then JVM-side rows per metric (no
     second shuffle, no Python).
     """
-    iv = cfg.interval_ms
-    binned = transcripts.groupBy(
-        F.col("conv_id"),
-        # cast covers TIMESTAMP_NTZ inputs; session tz is UTC so the
-        # epoch-millis value is timezone-independent
-        (
-            F.floor(F.unix_millis(F.col("ts").cast("timestamp")) / iv) * iv
-        ).alias("bin_ms"),
-    ).agg(
-        F.count(F.lit(1)).alias("turn_rate"),
-        F.count(F.col("tool")).alias("tool_usage"),
-    )
-    return binned.select(
+    return derive_series_wide(transcripts, cfg).select(
         "conv_id",
         F.expr(
-            "stack(2, 'turn_rate', cast(turn_rate as float),"
-            " 'tool_usage', cast(tool_usage as float)) as (metric, value)"
+            "stack(2, 'turn_rate', turn_rate, 'tool_usage', tool_usage)"
+            " as (metric, value)"
         ),
         "bin_ms",
     ).select("conv_id", "metric", "bin_ms", "value")
@@ -63,13 +62,7 @@ def derive_series_wide(
     shuffle and the Arrow transfer (the hottest path at scale).
     `fit_segments_wide` consumes this; output segments are identical to
     the narrow path."""
-    iv = cfg.interval_ms
-    return transcripts.groupBy(
-        F.col("conv_id"),
-        (
-            F.floor(F.unix_millis(F.col("ts").cast("timestamp")) / iv) * iv
-        ).alias("bin_ms"),
-    ).agg(
+    return transcripts.groupBy(F.col("conv_id"), bin_col(cfg.interval_ms)).agg(
         F.count(F.lit(1)).cast("float").alias("turn_rate"),
         F.count(F.col("tool")).cast("float").alias("tool_usage"),
     )

@@ -644,7 +644,12 @@ def ivf_assign(emb: DataFrame, cents: DataFrame, n_probe: int = 1) -> DataFrame:
     vector by round-6 cosine (ties to the lower cell id — the same
     deterministic rule the SQL oracle uses). The centroid matrix is a
     K-row broadcast; assignment is a map-only NumPy block matmul."""
-    bq = emb.sparkSession.sparkContext.broadcast(_collect_matrix(cents, "cell"))
+    sc = emb.sparkSession.sparkContext
+    return _assign(emb, sc.broadcast(_collect_matrix(cents, "cell")), n_probe)
+
+
+def _assign(emb: DataFrame, bq, n_probe: int) -> DataFrame:
+    """`ivf_assign` against an already broadcast centroid matrix."""
     schema = StructType(
         [
             StructField("vec_id", LongType(), False),
@@ -699,8 +704,10 @@ def ivf_topk(
         if train_iters > 0
         else ivf_centroids(emb, n_cells)
     )
-    corpus = ivf_assign(emb, cents, n_probe=1).select("vec_id", "cell")
-    probes = ivf_assign(queries, cents, n_probe=n_probe).select(
+    # one centroid collect serves both the corpus and the probe side
+    bq = emb.sparkSession.sparkContext.broadcast(_collect_matrix(cents, "cell"))
+    corpus = _assign(emb, bq, 1).select("vec_id", "cell")
+    probes = _assign(queries, bq, n_probe).select(
         F.col("vec_id").alias("query_id"), "cell"
     )
     cand = (

@@ -5,8 +5,9 @@ thread per ingestor running the SegmentGenerator loop
 (engines/spark/Spark.scala:157-186, WorkingSetReceiver.scala:25-65)
 and reconciles "temporary" vs finalized segments in an IndexedRDD
 cache (SparkCache.scala:27-213). The Spark-native replacement is
-Structured Streaming + `foreachBatch`: every micro-batch runs the same
-batch operators (derive -> fit -> write), and snapshot-visible
+Structured Streaming + `foreachBatch`: both sources (file drops and
+the socket) share one micro-batch writer, derive -> fit -> write, whose
+fit is the ingest job's own `fit_turns`; snapshot-visible
 batch-keyed writes replace the temporary-segment machinery entirely —
 readers simply see data up to the last committed batch (the
 reference's `maximum_latency` knob maps to the stream trigger
@@ -23,12 +24,31 @@ data handling, TimeSeriesGroup.java:153-176).
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 
 from modelardb_spark.config import DEFAULT_CONFIG, EngineConfig
 from modelardb_spark.io.tables import TableCatalog, with_part_key
-from modelardb_spark.operators.fit import fit_segments
-from modelardb_spark.operators.series import derive_series
+from modelardb_spark.jobs.ingest import fit_turns
 from modelardb_spark.sources.readers import TRANSCRIPT_SCHEMA
+
+
+def _segment_writer(out_root: str, cfg: EngineConfig):
+    """The one foreachBatch body: fit the batch's turns and overwrite
+    the batch's own (batch_id, part_day) segment partitions. An empty
+    batch writes nothing."""
+    catalog = TableCatalog(out_root)
+
+    def process(batch_df, batch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        segments = with_part_key(fit_turns(batch_df, cfg), cfg.conv_buckets)
+        catalog.overwrite_partitions(
+            segments.withColumn("batch_id", F.lit(batch_id)),
+            "segments",
+            ["batch_id", "part_day"],
+        )
+
+    return process
 
 
 def stream_ingest(
@@ -49,23 +69,13 @@ def stream_ingest(
     (the file-source checkpoint re-delivers the same files, so batch
     content is deterministic) overwrites the partitions it wrote the
     first time instead of appending duplicates."""
-    catalog = TableCatalog(out_root)
-
-    def process(batch_df, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
-        segments = with_part_key(
-            fit_segments(derive_series(batch_df, cfg), cfg), cfg.conv_buckets
-        ).withColumn("batch_id", F.lit(batch_id))
-        catalog.overwrite_partitions(segments, "segments", ["batch_id", "part_day"])
-
     stream = (
         spark.readStream.schema(TRANSCRIPT_SCHEMA)
         .option("maxFilesPerTrigger", 8)
         .parquet(input_path)
     )
     writer = (
-        stream.writeStream.foreachBatch(process)
+        stream.writeStream.foreachBatch(_segment_writer(out_root, cfg))
         .option(
             "checkpointLocation",
             checkpoint_dir or f"{out_root}/_stream_checkpoint",
@@ -100,8 +110,6 @@ def stream_rollup_1m(
     sealed tier feeds the same cascade (rollup_cascade) as batch
     tiers. State is bounded by the watermark horizon; partitioning is
     the same (conv_id x window) key space as the batch path."""
-    from pyspark.sql import functions as F
-
     stream = (
         spark.readStream.schema(TRANSCRIPT_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)
@@ -203,28 +211,17 @@ def stream_ingest_socket(
     """Socket-fed incremental ingest (the reference's
     AsyncTimeSeriesSocket receiver path, WorkingSetReceiver.scala):
     line-delimited transcript turns over TCP, micro-batched through the
-    same fit -> batch-keyed idempotent write as the file-drop stream.
+    same foreachBatch writer (fit -> batch-keyed idempotent write) as
+    the file-drop stream.
 
     Note the socket source keeps no offsets, so delivery is
     at-most-once across restarts (the reference's receiver has the
     same property); within a run, batch-keyed writes stay idempotent."""
     from modelardb_spark.sources.readers import stream_transcripts_socket
 
-    catalog = TableCatalog(out_root)
-
-    def process(batch_df, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
-        if batch_df.isEmpty():
-            return
-        segments = with_part_key(
-            fit_segments(derive_series(batch_df, cfg), cfg), cfg.conv_buckets
-        ).withColumn("batch_id", F.lit(batch_id))
-        catalog.overwrite_partitions(segments, "segments", ["batch_id", "part_day"])
-
     stream = stream_transcripts_socket(spark, host, port, sep=sep)
     return (
-        stream.writeStream.foreachBatch(process)
+        stream.writeStream.foreachBatch(_segment_writer(out_root, cfg))
         .option(
             "checkpointLocation",
             checkpoint_dir or f"{out_root}/_stream_checkpoint",

@@ -17,9 +17,8 @@ from modelardb_spark.operators.dimgroup import (
     explode_dim_group_segments,
     fit_segments_dim_grouped,
     materialize_members,
-    rollup_from_dim_group_segments,
 )
-from modelardb_spark.operators.rollup import HOUR_MS, MINUTE_MS
+from modelardb_spark.operators.rollup import HOUR_MS, MINUTE_MS, rollup_from_segments
 from modelardb_spark.operators.series import derive_series
 from modelardb_spark.operators.transcripts import transcripts_from_events
 
@@ -66,7 +65,9 @@ def test_dim_group_rollup_matches_raw(spark, series):
         (r["conv_id"], r["metric"], r["window_ms"]): (
             r["cnt"], float(r["vmin"]), float(r["vmax"]), round(r["vsum"], 6),
         )
-        for r in rollup_from_dim_group_segments(gseg, members, HOUR_MS).collect()
+        for r in rollup_from_segments(
+            explode_dim_group_segments(gseg, members), HOUR_MS, CFG.interval_ms
+        ).collect()
     }
     raw = (
         series.groupBy(
@@ -124,6 +125,6 @@ def test_dim_group_wins_on_dense_aligned_members(spark):
     seg = explode_dim_group_segments(gseg, members)
     agg = seg.groupBy("conv_id", "metric").agg(F.sum("seg_cnt").alias("c"))
     assert all(r["c"] == n for r in agg.collect())
-    r1m = rollup_from_dim_group_segments(gseg, members, MINUTE_MS)
+    r1m = rollup_from_segments(seg, MINUTE_MS, CFG.interval_ms)
     assert r1m.count() == 8 * n
     assert r1m.where("vmin != 5.0 OR vmax != 5.0 OR cnt != 1").count() == 0

@@ -17,9 +17,12 @@ from modelardb_spark.operators.groupfit import (
     fit_segments_grouped,
     grid_group,
     group_compression_stats,
-    rollup_from_group_segments,
 )
-from modelardb_spark.operators.rollup import HOUR_MS, compression_stats
+from modelardb_spark.operators.rollup import (
+    HOUR_MS,
+    compression_stats,
+    rollup_from_segments,
+)
 from modelardb_spark.operators.series import derive_series_wide
 from modelardb_spark.operators.transcripts import transcripts_from_events
 
@@ -102,7 +105,11 @@ def _assert_rollup_matches_raw(wide, got, window_ms):
 
 def test_group_rollup_matches_raw(spark, wide, gseg):
     _assert_rollup_matches_raw(
-        wide, rollup_from_group_segments(gseg, HOUR_MS, METRICS), HOUR_MS
+        wide,
+        rollup_from_segments(
+            explode_group_segments(gseg, METRICS), HOUR_MS, CFG.interval_ms
+        ),
+        HOUR_MS,
     )
 
 
@@ -192,7 +199,9 @@ def test_group_swing_on_correlated_linear_fixture(spark):
     want = sorted((m, b, v) for m in METRICS for b, v in zip(bins, ramp))
     assert got == want
     # the rollup's analytic path handles the Swing members too
-    r1h = rollup_from_group_segments(gseg, HOUR_MS, METRICS).collect()
+    r1h = rollup_from_segments(
+        explode_group_segments(gseg, METRICS), HOUR_MS, CFG.interval_ms
+    ).collect()
     assert sum(r["cnt"] for r in r1h) == 2 * n
     assert all(r["vsum"] == pytest.approx(sum(
         v for b, v in zip(bins, ramp) if b // HOUR_MS * HOUR_MS == r["window_ms"]
@@ -312,11 +321,13 @@ def test_group_lossy_bound_holds_on_all_group_paths(spark, wide):
         "conv_id string, channel string",
     )
     members = dim_group_members(narrow, dims, by="channel", max_group_size=8)
-    from modelardb_spark.operators.dimgroup import rollup_from_dim_group_segments
+    from modelardb_spark.operators.dimgroup import explode_dim_group_segments
 
     gseg = fit_segments_dim_grouped(narrow, members, lossy)
     # reconstruct via the 1m tier (window == bin -> per-point values)
-    pts = rollup_from_dim_group_segments(gseg, members, 60_000).select(
+    pts = rollup_from_segments(
+        explode_dim_group_segments(gseg, members), 60_000, lossy.interval_ms
+    ).select(
         "conv_id", "metric", SF.col("window_ms").alias("bin_ms"),
         SF.col("vmin").alias("value"),
     )

@@ -78,14 +78,16 @@ def test_grid_round_trip_exact_at_bound_zero(series, segments):
 
 @pytest.mark.parametrize("window_ms", [MINUTE_MS, HOUR_MS, DAY_MS])
 def test_rollup_matches_raw_groupby(series, segments, window_ms):
-    ours = rollup_from_segments(segments, window_ms)
+    ours = rollup_from_segments(segments, window_ms, MINUTE_MS)
     raw = _raw_rollup(series, window_ms)
     assert _mismatches(ours, raw, ["conv_id", "metric", "window_ms"]).count() == 0
 
 
 def test_rollup_cascade_matches_direct(series, segments):
-    direct = rollup_from_segments(segments, DAY_MS)
-    cascaded = rollup_cascade(rollup_from_segments(segments, HOUR_MS), DAY_MS)
+    direct = rollup_from_segments(segments, DAY_MS, MINUTE_MS)
+    cascaded = rollup_cascade(
+        rollup_from_segments(segments, HOUR_MS, MINUTE_MS), DAY_MS
+    )
     assert _mismatches(direct, cascaded, ["conv_id", "metric", "window_ms"]).count() == 0
 
 
@@ -118,7 +120,7 @@ def test_rollup_never_merges_per_series_rows_sharing_keys(spark):
         pts, "conv_id string, metric string, bin_ms long, value float"
     )
     for window_ms in (MINUTE_MS, HOUR_MS):
-        ours = rollup_from_segments(seg, window_ms)
+        ours = rollup_from_segments(seg, window_ms, MINUTE_MS)
         raw = _raw_rollup(series, window_ms)
         keys = ["conv_id", "metric", "window_ms"]
         assert _mismatches(ours, raw, keys).count() == 0, window_ms
@@ -140,7 +142,7 @@ def test_error_bound_rollup_within_bound(spark, series):
     the raw values (north rule: match within error bound per tier)."""
     bound = 5.0
     seg = fit_segments(series, EngineConfig(error_bound=bound)).cache()
-    ours = rollup_from_segments(seg, HOUR_MS)
+    ours = rollup_from_segments(seg, HOUR_MS, MINUTE_MS)
     raw = _raw_rollup(series, HOUR_MS)
     j = (
         ours.alias("a")
@@ -270,3 +272,41 @@ def test_calendar_rollup_all_fields_match_brute_force(spark):
             want[k] = (c + cnt, min(lo, vmin), max(hi, vmax), s + vsum)
         want = {k: (c, lo, hi, round(s, 9)) for k, (c, lo, hi, s) in want.items()}
         assert got == want, f"calendar field {field} mismatch"
+
+
+def test_ingest_tiers_at_30s_interval(spark, tmp_path):
+    """At a 30 s fit interval a 1-minute window spans two bins, which
+    may sit in two segments: the 1m tier must merge them, not take the
+    map-only shortcut of the 1-minute interval. Every stored tier has
+    unique (conv_id, metric, window_ms) keys and equals the raw-points
+    rollup."""
+    import datetime as dt
+
+    from modelardb_spark.io.tables import TableCatalog
+    from modelardb_spark.jobs.ingest import ingest
+
+    iv, base = 30_000, 1_704_672_000_000
+    rng = np.random.default_rng(7)
+    rows = []
+    for c in range(5):
+        for b in range(120):
+            for j in range(int(rng.integers(1, 4))):
+                ts = dt.datetime.fromtimestamp(
+                    (base + b * iv + j * 1_000) / 1000, dt.timezone.utc
+                ).replace(tzinfo=None)
+                tool = "click" if rng.random() < 0.4 else None
+                rows.append((f"conv{c}", ts, tool))
+    t = spark.createDataFrame(rows, "conv_id string, ts timestamp, tool string")
+    cfg = EngineConfig(interval_ms=iv, length_bound=3)
+    root = str(tmp_path / "cat")
+    ingest(spark, t, root, cfg)
+    series = derive_series(t, cfg)
+    keys = ["conv_id", "metric", "window_ms"]
+    for tier, window_ms in (
+        ("rollup_1m", MINUTE_MS), ("rollup_1h", HOUR_MS), ("rollup_1d", DAY_MS)
+    ):
+        stored = TableCatalog(root).read(spark, tier).drop("part_day")
+        assert stored.groupBy(*keys).count().where("count > 1").count() == 0, tier
+        raw = _raw_rollup(series, window_ms)
+        assert stored.count() == raw.count(), tier
+        assert _mismatches(stored, raw, keys).count() == 0, tier

@@ -19,7 +19,13 @@ from pyspark.sql import functions as F
 from modelardb_spark.config import EngineConfig
 from modelardb_spark.operators.fit import fit_segments_wide
 from modelardb_spark.operators.grid import restrict
-from modelardb_spark.operators.rollup import HOUR_MS, rollup_from_segments
+from modelardb_spark.operators.rollup import (
+    HOUR_MS,
+    MINUTE_MS,
+    merge_partials,
+    rollup_from_segments,
+    window_partials,
+)
 from modelardb_spark.operators.series import derive_series_wide
 from modelardb_spark.operators.transcripts import transcripts_from_events
 
@@ -169,14 +175,16 @@ def test_data_points_tvf_pushes_window_to_scan(spark, sf_small, tmp_path):
 def test_rollup_is_single_hash_agg_pair(spark, sf_small, tmp_path):
     """From a STORED segments table, the 1h rollup plan is scan ->
     map-side partials -> ONE exchange -> final hash aggregate; no
-    sort-aggregate, no extra exchange."""
+    sort-aggregate, no extra exchange. Exploded group and
+    dimension-group members take the same entry: map-only at the fit
+    interval, one partial/final pair at 1h."""
     seg = fit_segments_wide(
         derive_series_wide(transcripts_from_events(spark, sf_small)),
     )
     p = str(tmp_path / "segtable2")
     seg.write.parquet(p)
     stored = spark.read.parquet(p)
-    plan = _plan(rollup_from_segments(stored, HOUR_MS))
+    plan = _plan(rollup_from_segments(stored, HOUR_MS, MINUTE_MS))
     assert "HashAggregate" in plan
     assert "SortAggregate" not in plan
     # one exchange for the final aggregation (the union's two branches
@@ -207,6 +215,50 @@ def test_rollup_is_single_hash_agg_pair(spark, sf_small, tmp_path):
     )
     assert plan.count("HashAggregate") == 2, plan
     assert "SortAggregate" not in plan
+
+    from modelardb_spark.operators.dimensions import conversation_dimensions
+    from modelardb_spark.operators.dimgroup import (
+        dim_group_members,
+        explode_dim_group_segments,
+        fit_segments_dim_grouped,
+        materialize_members,
+    )
+    from modelardb_spark.operators.groupfit import (
+        explode_group_segments,
+        fit_segments_grouped,
+    )
+    from modelardb_spark.operators.series import derive_series
+
+    cfg = EngineConfig()
+    t = transcripts_from_events(spark, sf_small)
+    s = derive_series(t, cfg)
+    members = materialize_members(
+        dim_group_members(s, conversation_dimensions(s), by="channel",
+                          max_group_size=8)
+    )
+    fit_segments_grouped(derive_series_wide(t, cfg), cfg).write.parquet(
+        str(tmp_path / "gseg")
+    )
+    fit_segments_dim_grouped(s, members, cfg).write.parquet(
+        str(tmp_path / "dgseg")
+    )
+    layouts = {
+        "group": explode_group_segments(spark.read.parquet(str(tmp_path / "gseg"))),
+        "dim_group": explode_dim_group_segments(
+            spark.read.parquet(str(tmp_path / "dgseg")), members
+        ),
+    }
+    keys = ["conv_id", "metric", "window_ms"]
+    for name, exploded in layouts.items():
+        for window_ms, aggs in ((cfg.interval_ms, 0), (HOUR_MS, 2)):
+            tier = rollup_from_segments(exploded, window_ms, cfg.interval_ms)
+            plan = _plan(tier)
+            assert plan.count("HashAggregate") == aggs, (name, window_ms, plan)
+            assert "SortAggregate" not in plan
+            want = merge_partials(window_partials(exploded, window_ms), *keys)
+            assert sorted(tier.collect()) == sorted(want.collect()), (
+                name, window_ms,
+            )
 
 
 def test_segment_sql_aggregates_decompose_partial_final(spark, sf_small, tmp_path):

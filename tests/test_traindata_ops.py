@@ -396,6 +396,27 @@ def test_ivf_topk_approximates_brute_force(spark, sf_small):
     assert overlap >= 0.3
 
 
+def test_ivf_topk_collects_centroids_once(spark, sf_small):
+    """Building an `ivf_topk` frame with the training cache warm
+    collects the K-row centroid matrix once, shared by the corpus and
+    the probe assignment, instead of once per side."""
+    from modelardb_spark.operators.similarity import ivf_topk
+
+    emb = load_embeddings(spark, sf_small)
+    queries = emb.where("vec_id < 20")
+    ivf_topk(emb, queries, k=5)  # trains; fills the training cache
+    sc = spark.sparkContext
+    group = "ivf_topk_construction"
+    sc.setJobGroup(group, "build an ivf_topk frame")
+    try:
+        df = ivf_topk(emb, queries, k=5)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # one job: the centroid collect both assignment sides share
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert df.count() == 20 * 5
+
+
 def test_lsh_projection_sign_margin(spark, sf_small):
     """Cross-engine bucket parity (NumPy matmul vs DuckDB's
     left-to-right list_reduce) relies on every |projection| being far

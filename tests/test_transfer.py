@@ -16,7 +16,7 @@ from modelardb_spark.jobs.transfer import (
     assert_model_types,
     transfer_segments,
 )
-from modelardb_spark.operators.rollup import HOUR_MS, rollup_from_segments
+from modelardb_spark.operators.rollup import HOUR_MS, MINUTE_MS, rollup_from_segments
 from modelardb_spark.operators.transcripts import transcripts_from_events
 
 
@@ -51,8 +51,10 @@ def test_transfer_round_trip_and_resume(spark, edge_root, tmp_path):
     dst = TableCatalog(cloud).read(spark, "segments")
     assert _sorted_rows(dst) == _sorted_rows(src)
     # rollups over the cloud copy equal rollups over the edge copy
-    assert _sorted_rows(rollup_from_segments(dst, HOUR_MS)) == _sorted_rows(
-        rollup_from_segments(src, HOUR_MS)
+    assert _sorted_rows(
+        rollup_from_segments(dst, HOUR_MS, MINUTE_MS)
+    ) == _sorted_rows(
+        rollup_from_segments(src, HOUR_MS, MINUTE_MS)
     )
     # metadata rode along
     cat = TableCatalog(cloud)
@@ -171,8 +173,8 @@ def test_transfer_converts_formats(spark, edge_root, tmp_path):
     dst = TableCatalog(cloud, "orc").read(spark, "segments")
     assert _sorted_rows(dst.select(*src.columns)) == _sorted_rows(src)
     assert _sorted_rows(
-        rollup_from_segments(dst, HOUR_MS)
-    ) == _sorted_rows(rollup_from_segments(src, HOUR_MS))
+        rollup_from_segments(dst, HOUR_MS, MINUTE_MS)
+    ) == _sorted_rows(rollup_from_segments(src, HOUR_MS, MINUTE_MS))
 
 
 def test_transfer_intra_source_duplicates_with_existing_dst(spark, edge_root, tmp_path):
