@@ -34,7 +34,6 @@ from pyspark.sql import functions as F
 
 from modelardb_spark.config import EngineConfig
 from modelardb_spark.jobs.ingest import fit_turns
-from modelardb_spark.operators.fit import fit_segments
 from modelardb_spark.operators.grid import grid
 from modelardb_spark.operators.rollup import (
     DAY_MS,

@@ -8,7 +8,7 @@ Spark-first engine, plus Spark-specific layout knobs.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -25,9 +25,6 @@ class EngineConfig:
     interval_ms: int = 60_000
 
     # --- series derivation ----------------------------------------------
-    #: metrics derived per conversation (reference analogue:
-    #: modelardb.source.derived, Main.scala:104-111)
-    metrics: tuple[str, ...] = ("turn_rate", "tool_usage")
     #: gaps of at most this many missing bins can be zero-filled by the
     #: explicit gap_fill operator; longer idle periods split segments
     #: (reference gap protocol, SegmentGenerator.java:131-148)
@@ -43,15 +40,6 @@ class EngineConfig:
     shuffle_partitions: int | None = None
     #: bucket count used when laying out the segments table by conv_id
     conv_buckets: int = 32
-
-    # --- model cascade ---------------------------------------------------
-    #: model ids, matching FIXTURES.md §3: 1=raw fallback, 2=PMC-Mean,
-    #: 3=Swing, 4=Gorilla (reference: ModelTypeFactory.java:23-26 reserves
-    #: mtid 1 for the fallback)
-    mtid_raw: int = field(default=1, init=False)
-    mtid_pmc: int = field(default=2, init=False)
-    mtid_swing: int = field(default=3, init=False)
-    mtid_gorilla: int = field(default=4, init=False)
 
 
 DEFAULT_CONFIG = EngineConfig()

@@ -47,9 +47,11 @@ an operator deploys the engine without writing Python, the reference's
 
 from __future__ import annotations
 
+import os
 import tomllib
 
 from modelardb_spark.config import EngineConfig
+from modelardb_spark.operators.series import METRICS
 
 #: the models of the reference cascade, in fit order
 #: (ModelTypeFactory.java:23-26; mtid 1 = fallback). The cascade order
@@ -76,11 +78,16 @@ def engine_config(conf: dict) -> EngineConfig:
                 "FIXTURES.md §3); got "
                 f"{models}"
             )
-    if "metrics" in eng:
-        eng["metrics"] = tuple(eng["metrics"])
+    metrics = eng.pop("metrics", None)
+    if metrics is not None and tuple(metrics) != METRICS:
+        raise ValueError(
+            f"engine.metrics must be {list(METRICS)} (every fit derives "
+            "exactly these series; add others as [derived] clauses); "
+            f"got {metrics}"
+        )
     allowed = {
-        "error_bound", "length_bound", "interval_ms", "metrics",
-        "max_fill_bins", "salt_days", "shuffle_partitions", "conv_buckets",
+        "error_bound", "length_bound", "interval_ms", "max_fill_bins",
+        "salt_days", "shuffle_partitions", "conv_buckets",
     }
     unknown = set(eng) - allowed
     if unknown:
@@ -155,48 +162,51 @@ def run_transfer(spark, conf: dict) -> dict:
 
 def prepare_query_session(spark, conf: dict):
     """Register the query surface from [engine]+[query_server]+
-    [derived]: segments (stored or fitted on the fly), derived-series
-    segments unioned in (the reference fits derived series off the
-    same source stream, Main.scala:104-111), views + SQL functions.
-    Returns the segments frame."""
+    [derived]: segments (stored or fitted on the fly), views + SQL
+    functions. Returns the segments frame.
+
+    With [derived] clauses the session fits from `events`: the wide
+    series are derived once, each clause adds one value column bound to
+    its source column, and one fit covers the base and derived series
+    (the reference fits derived series off the same source stream,
+    Main.scala:104-111)."""
     from modelardb_spark.jobs.query_server import prepare_session
 
     qs = conf.get("query_server", {})
-    cfg = engine_config(conf)
     # full cfg forwarded: every [engine] knob (interval_ms,
-    # length_bound, metrics, ...) governs the base fit, not just the
-    # error bound; a stored segments_dir inherits [ingest]'s format
-    seg = prepare_session(
-        spark,
-        events=qs.get("events"),
-        segments_dir=qs.get("segments_dir"),
-        cfg=cfg,
-        fmt=str(
-            qs.get("format", conf.get("ingest", {}).get("format", "parquet"))
-        ),
-    )
+    # length_bound, ...) governs the base fit, not just the error
+    # bound; a stored segments_dir inherits [ingest]'s format
+    cfg = engine_config(conf)
     derived = derived_clauses(conf)
-    if derived:
-        if qs.get("events") is None:
-            raise ValueError(
-                "[derived] clauses need `events` (series are derived "
-                "at fit time; a stored segments table is already fitted)"
-            )
-        from modelardb_spark.operators.fit import fit_segments
-        from modelardb_spark.operators.series import derive_series
-        from modelardb_spark.operators.transcripts import transcripts_from_events
-        from modelardb_spark.operators.transform import derive_value_series
-        from modelardb_spark.operators.views import register_views
-
-        from pyspark.sql import functions as F
-
-        sf_dir = qs["events"].rsplit("/", 1)[0]
-        base = derive_series(transcripts_from_events(spark, sf_dir), cfg)
-        # derive_value_series returns base+derived; keep the derived
-        # metrics only (the base segments are already in `seg`)
-        dser = derive_value_series(base, derived).where(
-            F.col("metric").isin(list(derived))
+    if not derived:
+        return prepare_session(
+            spark,
+            events=qs.get("events"),
+            segments_dir=qs.get("segments_dir"),
+            cfg=cfg,
+            fmt=str(
+                qs.get("format", conf.get("ingest", {}).get("format", "parquet"))
+            ),
         )
-        seg = seg.unionByName(fit_segments(dser, cfg))
-        register_views(spark, seg)  # re-register over the union
+    if qs.get("events") is None or qs.get("segments_dir") is not None:
+        raise ValueError(
+            "[derived] clauses need `events` and no `segments_dir` "
+            "(series are derived at fit time; a stored segments table "
+            "is already fitted)"
+        )
+    from modelardb_spark.operators.fit import fit_segments_wide
+    from modelardb_spark.operators.series import derive_series_wide
+    from modelardb_spark.operators.sqlfunctions import register_sql_functions
+    from modelardb_spark.operators.transcripts import transcripts_from_events
+    from modelardb_spark.operators.transform import with_derived_columns
+    from modelardb_spark.operators.views import register_views
+
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    sf_dir = os.path.dirname(os.path.abspath(qs["events"]))
+    wide = derive_series_wide(transcripts_from_events(spark, sf_dir), cfg)
+    seg = fit_segments_wide(
+        with_derived_columns(wide, derived), cfg, METRICS + tuple(sorted(derived))
+    )
+    register_views(spark, seg)
+    register_sql_functions(spark)
     return seg

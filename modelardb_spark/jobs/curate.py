@@ -91,14 +91,10 @@ def curate(
         ).persist()
 
     # exact dups collapse before the LSH (semantics-preserving, see
-    # near_dup_clusters) and the shingle/signature frames materialize
-    # once (persist_intermediate): the curation corpus is assumed
-    # bigger than the page cache, where the lazy plan's ~5x lineage
-    # replay loses (measured at 100k docs)
+    # near_dup_clusters), whose shingle/signature frames materialize
+    # once (minhash_lsh_pairs)
     clusters = near_dup_clusters(
-        docs,
-        jaccard_threshold=jaccard_threshold,
-        persist_intermediate=True,
+        docs, jaccard_threshold=jaccard_threshold
     ).localCheckpoint()
     # one row per gated doc, already materialized — the gated-corpus
     # count is free here, where a docs.count() would re-run the gate

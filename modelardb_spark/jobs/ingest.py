@@ -58,7 +58,7 @@ from modelardb_spark.operators.rollup import (
     rollup_cascade,
     rollup_from_segments,
 )
-from modelardb_spark.operators.series import derive_series_wide
+from modelardb_spark.operators.series import METRICS, derive_series_wide
 
 
 def _day_of_ts(col):
@@ -187,7 +187,7 @@ def ingest(
         inventory, F.collect_set(_day_of_ts("ts")).alias("days")
     ).select(
         "conv_id",
-        F.explode(F.array(*[F.lit(m) for m in cfg.metrics])).alias("metric"),
+        F.explode(F.array(*[F.lit(m) for m in METRICS])).alias("metric"),
     )
     # scaling={} -> factor 1.0 recorded for every series (the ingest
     # path applies no scaling; the table records what WAS applied)

@@ -126,11 +126,7 @@ def _minhash_from_arrays(
     ).select("doc_id", F.col("bb.band").alias("band"), F.col("bb.band_hash").alias("band_hash"))
 
 
-def minhash_lsh_pairs(
-    docs: DataFrame,
-    jaccard_threshold: float = 0.5,
-    persist_intermediate: bool = False,
-) -> DataFrame:
+def minhash_lsh_pairs(docs: DataFrame, jaccard_threshold: float = 0.5) -> DataFrame:
     """Candidate pairs from LSH banding, verified with exact Jaccard
     over the shingle sets. Returns (doc_a, doc_b, jaccard) with
     doc_a < doc_b and jaccard >= threshold, rounded for portability.
@@ -144,28 +140,20 @@ def minhash_lsh_pairs(
     the distinct shared shingles) but it ships each candidate doc's
     array once instead of shuffling every (doc, shingle) row, and a
     hot shingle no longer fans out into a hot join key (guide §2.3
-    shuffle fewer bytes). `persist_intermediate=True` additionally
-    materializes the signature/array/candidate frames once for
-    multi-consumer callers (the curate job); the returned pairs frame
-    stays lazy either way.
+    shuffle fewer bytes).
 
-    Round 7: the shingle arrays and signatures are localCheckpointed
-    (computed exactly once). Without this the plan re-derived them
-    per consumer — the self-join's stream AND broadcast sides each
-    re-ran the full 16-minhash map (16 md5s per shingle per doc), and
-    the two verify joins each re-ran normalize+shingle: four full
-    passes over the corpus text for one logical pass of work. At any
-    scale, storing one (doc_id, shingles) array frame (disk-backed
-    past memory) is cheaper than hashing the corpus text four times."""
-    arr = shingle_arrays(docs)
-    if not persist_intermediate:
-        arr = arr.localCheckpoint(eager=True)
-    sig = _minhash_from_arrays(arr)
-    if not persist_intermediate:
-        sig = sig.localCheckpoint(eager=True)
-    if persist_intermediate:
-        sig = sig.persist()
-        arr = arr.persist()
+    The shingle arrays and the signatures are eagerly
+    localCheckpointed while the frame is built (computed exactly
+    once). Without this the plan re-derived them per consumer — the
+    self-join's stream AND broadcast sides each re-ran the full
+    16-minhash map (16 md5s per shingle per doc), and the two verify
+    joins each re-ran normalize+shingle: four full passes over the
+    corpus text for one logical pass of work. At any scale, storing one
+    (doc_id, shingles) array frame (disk-backed past memory) is cheaper
+    than hashing the corpus text four times. The blocks are RDD-scoped:
+    the ContextCleaner frees them once the returned frame is garbage."""
+    arr = shingle_arrays(docs).localCheckpoint(eager=True)
+    sig = _minhash_from_arrays(arr).localCheckpoint(eager=True)
     cand = (
         sig.alias("x")
         .join(sig.alias("y"), ["band", "band_hash"])
@@ -175,8 +163,6 @@ def minhash_lsh_pairs(
         )
         .distinct()
     )
-    if persist_intermediate:
-        cand = cand.persist()
     sh_a = arr.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
     sh_b = arr.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
     scored = (
@@ -190,24 +176,14 @@ def minhash_lsh_pairs(
             F.size("sh_b").alias("nb"),
         )
     )
-    out = (
-        scored.select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                F.col("n_inter")
-                / (F.col("na") + F.col("nb") - F.col("n_inter")),
-                6,
-            ).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= jaccard_threshold)
-    )
-    if persist_intermediate:
-        # callers that fully materialize downstream state (e.g.
-        # near_dup_clusters' eager edge checkpoint) can release the
-        # corpus-scale caches early instead of waiting for GC
-        out._persisted_intermediates = (sig, arr, cand)
-    return out
+    return scored.select(
+        "doc_a",
+        "doc_b",
+        F.round(
+            F.col("n_inter") / (F.col("na") + F.col("nb") - F.col("n_inter")),
+            6,
+        ).alias("jaccard"),
+    ).where(F.col("jaccard") >= jaccard_threshold)
 
 
 def _expand_ranges(starts, lens):
@@ -708,11 +684,7 @@ def duplicate_clusters(
     )
 
 
-def near_dup_clusters(
-    docs: DataFrame,
-    jaccard_threshold: float = 0.5,
-    persist_intermediate: bool = True,
-) -> DataFrame:
+def near_dup_clusters(docs: DataFrame, jaccard_threshold: float = 0.5) -> DataFrame:
     """`duplicate_clusters(minhash_lsh_pairs(docs), docs)` with exact
     duplicates COLLAPSED FIRST — same output, much less work on the
     corpora that need dedup most.
@@ -759,22 +731,11 @@ def near_dup_clusters(
         ),
         "doc_id",
     )
-    pairs = minhash_lsh_pairs(
-        reps,
-        jaccard_threshold=jaccard_threshold,
-        persist_intermediate=persist_intermediate,
-    )
+    pairs = minhash_lsh_pairs(reps, jaccard_threshold=jaccard_threshold)
     rep_clusters = duplicate_clusters(pairs, reps).select(
         F.col("doc_id").alias("canonical_doc_id"),
         "cluster_rep",
     )
-    # duplicate_clusters eagerly checkpoints the edge frame and every
-    # propagation round during the call above, so nothing downstream
-    # still reads the corpus-scale shingle/signature/candidate caches
-    # — release them now instead of pinning them for the rest of the
-    # caller's job (they are that job's largest allocation)
-    for f in getattr(pairs, "_persisted_intermediates", ()):
-        f.unpersist()
     expanded = fp.select("doc_id", "canonical_doc_id").join(
         rep_clusters, "canonical_doc_id"
     )

@@ -1,8 +1,8 @@
 """Model-fitting operator: series points -> compressed segments.
 
 The one genuinely custom operator of the engine (reference:
-core/SegmentGenerator.java). Every fit entry point (`fit_segments`,
-`fit_segments_wide`, `fit_segments_from_transcripts`, and the group
+core/SegmentGenerator.java). Every fit entry point (the per-series
+`fit_segments_from_transcripts` and `fit_segments_wide`, and the group
 fits `fit_segments_grouped` / `fit_segments_dim_grouped`) shares one
 physical shape, built by `fit_arranged`:
 
@@ -18,9 +18,12 @@ Arrow batch of many groups in one Python call. A key run split across
 two or more Arrow batches (batches arrive in partition-sort order) is
 stitched back together by `key_runs`, the one carry loop: it yields
 frames that hold only complete runs of (keys, salt), and each entry
-point supplies only the per-run body that fits such a frame
-(`_fit_runs`, `_fit_runs_wide`, `_fit_runs_turns`, and the group
-bodies), whose run boundaries are then found vectorized.
+point supplies only the per-run body that fits such a frame, whose run
+boundaries are then found vectorized. Every per-series body ends in
+`_fit_columns`, the one column kernel: `_fit_runs_wide` hands it the
+frame's metric columns, and the fused `_fit_runs_turns` first bins the
+raw turns with one `reduceat`. The group bodies live in groupfit.py
+and dimgroup.py.
 
 Scale design:
 - **Salting**: the shuffle key includes ``salt = bin_ms div (salt_days
@@ -76,7 +79,7 @@ from modelardb_spark.models.cascade import (
     FittedSegment,
     fit_run,
 )
-from modelardb_spark.operators.series import bin_col
+from modelardb_spark.operators.series import METRICS, bin_col
 
 SEGMENT_SCHEMA = StructType(
     [
@@ -306,61 +309,55 @@ def fit_arranged(
     return arranged.mapInPandas(kernel, schema)
 
 
-def _fit_runs(error_bound: float, length_bound: int, interval_ms: int):
-    """Per-run body of `fit_segments`: rows sorted by (conv_id, metric,
-    salt, bin_ms) with one `value` column."""
-
-    def fit(pdf: pd.DataFrame) -> Iterator[pd.DataFrame]:
-        out: dict[str, list] = {c: [] for c in _COLS}
-        vals = pdf["value"].to_numpy().astype(np.float32)
+def _fit_columns(
+    conv: np.ndarray,
+    salt: np.ndarray,
+    ts: np.ndarray,
+    columns: Iterable[tuple[str, np.ndarray]],
+    error_bound: float,
+    length_bound: int,
+    interval_ms: int,
+) -> Iterator[pd.DataFrame]:
+    """The one per-series column kernel: rows sorted by (conv_id, salt,
+    bin_ms) on the shared grid (`conv`, `salt`, `ts`); each
+    `(metric, values)` column is fitted over its non-NaN points, so a
+    NaN is an absent point and its bin splits the run like a gap."""
+    out: dict[str, list] = {c: [] for c in _COLS}
+    for metric, vals in columns:
+        vals = vals.astype(np.float32)
         keep = ~np.isnan(vals)
         _fit_sorted_block(
-            pdf["conv_id"].to_numpy()[keep],
-            pdf["metric"].to_numpy()[keep],
-            pdf["salt"].to_numpy()[keep],
-            pdf["bin_ms"].to_numpy().astype(np.int64)[keep],
+            conv[keep],
+            np.full(int(keep.sum()), metric, dtype=object),
+            salt[keep],
+            ts[keep],
             vals[keep],
             error_bound,
             length_bound,
             interval_ms,
             out,
         )
-        df = _flush(out, interval_ms)
-        if df is not None:
-            yield df
-
-    return fit
+    df = _flush(out, interval_ms)
+    if df is not None:
+        yield df
 
 
 def _fit_runs_wide(
-    metrics: tuple[str, ...], error_bound: float, length_bound: int, interval_ms: int
+    metrics: Sequence[str], error_bound: float, length_bound: int, interval_ms: int
 ):
     """Per-run body of `fit_segments_wide`: rows sorted by (conv_id,
-    salt, bin_ms), one column per metric; each metric column is fitted
-    over the shared timestamp grid."""
+    salt, bin_ms), one column per metric, fitted by `_fit_columns`."""
 
     def fit(pdf: pd.DataFrame) -> Iterator[pd.DataFrame]:
-        out: dict[str, list] = {c: [] for c in _COLS}
-        conv = pdf["conv_id"].to_numpy()
-        salt = pdf["salt"].to_numpy()
-        ts = pdf["bin_ms"].to_numpy().astype(np.int64)
-        for m in metrics:
-            vals = pdf[m].to_numpy().astype(np.float32)
-            keep = ~np.isnan(vals)
-            _fit_sorted_block(
-                conv[keep],
-                np.full(int(keep.sum()), m, dtype=object),
-                salt[keep],
-                ts[keep],
-                vals[keep],
-                error_bound,
-                length_bound,
-                interval_ms,
-                out,
-            )
-        df = _flush(out, interval_ms)
-        if df is not None:
-            yield df
+        return _fit_columns(
+            pdf["conv_id"].to_numpy(),
+            pdf["salt"].to_numpy(),
+            pdf["bin_ms"].to_numpy().astype(np.int64),
+            ((m, pdf[m].to_numpy()) for m in metrics),
+            error_bound,
+            length_bound,
+            interval_ms,
+        )
 
     return fit
 
@@ -369,13 +366,12 @@ def _fit_runs_turns(error_bound: float, length_bound: int, interval_ms: int):
     """Per-run body of the FUSED derive+fit path: input rows are raw
     turns (conv_id, salt, bin_ms, tool_flag) sorted by (conv, salt,
     bin); the per-bin aggregation (turn_rate = count, tool_usage = sum
-    of flags) happens vectorized here (one reduceat family), then the
-    same `_fit_sorted_block` fits both metric columns. Output rows are
-    identical to `_fit_runs_wide` over `derive_series_wide`."""
+    of flags) happens vectorized here (one reduceat family), then
+    `_fit_columns` fits both metric columns. Output rows are identical
+    to `_fit_runs_wide` over `derive_series_wide`."""
 
     def fit(pdf: pd.DataFrame) -> Iterator[pd.DataFrame]:
         n = len(pdf)
-        out: dict[str, list] = {c: [] for c in _COLS}
         conv = pdf["conv_id"].to_numpy()
         salt = pdf["salt"].to_numpy()
         ts = pdf["bin_ms"].to_numpy().astype(np.int64)
@@ -389,22 +385,15 @@ def _fit_runs_turns(error_bound: float, length_bound: int, interval_ms: int):
         bs = np.flatnonzero(newbin)
         counts = np.diff(np.concatenate((bs, [n])))
         tools = np.add.reduceat(tool, bs)
-        bconv, bsalt, bts = conv[bs], salt[bs], ts[bs]
-        for name, vals in (("turn_rate", counts), ("tool_usage", tools)):
-            _fit_sorted_block(
-                bconv,
-                np.full(bs.size, name, dtype=object),
-                bsalt,
-                bts,
-                vals.astype(np.float32),
-                error_bound,
-                length_bound,
-                interval_ms,
-                out,
-            )
-        df = _flush(out, interval_ms)
-        if df is not None:
-            yield df
+        return _fit_columns(
+            conv[bs],
+            salt[bs],
+            ts[bs],
+            zip(METRICS, (counts, tools)),
+            error_bound,
+            length_bound,
+            interval_ms,
+        )
 
     return fit
 
@@ -449,12 +438,16 @@ def fit_segments_from_transcripts(
 def fit_segments_wide(
     wide_series: DataFrame,
     cfg: EngineConfig = DEFAULT_CONFIG,
-    metrics: tuple[str, ...] = ("turn_rate", "tool_usage"),
+    metrics: Sequence[str] = METRICS,
 ) -> DataFrame:
     """Wide-input fit (see derive_series_wide): one shuffled row per
     active bin carries every metric's value; Python fits each metric
-    column over the shared timestamp grid. Output rows are identical to
-    `fit_segments` on the unpivoted series."""
+    column over the shared timestamp grid, and a NaN (null) value is
+    an absent point. `metrics` names the value columns: the base
+    METRICS, plus one column per `[derived]` clause in a query session
+    (`transform.with_derived_columns`). Output rows are identical to
+    the narrow per-(conv_id, metric) reference fit on the unpivoted
+    series (tests/reference_oracle.py)."""
     return fit_arranged(
         wide_series,
         cfg,
@@ -463,16 +456,3 @@ def fit_segments_wide(
         SEGMENT_SCHEMA,
     )
 
-
-def fit_segments(
-    series: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG
-) -> DataFrame:
-    """series_points -> segments (SEGMENT_SCHEMA). One shuffle on the
-    salted series key; fitting runs in sorted Arrow batches."""
-    return fit_arranged(
-        series,
-        cfg,
-        ["conv_id", "metric"],
-        _fit_runs(cfg.error_bound, cfg.length_bound, cfg.interval_ms),
-        SEGMENT_SCHEMA,
-    )

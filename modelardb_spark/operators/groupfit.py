@@ -76,6 +76,7 @@ from modelardb_spark.models.gorilla import gorilla_compress_rows
 from modelardb_spark.operators.fit import fit_arranged
 from modelardb_spark.operators.grid import grid
 from modelardb_spark.operators.rollup import merge_partials, window_partials
+from modelardb_spark.operators.series import METRICS
 
 GROUP_SEGMENT_SCHEMA = StructType(
     [
@@ -408,7 +409,6 @@ def _fit_group_runs(
 def fit_segments_grouped(
     wide_series: DataFrame,
     cfg: EngineConfig = DEFAULT_CONFIG,
-    metrics: tuple[str, ...] = ("turn_rate", "tool_usage"),
     dynamic_split_fraction: float | None = None,
 ) -> DataFrame:
     """Wide series (one row per active bin, one column per metric) ->
@@ -424,7 +424,7 @@ def fit_segments_grouped(
         cfg,
         ["conv_id"],
         _fit_group_runs(
-            metrics,
+            METRICS,
             cfg.error_bound,
             cfg.length_bound,
             cfg.interval_ms,
@@ -434,14 +434,12 @@ def fit_segments_grouped(
     )
 
 
-def explode_group_segments(
-    gseg: DataFrame, metrics: tuple[str, ...] = ("turn_rate", "tool_usage")
-) -> DataFrame:
+def explode_group_segments(gseg: DataFrame) -> DataFrame:
     """Group segment -> one logical segment per present tid
     (SegmentGroup.explode:51-111): the member keeps the shared
     (start, end, mtid, model) plus (goff, gsize) so the decoder strides
     the interleaved payload. Pure JVM (posexplode + element_at)."""
-    metric_arr = F.array(*[F.lit(m) for m in metrics])
+    metric_arr = F.array(*[F.lit(m) for m in METRICS])
     e = gseg.select(
         "conv_id",
         "start_ms",
@@ -477,18 +475,15 @@ def explode_group_segments(
     )
 
 
-def grid_group(
-    gseg: DataFrame, metrics: tuple[str, ...] = ("turn_rate", "tool_usage")
-) -> DataFrame:
+def grid_group(gseg: DataFrame) -> DataFrame:
     """Group segments -> reconstructed per-series points: the exploded
     members run through the same point kernel as per-series segments
     (dense members decode once with the group stride)."""
-    return grid(explode_group_segments(gseg, metrics))
+    return grid(explode_group_segments(gseg))
 
 
 def correlated_conversations(
     wide_series: DataFrame,
-    metrics: tuple[str, ...] = ("turn_rate", "tool_usage"),
     threshold: float = 0.2,
     per_day: bool = False,
 ) -> DataFrame:
@@ -517,14 +512,14 @@ def correlated_conversations(
     conds = [
         F.coalesce(
             F.try_divide(
-                F.covar_pop(metrics[i], metrics[j]),
-                F.stddev_pop(metrics[i]) * F.stddev_pop(metrics[j]),
+                F.covar_pop(METRICS[i], METRICS[j]),
+                F.stddev_pop(METRICS[i]) * F.stddev_pop(METRICS[j]),
             )
             >= threshold,
             F.lit(False),
         )
-        for i in range(len(metrics))
-        for j in range(i + 1, len(metrics))
+        for i in range(len(METRICS))
+        for j in range(i + 1, len(METRICS))
     ]
     grouped = conds[0]
     for c in conds[1:]:
@@ -535,7 +530,6 @@ def correlated_conversations(
 def fit_segments_adaptive(
     wide_series: DataFrame,
     cfg: EngineConfig = DEFAULT_CONFIG,
-    metrics: tuple[str, ...] = ("turn_rate", "tool_usage"),
     threshold: float = 0.2,
     per_day: bool = False,
     checkpoint: str = "local",
@@ -572,13 +566,13 @@ def fit_segments_adaptive(
         )
         routed = keyed.join(
             F.broadcast(
-                correlated_conversations(keyed, metrics, threshold, per_day=True)
+                correlated_conversations(keyed, threshold, per_day=True)
             ),
             ["conv_id", "salt"],
         ).drop("salt")
     else:
         routed = wide_series.join(
-            F.broadcast(correlated_conversations(wide_series, metrics, threshold)),
+            F.broadcast(correlated_conversations(wide_series, threshold)),
             "conv_id",
         )
     # both branches consume the SAME routed frame: a (lazy) checkpoint
@@ -599,12 +593,8 @@ def fit_segments_adaptive(
         routed = routed.localCheckpoint(eager=False)
     else:
         raise ValueError(f"checkpoint must be 'local' or 'reliable': {checkpoint}")
-    g = fit_segments_grouped(
-        routed.where(F.col("grouped")).drop("grouped"), cfg, metrics
-    )
-    p = fit_segments_wide(
-        routed.where(~F.col("grouped")).drop("grouped"), cfg, metrics
-    )
+    g = fit_segments_grouped(routed.where(F.col("grouped")).drop("grouped"), cfg)
+    p = fit_segments_wide(routed.where(~F.col("grouped")).drop("grouped"), cfg)
     return g, p
 
 
@@ -612,7 +602,6 @@ def rollup_adaptive(
     gseg: DataFrame,
     pseg: DataFrame,
     window_ms: int,
-    metrics: tuple[str, ...] = ("turn_rate", "tool_usage"),
 ) -> DataFrame:
     """Rollup over an adaptive fit: the group and per-series PARTIALS
     are unioned and aggregated once. With per-day routing a
@@ -622,7 +611,7 @@ def rollup_adaptive(
     disjoint point sets) is exact for every window width, not just
     salt-aligned ones."""
     return merge_partials(
-        window_partials(explode_group_segments(gseg, metrics), window_ms)
+        window_partials(explode_group_segments(gseg), window_ms)
         .unionByName(window_partials(pseg, window_ms)),
         "conv_id",
         "metric",

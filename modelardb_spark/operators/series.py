@@ -22,6 +22,11 @@ from pyspark.sql import functions as F
 
 from modelardb_spark.config import DEFAULT_CONFIG, EngineConfig
 
+#: the metrics derived per conversation, in member order: the columns
+#: of `derive_series_wide`, the series every fit writes and the
+#: `time_series` rows ingest records
+METRICS = ("turn_rate", "tool_usage")
+
 
 def bin_col(interval_ms: int):
     """Each turn's `ts` floored to the start of its `interval_ms` bin,

@@ -22,9 +22,10 @@ Approximate search, the scale paths:
   re-scored and ranked per query.
 - `embedding_near_dup`: multi-table LSH near-duplicate pairs, verified
   with the exact cosine; no driver collect.
-- `ivf_centroids` / `ivf_train` / `ivf_assign` / `ivf_topk`: an
-  inverted-file index over Lloyd-trained cells; each query ranks the
-  corpus vectors of its `n_probe` nearest cells.
+- `ivf_centroids` / `ivf_train` / `ivf_topk`: an inverted-file index
+  over Lloyd-trained cells (`_assign` puts each vector in its nearest
+  cells); each query ranks the corpus vectors of its `n_probe` nearest
+  cells.
 
 Every path is built from one set of kernels. NumPy side: `_matrix`,
 `_norms`, `_cosines` (the cosine block), `_best` (the top-k order) and
@@ -639,17 +640,12 @@ def ivf_train(
     return spark.createDataFrame(rows, "cell int, embedding array<double>")
 
 
-def ivf_assign(emb: DataFrame, cents: DataFrame, n_probe: int = 1) -> DataFrame:
-    """(vec_id, cell[, probe_rank]): nearest `n_probe` centroids per
-    vector by round-6 cosine (ties to the lower cell id — the same
-    deterministic rule the SQL oracle uses). The centroid matrix is a
-    K-row broadcast; assignment is a map-only NumPy block matmul."""
-    sc = emb.sparkSession.sparkContext
-    return _assign(emb, sc.broadcast(_collect_matrix(cents, "cell")), n_probe)
-
-
 def _assign(emb: DataFrame, bq, n_probe: int) -> DataFrame:
-    """`ivf_assign` against an already broadcast centroid matrix."""
+    """(vec_id, cell, probe_rank): the nearest `n_probe` centroids per
+    vector by round-6 cosine (ties to the lower cell id — the same
+    deterministic rule the SQL oracle uses), against the centroid
+    matrix `bq` already broadcast from `_collect_matrix`. Assignment is
+    a map-only NumPy block matmul."""
     schema = StructType(
         [
             StructField("vec_id", LongType(), False),

@@ -10,9 +10,10 @@ Reference analogues:
 
 Spark-first: both are plain column expressions (`F.expr`), evaluated
 inside whole-stage codegen — the reference's runtime Scala-toolbox
-compilation is replaced by Catalyst's own expression compiler. Derived
-series are new (metric, value) rows unioned onto the series relation
-before fitting, so they are compressed and rolled up exactly like base
+compilation is replaced by Catalyst's own expression compiler
+(`derived_value`). Derived series are new (metric, value) rows unioned
+onto narrow series, or new value columns of the wide series before the
+one fit, so they are compressed and rolled up exactly like base
 metrics.
 """
 
@@ -105,10 +106,18 @@ def scale_series_per_tid(series: DataFrame, meta: DataFrame) -> DataFrame:
     )
 
 
+def derived_value(expr: str):
+    """A `[derived]` clause's SQL expression over `value` as the float
+    value column every derived series stores: the one place a clause
+    expression is evaluated (a null result is an absent point)."""
+    return F.expr(expr).cast("float")
+
+
 def derive_value_series(
     series: DataFrame, derived: dict[str, tuple[str, str]]
 ) -> DataFrame:
-    """Append derived series: ``derived[new_metric] = (base_metric,
+    """Append derived series to narrow (conv_id, metric, bin_ms, value)
+    series: ``derived[new_metric] = (base_metric,
     sql_expr_over_value)``. The expression sees the base value as
     `value` and must produce a float-compatible result.
 
@@ -121,10 +130,25 @@ def derive_value_series(
                 "conv_id",
                 F.lit(new_metric).alias("metric"),
                 "bin_ms",
-                F.expr(expr).cast("float").alias("value"),
+                derived_value(expr).alias("value"),
             )
         )
     out = frames[0]
     for f in frames[1:]:
         out = out.unionByName(f)
     return out
+
+
+def with_derived_columns(
+    wide: DataFrame, derived: dict[str, tuple[str, str]]
+) -> DataFrame:
+    """The wide-series form of `derive_value_series`: one float column
+    per clause, named after the derived metric, holding the clause's
+    expression with `value` bound to its base metric's column. Fitted
+    with `fit_segments_wide(..., METRICS + names)`, its segments equal
+    the narrow fit of `derive_value_series` (tests/test_config_file.py)."""
+    for new_metric, (base, expr) in sorted(derived.items()):
+        wide = wide.withColumn("value", F.col(base)).withColumn(
+            new_metric, derived_value(expr)
+        )
+    return wide.drop("value")

@@ -46,6 +46,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from modelardb_spark.config import DEFAULT_CONFIG, EngineConfig
 from modelardb_spark.operators.fit import SEGMENT_SCHEMA, _fit_runs_wide
+from modelardb_spark.operators.series import METRICS
 from modelardb_spark.sources.readers import TRANSCRIPT_SCHEMA
 
 #: open-run state per conversation: the unfinalized bins ride as a
@@ -92,9 +93,9 @@ def _fit_closed(
     if grouped:
         from modelardb_spark.operators.groupfit import _fit_group_runs
 
-        fit = _fit_group_runs(cfg.metrics, *bounds)
+        fit = _fit_group_runs(METRICS, *bounds)
     else:
-        fit = _fit_runs_wide(("turn_rate", "tool_usage"), *bounds)
+        fit = _fit_runs_wide(METRICS, *bounds)
     frames = list(fit(pdf))
     return pd.concat(frames, ignore_index=True) if frames else None
 

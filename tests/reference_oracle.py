@@ -6,7 +6,9 @@ Follows core/SegmentGenerator.java + the three model types append-by-
 append (group size 1), so its emitted (start, end, mtid, length) stream
 is what the reference would produce for the same run.
 
-Also holds the scalar reference decoders (`segment_grid`,
+Also holds the narrow per-(conv_id, metric) Spark fit `fit_segments`,
+the parity reference the wide and fused production fits are checked
+against, and the scalar reference decoders (`segment_grid`,
 `decode_group_values`) that the batched point kernel
 (`models.segment.segment_points`) is checked against, and the scalar
 per-segment aggregate `segment_agg` that the batched aggregates and the
@@ -15,8 +17,13 @@ fit's own aggregates are checked against.
 
 from __future__ import annotations
 
-import numpy as np
+from collections.abc import Iterator
 
+import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame
+
+from modelardb_spark.config import DEFAULT_CONFIG, EngineConfig
 from modelardb_spark.models.cascade import (
     MTID_GORILLA,
     MTID_PMC,
@@ -34,6 +41,13 @@ from modelardb_spark.models.swing import (
     swing_sum,
 )
 from modelardb_spark.models.uncompressed import raw_decode, raw_model
+from modelardb_spark.operators.fit import (
+    _COLS,
+    SEGMENT_SCHEMA,
+    _fit_sorted_block,
+    _flush,
+    fit_arranged,
+)
 
 F32 = np.float32
 
@@ -425,4 +439,44 @@ def segment_agg(mtid, model, start_ms, end_ms, interval_ms):
         float(values.min()),
         float(values.max()),
         float(values.sum(dtype=np.float64)),
+    )
+
+
+def _fit_runs(error_bound: float, length_bound: int, interval_ms: int):
+    """Per-run body of `fit_segments`: rows sorted by (conv_id, metric,
+    salt, bin_ms) with one `value` column."""
+
+    def fit(pdf: pd.DataFrame) -> Iterator[pd.DataFrame]:
+        out: dict[str, list] = {c: [] for c in _COLS}
+        vals = pdf["value"].to_numpy().astype(np.float32)
+        keep = ~np.isnan(vals)
+        _fit_sorted_block(
+            pdf["conv_id"].to_numpy()[keep],
+            pdf["metric"].to_numpy()[keep],
+            pdf["salt"].to_numpy()[keep],
+            pdf["bin_ms"].to_numpy().astype(np.int64)[keep],
+            vals[keep],
+            error_bound,
+            length_bound,
+            interval_ms,
+            out,
+        )
+        df = _flush(out, interval_ms)
+        if df is not None:
+            yield df
+
+    return fit
+
+
+def fit_segments(series: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG) -> DataFrame:
+    """Narrow series (conv_id, metric, bin_ms, value) -> segments
+    (SEGMENT_SCHEMA): one shuffle on the salted (conv_id, metric) key,
+    every series fitted on its own. The wide and fused production fits
+    must return the same rows (tests/test_fit_wide.py)."""
+    return fit_arranged(
+        series,
+        cfg,
+        ["conv_id", "metric"],
+        _fit_runs(cfg.error_bound, cfg.length_bound, cfg.interval_ms),
+        SEGMENT_SCHEMA,
     )

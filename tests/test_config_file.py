@@ -45,6 +45,70 @@ models = ["pmc_mean", "swing", "gorilla", "uncompressed"]
         engine_config({"engine": {"error_bond": 1.0}})
 
 
+@pytest.mark.parametrize(
+    "metrics",
+    [["turn_rate"], ["tool_usage", "turn_rate"], ["turn_rate", "tool_usage", "x"], []],
+)
+def test_engine_metrics_other_than_the_derived_pair_refused(metrics):
+    """Every fit derives exactly METRICS, so [engine] metrics may
+    restate that list but not narrow, reorder or extend it."""
+    with pytest.raises(ValueError, match="engine.metrics"):
+        engine_config({"engine": {"metrics": metrics}})
+
+
+def _derived_conf(tmp_path, sf_dir: str, error_bound: float) -> dict:
+    """Two [derived] clauses; `ln(value)` is null wherever a bin has no
+    tool call, so the derived series has holes the base one has not."""
+    return load_config(_write(tmp_path, f"""
+[engine]
+error_bound = {error_bound}
+
+[derived.turn_rate_x10]
+source = "turn_rate"
+expr = "cast(value as double) * 10.0"
+
+[derived.tool_usage_ln]
+source = "tool_usage"
+expr = "ln(value)"
+
+[query_server]
+events = "{sf_dir}/events.parquet"
+"""))
+
+
+def test_derived_session_scans_events_once_and_fits_once(spark, sf_small, tmp_path):
+    """Base and derived series come from one events scan and one fit."""
+    spark.catalog.clearCache()
+    seg = prepare_query_session(spark, _derived_conf(tmp_path, sf_small, 0.0))
+    plan = seg._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan parquet") == 1, plan
+    assert plan.count("MapInPandas") == 1, plan
+
+
+@pytest.mark.parametrize("error_bound", [0.0, 5.0])
+def test_derived_segments_equal_narrow_reference(spark, sf_small, tmp_path, error_bound):
+    """The session's one wide fit returns the rows of the narrow
+    reference fit over `derive_value_series`, base and derived."""
+    from modelardb_spark.operators.series import derive_series
+    from modelardb_spark.operators.transcripts import transcripts_from_events
+    from modelardb_spark.operators.transform import derive_value_series
+    from tests.reference_oracle import fit_segments
+
+    conf = _derived_conf(tmp_path, sf_small, error_bound)
+    cfg = engine_config(conf)
+    series = derive_series(transcripts_from_events(spark, sf_small), cfg)
+    want = fit_segments(derive_value_series(series, derived_clauses(conf)), cfg)
+    got = prepare_query_session(spark, conf)
+
+    def rows(df):
+        return sorted(repr(tuple(r)) for r in df.collect())
+
+    assert rows(got) == rows(want)
+    points = dict(got.groupBy("metric").agg(F.sum("seg_cnt")).collect())
+    assert points["turn_rate_x10"] == points["turn_rate"]
+    assert 0 < points["tool_usage_ln"] < points["tool_usage"]
+
+
 def test_config_drives_ingest_query_and_transfer(spark, sf_small, tmp_path):
     out = tmp_path / "mdb"
     cloud = tmp_path / "cloud"

@@ -10,7 +10,7 @@ import pytest
 
 from modelardb_spark.models import fit_run
 from modelardb_spark.models.pmc_mean import pmc_value
-from modelardb_spark.operators.fit import _fit_runs, key_runs
+from modelardb_spark.operators.fit import _fit_runs_wide, key_runs
 from tests.reference_oracle import segment_agg
 
 INTERVAL = 60_000
@@ -42,10 +42,8 @@ def _naive(ts, vals, conv, bound=0.0, length_bound=50):
 
 
 def _run_batches(pdf, bound=0.0, batch_size=None):
-    pdf = pdf.sort_values(["conv_id", "metric", "salt", "bin_ms"]).reset_index(
-        drop=True
-    )
-    fit = _fit_runs(bound, 50, INTERVAL)
+    pdf = pdf.sort_values(["conv_id", "salt", "bin_ms"]).reset_index(drop=True)
+    fit = _fit_runs_wide(("value",), bound, 50, INTERVAL)
     if batch_size is None:
         batches = [pdf]
     else:
@@ -53,7 +51,7 @@ def _run_batches(pdf, bound=0.0, batch_size=None):
             pdf.iloc[i : i + batch_size].reset_index(drop=True)
             for i in range(0, len(pdf), batch_size)
         ]
-    runs = key_runs(iter(batches), ["conv_id", "metric", "salt"])
+    runs = key_runs(iter(batches), ["conv_id", "salt"])
     outs = [df for run in runs for df in fit(run)]
     return pd.concat(outs, ignore_index=True) if outs else pd.DataFrame()
 

@@ -1,5 +1,6 @@
-"""fit_segments_wide must produce exactly the same segment rows as
-fit_segments on the unpivoted series."""
+"""fit_segments_wide and the fused fit must produce exactly the same
+segment rows as the narrow reference fit (reference_oracle.fit_segments)
+on the unpivoted series."""
 
 from __future__ import annotations
 
@@ -7,7 +8,6 @@ import pytest
 
 from modelardb_spark.config import EngineConfig
 from modelardb_spark.operators.fit import (
-    fit_segments,
     fit_segments_from_transcripts,
     fit_segments_wide,
 )
@@ -16,6 +16,7 @@ from modelardb_spark.operators.transcripts import (
     synthetic_transcripts,
     transcripts_from_events,
 )
+from tests.reference_oracle import fit_segments
 
 
 def _rows(df):

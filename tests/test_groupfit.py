@@ -23,11 +23,10 @@ from modelardb_spark.operators.rollup import (
     compression_stats,
     rollup_from_segments,
 )
-from modelardb_spark.operators.series import derive_series_wide
+from modelardb_spark.operators.series import METRICS, derive_series_wide
 from modelardb_spark.operators.transcripts import transcripts_from_events
 
 CFG = EngineConfig(error_bound=0.0)
-METRICS = ("turn_rate", "tool_usage")
 
 
 @pytest.fixture(scope="module")
@@ -39,7 +38,7 @@ def wide(spark, sf_small):
 
 @pytest.fixture(scope="module")
 def gseg(spark, wide):
-    g = fit_segments_grouped(wide, CFG, METRICS).cache()
+    g = fit_segments_grouped(wide, CFG).cache()
     g.count()
     return g
 
@@ -66,7 +65,7 @@ def test_group_grid_reconstructs_exactly(spark, wide, gseg):
     )
     got = sorted(
         (r["conv_id"], r["metric"], r["bin_ms"], float(r["value"]))
-        for r in grid_group(gseg, METRICS).collect()
+        for r in grid_group(gseg).collect()
     )
     assert got == want
 
@@ -107,7 +106,7 @@ def test_group_rollup_matches_raw(spark, wide, gseg):
     _assert_rollup_matches_raw(
         wide,
         rollup_from_segments(
-            explode_group_segments(gseg, METRICS), HOUR_MS, CFG.interval_ms
+            explode_group_segments(gseg), HOUR_MS, CFG.interval_ms
         ),
         HOUR_MS,
     )
@@ -136,7 +135,7 @@ def test_rollup_adaptive_merges_across_routing_boundary(spark):
     wide = spark.createDataFrame(
         rows, "conv_id string, bin_ms long, turn_rate double, tool_usage double"
     )
-    g, p = fit_segments_adaptive(wide, CFG, METRICS, per_day=True)
+    g, p = fit_segments_adaptive(wide, CFG, per_day=True)
 
     def days(segs):
         return {
@@ -148,12 +147,12 @@ def test_rollup_adaptive_merges_across_routing_boundary(spark):
     assert grouped == {("a", 0), ("b", 1), ("c", 0), ("c", 1)}
     assert single == {("a", 1), ("b", 0)}
     _assert_rollup_matches_raw(
-        wide, rollup_adaptive(g, p, week, METRICS), week
+        wide, rollup_adaptive(g, p, week), week
     )
 
 
 def test_group_compression_beats_per_series(spark, wide, gseg):
-    per = fit_segments_wide(wide, CFG, METRICS)
+    per = fit_segments_wide(wide, CFG)
     per_bytes = compression_stats(per).agg(F.sum("stored_bytes")).first()[0]
     grp_bytes = group_compression_stats(gseg).agg(F.sum("stored_bytes")).first()[0]
     pts_per = compression_stats(per).agg(F.sum("points")).first()[0]
@@ -183,7 +182,7 @@ def test_group_swing_on_correlated_linear_fixture(spark):
         }
     )
     wide = spark.createDataFrame(pdf)
-    gseg = fit_segments_grouped(wide, CFG, METRICS).cache()
+    gseg = fit_segments_grouped(wide, CFG).cache()
     rows = gseg.collect()
     assert {r["mtid"] for r in rows} == {3}, [
         (r["mtid"], r["n"]) for r in rows
@@ -194,13 +193,13 @@ def test_group_swing_on_correlated_linear_fixture(spark):
     assert stored < 16 * 2 * n / 10
     got = sorted(
         (r["metric"], r["bin_ms"], float(r["value"]))
-        for r in grid_group(gseg, METRICS).collect()
+        for r in grid_group(gseg).collect()
     )
     want = sorted((m, b, v) for m in METRICS for b, v in zip(bins, ramp))
     assert got == want
     # the rollup's analytic path handles the Swing members too
     r1h = rollup_from_segments(
-        explode_group_segments(gseg, METRICS), HOUR_MS, CFG.interval_ms
+        explode_group_segments(gseg), HOUR_MS, CFG.interval_ms
     ).collect()
     assert sum(r["cnt"] for r in r1h) == 2 * n
     assert all(r["vsum"] == pytest.approx(sum(
@@ -232,9 +231,9 @@ def test_ratio_feedback_split_beats_static_group(spark):
         }
     )
     wide = spark.createDataFrame(pdf)
-    static = fit_segments_grouped(wide, CFG, METRICS).cache()
+    static = fit_segments_grouped(wide, CFG).cache()
     dynamic = fit_segments_grouped(
-        wide, CFG, METRICS, dynamic_split_fraction=DYNAMIC_SPLIT_FRACTION
+        wide, CFG, dynamic_split_fraction=DYNAMIC_SPLIT_FRACTION
     ).cache()
 
     def bytes_of(seg):
@@ -252,7 +251,7 @@ def test_ratio_feedback_split_beats_static_group(spark):
     )
     got = sorted(
         (r["metric"], r["bin_ms"], float(r["value"]))
-        for r in grid_group(dynamic, METRICS).collect()
+        for r in grid_group(dynamic).collect()
     )
     assert got == want
 
@@ -301,12 +300,13 @@ def test_group_lossy_bound_holds_on_all_group_paths(spark, wide):
     def violations(points):
         return _bound_check(points, real, 5.0)[1]
 
-    assert violations(grid_group(fit_segments_grouped(wide, lossy, METRICS))) == 0
+    assert violations(grid_group(fit_segments_grouped(wide, lossy))) == 0
     assert (
         violations(
             grid_group(
                 fit_segments_grouped(
-                    wide, lossy, METRICS,
+                    wide,
+                    lossy,
                     dynamic_split_fraction=DYNAMIC_SPLIT_FRACTION,
                 )
             )
@@ -376,10 +376,10 @@ def test_lossy_fits_approximate_within_bound(spark):
     members = dim_group_members(narrow, dims, by="channel", max_group_size=8)
     paths = {
         "per_series": grid(fit_segments_from_transcripts(t, lossy)),
-        "static": grid_group(fit_segments_grouped(wide, lossy, METRICS)),
+        "static": grid_group(fit_segments_grouped(wide, lossy)),
         "dynamic": grid_group(
             fit_segments_grouped(
-                wide, lossy, METRICS, dynamic_split_fraction=DYNAMIC_SPLIT_FRACTION
+                wide, lossy, dynamic_split_fraction=DYNAMIC_SPLIT_FRACTION
             )
         ),
         "dimension": grid(
@@ -409,7 +409,7 @@ def test_gap_protocol_explode(spark):
         }
     )
     wide = spark.createDataFrame(pdf)
-    gseg = fit_segments_grouped(wide, CFG, METRICS).cache()
+    gseg = fit_segments_grouped(wide, CFG).cache()
     rows = gseg.collect()
     # runs: [0..2] both, [3..6] turn_rate only, [7..9] both
     gapped = [r for r in rows if r["gaps"]]
@@ -418,7 +418,7 @@ def test_gap_protocol_explode(spark):
     full = [r for r in rows if not r["gaps"]]
     assert full and all(r["group_size"] == 2 and r["tids"] == [0, 1] for r in full)
 
-    pts = grid_group(gseg, METRICS)
+    pts = grid_group(gseg)
     tool_bins = sorted(
         r["bin_ms"] for r in pts.where("metric = 'tool_usage'").collect()
     )
@@ -428,7 +428,7 @@ def test_gap_protocol_explode(spark):
     )
     assert turn_bins == bins
     # segment aggregates survive the explode per member
-    segs = explode_group_segments(gseg, METRICS)
+    segs = explode_group_segments(gseg)
     agg = {
         (r["metric"],): r
         for r in segs.groupBy("metric").agg(F.sum("seg_cnt").alias("c")).collect()

@@ -106,13 +106,13 @@ def test_small_arrow_batches_give_identical_segments(spark):
         materialize_members,
     )
     from modelardb_spark.operators.fit import (
-        fit_segments,
         fit_segments_from_transcripts,
         fit_segments_wide,
     )
     from modelardb_spark.operators.groupfit import fit_segments_grouped
     from modelardb_spark.operators.series import derive_series, derive_series_wide
     from modelardb_spark.operators.transcripts import synthetic_transcripts
+    from tests.reference_oracle import fit_segments
 
     t = synthetic_transcripts(
         spark, n_convs=10, turns_per_conv=200, mega_convs=1, mega_factor=4

@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 
 from modelardb_spark.config import EngineConfig
 from modelardb_spark.models.errors import outside_percentage_error_bound
-from modelardb_spark.operators.fit import fit_segments
 from modelardb_spark.operators.grid import grid, restrict
 from modelardb_spark.operators.rollup import (
     DAY_MS,
@@ -24,6 +23,7 @@ from modelardb_spark.operators.transcripts import (
     synthetic_transcripts,
     transcripts_from_events,
 )
+from tests.reference_oracle import fit_segments
 
 
 @pytest.fixture(scope="module")

@@ -98,12 +98,10 @@ def test_fused_fit_is_single_exchange(spark, sf_small, tmp_path):
         fit_segments_dim_grouped,
         materialize_members,
     )
-    from modelardb_spark.operators.fit import (
-        fit_segments,
-        fit_segments_from_transcripts,
-    )
+    from modelardb_spark.operators.fit import fit_segments_from_transcripts
     from modelardb_spark.operators.groupfit import fit_segments_grouped
     from modelardb_spark.operators.series import derive_series
+    from tests.reference_oracle import fit_segments
 
     # cached frames from other modules would splice InMemoryRelations
     # into these plans and change the exchange counts

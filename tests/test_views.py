@@ -5,10 +5,10 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from modelardb_spark.operators.fit import fit_segments
 from modelardb_spark.operators.series import derive_series
 from modelardb_spark.operators.transcripts import synthetic_transcripts
 from modelardb_spark.operators.views import register_views
+from tests.reference_oracle import fit_segments
 
 
 def test_sql_over_views(spark):
