@@ -12,8 +12,10 @@ The checkpoint table itself is stored as one JSON line per row under
 ``<root>/_checkpoints/<table>/`` — append-only, last-write-wins per
 (partition_id, snapshot), crash-safe via write-then-rename (the same
 discipline the reference used for its file backends,
-FileStorage.scala:211-233, here only for the tiny metadata rows —
-data goes through Spark writers).
+FileStorage.scala:211-233). Data files follow the same discipline:
+the catalogs' Arrow writer (io/tables.py::write_files) writes them
+aside, and the driver publishes only the files the job reports — by
+rename in the directory catalog, by manifest in the snapshot catalog.
 """
 
 from __future__ import annotations

@@ -61,12 +61,15 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
+
+from modelardb_spark.io.tables import TableCatalog, write_files
 
 _META = "meta"
 _DATA = "data"
@@ -195,29 +198,24 @@ class SnapshotCatalog:
     def _write_files(self, df: DataFrame, name: str, partition_by: list[str] | None):
         """Write one commit's immutable data directory and its
         partition-pure manifest files; returns the new manifest-list
-        rows. Only this commit's own files are walked — cost is
-        O(files written), independent of table size."""
+        rows. The data files come from `io.tables.write_files`, which
+        lists exactly the files of the job's successful task attempts:
+        only those enter a manifest, so cost is O(files written),
+        independent of table size. If the job fails, its commit
+        directory is removed."""
         commit = f"commit-{uuid.uuid4().hex[:12]}"
         target = os.path.join(self._data(name), commit)
-        w = df.write.mode("errorifexists").format(self.fmt)
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.save(target)
+        try:
+            written = write_files(df, target, self.fmt, partition_by or [])
+        except BaseException:
+            shutil.rmtree(target, ignore_errors=True)
+            raise
         by_part: dict[tuple, list[dict]] = {}
-        for dirpath, _dirs, files in os.walk(target):
-            for fn in files:
-                if fn.startswith(("_", ".")):
-                    continue
-                full = os.path.join(dirpath, fn)
-                rel = os.path.relpath(full, self._data(name))
-                part = _partition_of(rel)
-                by_part.setdefault(_pkey(part), []).append(
-                    {
-                        "path": rel,
-                        "partition": part,
-                        "bytes": os.path.getsize(full),
-                    }
-                )
+        for rel, size in written:
+            part = _partition_of(rel)
+            by_part.setdefault(_pkey(part), []).append(
+                {"path": f"{commit}/{rel}", "partition": part, "bytes": size}
+            )
         mdir = self._manifest_dir(name)
         os.makedirs(mdir, exist_ok=True)
         rows = []
@@ -523,9 +521,12 @@ class SnapshotCatalog:
                     os.path.normpath(os.path.join(self._meta(name), m["path"]))
                 )
             for e in self._load_entries(name, man):
-                live_data.add(
-                    os.path.normpath(os.path.join(self._data(name), e["path"]))
-                )
+                # a live file's checksum sidecar is live too: without it
+                # Spark reads the file unverified
+                head, tail = os.path.split(
+                    os.path.normpath(os.path.join(self._data(name), e["path"])))
+                live_data.update(
+                    (os.path.join(head, tail), os.path.join(head, f".{tail}.crc")))
         removed_files = 0
         for base_dir, live in (
             (self._data(name), live_data),
@@ -594,8 +595,6 @@ def make_catalog(root: str, fmt: str = "parquet", kind: str = "dir"):
         from modelardb_spark.io.cql import CqlCatalog
 
         return CqlCatalog(root, fmt)
-    from modelardb_spark.io.tables import TableCatalog
-
     if kind != "dir":
         raise ValueError(f"unknown catalog kind: {kind}")
     return TableCatalog(root, fmt)

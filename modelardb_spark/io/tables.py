@@ -1,4 +1,4 @@
-"""Table catalog: Iceberg-shaped table management.
+"""Table catalog: partitioned parquet/ORC directories, written from Arrow.
 
 Production target is Apache Iceberg (`df.writeTo(...).append()`,
 snapshot isolation, `rewrite_data_files` compaction, partition specs
@@ -6,10 +6,27 @@ like ``bucket(N, conv_id), days(start_ts)``) — the ACID commit +
 write-ahead-log machinery the reference hand-rolled for its file
 backends (storage/FileStorage.scala:83-233) is exactly what Iceberg
 provides natively. This sandbox ships no Iceberg runtime jars, so
-`TableCatalog` degrades to the same contract over partitioned parquet
+`TableCatalog` degrades to the same contract over partitioned
 directories with last-writer-wins overwrite per partition — writes go
 through `overwrite_partitions`, which is idempotent per partition key,
 giving the resume semantics the checkpoint layer needs.
+
+Data files are written by `write_files`, one `mapInArrow` pass: each
+task writes one file per partition value it holds (rows in frame
+order) with `pyarrow.parquet` or `pyarrow.orc`, plus a Hadoop-format
+``.<file>.crc`` sidecar so Spark's checksummed local file system still
+verifies every read, and returns the relative paths it wrote. The
+driver then commits exactly those files (`commit_files`): they move
+out of a staging directory under the catalog root into a fresh tree,
+which replaces each touched ``col=value`` directory (or, for
+`overwrite`, the whole table) by a directory rename. A failed job, or
+a failed task attempt's leftovers, never reaches the table, and the
+staging directory is removed either way. Neither Spark's
+`DataFrameWriter` nor its Hadoop output committer is involved: a file
+costs one Arrow write and a rename for it and for its sidecar, and no
+`chmod` process is forked (pip PySpark ships no native Hadoop library,
+so Hadoop's local file system forks one per file, sidecar and
+directory it creates).
 
 The partition column for segment tables is ``part_key = bucket of
 conv_id × day of start_ms`` — the analogue of the Iceberg spec above:
@@ -23,14 +40,27 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import struct
 import time
+import uuid
+import zlib
 from dataclasses import dataclass
 
+import numpy as np
 import pyarrow as pa
+import pyarrow.orc as orc
+import pyarrow.parquet as pq
+from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
 
 DAY_MS = 86_400_000
+
+#: bytes per checksum of Hadoop's ChecksumFileSystem (`file.bytes-per-checksum`)
+_CRC_CHUNK = 512
+_INTEGRAL = (ByteType, ShortType, IntegerType, LongType)
 
 
 #: the reference's model_type metadata table contents
@@ -54,6 +84,131 @@ def model_type_table(spark: SparkSession) -> DataFrame:
     mtids, names = zip(*MODEL_TYPES)
     table = pa.table({"mtid": pa.array(mtids, pa.int32()), "name": names})
     return spark.createDataFrame(table, "mtid INT, name STRING")
+
+
+def _crc_sidecar(data) -> bytes:
+    """Hadoop ChecksumFileSystem's ``.<file>.crc`` contents for `data`:
+    the header ``crc\\0``, int32 bytes-per-checksum, then one big-endian
+    CRC32 per 512-byte chunk. Spark's local reads verify every data
+    file that has one and raise `ChecksumException` on a mismatch."""
+    view = memoryview(data)
+    sums = [zlib.crc32(view[i : i + _CRC_CHUNK]) for i in range(0, len(view), _CRC_CHUNK)]
+    return b"crc\0" + struct.pack(f">i{len(sums)}I", _CRC_CHUNK, *sums)
+
+
+def _write_file(directory: str, name: str, table: pa.Table, fmt: str) -> int:
+    """Write one data file and its checksum sidecar; returns its bytes.
+    Parquet options follow parquet-mr's output (zstd, page index, no
+    embedded Arrow schema), which keeps stored bytes within ~2% of it."""
+    sink = pa.BufferOutputStream()
+    if fmt == "parquet":
+        pq.write_table(table, sink, compression="zstd", store_schema=False,
+                       write_page_index=True)
+    else:
+        orc.write_table(table, sink, compression="zstd")
+    data = sink.getvalue()
+    os.makedirs(directory, exist_ok=True)
+    with open(os.path.join(directory, name), "wb") as f:
+        f.write(data)
+    with open(os.path.join(directory, f".{name}.crc"), "wb") as f:
+        f.write(_crc_sidecar(data))
+    return data.size
+
+
+def _by_partition(batch: pa.RecordBatch, partition_by: list[str]):
+    """(partition values, rows) pairs of one batch: values in order of
+    first appearance, rows in batch order."""
+    if not partition_by:
+        yield (), batch
+        return
+    cols = [batch.column(c) for c in partition_by]
+    if any(c.null_count for c in cols):
+        raise ValueError(f"null value in partition columns {partition_by}")
+    keys = np.column_stack([c.to_numpy() for c in cols])
+    if (keys == keys[0]).all():
+        yield tuple(keys[0].tolist()), batch
+        return
+    values, first, inverse = np.unique(
+        keys, axis=0, return_index=True, return_inverse=True)
+    for g in np.argsort(first):
+        yield tuple(values[g].tolist()), batch.take(np.flatnonzero(inverse == g))
+
+
+def write_files(
+    df: DataFrame, staging: str, fmt: str, partition_by: list[str]
+) -> list[tuple[str, int]]:
+    """Write `df` under `staging` in one `mapInArrow` pass: each task
+    writes one `fmt` file per partition value (``col=value``
+    directories nested in `partition_by` order, partition columns left
+    out of the file, rows in frame order) and returns what it wrote.
+    Returns the (path relative to `staging`, bytes) of every data file
+    of the job's successful task attempts — the only files a commit
+    may publish. `staging` must not exist yet; the caller removes it.
+    A task holds its rows in memory until it writes. Only integral
+    partition columns are supported."""
+    if fmt not in ("parquet", "orc"):
+        raise ValueError(f"unsupported table format: {fmt!r}")
+    for c in partition_by:
+        dtype = df.schema[c].dataType
+        if not isinstance(dtype, _INTEGRAL):
+            raise ValueError(
+                f"partition column {c!r} is {dtype.simpleString()}; only"
+                " integral partition columns are supported")
+
+    def write(batches):
+        groups: dict[tuple, list[pa.RecordBatch]] = {}
+        for batch in batches:
+            if batch.num_rows:
+                for key, rows in _by_partition(batch, partition_by):
+                    groups.setdefault(key, []).append(rows)
+        if groups and not os.path.isdir(staging):
+            # the driver aborted the job and removed staging already
+            raise RuntimeError(f"staging directory {staging} is gone")
+        name = f"part-{TaskContext.get().partitionId():05d}-{uuid.uuid4().hex}.{fmt}"
+        paths, sizes = [], []
+        for key, rows in groups.items():
+            dirs = [f"{c}={v}" for c, v in zip(partition_by, key)]
+            table = pa.Table.from_batches(rows).drop_columns(partition_by)
+            sizes.append(_write_file(os.path.join(staging, *dirs), name, table, fmt))
+            paths.append("/".join([*dirs, name]))
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(paths, pa.string()), pa.array(sizes, pa.int64())],
+            names=["path", "bytes"])
+
+    os.makedirs(staging)
+    return [(r.path, r.bytes) for r in
+            df.mapInArrow(write, "path string, bytes long").collect()]
+
+
+def commit_files(
+    staging: str, table: str, files: list[str], partitioned: bool
+) -> None:
+    """Publish exactly `files` (paths relative to `staging`) and their
+    sidecars into the table directory `table`; any other file in
+    `staging` stays behind. The files move into a fresh tree, which
+    then replaces, by directory renames, each touched leaf partition
+    directory when `partitioned`, else the whole table. `staging`
+    must be on the table's file system; the caller removes it."""
+    fresh, old = os.path.join(staging, "_fresh"), os.path.join(staging, "_old")
+    os.makedirs(fresh)
+    os.makedirs(old)
+    for rel in files:
+        head, name = os.path.split(rel)
+        os.makedirs(os.path.join(fresh, head), exist_ok=True)
+        for n in (name, f".{name}.crc"):
+            os.rename(os.path.join(staging, head, n), os.path.join(fresh, head, n))
+    if not partitioned:
+        if os.path.exists(table):
+            os.rename(table, os.path.join(old, "table"))
+        os.makedirs(os.path.dirname(table), exist_ok=True)
+        os.rename(fresh, table)
+        return
+    for i, leaf in enumerate(sorted({os.path.dirname(rel) for rel in files})):
+        target = os.path.join(table, leaf)
+        if os.path.exists(target):
+            os.rename(target, os.path.join(old, str(i)))
+        os.makedirs(os.path.dirname(target), exist_ok=True)
+        os.rename(os.path.join(fresh, leaf), target)
 
 
 def with_part_key(df: DataFrame, buckets: int = 32) -> DataFrame:
@@ -84,10 +239,10 @@ class TableCatalog:
         return spark.read.format(self.fmt).load(self.path(name))
 
     def overwrite(self, df: DataFrame, name: str, partition_by: list[str] | None = None) -> None:
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.format(self.fmt).save(self.path(name))
+        """Replace the whole table. An unpartitioned frame without rows
+        still leaves a readable table: one empty file with the frame's
+        schema, as Spark's writer leaves."""
+        self._write(df, name, partition_by or [], whole=True)
 
     def overwrite_partitions(
         self, df: DataFrame, name: str, partition_by: list[str]
@@ -95,19 +250,20 @@ class TableCatalog:
         """Dynamic partition overwrite: replaces only the partitions
         present in `df` (Iceberg's per-partition replace semantics;
         idempotent re-runs)."""
-        (
-            df.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*partition_by)
-            .format(self.fmt)
-            .save(self.path(name))
-        )
+        self._write(df, name, partition_by, whole=not partition_by)
 
-    def append(self, df: DataFrame, name: str, partition_by: list[str] | None = None) -> None:
-        w = df.write.mode("append")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.format(self.fmt).save(self.path(name))
+    def _write(self, df: DataFrame, name: str, partition_by: list[str], whole: bool) -> None:
+        staging = os.path.join(self.root, f"_staging-{uuid.uuid4().hex}")
+        try:
+            files = [p for p, _ in write_files(df, staging, self.fmt, partition_by)]
+            if not files and not partition_by:
+                files = [f"part-00000-{uuid.uuid4().hex}.{self.fmt}"]
+                _write_file(staging, files[0], to_arrow_schema(df.schema).empty_table(),
+                            self.fmt)
+            if files or whole:
+                commit_files(staging, self.path(name), files, partitioned=not whole)
+        finally:
+            shutil.rmtree(staging, ignore_errors=True)
 
     def drop_partitions(self, name: str, column: str, values: list) -> int:
         """Retention primitive: drop whole partition directories

@@ -151,6 +151,113 @@ def test_segment_files_keep_write_order(ingested):
             assert keys == sorted(keys), f"{d}/{f}"
 
 
+def _all_files(root):
+    return sorted(
+        os.path.relpath(os.path.join(d, f), root)
+        for d, _, files in os.walk(root) for f in files
+    )
+
+
+@pytest.mark.parametrize("fmt", ["parquet", "orc"])
+def test_written_files_keep_hadoop_checksums(spark, tmp_path, fmt):
+    """Every data file keeps Hadoop's `.crc` sidecar: a flipped byte
+    fails the Spark read of its day instead of returning wrong rows,
+    and the other day still reads correctly."""
+    catalog = TableCatalog(str(tmp_path), fmt)
+    df = spark.range(400).select(
+        "id", (F.col("id") % 2).alias("part_day"), (F.col("id") * 0.5).alias("v"))
+    catalog.overwrite_partitions(df, "t", ["part_day"])
+    base = catalog.path("t")
+    files = _data_files(base)
+    assert sorted(files) == ["part_day=0", "part_day=1"]
+    victim = os.path.join(base, "part_day=0", files["part_day=0"][0])
+    with open(victim, "rb") as f:
+        data = bytearray(f.read())
+    data[len(data) // 2] ^= 0xFF
+    with open(victim, "wb") as f:
+        f.write(data)
+
+    def read_day(day):
+        return spark.read.option("basePath", base).format(fmt).load(
+            os.path.join(base, f"part_day={day}")).collect()
+
+    with pytest.raises(Exception, match="ChecksumException"):
+        read_day(0)
+    rows = read_day(1)
+    assert sorted((r.id, r.v, r.part_day) for r in rows) == [
+        (i, i * 0.5, 1) for i in range(1, 400, 2)]
+
+
+@pytest.mark.parametrize("kind", ["dir", "snapshot"])
+def test_failed_write_leaves_table_untouched(spark, tmp_path, kind):
+    """A partition overwrite whose job fails in a task raises, and the
+    table keeps its rows and files: files the task wrote before it
+    failed are never committed, and no staging data is left behind."""
+    from modelardb_spark.io.snapshots import make_catalog
+
+    def frame(fail):
+        # two tasks: day 0 is written at once, day 1 fails on its last row
+        day1 = spark.range(10, 200_010, 1, 1).select(
+            F.when(F.lit(fail) & (F.col("id") == 200_009),
+                   F.raise_error(F.lit("bad day")))
+            .otherwise(F.col("id")).alias("id"),
+            F.lit(1).cast("long").alias("part_day"),
+        )
+        day0 = spark.range(0, 10, 1, 1).select(
+            "id", F.lit(0).cast("long").alias("part_day"))
+        return day0.union(day1)
+
+    root = str(tmp_path)
+    catalog = make_catalog(root, "parquet", kind)
+    catalog.overwrite_partitions(frame(False), "t", ["part_day"])
+    files = _all_files(root)
+    with pytest.raises(Exception, match="bad day"):
+        catalog.overwrite_partitions(frame(True), "t", ["part_day"])
+    assert _all_files(root) == files
+    assert catalog.read(spark, "t").agg(F.count("*"), F.sum("id")).first() == (
+        200_010, 200_009 * 200_010 // 2)
+
+def test_commit_publishes_only_listed_files(tmp_path):
+    """The commit moves exactly the listed files and their sidecars: a
+    file in staging that the job did not list (say, from a failed task
+    attempt) stays out of the table. A partitioned commit replaces the
+    touched day and keeps the others; a whole-table commit replaces
+    everything."""
+    from modelardb_spark.io.tables import commit_files
+
+    def put(path, data=b"x"):
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        with open(path, "wb") as f:
+            f.write(data)
+
+    stage, table = str(tmp_path / "stage"), str(tmp_path / "t")
+    for name in ("part-00000-a.parquet", "part-00001-b.parquet"):
+        put(os.path.join(stage, "part_day=1", name))
+        put(os.path.join(stage, "part_day=1", f".{name}.crc"))
+    put(os.path.join(table, "part_day=1", "old.parquet"))
+    put(os.path.join(table, "part_day=2", "kept.parquet"))
+    commit_files(stage, table, ["part_day=1/part-00000-a.parquet"], partitioned=True)
+    assert _all_files(table) == [
+        "part_day=1/.part-00000-a.parquet.crc", "part_day=1/part-00000-a.parquet",
+        "part_day=2/kept.parquet"]
+    assert os.path.exists(os.path.join(stage, "part_day=1", "part-00001-b.parquet"))
+
+    stage2 = str(tmp_path / "stage2")
+    put(os.path.join(stage2, "part_day=3", "part-00000-c.parquet"))
+    put(os.path.join(stage2, "part_day=3", ".part-00000-c.parquet.crc"))
+    commit_files(stage2, table, ["part_day=3/part-00000-c.parquet"], partitioned=False)
+    assert _all_files(table) == [
+        "part_day=3/.part-00000-c.parquet.crc", "part_day=3/part-00000-c.parquet"]
+
+
+def test_partition_columns_must_be_integral(spark, tmp_path):
+    catalog = TableCatalog(str(tmp_path))
+    df = spark.range(4).select("id", F.col("id").cast("string").alias("k"))
+    with pytest.raises(ValueError, match="integral"):
+        catalog.overwrite_partitions(df, "t", ["k"])
+    assert not os.listdir(str(tmp_path))
+
+
 def test_empty_input_ingests_no_days(spark, transcripts, tmp_path):
     """An input without rows yields no days and an empty time_series
     table, also when the rows are filtered out only at run time."""

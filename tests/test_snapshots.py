@@ -120,6 +120,10 @@ def test_drop_partitions_is_metadata_only_and_expire_gcs(spark, tmp_path):
     gone = cat.expire_snapshots("t", keep_last=1, older_than_s=0)
     assert gone["manifests"] == 1 and gone["data_files"] >= 1
     assert _rows(cat.read(spark, "t")) == [("a", 1, 1)]
+    # live files keep their checksum sidecars, so reads stay verified
+    for f in cat.read(spark, "t").inputFiles():
+        head, tail = os.path.split(f.replace("file:", ""))
+        assert os.path.exists(os.path.join(head, f".{tail}.crc")), f
     with pytest.raises(Exception):
         cat.read(spark, "t", version=1).collect()
 
