@@ -28,11 +28,15 @@ has two planes:
   layout over local columnar files: ``<table>/<part cols>/tr=<bucket>/``
   with rows in clustering order ``(conv_id, metric, start_ms)`` inside
   each bucket file. Every catalog-protocol operation works (ingest,
-  transfer, maintenance), a partition-key query prunes to ONE token
-  bucket per day (``read_for_key`` — 1/vnodes of the files), and
+  transfer, maintenance), and a partition-key query prunes to ONE token
+  bucket per day (``read_for_key`` — 1/vnodes of the files). Writes go
+  through the file catalogs' one staged writer
+  (io/tables.py::write_files/commit_files): tasks write the bucket
+  files to a staging directory, the driver renames exactly those into
+  place and swaps each day with all its buckets, so
   ``overwrite_partitions`` keeps the jobs' day-replace resume contract
-  via staged rename (Cassandra itself would upsert by primary key —
-  the reference writes SaveMode.Append for exactly that reason,
+  (Cassandra itself would upsert by primary key — the reference writes
+  SaveMode.Append for exactly that reason,
   CassandraStorage.scala:200-206).
 - The **live plane** emits the reference's exact CQL: ``ddl_statements``
   returns the CREATE KEYSPACE/TABLE set, and ``write_segments_cql``
@@ -49,10 +53,6 @@ driver collect anywhere.
 
 from __future__ import annotations
 
-import os
-import shutil
-import time
-from dataclasses import dataclass
 from typing import Iterable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
@@ -63,15 +63,10 @@ from modelardb_spark.io.tables import TableCatalog
 #: Cassandra's hard cap on statements per batch (CassandraStorage.scala:139)
 MAX_BATCH_STATEMENTS = 65535
 
-#: default virtual-node (token-range) count for the embedded ring
-DEFAULT_VNODES = 16
+#: virtual-node (token-range) count of the embedded ring
+VNODES = 16
 
 _TR = "tr"
-
-#: minimum age before another writer's crash-leftover .trash-/.staging
-#: debris may be swept (a live writer finishes a swap in seconds; an
-#: hour leaves a wide margin for stalled executors)
-TRASH_GRACE_NS = 3600 * 10**9
 
 
 def parse_connection(connection_string: str) -> tuple[str, str, str, str]:
@@ -206,14 +201,13 @@ def write_segments_cql(df: DataFrame, connection_string: str) -> None:
     )
 
 
-@dataclass
 class CqlCatalog(TableCatalog):
     """Embedded rendering of the Cassandra layout over local columnar
     files; same catalog protocol as TableCatalog/SnapshotCatalog/
-    JdbcCatalog, so ingest/transfer/maintain run unchanged over it."""
-
-    vnodes: int = DEFAULT_VNODES
-    keyspace: str = "modelardb"
+    JdbcCatalog, so ingest/transfer/maintain run unchanged over it.
+    Writes go through `TableCatalog`'s staged writer; this class adds
+    only the layout (token bucket directories, clustering order) and
+    the partition-key read."""
 
     # conv_id is the gid-analogue partition key; clustering order is
     # (metric, start_ms) — PRIMARY KEY ((conv_id), metric, start_ms)
@@ -224,12 +218,6 @@ class CqlCatalog(TableCatalog):
         return [c for c in ("metric", "start_ms", "bucket_ms")
                 if c in df.columns]
 
-    def _with_tr(self, df: DataFrame) -> DataFrame:
-        key = [F.col(c) for c in self._key_cols(df)]
-        return df.withColumn(
-            _TR, F.pmod(F.hash(*key), F.lit(self.vnodes)).cast("int")
-        )
-
     def token_of(self, spark: SparkSession, *key_values) -> int:
         """Driver-side token of a partition key — computed BY Spark
         (one local 1-row job) so it is bit-identical to the executor
@@ -237,7 +225,7 @@ class CqlCatalog(TableCatalog):
         cols = [F.lit(v) for v in key_values]
         return (
             spark.range(1)
-            .select(F.pmod(F.hash(*cols), F.lit(self.vnodes)).cast("int"))
+            .select(F.pmod(F.hash(*cols), F.lit(VNODES)).cast("int"))
             .first()[0]
         )
 
@@ -261,122 +249,15 @@ class CqlCatalog(TableCatalog):
         )
 
     # -- writes --------------------------------------------------------
-    def _clustered(self, df: DataFrame, partition_by: list[str]) -> DataFrame:
-        df = self._with_tr(df)
-        order = (partition_by + [_TR] + self._key_cols(df)
-                 + self._cluster_cols(df))
-        return df.sortWithinPartitions(*order)
-
-    def overwrite(
-        self, df: DataFrame, name: str, partition_by: list[str] | None = None
-    ) -> None:
-        parts = list(partition_by or [])
-        (
-            self._clustered(df, parts)
-            .write.mode("overwrite")
-            .partitionBy(*parts, _TR)
-            .format(self.fmt)
-            .save(self.path(name))
-        )
-
-    def append(
-        self, df: DataFrame, name: str, partition_by: list[str] | None = None
-    ) -> None:
-        parts = list(partition_by or [])
-        (
-            self._clustered(df, parts)
-            .write.mode("append")
-            .partitionBy(*parts, _TR)
-            .format(self.fmt)
-            .save(self.path(name))
-        )
-
-    def overwrite_partitions(
-        self, df: DataFrame, name: str, partition_by: list[str]
-    ) -> None:
-        """Partition-replace resume contract via staged rename-swap.
-
-        The new partition directories are written to a staging dir,
-        then each is swapped in with RENAMES: old dir renamed aside to
-        a trash dir, new dir renamed in, trash deleted last. The
-        exposed window per partition is two metadata-only rename
-        syscalls — never an rmtree walking data files while the
-        partition is missing. A crash inside that window leaves the
-        partition absent, which the jobs' checkpoint protocol heals:
-        the checkpoint row is written only after this returns, so an
-        unfinished partition is simply reprocessed on resume. (Real
-        Cassandra needs none of this: re-inserting the same primary
-        keys upserts idempotently, which is why the reference writes
-        SaveMode.Append, CassandraStorage.scala:200-206.)
-
-        The swap paths come from LISTING the staging output — exactly
-        the names Spark wrote — so NULL partition values
-        (__HIVE_DEFAULT_PARTITION__), URL-escaped values, and
-        multi-column partition_by all swap at the full partition-key
-        depth with no driver-side value rendering (and no second
-        computation of `df` for a distinct-values collect)."""
-        staging = self.path(f".staging-{name}-{os.getpid()}-{time.time_ns()}")
-        (
-            self._clustered(df, list(partition_by))
-            .write.mode("overwrite")
-            .partitionBy(*partition_by, _TR)
-            .format(self.fmt)
-            .save(staging)
-        )
-        base = self.path(name)
-        os.makedirs(base, exist_ok=True)
-        # sweep trash left by a previous CRASHED writer (its contents
-        # were already logically replaced when it was renamed aside) —
-        # but only trash older than a grace period: a LIVE concurrent
-        # writer's trash dir (this method removes its own in the
-        # finally) must never be rmtree'd mid-swap, or its next
-        # rename-aside raises. Same writer-safety rule as the snapshot
-        # catalog's orphan GC; the dir name embeds time_ns for the age
-        # check so no stat call races the owner's cleanup.
-        now_ns = time.time_ns()
-        for d in os.listdir(base):
-            if d.startswith(".trash-"):
-                try:
-                    age_ns = now_ns - int(d.rsplit("-", 1)[-1])
-                except ValueError:
-                    age_ns = TRASH_GRACE_NS + 1  # unparseable = ancient
-                if age_ns > TRASH_GRACE_NS:
-                    shutil.rmtree(os.path.join(base, d), ignore_errors=True)
-        # also reclaim staging dirs a previous writer left at the
-        # catalog ROOT by crashing before its swap — same grace rule
-        # (the name embeds time_ns); without this a pre-swap crash
-        # leaks a full data-sized directory forever
-        root = self.path("")
-        prefix = f".staging-{name}-"
-        for d in os.listdir(root):
-            if d.startswith(prefix):
-                try:
-                    age_ns = now_ns - int(d.rsplit("-", 1)[-1])
-                except ValueError:
-                    age_ns = TRASH_GRACE_NS + 1
-                if age_ns > TRASH_GRACE_NS:
-                    shutil.rmtree(os.path.join(root, d), ignore_errors=True)
-        trash = os.path.join(base, f".trash-{os.getpid()}-{time.time_ns()}")
-        os.makedirs(trash)
-        try:
-            # partition leaves are at depth len(partition_by); below
-            # them sit the tr=<bucket> clustering dirs
-            depth = len(partition_by)
-            rels = [""]
-            for _ in range(depth):
-                rels = [
-                    os.path.join(r, d)
-                    for r in rels
-                    for d in os.listdir(os.path.join(staging, r))
-                    if "=" in d
-                ]
-            for i, rel in enumerate(rels):
-                src = os.path.join(staging, rel)
-                dst = os.path.join(base, rel)
-                os.makedirs(os.path.dirname(dst), exist_ok=True)
-                if os.path.exists(dst):
-                    os.rename(dst, os.path.join(trash, str(i)))
-                os.rename(src, dst)
-        finally:
-            shutil.rmtree(trash, ignore_errors=True)
-            shutil.rmtree(staging, ignore_errors=True)
+    def _layout(
+        self, df: DataFrame, partition_by: list[str]
+    ) -> tuple[DataFrame, list[str]]:
+        """Token bucket directories below the partition columns, rows
+        in clustering order inside each bucket file. The staged writer
+        swaps whole partitions, so a bucket the new rows lack does not
+        survive from the old ones."""
+        key = self._key_cols(df)
+        df = df.withColumn(
+            _TR, F.pmod(F.hash(*key), F.lit(VNODES)).cast("int"))
+        order = partition_by + [_TR] + key + self._cluster_cols(df)
+        return df.sortWithinPartitions(*order), partition_by + [_TR]

@@ -154,7 +154,7 @@ class JdbcCatalog:
     #: Nullable payload strings (text, role, tool) stay CLOB.
     VARCHAR_COLS = {"conv_id": 255, "metric": 128, "name": 255, "member": 255}
 
-    def _write(self, df: DataFrame, name: str, mode: str) -> None:
+    def _write(self, df: DataFrame, name: str) -> None:
         w = (
             df.write.format("jdbc")
             .option("url", self.url)
@@ -168,7 +168,7 @@ class JdbcCatalog:
         )
         if col_types:
             w = w.option("createTableColumnTypes", col_types)
-        w.mode(mode).save()
+        w.mode("overwrite").save()
 
     @staticmethod
     def _sqlstate(exc: Exception) -> str | None:
@@ -205,13 +205,8 @@ class JdbcCatalog:
     def overwrite(
         self, df: DataFrame, name: str, partition_by: list[str] | None = None
     ) -> None:
-        self._write(df, name, "overwrite")
+        self._write(df, name)
         self._ensure_index(name, df)
-
-    def append(
-        self, df: DataFrame, name: str, partition_by: list[str] | None = None
-    ) -> None:
-        self._write(df, name, "append")
 
     def overwrite_partitions(
         self, df: DataFrame, name: str, partition_by: list[str]
@@ -264,7 +259,7 @@ class JdbcCatalog:
                     pass  # concurrent sweeper got it first
 
         stage = f"{name}_stage_{_os.getpid()}_{_time.time_ns() % 10**12}"
-        self._write(df, stage, "overwrite")
+        self._write(df, stage)
         try:
             cols = ", ".join(_q(c) for c in df.columns)
             # the DELETE keys off the staging table itself

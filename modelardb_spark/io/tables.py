@@ -18,15 +18,28 @@ order) with `pyarrow.parquet` or `pyarrow.orc`, plus a Hadoop-format
 verifies every read, and returns the relative paths it wrote. The
 driver then commits exactly those files (`commit_files`): they move
 out of a staging directory under the catalog root into a fresh tree,
-which replaces each touched ``col=value`` directory (or, for
-`overwrite`, the whole table) by a directory rename. A failed job, or
-a failed task attempt's leftovers, never reaches the table, and the
-staging directory is removed either way. Neither Spark's
-`DataFrameWriter` nor its Hadoop output committer is involved: a file
-costs one Arrow write and a rename for it and for its sidecar, and no
-`chmod` process is forked (pip PySpark ships no native Hadoop library,
-so Hadoop's local file system forks one per file, sidecar and
+which replaces each touched partition directory (or, for `overwrite`,
+the whole table) by a directory rename. A failed job, or a failed
+task attempt's leftovers, never reaches the table, and the staging
+directory is removed either way. Since the old files stay in place
+until the commit, a write may read the table it replaces. Neither
+Spark's `DataFrameWriter` nor its Hadoop output committer is involved:
+a file costs one Arrow write and a rename for it and for its sidecar,
+and no `chmod` process is forked (pip PySpark ships no native Hadoop
+library, so Hadoop's local file system forks one per file, sidecar and
 directory it creates).
+
+`write_files` writes the data files of every file catalog, and
+`TableCatalog._write` commits them for the directory layout, for the
+CQL layout (`io/cql.py::CqlCatalog` only adds token bucket directories
+below the partition columns, through `_layout`) and for stream
+compaction; the snapshot catalog publishes them through its manifests
+instead. Crash leftovers follow one rule: before each write,
+`_sweep_staging` removes the ``_staging-<time_ns>-<uuid>`` directories
+under the catalog root that are older than `STAGING_GRACE_NS`, except
+one whose ``_old`` holds a replaced directory (a swap cut short, which
+may hold the only copy of a partition); that one, and any name that
+does not parse, is left for a human to clear.
 
 The partition column for segment tables is ``part_key = bucket of
 conv_id × day of start_ms`` — the analogue of the Iceberg spec above:
@@ -61,6 +74,11 @@ DAY_MS = 86_400_000
 #: bytes per checksum of Hadoop's ChecksumFileSystem (`file.bytes-per-checksum`)
 _CRC_CHUNK = 512
 _INTEGRAL = (ByteType, ShortType, IntegerType, LongType)
+
+#: minimum age before a later write reclaims a ``_staging-*`` directory
+#: as a crashed writer's leftover (a live writer commits in seconds; an
+#: hour leaves a wide margin for stalled executors)
+STAGING_GRACE_NS = 3600 * 10**9
 
 
 #: the reference's model_type metadata table contents
@@ -180,15 +198,15 @@ def write_files(
             df.mapInArrow(write, "path string, bytes long").collect()]
 
 
-def commit_files(
-    staging: str, table: str, files: list[str], partitioned: bool
-) -> None:
+def commit_files(staging: str, table: str, files: list[str], depth: int) -> None:
     """Publish exactly `files` (paths relative to `staging`) and their
     sidecars into the table directory `table`; any other file in
     `staging` stays behind. The files move into a fresh tree, which
-    then replaces, by directory renames, each touched leaf partition
-    directory when `partitioned`, else the whole table. `staging`
-    must be on the table's file system; the caller removes it."""
+    then replaces, by directory renames, each touched partition
+    directory: the first `depth` directories of a file's path, with
+    everything nested below them (a CQL day swaps with all its token
+    buckets), or at depth 0 the whole table. `staging` must be on the
+    table's file system; the caller removes it."""
     fresh, old = os.path.join(staging, "_fresh"), os.path.join(staging, "_old")
     os.makedirs(fresh)
     os.makedirs(old)
@@ -197,18 +215,33 @@ def commit_files(
         os.makedirs(os.path.join(fresh, head), exist_ok=True)
         for n in (name, f".{name}.crc"):
             os.rename(os.path.join(staging, head, n), os.path.join(fresh, head, n))
-    if not partitioned:
-        if os.path.exists(table):
-            os.rename(table, os.path.join(old, "table"))
-        os.makedirs(os.path.dirname(table), exist_ok=True)
-        os.rename(fresh, table)
-        return
-    for i, leaf in enumerate(sorted({os.path.dirname(rel) for rel in files})):
-        target = os.path.join(table, leaf)
+    parts = {"/".join(rel.split("/")[:depth]) for rel in files} if depth else {""}
+    for i, part in enumerate(sorted(parts)):
+        target = os.path.normpath(os.path.join(table, part))
         if os.path.exists(target):
             os.rename(target, os.path.join(old, str(i)))
         os.makedirs(os.path.dirname(target), exist_ok=True)
-        os.rename(os.path.join(fresh, leaf), target)
+        os.rename(os.path.normpath(os.path.join(fresh, part)), target)
+
+
+def _sweep_staging(root: str) -> None:
+    """Reclaim crashed writers' staging directories under the catalog
+    `root`, by the rule in the module docstring. The age is read from
+    the name, so no stat races a live writer's own cleanup."""
+    if not os.path.isdir(root):
+        return
+    now_ns = time.time_ns()
+    for d in os.listdir(root):
+        if not d.startswith("_staging-"):
+            continue
+        try:
+            born_ns = int(d.split("-")[1])
+        except ValueError:
+            continue
+        old = os.path.join(root, d, "_old")
+        if now_ns - born_ns > STAGING_GRACE_NS and not (
+                os.path.isdir(old) and os.listdir(old)):
+            shutil.rmtree(os.path.join(root, d), ignore_errors=True)
 
 
 def with_part_key(df: DataFrame, buckets: int = 32) -> DataFrame:
@@ -252,16 +285,25 @@ class TableCatalog:
         idempotent re-runs)."""
         self._write(df, name, partition_by, whole=not partition_by)
 
+    def _layout(self, df: DataFrame, partition_by: list[str]) -> tuple[DataFrame, list[str]]:
+        """The frame to write and its directory columns, outermost
+        first. A layout may nest more directories below `partition_by`;
+        a partition swaps with everything below it."""
+        return df, partition_by
+
     def _write(self, df: DataFrame, name: str, partition_by: list[str], whole: bool) -> None:
-        staging = os.path.join(self.root, f"_staging-{uuid.uuid4().hex}")
+        df, columns = self._layout(df, partition_by)
+        _sweep_staging(self.root)
+        staging = os.path.join(self.root, f"_staging-{time.time_ns()}-{uuid.uuid4().hex}")
         try:
-            files = [p for p, _ in write_files(df, staging, self.fmt, partition_by)]
-            if not files and not partition_by:
+            files = [p for p, _ in write_files(df, staging, self.fmt, columns)]
+            if not files and not columns:
                 files = [f"part-00000-{uuid.uuid4().hex}.{self.fmt}"]
                 _write_file(staging, files[0], to_arrow_schema(df.schema).empty_table(),
                             self.fmt)
             if files or whole:
-                commit_files(staging, self.path(name), files, partitioned=not whole)
+                commit_files(staging, self.path(name), files,
+                             0 if whole else len(partition_by))
         finally:
             shutil.rmtree(staging, ignore_errors=True)
 

@@ -49,10 +49,11 @@ def compact_tables(
         if isinstance(catalog, SnapshotCatalog):
             out[table] = catalog.rewrite_data_files(spark, table, ["part_day"])
         else:
+            # the file catalogs stage every file before the commit
+            # swaps it in, and JDBC stages in a table, so the rewrite
+            # reads the rows it replaces without a checkpoint
             df = catalog.read(spark, table).repartition("part_day")
-            catalog.overwrite_partitions(
-                df.localCheckpoint(eager=True), table, ["part_day"]
-            )
+            catalog.overwrite_partitions(df, table, ["part_day"])
             out[table] = 1
     return out
 

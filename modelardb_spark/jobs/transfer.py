@@ -177,24 +177,24 @@ def transfer_segments(
         else:
             merged = deduped
         merged = merged.persist()
-        rows_out = merged.count()
-        # dynamic overwrite replaces exactly this chunk's partitions;
-        # localCheckpoint breaks the read->overwrite lineage so Spark
-        # does not scan files it is about to replace
-        dst.overwrite_partitions(
-            merged.localCheckpoint(eager=True).sortWithinPartitions(
-                "mtid", "conv_id", "start_ms"
-            ),
-            table,
-            ["part_day"],
-        )
-        wall_ms = int((time.time() - t0) * 1000)
         per_day = {
             str(r["part_day"]): r
             for r in merged.groupBy("part_day")
             .agg(F.count("*").alias("rows"))
             .collect()
         }
+        rows_out = sum(int(r["rows"]) for r in per_day.values())
+        # dynamic overwrite replaces exactly this chunk's partitions.
+        # The writer stages every file before its commit swaps the
+        # destination's days, so `merged` may read the days it replaces;
+        # its counts are taken above, because after the commit a
+        # recomputed block would list files the swap moved away
+        dst.overwrite_partitions(
+            merged.sortWithinPartitions("mtid", "conv_id", "start_ms"),
+            table,
+            ["part_day"],
+        )
+        wall_ms = int((time.time() - t0) * 1000)
         for d in chunk:
             r = per_day.get(str(d))
             ckpt.record(

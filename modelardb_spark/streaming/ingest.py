@@ -170,12 +170,13 @@ def compact_stream_segments(
     compacted batch partitions.
 
     Safe w.r.t. the stream: run between triggers (or after
-    availableNow termination). The swap is write-new, move-old-away,
-    rename-new — a crash between steps leaves either the old or the
-    new complete tree, never a mix."""
-    import os
-    import shutil
-
+    availableNow termination). The table is rewritten in place by one
+    whole-table `overwrite`: the catalog's staged writer reads the old
+    files while it writes the new ones to a staging directory, then
+    swaps the table by two directory renames, so readers see the old or
+    the new complete tree, never a mix (a crash between the renames
+    leaves the old tree in the staging directory, which the
+    crash-leftover rule keeps)."""
     catalog = TableCatalog(out_root)
     if not catalog.exists(table):
         return 0
@@ -183,19 +184,11 @@ def compact_stream_segments(
     if "batch_id" not in df.columns:
         return 0
     n_batches = len(catalog.list_partitions(table, "batch_id"))
-    tmp = f"{table}__compact_tmp"
     catalog.overwrite(
         df.drop("batch_id").sortWithinPartitions("mtid", "conv_id", "start_ms"),
-        tmp,
+        table,
         ["part_day"],
     )
-    src, dst = catalog.path(table), catalog.path(tmp)
-    old = catalog.path(f"{table}__pre_compact")
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    os.rename(src, old)
-    os.rename(dst, src)
-    shutil.rmtree(old)
     return n_batches
 
 

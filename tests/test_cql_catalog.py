@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from modelardb_spark.config import EngineConfig
 from modelardb_spark.io.cql import (
     MAX_BATCH_STATEMENTS,
+    VNODES,
     CqlCatalog,
     _send_rows,
     ddl_statements,
@@ -69,7 +70,7 @@ def test_cql_token_bucket_layout(spark, cql_root):
     assert all("/tr=" in f for f in files)
     df = spark.read.parquet(cat.path("segments"))
     bad = df.where(
-        F.col("tr") != F.pmod(F.hash("conv_id"), F.lit(cat.vnodes)).cast("int")
+        F.col("tr") != F.pmod(F.hash("conv_id"), F.lit(VNODES)).cast("int")
     )
     assert bad.count() == 0
 
@@ -113,7 +114,25 @@ def test_cql_overwrite_partitions_replaces_days(spark, tmp_path):
     got = {(r["part_day"], r["start_ms"]) for r in cat.read(spark, "t").collect()}
     assert got == {(1, 10), (2, 99)}
     assert cat.list_partitions("t", "part_day") == ["1", "2"]
-    assert not glob.glob(os.path.join(str(tmp_path / "ks"), ".staging-*"))
+    assert not glob.glob(os.path.join(str(tmp_path / "ks"), "_staging-*"))
+
+
+def test_cql_day_overwrite_drops_missing_buckets(spark, tmp_path):
+    """A day is replaced with all its token buckets: a bucket the old
+    day held and the new rows lack keeps no rows, and other days keep
+    theirs."""
+    cat = CqlCatalog(str(tmp_path / "ks"))
+    schema = "conv_id STRING, metric STRING, start_ms LONG, part_day LONG"
+    old = spark.createDataFrame(
+        [(f"c{i}", "m", i, 1) for i in range(40)] + [("c0", "m", 0, 2)], schema)
+    cat.overwrite_partitions(old, "t", ["part_day"])
+    buckets = lambda day: sorted(os.listdir(os.path.join(cat.path("t"), f"part_day={day}")))
+    assert len(buckets(1)) > 1
+    cat.overwrite_partitions(
+        spark.createDataFrame([("c0", "m", 99, 1)], schema), "t", ["part_day"])
+    assert len(buckets(1)) == 1
+    got = sorted(tuple(r) for r in cat.read(spark, "t").collect())
+    assert got == [("c0", "m", 0, 2), ("c0", "m", 99, 1)]
 
 
 def test_cql_transfer_to_dir_catalog(spark, cql_root, tmp_path):
@@ -168,32 +187,6 @@ def test_cql_live_plane_is_honest_stub():
     clearly instead of pretending."""
     with pytest.raises(NotImplementedError, match="cassandra-driver"):
         _send_rows([{"conv_id": "c"}], "127.0.0.1")
-
-
-def test_cql_trash_sweep_spares_live_writers(spark, tmp_path):
-    """The crash-leftover trash sweep must never delete a CONCURRENT
-    writer's young trash dir mid-swap; only trash older than the grace
-    period is reclaimed."""
-    import time as _time
-
-    from modelardb_spark.io.cql import TRASH_GRACE_NS
-
-    cat = CqlCatalog(str(tmp_path / "ks2"))
-    df = spark.createDataFrame(
-        [("c1", "m", 10, 1)],
-        "conv_id STRING, metric STRING, start_ms LONG, part_day LONG",
-    )
-    cat.overwrite_partitions(df, "t", ["part_day"])
-    base = cat.path("t")
-    young = os.path.join(base, f".trash-99999-{_time.time_ns()}")
-    old = os.path.join(
-        base, f".trash-99998-{_time.time_ns() - TRASH_GRACE_NS - 1}"
-    )
-    os.makedirs(os.path.join(young, "0"))
-    os.makedirs(os.path.join(old, "0"))
-    cat.overwrite_partitions(df, "t", ["part_day"])
-    assert os.path.isdir(young)   # live concurrent writer: untouched
-    assert not os.path.exists(old)  # crashed writer: reclaimed
 
 
 def test_iter_cql_batches_byte_cap():

@@ -188,7 +188,7 @@ def test_written_files_keep_hadoop_checksums(spark, tmp_path, fmt):
         (i, i * 0.5, 1) for i in range(1, 400, 2)]
 
 
-@pytest.mark.parametrize("kind", ["dir", "snapshot"])
+@pytest.mark.parametrize("kind", ["dir", "snapshot", "cql"])
 def test_failed_write_leaves_table_untouched(spark, tmp_path, kind):
     """A partition overwrite whose job fails in a task raises, and the
     table keeps its rows and files: files the task wrote before it
@@ -236,7 +236,7 @@ def test_commit_publishes_only_listed_files(tmp_path):
         put(os.path.join(stage, "part_day=1", f".{name}.crc"))
     put(os.path.join(table, "part_day=1", "old.parquet"))
     put(os.path.join(table, "part_day=2", "kept.parquet"))
-    commit_files(stage, table, ["part_day=1/part-00000-a.parquet"], partitioned=True)
+    commit_files(stage, table, ["part_day=1/part-00000-a.parquet"], depth=1)
     assert _all_files(table) == [
         "part_day=1/.part-00000-a.parquet.crc", "part_day=1/part-00000-a.parquet",
         "part_day=2/kept.parquet"]
@@ -245,9 +245,79 @@ def test_commit_publishes_only_listed_files(tmp_path):
     stage2 = str(tmp_path / "stage2")
     put(os.path.join(stage2, "part_day=3", "part-00000-c.parquet"))
     put(os.path.join(stage2, "part_day=3", ".part-00000-c.parquet.crc"))
-    commit_files(stage2, table, ["part_day=3/part-00000-c.parquet"], partitioned=False)
+    commit_files(stage2, table, ["part_day=3/part-00000-c.parquet"], depth=0)
     assert _all_files(table) == [
         "part_day=3/.part-00000-c.parquet.crc", "part_day=3/part-00000-c.parquet"]
+
+
+@pytest.mark.parametrize("kind", ["dir", "cql"])
+def test_staging_sweep_spares_live_writers(spark, tmp_path, kind):
+    """A write reclaims the staging directories crashed writers left
+    under the catalog root, but never a young one (a concurrent writer
+    mid-commit) nor an old one whose `_old` holds a replaced partition
+    (a swap cut short, which may hold the only copy)."""
+    import time
+
+    from modelardb_spark.io.snapshots import make_catalog
+    from modelardb_spark.io.tables import STAGING_GRACE_NS
+
+    root = str(tmp_path)
+    catalog = make_catalog(root, "parquet", kind)
+    df = spark.createDataFrame(
+        [("c1", "m", 10, 1)],
+        "conv_id STRING, metric STRING, start_ms LONG, part_day LONG")
+    catalog.overwrite_partitions(df, "t", ["part_day"])
+    aged = time.time_ns() - STAGING_GRACE_NS - 1
+    young = os.path.join(root, f"_staging-{time.time_ns()}-a")
+    old = os.path.join(root, f"_staging-{aged}-b")
+    cut = os.path.join(root, f"_staging-{aged}-c")
+    for d in (os.path.join(young, "_fresh"), os.path.join(old, "_old"),
+              os.path.join(cut, "_old", "0")):
+        os.makedirs(d)
+    catalog.overwrite_partitions(df, "t", ["part_day"])
+    assert os.path.isdir(young)
+    assert not os.path.exists(old)
+    assert os.path.isdir(os.path.join(cut, "_old", "0"))
+    assert [tuple(r) for r in catalog.read(spark, "t").collect()] == [
+        ("c1", "m", 10, 1)]
+
+
+@pytest.mark.parametrize("kind", ["dir", "cql"])
+def test_compact_tables_one_file_per_leaf(spark, tmp_path, kind):
+    """Maintenance compaction rewrites a table written by several tasks
+    to one file per leaf directory and keeps every row."""
+    from modelardb_spark.io.snapshots import make_catalog
+    from modelardb_spark.jobs.maintain import compact_tables
+
+    catalog = make_catalog(str(tmp_path), "parquet", kind)
+    df = spark.range(0, 600, 1, 3).select(
+        F.concat(F.lit("c"), (F.col("id") % 7).cast("string")).alias("conv_id"),
+        F.lit("m").alias("metric"),
+        F.col("id").alias("start_ms"),
+        (F.col("id") % 2).alias("part_day"),
+    )
+    catalog.overwrite_partitions(df, "t", ["part_day"])
+    base = catalog.path("t")
+
+    def leaves():
+        """{leaf directory: its number of data files}"""
+        return {os.path.relpath(d, base): sum(f.endswith(".parquet") for f in files)
+                for d, _, files in os.walk(base) if files}
+
+    def per_day():
+        counts = {}
+        for leaf, n in leaves().items():
+            day = leaf.split("/")[0]
+            counts[day] = counts.get(day, 0) + n
+        return counts
+
+    assert sorted(per_day()) == ["part_day=0", "part_day=1"]
+    assert all(n >= 2 for n in per_day().values())
+    before = sorted(tuple(r) for r in catalog.read(spark, "t").collect())
+    assert compact_tables(spark, catalog, ["t"]) == {"t": 1}
+    assert set(leaves().values()) == {1}
+    assert sorted(per_day()) == ["part_day=0", "part_day=1"]
+    assert sorted(tuple(r) for r in catalog.read(spark, "t").collect()) == before
 
 
 def test_partition_columns_must_be_integral(spark, tmp_path):
