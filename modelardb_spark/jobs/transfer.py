@@ -123,9 +123,9 @@ def transfer_segments(
     dedup against destination partitions), crash-safe
     (`fail_after_chunks` injects a crash for the resume tests).
 
-    Checkpoint metrics note: `rows_out` per day is exact; `rows_in` and
-    `wall_ms` are chunk totals averaged across the chunk's days —
-    approximate per-day attribution, exact in aggregate."""
+    Checkpoint metrics note: `rows_in` and `rows_out` are each day's own
+    counts; `wall_ms` is the chunk's wall time averaged across its days
+    (exact in aggregate, not per day)."""
     dedup_keys = dedup_keys or SEGMENT_KEYS
     from modelardb_spark.io.snapshots import make_catalog
 
@@ -156,7 +156,10 @@ def transfer_segments(
         # only this chunk's day directories are listed and read
         incoming = src_df.where(F.col("part_day").isin(chunk_days_list))
         incoming = incoming.persist()
-        rows_in = incoming.count()
+        rows_in = {
+            str(r["part_day"]): int(r["count"])
+            for r in incoming.groupBy("part_day").count().collect()
+        }
 
         # intra-source dedup runs UNCONDITIONALLY: a source partition
         # carrying duplicate keys must land exactly once at the cloud
@@ -201,7 +204,7 @@ def transfer_segments(
                 ckpt_table,
                 partition_id=str(d),
                 input_snapshot_id=snapshot_id,
-                rows_in=rows_in // max(1, len(chunk)),
+                rows_in=rows_in.get(str(d), 0),
                 rows_out=int(r["rows"]) if r else 0,
                 wall_ms=wall_ms // max(1, len(chunk)),
             )

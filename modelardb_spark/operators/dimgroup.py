@@ -14,11 +14,11 @@ fit/decode matrix — regardless of how many conversations a member
 value matches, which is what survives 100 TB).
 
 Physical shape mirrors `fit_segments_grouped`: one shuffle keyed on
-(group, salt-day), rows sorted by (bin, member), and — because members
-within a bin arrive sorted by member index — a run of bins with a
-stable active set is ALREADY the row-major interleaved payload, so the
-fit consumes it with a plain reshape (no per-value Python). Active-set
-change detection is a per-BIN comparison, not per-row. At query time
+(group, salt-day), rows sorted by bin. The narrow rows scatter into the
+member matrix every group fit shares — one row per bin, one column per
+member index, NaN where a member is absent — and the one group run
+splitter (`groupfit._fit_member_runs`) cuts it into runs of a stable
+active set, exactly as for conversation groups. At query time
 `explode_dim_group_segments` maps each member back to its real
 (conv_id, metric), and the members roll up through the one rollup
 entry, `rollup_from_segments(explode_dim_group_segments(g, members),
@@ -42,13 +42,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from modelardb_spark.config import DEFAULT_CONFIG, EngineConfig
-from modelardb_spark.operators.fit import fit_arranged
-from modelardb_spark.operators.groupfit import (
-    GROUP_SEGMENT_SCHEMA,
-    _GCOLS,
-    _fit_group_run,
-    _single_ts_rows,
-)
+from modelardb_spark.operators.fit import fit_arranged, key_change
+from modelardb_spark.operators.groupfit import GROUP_SEGMENT_SCHEMA, _fit_member_runs
 
 
 def dim_group_members(
@@ -102,98 +97,29 @@ def materialize_members(members: DataFrame) -> DataFrame:
 def _fit_dim_group_runs(
     error_bound: float, length_bound: int, interval_ms: int
 ):
-    """Per-run body of `fit_segments_dim_grouped` over rows sorted by
-    (gkey, salt, bin_ms, midx): split into runs of a stable
-    active-member set, reshape each run's rows into the (T, K)
-    interleaved matrix, and hand it to the shared group cascade.
-
-    Run detection is vectorized (a uint64 member bitmask per bin
-    replaces the per-bin comparison while member indexes stay below
-    64), and single-timestamp runs — the dominant shape on
-    sparse-activity series — emit in bulk per member-count class
-    through `groupfit._single_ts_rows`, like the conversation-group
-    path."""
+    """Per-run body of `fit_segments_dim_grouped` over narrow rows
+    sorted by (gkey, salt, bin_ms): scatter each bin's rows into one
+    row of the member matrix (`vals[bin, midx] = value`, NaN where a
+    member is absent, width `gsize.max()`, which `max_group_size`
+    bounds) and hand it to the shared group run splitter. The rows of
+    one bin may arrive in any order."""
 
     def fit(pdf: pd.DataFrame) -> Iterator[pd.DataFrame]:
-        out: dict[str, list] = {c: [] for c in _GCOLS}
-        n = len(pdf)
-        gkey = pdf["gkey"].to_numpy()
-        salt = pdf["salt"].to_numpy()
-        ts = pdf["bin_ms"].to_numpy().astype(np.int64)
-        midx = pdf["midx"].to_numpy().astype(np.int64)
-        val = pdf["value"].to_numpy().astype(np.float32)
         gsize = pdf["gsize"].to_numpy().astype(np.int64)
-        # bin boundaries: (gkey, salt, bin) change
-        newbin = np.ones(n, dtype=bool)
-        newbin[1:] = (
-            (gkey[1:] != gkey[:-1])
-            | (salt[1:] != salt[:-1])
-            | (ts[1:] != ts[:-1])
+        row_bin = np.cumsum(key_change(pdf, ("gkey", "salt", "bin_ms")))
+        vals = np.full((row_bin[-1] + 1, gsize.max()), np.nan, dtype=np.float32)
+        vals[row_bin, pdf["midx"].to_numpy()] = pdf["value"].to_numpy()
+        first = np.flatnonzero(np.diff(row_bin, prepend=-1))
+        return _fit_member_runs(
+            pdf["gkey"].to_numpy()[first],
+            pdf["salt"].to_numpy()[first],
+            pdf["bin_ms"].to_numpy().astype(np.int64)[first],
+            vals,
+            gsize[first],
+            error_bound,
+            length_bound,
+            interval_ms,
         )
-        bstart = np.flatnonzero(newbin)
-        bend = np.concatenate((bstart[1:], [n]))
-        n_bins = bstart.size
-        bin_k = bend - bstart
-        b_gkey = gkey[bstart]
-        b_salt = salt[bstart]
-        b_ts = ts[bstart]
-        vector_ok = int(midx.max(initial=0)) < 64
-        if vector_ok:
-            # distinct member indexes per bin -> the power sum IS the
-            # set bitmask, so mask equality == same active-member set
-            b_mask = np.bitwise_or.reduceat(
-                np.uint64(1) << midx.astype(np.uint64), bstart
-            )
-        else:  # arbitrarily large member indexes: no compact mask
-            b_mask = np.zeros(n_bins, dtype=np.uint64)
-        brk = np.ones(n_bins, dtype=bool)
-        if n_bins > 1:
-            brk[1:] = (
-                (b_gkey[1:] != b_gkey[:-1])
-                | (b_salt[1:] != b_salt[:-1])
-                | ((b_ts[1:] - b_ts[:-1]) > interval_ms)
-                | (bin_k[1:] != bin_k[:-1])
-                | (b_mask[1:] != b_mask[:-1])
-            )
-            if not vector_ok:
-                for i in range(1, n_bins):
-                    if not brk[i] and not np.array_equal(
-                        midx[bstart[i] : bend[i]],
-                        midx[bstart[i - 1] : bend[i - 1]],
-                    ):
-                        brk[i] = True
-        rb = np.flatnonzero(brk)
-        run_lens = np.diff(np.append(rb, n_bins))
-        singles = run_lens == 1
-        run_ends = np.append(rb, n_bins)[1:]
-        for r in np.flatnonzero(~singles):
-            first_bin, last_bin = rb[r], run_ends[r] - 1
-            r0, r1 = bstart[first_bin], bend[last_bin]
-            k = int(bin_k[first_bin])
-            t_run = b_ts[first_bin : last_bin + 1]
-            vals2d = val[r0:r1].reshape(-1, k)
-            tids = [int(x) for x in midx[bstart[first_bin] : bend[first_bin]]]
-            _fit_group_run(
-                gkey[r0],
-                t_run,
-                vals2d,
-                tids,
-                list(range(int(gsize[r0]))),
-                error_bound,
-                length_bound,
-                interval_ms,
-                out,
-            )
-        if out["n"]:
-            yield pd.DataFrame(out, columns=_GCOLS)
-        sbin = rb[singles]  # bin index of each single-bin run
-        for k in np.unique(bin_k[sbin]):
-            sel = sbin[bin_k[sbin] == k]
-            rows = bstart[sel][:, None] + np.arange(k)
-            yield _single_ts_rows(
-                b_gkey[sel], b_ts[sel], val[rows], midx[rows], gsize[bstart[sel]],
-                interval_ms,
-            )
 
     return fit
 
@@ -217,7 +143,6 @@ def fit_segments_dim_grouped(
         ["gkey"],
         _fit_dim_group_runs(cfg.error_bound, cfg.length_bound, cfg.interval_ms),
         GROUP_SEGMENT_SCHEMA,
-        extra=["midx"],
     )
 
 

@@ -8,7 +8,7 @@ physical shape, built by `fit_arranged`:
 
     frame.withColumn(salt)
          .repartition(num, *keys, salt)
-         .sortWithinPartitions(*keys, salt, bin_ms, *extra)
+         .sortWithinPartitions(*keys, salt, bin_ms)
          .mapInPandas(kernel)
 
 rather than groupBy().applyInPandas(): a transcripts workload has a
@@ -22,8 +22,11 @@ point supplies only the per-run body that fits such a frame, whose run
 boundaries are then found vectorized. Every per-series body ends in
 `_fit_columns`, the one column kernel: `_fit_runs_wide` hands it the
 frame's metric columns, and the fused `_fit_runs_turns` first bins the
-raw turns with one `reduceat`. The group bodies live in groupfit.py
-and dimgroup.py.
+raw turns with one `reduceat`. Every group body ends in
+`groupfit._fit_member_runs`, the one group run splitter over a
+(rows, K) member matrix with NaN for an absent member:
+`fit_segments_grouped` stacks the metric columns into it, and
+`fit_segments_dim_grouped` scatters its narrow rows into it.
 
 Scale design:
 - **Salting**: the shuffle key includes ``salt = bin_ms div (salt_days
@@ -286,11 +289,10 @@ def fit_arranged(
     keys: Sequence[str],
     fit_runs: Callable[[pd.DataFrame], Iterable[pd.DataFrame]],
     schema: StructType,
-    extra: Sequence[str] = (),
 ) -> DataFrame:
     """The one physical shape of every fit: add the day `salt`, shuffle
-    once on (keys, salt), sort each partition by (keys, salt, bin_ms,
-    *extra), then run `fit_runs` over every `key_runs` frame of the
+    once on (keys, salt), sort each partition by (keys, salt, bin_ms),
+    then run `fit_runs` over every `key_runs` frame of the
     partition's Arrow batches in one `mapInPandas`."""
     salt_ms = cfg.salt_days * 86_400_000
     keyed = frame.withColumn("salt", (F.col("bin_ms") / F.lit(salt_ms)).cast("long"))
@@ -304,7 +306,7 @@ def fit_arranged(
             yield from fit_runs(runs)
 
     arranged = keyed.repartition(num, *run_keys).sortWithinPartitions(
-        *run_keys, "bin_ms", *extra
+        *run_keys, "bin_ms"
     )
     return arranged.mapInPandas(kernel, schema)
 

@@ -16,10 +16,13 @@ Reference semantics re-expressed Spark-first:
 - *Gaps*: when a member series has no value at the current grid of
   timestamps, the reference flushes and records the absent tids on the
   following segments (TimeSeriesGroup.java:153-176 emits NaN for the
-  gapped member; SegmentGenerator flushes on activity change). Here a
-  run is split whenever the active-member set changes, and each group
-  segment stores `gaps` = the ABSENT tids (SegmentGroup offsets
-  protocol, core/SegmentGroup.java:51-111).
+  gapped member; SegmentGenerator flushes on activity change). Here
+  every group fit, whichever clause formed the group, feeds one
+  representation: a (rows, K) float32 member matrix, one row per bin,
+  with NaN for an absent member, and each row's group size. One run
+  splitter (`_fit_member_runs`) cuts it wherever the active-member set
+  changes, and each group segment stores `gaps` = the ABSENT tids
+  (SegmentGroup offsets protocol, core/SegmentGroup.java:51-111).
 - *Explode*: at query time each group segment fans out to one logical
   segment per present tid (SegmentGroup.explode, :51-111) carrying
   (group_offset, group_size) so the decoder strides the interleaved
@@ -32,10 +35,12 @@ Reference semantics re-expressed Spark-first:
 Model cascade for groups — the reference's any-model-on-group-stream
 contract (core/SegmentGenerator.java:154-167 iterates every configured
 model type over the interleaved DataPoint stream): each run of a fixed
-active-member set goes through the one cascade,
-`models.cascade.fit_run`, on its (T, N) member matrix. PMC-Mean's
-shared constant must satisfy the bound for every member's value at
-every timestamp; Swing fits one shared line (`models.swing.swing_fit`:
+active-member set goes through the one cascade (`_fit_group_run`,
+the `models.cascade.fit_run` loop of `fit_segment` calls, with the
+optional ratio-feedback dynamic split) on its (T, N) matrix of present
+members. PMC-Mean's shared constant must satisfy the bound for every
+member's value at every timestamp; Swing fits one shared line
+(`models.swing.swing_fit`:
 the N same-timestamp appends constrain it to the interval
 [max_i(v_i - dev_i), min_i(v_i + dev_i)] at each timestamp); Gorilla
 runs over the interleaved stream; raw is the fallback. Selection uses
@@ -68,7 +73,6 @@ from modelardb_spark.config import DEFAULT_CONFIG, EngineConfig
 from modelardb_spark.models.cascade import (
     MTID_GORILLA,
     FittedSegment,
-    fit_run,
     fit_segment,
 )
 from modelardb_spark.models.errors import outside_bound_vec
@@ -132,26 +136,6 @@ def _append_segment(
     out["seg_sum"].append(seg.sums.tolist())
     out["p0"].append(seg.p0)
     out["p1"].append(seg.p1)
-
-
-def _fit_group_run(
-    conv: str,
-    ts: np.ndarray,
-    vals2d: np.ndarray,
-    tids: list[int],
-    all_tids: list[int],
-    error_bound: float,
-    length_bound: int,
-    interval_ms: int,
-    out: dict[str, list],
-) -> None:
-    """Cascade over one gap-free run of a fixed active-member set.
-
-    `vals2d` is (T, N) float32 for the present members only;
-    `tids`/`all_tids` give present members / the full group."""
-    gaps = [t for t in all_tids if t not in tids]
-    for seg in fit_run(ts, vals2d, error_bound, length_bound, 4.0 * len(gaps)):
-        _append_segment(out, conv, seg, tids, gaps, interval_ms)
 
 
 def _single_ts_rows(
@@ -250,70 +234,76 @@ _REJOIN_BACKOFF_TS = 4
 _DECISION_WINDOW_TS = 16
 
 
-def _fit_group_run_dynamic(
-    conv: str,
+def _fit_group_run(
+    key: str,
     ts: np.ndarray,
     vals2d: np.ndarray,
     tids: list[int],
-    all_tids: list[int],
+    gsize: int,
     error_bound: float,
     length_bound: int,
     interval_ms: int,
     out: dict[str, list],
-    split_fraction: float,
+    split_fraction: float | None = None,
 ) -> None:
-    """Ratio-FEEDBACK dynamic split/join over one run — the reference's
-    actual mechanism (SegmentGenerator.java:296-351, :403-455): keep a
-    running average of the group's finalized-segment compression
-    ratios; when a segment's ratio falls below `split_fraction x` that
-    average, split the group into subsets mutually within 2x the error
-    bound and fit them separately; attempt a rejoin after an
-    exponentially backed-off number of timestamps, rejoining when the
-    members' values are again mutually within the doubled bound.
-    Unlike the correlation router (input-driven), this adapts to what
-    actually compressed badly. At bound 0 both paths reconstruct
-    exactly, so the trigger only moves stored bytes."""
+    """Cascade over one gap-free run of a fixed active-member set:
+    `vals2d` is a C-contiguous (T, N) float32 matrix of the present
+    members `tids` of a group of `gsize` members, and `fit_segment`
+    fits one segment at a time from the front of the run, as `fit_run`
+    does.
+
+    With `split_fraction` set, the run takes the reference's
+    ratio-FEEDBACK dynamic split/join (SegmentGenerator.java:296-351,
+    :403-455): keep a running average of the group's finalized-segment
+    compression ratios; when a segment's ratio falls below
+    `split_fraction x` that average, split the group into subsets
+    mutually within 2x the error bound and fit them separately (each a
+    static run of its own); attempt a rejoin after an exponentially
+    backed-off number of timestamps, rejoining when the members' values
+    are again mutually within the doubled bound. Unlike the
+    correlation router (input-driven), this adapts to what actually
+    compressed badly. At bound 0 both cascades reconstruct exactly, so
+    the trigger only moves stored bytes."""
     n_ts, n_mem = vals2d.shape
-    vals2d = np.ascontiguousarray(vals2d)
-    gaps = [t for t in all_tids if t not in tids]
+    gaps = [t for t in range(gsize) if t not in tids]
     gap_bytes = 4.0 * len(gaps)
     max_vals = max(n_mem, (length_bound // n_mem) * n_mem)
-    all_idx = list(range(n_mem))
-
     ratios: list[float] = []
-    backoff = _REJOIN_BACKOFF_TS
     pos = 0
     while pos < n_ts:
         seg = fit_segment(ts[pos:], vals2d[pos:], error_bound, max_vals, gap_bytes)
-        _append_segment(out, conv, seg, tids, gaps, interval_ms)
+        _append_segment(out, key, seg, tids, gaps, interval_ms)
         pos += seg.n // n_mem
+        if split_fraction is None or n_mem == 1 or pos >= n_ts:
+            continue
         # the stored ratio (ModelType.java:49-54) feeds the split trigger
         ratio = (16.0 * seg.n) / (24.0 + len(seg.model) + gap_bytes)
-        trigger = (
-            n_mem > 1
-            and pos < n_ts
-            and len(ratios) > 0
-            and ratio < split_fraction * (sum(ratios) / len(ratios))
+        trigger = bool(ratios) and ratio < split_fraction * (
+            sum(ratios) / len(ratios)
         )
         ratios.append(ratio)
         if not trigger:
             continue
+        all_idx = list(range(n_mem))
         subsets = _split_subsets(
             vals2d[pos : pos + _DECISION_WINDOW_TS], all_idx, error_bound
         )
         if len(subsets) < 2:
             continue
         # SPLIT: fit each subset separately, probing a rejoin at
-        # exponentially backed-off checkpoints
+        # exponentially backed-off checkpoints; every episode starts
+        # from the base interval (SegmentGenerator.java:403-455 restarts
+        # the probe interval after every successful rejoin)
+        backoff = _REJOIN_BACKOFF_TS
         while pos < n_ts:
             upto = min(pos + backoff, n_ts)
             for sub in subsets:
                 _fit_group_run(
-                    conv,
+                    key,
                     ts[pos:upto],
-                    np.ascontiguousarray(vals2d[pos:upto, sub]),
+                    vals2d[pos:upto, sub],
                     [tids[j] for j in sub],
-                    all_tids,
+                    gsize,
                     error_bound,
                     length_bound,
                     interval_ms,
@@ -326,82 +316,98 @@ def _fit_group_run_dynamic(
             if len(_split_subsets(probe, all_idx, error_bound)) == 1:
                 break  # rejoin: values mutually within the bound again
             backoff *= 2
-        # per-episode back-off (SegmentGenerator.java:403-455 restarts
-        # the probe interval after every successful rejoin): a later
-        # split in the same run starts from the base interval again
-        backoff = _REJOIN_BACKOFF_TS
+
+
+def _fit_member_runs(
+    key: np.ndarray,
+    salt: np.ndarray,
+    ts: np.ndarray,
+    vals: np.ndarray,
+    gsize: np.ndarray,
+    error_bound: float,
+    length_bound: int,
+    interval_ms: int,
+    split_fraction: float | None = None,
+) -> Iterator[pd.DataFrame]:
+    """The one group run splitter, behind every group fit. One row per
+    (group `key`, `salt`, bin `ts`), sorted; `vals` is the (rows, K)
+    float32 member matrix, where NaN marks an absent member (the
+    reference's TimeSeriesGroup emits NaN for a gapped member,
+    TimeSeriesGroup.java:168-172), and `gsize` is each row's group
+    member count, so a run's gaps are range(gsize) minus its present
+    members. A run ends where the key, the salt day or the active-member
+    set changes, or at a time gap. Runs of two or more timestamps go
+    through `_fit_group_run`; single-timestamp runs (the dominant case
+    on sparse-activity series) emit in bulk per present-member count
+    through `_single_ts_rows`; they cannot trigger the dynamic split, so
+    this holds for both cascades."""
+    out: dict[str, list] = {c: [] for c in _GCOLS}
+    active = ~np.isnan(vals)
+    n = ts.size
+    brk = np.ones(n, dtype=bool)
+    brk[1:] = (
+        (key[1:] != key[:-1])
+        | (salt[1:] != salt[:-1])
+        | ((ts[1:] - ts[:-1]) > interval_ms)
+        | (active[1:] != active[:-1]).any(axis=1)
+    )
+    starts = np.flatnonzero(brk)
+    lens = np.diff(np.append(starts, n))
+    n_act = active[starts].sum(axis=1)
+    multi = (lens > 1) & (n_act > 0)
+    for s, e in zip(starts[multi].tolist(), (starts + lens)[multi].tolist()):
+        tids = np.flatnonzero(active[s]).tolist()
+        _fit_group_run(
+            key[s],
+            ts[s:e],
+            vals[s:e, tids],
+            tids,
+            int(gsize[s]),
+            error_bound,
+            length_bound,
+            interval_ms,
+            out,
+            split_fraction,
+        )
+    if out["n"]:
+        yield pd.DataFrame(out, columns=_GCOLS)
+    single = (lens == 1) & (n_act > 0)
+    srow, sk = starts[single], n_act[single]
+    for k in np.unique(sk):
+        sel = srow[sk == k]
+        act = active[sel]
+        yield _single_ts_rows(
+            key[sel],
+            ts[sel],
+            vals[sel][act].reshape(-1, k),
+            np.nonzero(act)[1].reshape(-1, k),
+            gsize[sel],
+            interval_ms,
+        )
 
 
 def _fit_group_runs(
-    metrics: tuple[str, ...],
     error_bound: float,
     length_bound: int,
     interval_ms: int,
     split_fraction: float | None = None,
 ):
     """Per-run body of `fit_segments_grouped`: rows sorted by (conv_id,
-    salt, bin_ms), one column per member metric."""
-    n_metrics = len(metrics)
+    salt, bin_ms), one column per member metric; the `METRICS` columns
+    are the member matrix of a conversation's group."""
 
     def fit(pdf: pd.DataFrame) -> Iterator[pd.DataFrame]:
-        out: dict[str, list] = {c: [] for c in _GCOLS}
-        conv = pdf["conv_id"].to_numpy()
-        salt = pdf["salt"].to_numpy()
-        ts = pdf["bin_ms"].to_numpy().astype(np.int64)
-        vals = np.column_stack(
-            [pdf[m].to_numpy().astype(np.float32) for m in metrics]
+        return _fit_member_runs(
+            pdf["conv_id"].to_numpy(),
+            pdf["salt"].to_numpy(),
+            pdf["bin_ms"].to_numpy().astype(np.int64),
+            np.column_stack([pdf[m].to_numpy().astype(np.float32) for m in METRICS]),
+            np.full(len(pdf), len(METRICS)),
+            error_bound,
+            length_bound,
+            interval_ms,
+            split_fraction,
         )
-        active = ~np.isnan(vals)  # (rows, M)
-        n = len(pdf)
-        brk = np.zeros(n, dtype=bool)
-        if n > 1:
-            brk[1:] = (
-                (conv[1:] != conv[:-1])
-                | (salt[1:] != salt[:-1])
-                | ((ts[1:] - ts[:-1]) > interval_ms)
-                | (active[1:] != active[:-1]).any(axis=1)
-            )
-        bounds = np.concatenate(([0], np.flatnonzero(brk), [n]))
-        bounds = np.unique(bounds)
-        all_tids = list(range(n_metrics))
-        starts = bounds[:-1]
-        n_act = active[starts].sum(axis=1)
-        single = (np.diff(bounds) == 1) & (n_act > 0)
-        for ridx in np.flatnonzero(~single & (n_act > 0)):
-            s, e = bounds[ridx], bounds[ridx + 1]
-            tids = [int(j) for j in np.flatnonzero(active[s])]
-            args = (
-                conv[s],
-                ts[s:e],
-                vals[s:e][:, tids],
-                tids,
-                all_tids,
-                error_bound,
-                length_bound,
-                interval_ms,
-                out,
-            )
-            if split_fraction is None:
-                _fit_group_run(*args)
-            else:
-                _fit_group_run_dynamic(*args, split_fraction)
-        if out["n"]:
-            yield pd.DataFrame(out, columns=_GCOLS)
-        # single-timestamp runs (the dominant case on sparse-activity
-        # series) emit in bulk per present-member count; they cannot
-        # trigger the dynamic split, so this holds for both cascades
-        srow, sk = starts[single], n_act[single]
-        for k in np.unique(sk):
-            sel = srow[sk == k]
-            act = active[sel]
-            yield _single_ts_rows(
-                conv[sel],
-                ts[sel],
-                vals[sel][act].reshape(-1, k),
-                np.nonzero(act)[1].reshape(-1, k),
-                np.full(sel.size, n_metrics),
-                interval_ms,
-            )
 
     return fit
 
@@ -417,14 +423,13 @@ def fit_segments_grouped(
 
     With `dynamic_split_fraction` set, the fit runs the reference's
     ratio-feedback dynamic split/join inside each run (see
-    `_fit_group_run_dynamic`); pass `DYNAMIC_SPLIT_FRACTION` for the
+    `_fit_group_run`); pass `DYNAMIC_SPLIT_FRACTION` for the
     reference default of 10."""
     return fit_arranged(
         wide_series,
         cfg,
         ["conv_id"],
         _fit_group_runs(
-            METRICS,
             cfg.error_bound,
             cfg.length_bound,
             cfg.interval_ms,

@@ -93,7 +93,7 @@ def _fit_closed(
     if grouped:
         from modelardb_spark.operators.groupfit import _fit_group_runs
 
-        fit = _fit_group_runs(METRICS, *bounds)
+        fit = _fit_group_runs(*bounds)
     else:
         fit = _fit_runs_wide(METRICS, *bounds)
     frames = list(fit(pdf))

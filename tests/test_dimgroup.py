@@ -128,3 +128,100 @@ def test_dim_group_wins_on_dense_aligned_members(spark):
     r1m = rollup_from_segments(seg, MINUTE_MS, CFG.interval_ms)
     assert r1m.count() == 8 * n
     assert r1m.where("vmin != 5.0 OR vmax != 5.0 OR cnt != 1").count() == 0
+
+
+def _mixed_dense_series(spark):
+    """Five conversations on a shared 120-bin grid (the channel
+    dimension puts them in groups of one and two), staggered so the
+    active-member set changes, with one member absent for ten bins. Every present member holds the same constant, then the
+    same line, then its own seeded noise, so the group runs go through
+    PMC, Swing and Gorilla with and without gaps."""
+    rng = np.random.default_rng(0)
+    recs = []
+    for c in range(5):
+        for m in ("turn_rate", "tool_usage"):
+            for i in range(3 * c, 120 - 2 * c):
+                if c == 4 and m == "tool_usage" and 60 <= i < 70:
+                    continue
+                v = 2.0 if i < 40 else 1.0 + 0.5 * i if i < 80 else rng.integers(8)
+                recs.append((f"conv{c}", m, 60_000 * i, float(v)))
+    return spark.createDataFrame(
+        recs, "conv_id string, metric string, bin_ms bigint, value float"
+    )
+
+
+def test_dim_group_fit_matches_sequential_replay(spark, series):
+    """The dimension-group fit must emit exactly the segments the
+    sequential reference-style replay produces over each run of a
+    stable active-member set — (start, end, mtid, model bytes, n, tids,
+    gaps) per group, with the absent members counted in the ratio's gap
+    term — on the fixture's sparse series and on a dense mixed one."""
+    for s in (series, _mixed_dense_series(spark)):
+        _assert_dim_group_replay(s)
+
+
+def _assert_dim_group_replay(series):
+    from tests.reference_oracle import oracle_fit_group_run
+
+    dims = conversation_dimensions(series)
+    members = dim_group_members(series, dims, by="channel", max_group_size=8)
+    gseg = fit_segments_dim_grouped(series, members, CFG)
+    rows = (
+        series.join(members, ["conv_id", "metric"])
+        .select("gkey", "bin_ms", "midx", "value", "gsize")
+        .collect()
+    )
+    bins: dict[str, dict[int, dict[int, float]]] = {}
+    gsize: dict[str, int] = {}
+    for r in rows:
+        bins.setdefault(r["gkey"], {}).setdefault(r["bin_ms"], {})[r["midx"]] = r[
+            "value"
+        ]
+        gsize[r["gkey"]] = r["gsize"]
+    expected: dict[str, list] = {}
+    for gkey, by_bin in bins.items():
+        ts = sorted(by_bin)
+        runs: list[list[int]] = []
+        for t in ts:
+            prev = runs[-1][-1] if runs else None
+            if (
+                prev is None
+                or t - prev > CFG.interval_ms
+                or t // 86_400_000 != prev // 86_400_000
+                or sorted(by_bin[t]) != sorted(by_bin[prev])
+            ):
+                runs.append([])
+            runs[-1].append(t)
+        segs = expected.setdefault(gkey, [])
+        for run in runs:
+            tids = sorted(by_bin[run[0]])
+            gaps = [m for m in range(gsize[gkey]) if m not in tids]
+            v2d = np.array(
+                [[by_bin[t][m] for m in tids] for t in run], dtype=np.float32
+            )
+            segs.extend(
+                (*seg, tids, gaps)
+                for seg in oracle_fit_group_run(
+                    np.array(run, dtype=np.int64),
+                    v2d,
+                    CFG.error_bound,
+                    50,
+                    len(gaps),
+                )
+            )
+    got: dict[str, list] = {}
+    for r in gseg.collect():
+        got.setdefault(r["conv_id"], []).append(
+            (
+                r["start_ms"],
+                r["end_ms"],
+                r["mtid"],
+                bytes(r["model"]),
+                r["n"],
+                list(r["tids"]),
+                list(r["gaps"]),
+            )
+        )
+    assert set(got) == set(expected)
+    for gkey in got:
+        assert sorted(got[gkey]) == sorted(expected[gkey]), gkey

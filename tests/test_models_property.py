@@ -6,6 +6,7 @@ invariant, (c) agree with the literal reference-loop oracle."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -125,11 +126,6 @@ def test_group_fit_roundtrip_property(rows, gaps_between):
     0 both must cover every point exactly once with exact values."""
     import pandas as pd
 
-    from modelardb_spark.operators.groupfit import (
-        DYNAMIC_SPLIT_FRACTION,
-        _fit_group_runs,
-    )
-
     # build the wide frame with optional >1-bin jumps between rows
     bins = []
     cur = 0
@@ -142,8 +138,8 @@ def test_group_fit_roundtrip_property(rows, gaps_between):
             "conv_id": ["c"] * len(rows),
             "salt": [0] * len(rows),
             "bin_ms": bins,
-            "m0": [r[0] for r in rows],
-            "m1": [r[1] for r in rows],
+            "turn_rate": [r[0] for r in rows],
+            "tool_usage": [r[1] for r in rows],
         }
     )
     _roundtrip_group_paths(pdf, bins)
@@ -158,7 +154,7 @@ def _roundtrip_group_paths(pdf, bins):
     )
 
     for split_fraction in (None, DYNAMIC_SPLIT_FRACTION):
-        fit = _fit_group_runs(("m0", "m1"), 0.0, 50, INTERVAL, split_fraction)
+        fit = _fit_group_runs(0.0, 50, INTERVAL, split_fraction)
         frames = list(fit(pdf))
         segs = pd.concat(frames, ignore_index=True) if frames else None
         out = {0: {}, 1: {}}
@@ -174,7 +170,7 @@ def _roundtrip_group_paths(pdf, bins):
                         b = row.start_ms + j * INTERVAL
                         assert b not in out[tid], "duplicate coverage"
                         out[tid][b] = float(vals[j])
-        for tid, col in ((0, "m0"), (1, "m1")):
+        for tid, col in ((0, "turn_rate"), (1, "tool_usage")):
             want = {
                 int(b): float(np.float32(v))
                 for b, v in zip(pdf["bin_ms"], pdf[col])
@@ -183,6 +179,7 @@ def _roundtrip_group_paths(pdf, bins):
             assert out[tid] == want, f"split_fraction={split_fraction}"
 
 
+@pytest.mark.parametrize("width", [3, 70])
 @settings(max_examples=20, deadline=None)
 @given(
     st.lists(
@@ -195,20 +192,23 @@ def _roundtrip_group_paths(pdf, bins):
         max_size=30,
     )
 )
-def test_dim_group_fit_roundtrip_property(rows):
-    """Arbitrary sparse 3-member dimension groups through the
-    variable-width kernel (sorted sparse rows -> reshape interleave ->
+def test_dim_group_fit_roundtrip_property(width, rows):
+    """Arbitrary sparse dimension groups of `width` members through the
+    variable-width kernel (sorted sparse rows -> member matrix ->
     shared cascade): every present value must decode back exactly at
-    bound 0, each exactly once, with absent members in `gaps`."""
+    bound 0, each exactly once, with absent members in `gaps`. The
+    three drawn members sit at the first, middle and last member index,
+    so width 70 reaches member indexes >= 64."""
     import pandas as pd
 
     from modelardb_spark.operators.dimgroup import _fit_dim_group_runs
 
+    slots = np.linspace(0, width - 1, 3).astype(int).tolist()
     recs = []
     for i, vals in enumerate(rows):
-        for m, v in enumerate(vals):
+        for m, v in zip(slots, vals):
             if v is not None:
-                recs.append(("g", 0, i * INTERVAL, m, float(np.float32(v)), 3))
+                recs.append(("g", 0, i * INTERVAL, m, float(np.float32(v)), width))
     if not recs:
         return
     pdf = pd.DataFrame(
@@ -217,11 +217,11 @@ def test_dim_group_fit_roundtrip_property(rows):
     fit = _fit_dim_group_runs(0.0, 50, INTERVAL)
     frames = list(fit(pdf))
     segs = pd.concat(frames, ignore_index=True) if frames else None
-    out = {0: {}, 1: {}, 2: {}}
+    out = {m: {} for m in slots}
     if segs is not None and len(segs):
         for row in segs.itertuples(index=False):
             n_ts = int((row.end_ms - row.start_ms) // INTERVAL) + 1
-            assert sorted(list(row.tids) + list(row.gaps)) == [0, 1, 2]
+            assert sorted(list(row.tids) + list(row.gaps)) == list(range(width))
             for goff, tid in enumerate(row.tids):
                 vals = decode_group_values(
                     row.mtid, row.model, n_ts, row.group_size, goff,
@@ -231,7 +231,7 @@ def test_dim_group_fit_roundtrip_property(rows):
                     b = row.start_ms + j * INTERVAL
                     assert b not in out[tid], "duplicate coverage"
                     out[tid][b] = float(vals[j])
-    want = {0: {}, 1: {}, 2: {}}
+    want = {m: {} for m in slots}
     for (_, _, b, m, v, _) in recs:
         want[m][b] = float(np.float32(v))
     assert out == want

@@ -207,3 +207,36 @@ def test_transfer_intra_source_duplicates_with_existing_dst(spark, edge_root, tm
     dup = dst.groupBy(*SEGMENT_KEYS).count().where(F.col("count") > 1).count()
     assert dup == 0
     assert dst.count() == orig_rows
+
+
+def test_transfer_checkpoints_each_days_own_rows_in(spark, edge_root, tmp_path):
+    """Two source days with unequal segment counts shipped in ONE chunk:
+    each day's checkpoint row records that day's own input count, not
+    the chunk's average."""
+    import shutil
+
+    from modelardb_spark.io.checkpoints import CheckpointStore
+
+    edge = str(tmp_path / "two_day_edge")
+    shutil.copytree(edge_root, edge)
+    cat = TableCatalog(edge)
+    seg = cat.read(spark, "segments")
+    d0, d1 = sorted(int(d) for d in cat.list_partitions("segments", "part_day"))[:2]
+    first = seg.where(F.col("part_day") == d0)
+    second = seg.where(F.col("part_day") == d1)
+    two_days = first.unionByName(second.limit(max(1, second.count() // 3)))
+    cat.overwrite(two_days.localCheckpoint(eager=True), "segments", ["part_day"])
+    want = {
+        str(r["part_day"]): r["count"]
+        for r in cat.read(spark, "segments").groupBy("part_day").count().collect()
+    }
+    assert len(want) == 2 and len(set(want.values())) == 2
+
+    cloud = str(tmp_path / "two_day_cloud")
+    m = transfer_segments(spark, edge, cloud, chunk_days=64)
+    assert m["chunks"] == 1
+    got = {
+        r["partition_id"]: r["rows_in"]
+        for r in CheckpointStore(cloud).metrics("transfer:segments")
+    }
+    assert got == want
