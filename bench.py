@@ -9,9 +9,9 @@ local[$SPARK_GRAFT_CPUS]; prints ONE JSON line:
 
 The headline number is ingested-to-rolled-up throughput (turns/sec) on
 a deterministic synthetic transcripts table (BASELINE.json metric),
-measured over the ingest job's own tier pipeline
-(`modelardb_spark.jobs.ingest.tiers`: fit -> day-keyed segments ->
-1m/1h/1d rollups), each frame counted instead of written.
+measured over the ingest job itself (`modelardb_spark.jobs.ingest.ingest`:
+fit, then one pass that writes each day's segments and derives and
+writes its 1m/1h/1d rollups) into a temporary catalog.
 
 --scaling: the same headline pipeline at local[1] vs local[4] (the
 sandbox's only unsaturated 4x rung; override with BENCH_SCALE_N/_4N)
@@ -65,11 +65,13 @@ def _spark(cores: str, master: str | None = None):
 
 
 def headline_pipeline(spark, n_convs: int = SYN_CONVS, turns: int = SYN_TURNS) -> tuple[int, float]:
-    """Synthetic transcripts -> rollup tiers; returns (turns, seconds).
-    Runs the ingest job's own pipeline (`jobs.ingest.tiers`) and counts
-    each frame it yields instead of writing it."""
+    """Synthetic transcripts -> stored rollup tiers; returns (turns,
+    seconds). Runs the ingest job itself into a temporary catalog."""
+    import shutil
+    import tempfile
+
     from modelardb_spark.config import EngineConfig
-    from modelardb_spark.jobs.ingest import tiers
+    from modelardb_spark.jobs.ingest import ingest
     from modelardb_spark.operators.transcripts import synthetic_transcripts
 
     cfg = EngineConfig()
@@ -78,21 +80,17 @@ def headline_pipeline(spark, n_convs: int = SYN_CONVS, turns: int = SYN_TURNS) -
     )
     t = t.persist()
     n_turns = t.count()  # materialize input outside the timed window
-    # warmup: spin up Python workers + codegen before the timed window
-    warm = synthetic_transcripts(spark, n_convs=32, turns_per_conv=20, mega_convs=0)
-    for _, frame in tiers(warm, cfg):
-        frame.count()
-    verbose = os.environ.get("BENCH_VERBOSE") == "1"
-
-    t0 = tm = time.time()
-    for name, frame in tiers(t, cfg):
-        frame.count()
-        now = time.time()
-        if verbose:
-            print(f"  [stage] {name}: {now - tm:.2f}s", file=sys.stderr)
-        tm = now
-    dt = time.time() - t0
-    t.unpersist()
+    work = tempfile.mkdtemp(prefix="bench-ingest-")
+    try:
+        # warmup: spin up Python workers + codegen before the timed window
+        warm = synthetic_transcripts(spark, n_convs=32, turns_per_conv=20, mega_convs=0)
+        ingest(spark, warm, f"{work}/warm", cfg)
+        t0 = time.time()
+        ingest(spark, t, f"{work}/cat", cfg)
+        dt = time.time() - t0
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+        t.unpersist()
     return n_turns, dt
 
 

@@ -211,12 +211,13 @@ class CqlCatalog(TableCatalog):
 
     # conv_id is the gid-analogue partition key; clustering order is
     # (metric, start_ms) — PRIMARY KEY ((conv_id), metric, start_ms)
-    def _key_cols(self, df: DataFrame) -> list[str]:
-        return ["conv_id"] if "conv_id" in df.columns else [df.columns[0]]
+    @staticmethod
+    def _key_cols(columns: list[str]) -> list[str]:
+        return ["conv_id"] if "conv_id" in columns else [columns[0]]
 
-    def _cluster_cols(self, df: DataFrame) -> list[str]:
-        return [c for c in ("metric", "start_ms", "bucket_ms")
-                if c in df.columns]
+    @staticmethod
+    def _cluster_cols(columns: list[str]) -> list[str]:
+        return [c for c in ("metric", "start_ms", "bucket_ms") if c in columns]
 
     def token_of(self, spark: SparkSession, *key_values) -> int:
         """Driver-side token of a partition key — computed BY Spark
@@ -250,14 +251,26 @@ class CqlCatalog(TableCatalog):
 
     # -- writes --------------------------------------------------------
     def _layout(
-        self, df: DataFrame, partition_by: list[str]
-    ) -> tuple[DataFrame, list[str]]:
+        self, df: DataFrame, partition_by: list[str], derived: dict
+    ) -> tuple[DataFrame, list[str], dict]:
         """Token bucket directories below the partition columns, rows
-        in clustering order inside each bucket file. The staged writer
-        swaps whole partitions, so a bucket the new rows lack does not
-        survive from the old ones."""
-        key = self._key_cols(df)
+        in clustering order inside each bucket file. Derived rows share
+        the bucket of the rows they come from and are sorted into their
+        own clustering order (a stable sort, like Spark's). The staged
+        writer swaps whole partitions, so a bucket the new rows lack
+        does not survive from the old ones."""
+        key = self._key_cols(df.columns)
         df = df.withColumn(
             _TR, F.pmod(F.hash(*key), F.lit(VNODES)).cast("int"))
-        order = partition_by + [_TR] + key + self._cluster_cols(df)
-        return df.sortWithinPartitions(*order), partition_by + [_TR]
+        order = partition_by + [_TR] + key + self._cluster_cols(df.columns)
+
+        def clustered(fn):
+            def run(rows, earlier, keys):
+                out = fn(rows, earlier, keys)
+                cols = out.column_names
+                return out.sort_by(
+                    [(c, "ascending") for c in self._key_cols(cols) + self._cluster_cols(cols)])
+            return run
+
+        return (df.sortWithinPartitions(*order), partition_by + [_TR],
+                {t: clustered(fn) for t, fn in derived.items()})

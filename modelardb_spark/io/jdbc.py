@@ -32,6 +32,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from modelardb_spark.io.tables import derived_frame
+
 
 #: SQLStates meaning "object already exists" — the only DDL failure an
 #: idempotent CREATE may swallow. Derby: X0Y32; PostgreSQL: 42P07
@@ -209,21 +211,53 @@ class JdbcCatalog:
         self._ensure_index(name, df)
 
     def overwrite_partitions(
-        self, df: DataFrame, name: str, partition_by: list[str]
-    ) -> None:
-        """Atomic dynamic partition overwrite: stage the incoming rows
-        in `{name}_stage` (executor-parallel JDBC write, scratch data —
-        a crash here touches nothing), then swap them in with ONE
-        driver-side transaction: DELETE the partitions present in the
-        staging table + ``INSERT ... SELECT`` + commit. Readers and a
-        crash at any point see either the old or the new partition
-        content, never an empty window."""
+        self,
+        df: DataFrame,
+        name: str,
+        partition_by: list[str],
+        derived: dict | None = None,
+        sum_of: str | None = None,
+    ) -> dict[tuple, tuple[int, int]]:
+        """Atomic dynamic partition overwrite of `name`, then of each
+        `derived` table (see `io.tables.write_files`); this catalog
+        writes no files, so a derived table is built as its own frame
+        (`io.tables.derived_frame`) over the persisted `df`. Returns
+        `TableCatalog.overwrite_partitions`' totals, counted by the
+        database."""
         if len(partition_by) != 1:
             raise NotImplementedError("JdbcCatalog: single partition column")
+        if not derived:
+            return self._replace_partitions(df, name, partition_by[0], sum_of)
+        df = df.persist()
+        try:
+            totals = self._replace_partitions(df, name, partition_by[0], sum_of)
+            for t in derived:
+                self._replace_partitions(
+                    derived_frame(df, partition_by, derived, t), t, partition_by[0])
+            return totals
+        finally:
+            df.unpersist()
+
+    def _totals(self, table: str, col: str, sum_of: str | None) -> dict[tuple, tuple[int, int]]:
+        total = f"SUM({_q(sum_of)})" if sum_of else "0"
+        return {
+            (int(v),): (int(rows), int(s or 0))
+            for v, rows, s in self._query(
+                f"SELECT {_q(col)}, COUNT(*), {total} FROM {table} GROUP BY {_q(col)}")
+        }
+
+    def _replace_partitions(
+        self, df: DataFrame, name: str, col: str, sum_of: str | None = None
+    ) -> dict[tuple, tuple[int, int]]:
+        """Stage the incoming rows in `{name}_stage` (executor-parallel
+        JDBC write, scratch data — a crash here touches nothing), then
+        swap them in with ONE driver-side transaction: DELETE the
+        partitions present in the staging table + ``INSERT ... SELECT``
+        + commit. Readers and a crash at any point see either the old
+        or the new partition content, never an empty window."""
         if not self.exists(name):
-            self.overwrite(df, name, partition_by)
-            return
-        col = partition_by[0]
+            self.overwrite(df, name, [col])
+            return self._totals(name, col, sum_of)
         # writer-unique staging name: two concurrent writers of the
         # same table (ingest + transfer on disjoint days) must never
         # share a stage, or one transaction swaps in the other's rows
@@ -261,6 +295,7 @@ class JdbcCatalog:
         stage = f"{name}_stage_{_os.getpid()}_{_time.time_ns() % 10**12}"
         self._write(df, stage)
         try:
+            totals = self._totals(stage, col, sum_of)
             cols = ", ".join(_q(c) for c in df.columns)
             # the DELETE keys off the staging table itself
             # (IN-subquery): type-correct for any partition column type
@@ -270,6 +305,7 @@ class JdbcCatalog:
                 f"(SELECT DISTINCT {_q(col)} FROM {stage})",
                 f"INSERT INTO {name} ({cols}) SELECT {cols} FROM {stage}",
             )
+            return totals
         finally:
             try:
                 self._execute(f"DROP TABLE {stage}")

@@ -69,7 +69,12 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-from modelardb_spark.io.tables import TableCatalog, write_files
+from modelardb_spark.io.tables import (
+    TableCatalog,
+    derived_schemas,
+    partition_totals,
+    write_files,
+)
 
 _META = "meta"
 _DATA = "data"
@@ -195,47 +200,60 @@ class SnapshotCatalog:
         return out
 
     # --------------------------------------------------------------- commit
-    def _write_files(self, df: DataFrame, name: str, partition_by: list[str] | None):
-        """Write one commit's immutable data directory and its
-        partition-pure manifest files; returns the new manifest-list
-        rows. The data files come from `io.tables.write_files`, which
-        lists exactly the files of the job's successful task attempts:
-        only those enter a manifest, so cost is O(files written),
-        independent of table size. If the job fails, its commit
-        directory is removed."""
+    def _write_files(
+        self,
+        df: DataFrame,
+        name: str,
+        partition_by: list[str] | None,
+        derived: dict | None = None,
+        sum_of: str | None = None,
+    ) -> tuple[dict[str, list[dict]], list]:
+        """Write one commit's immutable data directory in table `name`
+        and in each `derived` table (see `io.tables.write_files`), and
+        each table's partition-pure manifest files; returns the new
+        manifest-list rows by table, and what the tasks wrote. Only the
+        files of the job's successful task attempts enter a manifest,
+        so cost is O(files written), independent of table size. If the
+        job fails, its commit directories are removed."""
         commit = f"commit-{uuid.uuid4().hex[:12]}"
-        target = os.path.join(self._data(name), commit)
+        targets = {t: os.path.join(self._data(t), commit) for t in (name, *(derived or {}))}
         try:
-            written = write_files(df, target, self.fmt, partition_by or [])
+            written = write_files(df, targets, self.fmt, partition_by or [], derived, sum_of)
         except BaseException:
-            shutil.rmtree(target, ignore_errors=True)
+            for target in targets.values():
+                shutil.rmtree(target, ignore_errors=True)
             raise
-        by_part: dict[tuple, list[dict]] = {}
-        for rel, size in written:
-            part = _partition_of(rel)
-            by_part.setdefault(_pkey(part), []).append(
-                {"path": f"{commit}/{rel}", "partition": part, "bytes": size}
-            )
+        rows: dict[str, list[dict]] = {}
+        for t in targets:
+            by_part: dict[tuple, list[dict]] = {}
+            for w in written:
+                if w.table == t:
+                    part = _partition_of(w.path)
+                    by_part.setdefault(_pkey(part), []).append(
+                        {"path": f"{commit}/{w.path}", "partition": part, "bytes": w.bytes}
+                    )
+            rows[t] = [self._write_manifest_file(t, key, entries)
+                       for key, entries in sorted(by_part.items())]
+        return rows, written
+
+    def _write_manifest_file(self, name: str, key: tuple, entries: list[dict]) -> dict:
+        """Write one partition's immutable manifest file of table
+        `name`; returns its manifest-list row."""
         mdir = self._manifest_dir(name)
         os.makedirs(mdir, exist_ok=True)
-        rows = []
-        for key, entries in sorted(by_part.items()):
-            mname = f"m-{uuid.uuid4().hex[:16]}.json"
-            tmp = os.path.join(mdir, f".tmp-{mname}")
-            with open(tmp, "w") as f:
-                json.dump({"entries": entries}, f, sort_keys=True)
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(tmp, os.path.join(mdir, mname))
-            rows.append(
-                {
-                    "path": f"{_MANIFESTS}/{mname}",
-                    "partition": dict(key),
-                    "files": len(entries),
-                    "bytes": sum(e["bytes"] for e in entries),
-                }
-            )
-        return rows
+        mname = f"m-{uuid.uuid4().hex[:16]}.json"
+        tmp = os.path.join(mdir, f".tmp-{mname}")
+        with open(tmp, "w") as f:
+            json.dump({"entries": entries}, f, sort_keys=True)
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, os.path.join(mdir, mname))
+        return {
+            "path": f"{_MANIFESTS}/{mname}",
+            "partition": dict(key),
+            "files": len(entries),
+            "bytes": sum(e["bytes"] for e in entries),
+        }
 
     def _try_link(self, name: str, version: int, manifest: dict) -> bool:
         """Publish a fully-written manifest list as version `version`.
@@ -322,15 +340,23 @@ class SnapshotCatalog:
         partition_by: list[str] | None,
         delta_with,
         check_schema: bool = True,
-    ) -> int:
-        new_rows = self._write_files(df, name, partition_by)
-        return self._commit(
-            name,
-            op,
-            lambda base: delta_with(base, new_rows),
-            schema_json=df.schema.json(),
-            check_schema=check_schema,
-        )
+        derived: dict | None = None,
+        sum_of: str | None = None,
+    ) -> dict[tuple, tuple[int, int]]:
+        """Write `df` (and its `derived` tables), then commit each
+        table in turn; returns `partition_totals` of table `name`."""
+        new_rows, written = self._write_files(df, name, partition_by, derived, sum_of)
+        schemas = {name: df.schema,
+                   **derived_schemas(df.schema, partition_by or [], derived or {})}
+        for t, rows in new_rows.items():
+            self._commit(
+                t,
+                op,
+                lambda base, rows=rows: delta_with(base, rows),
+                schema_json=schemas[t].json(),
+                check_schema=check_schema,
+            )
+        return partition_totals(written, name, len(partition_by or []))
 
     # ------------------------------------------------- TableCatalog surface
     def overwrite(
@@ -349,21 +375,28 @@ class SnapshotCatalog:
         )
 
     def overwrite_partitions(
-        self, df: DataFrame, name: str, partition_by: list[str]
-    ) -> None:
-        """Dynamic partition overwrite as ONE atomic commit: partitions
-        present in `df` are replaced, all others are untouched — and a
-        reader never sees the in-between state. Manifests are
-        partition-pure, so this is a pure manifest-LIST edit: replaced
-        partitions' rows drop off the list, untouched manifests are
-        never even opened."""
+        self,
+        df: DataFrame,
+        name: str,
+        partition_by: list[str],
+        derived: dict | None = None,
+        sum_of: str | None = None,
+    ) -> dict[tuple, tuple[int, int]]:
+        """Dynamic partition overwrite as ONE atomic commit per table:
+        partitions present in `df` are replaced, all others are
+        untouched — and a reader never sees the in-between state.
+        Manifests are partition-pure, so this is a pure manifest-LIST
+        edit: replaced partitions' rows drop off the list, untouched
+        manifests are never even opened. `derived` tables and the
+        returned totals are `TableCatalog.overwrite_partitions`'."""
 
         def delta(base, new):
             replaced = {_pkey(m["partition"]) for m in new}
             kept = [m for m in base if _pkey(m["partition"]) not in replaced]
             return kept + new
 
-        self._commit_write(df, name, "overwrite_partitions", partition_by, delta)
+        return self._commit_write(df, name, "overwrite_partitions", partition_by, delta,
+                                  derived=derived, sum_of=sum_of)
 
     def drop_partitions(self, name: str, column: str, values: list) -> int:
         """Metadata-only commit (Iceberg `DELETE WHERE part = v`): no

@@ -21,25 +21,30 @@ The contract is that `snapshot_id` names an immutable input: a re-run
 under the same id must be given the same rows, since nothing of the
 input is kept between runs.
 
-Tiers: `tiers` is the one derive -> fit -> 1m/1h/1d pipeline (fit via
-`fit_turns`, 1m/1h via `rollup_from_segments`, 1d cascaded from 1h).
-`ingest` writes each frame it yields and `bench.headline_pipeline`
-counts them, so the bench measures this code minus the writes.
+Tiers: the segments write is the only pass that reads the fitted
+segments (`fit_turns`). For each day it holds, a write task writes the
+day's segments file and its `rollup_1m`, `rollup_1h` and `rollup_1d`
+files, which it derives from all its segments at once (`tiers`: the
+in-task `operators.rollup.tier_rows` kernel for 1m and 1h,
+`cascade_rows` for 1d from the 1h rows), and the driver commits all
+four tables (`io.tables.write_files`' derived tables). The query-side
+`rollup_from_segments`/`rollup_cascade` compute the same rows
+(tests/test_pipeline.py checks the stored tiers against them).
+`bench.headline_pipeline` runs `ingest` itself.
 
 Layout: every table holds one data file per day partition. The fitted
-segments are rebalanced by day once; the segments write and the
-map-only 1m tier inherit that clustering, and the 1h and 1d outputs are
-rebalanced the same way. AQE packs small days into one task and splits
-a day past its advisory partition size (README.md "Scale design" has
-why the file count matters).
+segments are repartitioned by day, so each write task holds whole days
+(AQE packs small days into one task and never splits a day; README.md
+"Scale design" has why the file count matters), and the tiers share
+the segments' partitions.
 """
 
 from __future__ import annotations
 
 import argparse
 import time
-from collections.abc import Iterator
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import TimestampType
@@ -48,15 +53,18 @@ import modelardb_spark.operators.fit as fitmod
 from modelardb_spark.config import EngineConfig
 from modelardb_spark.io.checkpoints import CheckpointStore
 from modelardb_spark.io.tables import DAY_MS, model_type_table, with_part_key
-from modelardb_spark.operators.groupfit import (
-    explode_group_segments,
-    fit_segments_grouped,
-)
-from modelardb_spark.operators.rollup import (
+from modelardb_spark.operators.groupfit import explode_group_members, fit_segments_grouped
+
+# rollup_cascade and rollup_from_segments are the query-side tiers; they
+# stay importable here for tooling that wraps them
+from modelardb_spark.operators.rollup import (  # noqa: F401
     HOUR_MS,
+    KERNEL_COLS,
     MINUTE_MS,
+    cascade_rows,
     rollup_cascade,
     rollup_from_segments,
+    tier_rows,
 )
 from modelardb_spark.operators.series import METRICS, derive_series_wide
 
@@ -94,45 +102,25 @@ def fit_turns(
     )
 
 
-def tiers(
-    turns: DataFrame,
-    cfg: EngineConfig,
-    grouped: bool = False,
-    dynamic_split_fraction: float | None = None,
-) -> Iterator[tuple[str, DataFrame]]:
-    """Yields ("segments" | "rollup_1m" | "rollup_1h" | "rollup_1d",
-    frame), each keyed by `part_day` with one task per day. Take each
-    frame in turn: later tiers read the persisted segments and 1h
-    frames, which are released when the generator closes. 1m is
-    map-only at a 1-minute fit interval; 1h comes from the segments
-    (small shuffle) and 1d from 1h, so point-sized data is never
-    re-shuffled."""
-    # one task per day: the segments and the map-only 1m tier then
-    # write one file per day
-    segments = with_part_key(
-        fit_turns(turns, cfg, grouped, dynamic_split_fraction), cfg.conv_buckets
-    ).hint("rebalance", "part_day").persist()
-    members = explode_group_segments(segments) if grouped else segments
+def tiers(cfg: EngineConfig, grouped: bool = False) -> dict:
+    """The rollup tiers derived from a write task's segments, as
+    `io.tables.write_files` takes them: 1m and 1h from the segments
+    (group segments explode their members first), 1d from the 1h rows,
+    every row carrying its segment's partition columns."""
 
-    def by_day(tier: DataFrame) -> DataFrame:
-        return tier.withColumn("part_day", (F.col("window_ms") / DAY_MS).cast("long"))
+    def tier(window_ms: int):
+        def run(rows: pa.Table, _, keys: list[str]) -> pa.Table:
+            members = explode_group_members(rows, keys) if grouped else rows
+            cols = [*KERNEL_COLS, *(("goff", "gsize") if grouped else ()), *keys]
+            return tier_rows(members.select(cols).to_pandas(), window_ms, cfg.interval_ms,
+                             [rows.schema.field(k) for k in keys])
+        return run
 
-    r1h = None
-    try:
-        yield "segments", segments
-        yield "rollup_1m", by_day(
-            rollup_from_segments(members, MINUTE_MS, cfg.interval_ms)
-        )
-        r1h = by_day(rollup_from_segments(members, HOUR_MS, cfg.interval_ms))
-        r1h = r1h.hint("rebalance", "part_day").persist()
-        yield "rollup_1h", r1h
-        yield "rollup_1d", by_day(rollup_cascade(r1h, DAY_MS)).hint(
-            "rebalance", "part_day"
-        )
-    finally:
-        segments.unpersist()
-        if r1h is not None:
-            r1h.unpersist()
+    return {
+        "rollup_1m": tier(MINUTE_MS),
+        "rollup_1h": tier(HOUR_MS),
+        "rollup_1d": lambda rows, done, keys: cascade_rows(done["rollup_1h"], DAY_MS),
+    }
 
 
 def ingest(
@@ -151,7 +139,9 @@ def ingest(
     """Run the pipeline; returns metrics. `fail_after_chunks` injects a
     crash after N chunks (resume tests only). `grouped=True` compresses
     each conversation's metrics as ONE group (groupfit.py; ~1.9x fewer
-    stored bytes, identical rollups at bound 0);
+    stored bytes under the reference's 24 + model bytes accounting, but
+    only 4.8% fewer parquet bytes on the perfbench ingest input;
+    identical rollups at bound 0);
     `dynamic_split_fraction` additionally enables the reference's
     ratio-feedback dynamic split/join inside the group fit."""
     # The resume unit (UTC day) is only self-contained because segments
@@ -213,40 +203,31 @@ def ingest(
             (F.col("ts") >= lo) & (F.col("ts") < hi)
             & _day_of_ts("ts").isin(chunk)
         )
-        for name, frame in tiers(part, cfg, grouped, dynamic_split_fraction):
-            if name == "segments":
-                # "n" counts stored values on both the per-series and
-                # the group segment schemas (group seg_cnt is a
-                # per-member array); this collect also fills the cache
-                # the writes read
-                stats = {
-                    r["part_day"]: r
-                    for r in frame.groupBy("part_day")
-                    .agg(F.count("*").alias("segs"), F.sum("n").alias("points"))
-                    .collect()
-                }
-                # sort within files so parquet row-group min/max stats
-                # prune by model type, conversation, and time (Iceberg
-                # analogue: write-ordered-by); part_day leads because
-                # the partitioned writer needs rows grouped by it and
-                # re-sorts otherwise
-                frame = frame.sortWithinPartitions(
-                    "part_day", "mtid", "conv_id", "start_ms"
-                )
-            catalog.overwrite_partitions(frame, name, ["part_day"])
+        # one task per day, rows sorted within it so parquet row-group
+        # min/max stats prune by model type, conversation, and time
+        # (Iceberg analogue: write-ordered-by); part_day leads because
+        # the writer groups rows by it
+        segments = with_part_key(
+            fit_turns(part, cfg, grouped, dynamic_split_fraction), cfg.conv_buckets
+        ).repartition("part_day").sortWithinPartitions("part_day", "mtid", "conv_id", "start_ms")
+        # "n" counts stored values on both the per-series and the group
+        # segment schemas (group seg_cnt is a per-member array)
+        stats = catalog.overwrite_partitions(
+            segments, "segments", ["part_day"], derived=tiers(cfg, grouped), sum_of="n"
+        )
 
         wall_ms = int((time.time() - t0) * 1000)
         for d in chunk:
-            r = stats.get(d)
+            segs, points = stats.get((d,), (0, 0))
             ckpt.record(
                 "segments",
                 partition_id=str(d),
                 input_snapshot_id=snapshot_id,
-                rows_in=int(r["points"]) if r else 0,
-                rows_out=int(r["segs"]) if r else 0,
+                rows_in=points,
+                rows_out=segs,
                 wall_ms=wall_ms // max(1, len(chunk)),
             )
-        rows_out_total += sum(int(r["segs"]) for r in stats.values())
+        rows_out_total += sum(segs for segs, _ in stats.values())
 
     catalog.overwrite(model_type_table(spark), "model_type")
 

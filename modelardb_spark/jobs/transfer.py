@@ -152,65 +152,71 @@ def transfer_segments(
             raise RuntimeError("injected failure for transfer resume test")
         t0 = time.time()
         chunk_days_list = [int(d) for d in chunk]
-        # partition-column filter -> directory pruning at the source:
-        # only this chunk's day directories are listed and read
-        incoming = src_df.where(F.col("part_day").isin(chunk_days_list))
-        incoming = incoming.persist()
-        rows_in = {
-            str(r["part_day"]): int(r["count"])
-            for r in incoming.groupBy("part_day").count().collect()
-        }
+        # released in `finally`: a failed chunk must not leave its blocks
+        # cached, or a retry with the same plan is served the stale ones
+        incoming = merged = None
+        try:
+            # partition-column filter -> directory pruning at the source:
+            # only this chunk's day directories are listed and read
+            incoming = src_df.where(F.col("part_day").isin(chunk_days_list))
+            incoming = incoming.persist()
+            rows_in = {
+                str(r["part_day"]): int(r["count"])
+                for r in incoming.groupBy("part_day").count().collect()
+            }
 
-        # intra-source dedup runs UNCONDITIONALLY: a source partition
-        # carrying duplicate keys must land exactly once at the cloud
-        # whether or not the destination table already exists
-        deduped = incoming.dropDuplicates(dedup_keys)
-        if dst.exists(table):
-            existing = dst.read(spark, table).where(
-                F.col("part_day").isin(chunk_days_list)
+            # intra-source dedup runs UNCONDITIONALLY: a source partition
+            # carrying duplicate keys must land exactly once at the cloud
+            # whether or not the destination table already exists
+            deduped = incoming.dropDuplicates(dedup_keys)
+            if dst.exists(table):
+                existing = dst.read(spark, table).where(
+                    F.col("part_day").isin(chunk_days_list)
+                )
+                # idempotent dedup: rows the cloud already holds for these
+                # keys are kept; only genuinely new segments append. The
+                # join is per-partition (both sides pruned to the chunk's
+                # days) so its size is bounded by the chunk, not the table.
+                fresh = deduped.join(
+                    existing.select(*dedup_keys), dedup_keys, "left_anti"
+                )
+                merged = existing.unionByName(fresh)
+            else:
+                merged = deduped
+            merged = merged.persist()
+            per_day = {
+                str(r["part_day"]): r
+                for r in merged.groupBy("part_day")
+                .agg(F.count("*").alias("rows"))
+                .collect()
+            }
+            rows_out = sum(int(r["rows"]) for r in per_day.values())
+            # dynamic overwrite replaces exactly this chunk's partitions.
+            # The writer stages every file before its commit swaps the
+            # destination's days, so `merged` may read the days it replaces;
+            # its counts are taken above, because after the commit a
+            # recomputed block would list files the swap moved away
+            dst.overwrite_partitions(
+                merged.sortWithinPartitions("mtid", "conv_id", "start_ms"),
+                table,
+                ["part_day"],
             )
-            # idempotent dedup: rows the cloud already holds for these
-            # keys are kept; only genuinely new segments append. The
-            # join is per-partition (both sides pruned to the chunk's
-            # days) so its size is bounded by the chunk, not the table.
-            fresh = deduped.join(
-                existing.select(*dedup_keys), dedup_keys, "left_anti"
-            )
-            merged = existing.unionByName(fresh)
-        else:
-            merged = deduped
-        merged = merged.persist()
-        per_day = {
-            str(r["part_day"]): r
-            for r in merged.groupBy("part_day")
-            .agg(F.count("*").alias("rows"))
-            .collect()
-        }
-        rows_out = sum(int(r["rows"]) for r in per_day.values())
-        # dynamic overwrite replaces exactly this chunk's partitions.
-        # The writer stages every file before its commit swaps the
-        # destination's days, so `merged` may read the days it replaces;
-        # its counts are taken above, because after the commit a
-        # recomputed block would list files the swap moved away
-        dst.overwrite_partitions(
-            merged.sortWithinPartitions("mtid", "conv_id", "start_ms"),
-            table,
-            ["part_day"],
-        )
-        wall_ms = int((time.time() - t0) * 1000)
-        for d in chunk:
-            r = per_day.get(str(d))
-            ckpt.record(
-                ckpt_table,
-                partition_id=str(d),
-                input_snapshot_id=snapshot_id,
-                rows_in=rows_in.get(str(d), 0),
-                rows_out=int(r["rows"]) if r else 0,
-                wall_ms=wall_ms // max(1, len(chunk)),
-            )
-        shipped_total += rows_out
-        incoming.unpersist()
-        merged.unpersist()
+            wall_ms = int((time.time() - t0) * 1000)
+            for d in chunk:
+                r = per_day.get(str(d))
+                ckpt.record(
+                    ckpt_table,
+                    partition_id=str(d),
+                    input_snapshot_id=snapshot_id,
+                    rows_in=rows_in.get(str(d), 0),
+                    rows_out=int(r["rows"]) if r else 0,
+                    wall_ms=wall_ms // max(1, len(chunk)),
+                )
+            shipped_total += rows_out
+        finally:
+            for frame in (incoming, merged):
+                if frame is not None:
+                    frame.unpersist()
 
     _merge_metadata(spark, src, dst, "time_series", ["conv_id", "metric"])
     _merge_metadata(spark, src, dst, "model_type", ["mtid"])

@@ -29,7 +29,7 @@ from pyspark.sql.types import (
 )
 
 from modelardb_spark.models.segment import segment_points
-from modelardb_spark.operators.rollup import _KERNEL_COLS
+from modelardb_spark.operators.rollup import KERNEL_COLS
 
 POINT_SCHEMA = StructType(
     [
@@ -75,4 +75,4 @@ def grid(segments: DataFrame) -> DataFrame:
     groups' ``ukey``) columns, so members decode with the group
     stride."""
     member = [c for c in ("goff", "gsize", "ukey") if c in segments.columns]
-    return segments.select(*_KERNEL_COLS, *member).mapInPandas(_points, POINT_SCHEMA)
+    return segments.select(*KERNEL_COLS, *member).mapInPandas(_points, POINT_SCHEMA)

@@ -16,7 +16,12 @@ the one rollup entry for per-series segments and exploded (dimension-)
 group members; at the fit interval (the finest tier) it skips the
 merge and is map-only. `rollup_cascade` and `calendar_rollup`
 re-aggregate a finer tier with the same merge, and
-`segment_aggregates` merges the fit-time seg_* columns.
+`segment_aggregates` merges the fit-time seg_* columns. Ingest derives
+its stored tiers with the same kernel inside its segments write:
+`tier_rows` (the in-task `rollup_from_segments`), `merge_rows` (the
+in-task merge, adding each window's sums in a hash aggregate's order)
+and `cascade_rows` (the in-task `rollup_cascade`), each called once
+per write task over the whole days it holds.
 
 Counts are pure timestamp arithmetic ``(sub_end - sub_start)/interval
 + 1`` and therefore always exact (SparkUDAF.scala:34-55 semantics).
@@ -26,9 +31,12 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     DoubleType,
     FloatType,
@@ -56,10 +64,33 @@ ROLLUP_SCHEMA = StructType(
     ]
 )
 
-_KERNEL_COLS = (
+#: a stored rollup tier's columns as ingest derives them (before the
+#: partition columns each row carries)
+TIER_ARROW_SCHEMA = to_arrow_schema(ROLLUP_SCHEMA).append(pa.field("mean", pa.float64(), False))
+
+KERNEL_COLS = (
     "conv_id", "metric", "start_ms", "end_ms", "interval_ms",
     "mtid", "model", "p0", "p1",
 )
+
+
+def _partial_columns(
+    seg: pd.DataFrame, window_ms: int, carry: tuple = ()
+) -> dict[str, np.ndarray]:
+    """`segment_partials` of a batch of segment rows as `ROLLUP_SCHEMA`
+    columns, one entry per (segment ∩ window), plus the `carry` columns
+    of each partial's segment."""
+    row, win, cnt, vmin, vmax, vsum = segment_partials(seg, window_ms)
+    return {
+        "conv_id": seg["conv_id"].to_numpy()[row],
+        "metric": seg["metric"].to_numpy()[row],
+        "window_ms": win,
+        "cnt": cnt,
+        "vmin": vmin,
+        "vmax": vmax,
+        "vsum": vsum,
+        **{c: seg[c].to_numpy()[row] for c in carry},
+    }
 
 
 def window_partials(segments: DataFrame, window_ms: int) -> DataFrame:
@@ -73,21 +104,10 @@ def window_partials(segments: DataFrame, window_ms: int) -> DataFrame:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            row, win, cnt, vmin, vmax, vsum = segment_partials(pdf, window_ms)
-            yield pd.DataFrame(
-                {
-                    "conv_id": pdf["conv_id"].to_numpy()[row],
-                    "metric": pdf["metric"].to_numpy()[row],
-                    "window_ms": win,
-                    "cnt": cnt,
-                    "vmin": vmin,
-                    "vmax": vmax,
-                    "vsum": vsum,
-                }
-            )
+            yield pd.DataFrame(_partial_columns(pdf, window_ms))
 
     member = [c for c in ("goff", "gsize", "ukey") if c in segments.columns]
-    return segments.select(*_KERNEL_COLS, *member).mapInPandas(run, ROLLUP_SCHEMA)
+    return segments.select(*KERNEL_COLS, *member).mapInPandas(run, ROLLUP_SCHEMA)
 
 
 def merge_partials(partials: DataFrame, *keys) -> DataFrame:
@@ -104,6 +124,72 @@ def merge_partials(partials: DataFrame, *keys) -> DataFrame:
         )
         .withColumn("mean", F.col("vsum") / F.col("cnt"))
     )
+
+
+def merge_rows(rows: dict[str, np.ndarray], window_ms: int) -> dict[str, np.ndarray]:
+    """`merge_partials` inside a task: `ROLLUP_SCHEMA` columns (and any
+    other column, which each output row takes from its key's first
+    row) -> one row per (conv_id, metric, window_ms floored to
+    `window_ms`). Counts add and extremes take min/max; each key's sums
+    add in row order, one at a time from 0.0, the order in which a
+    Spark hash aggregate adds a task's rows, so the sums are its own to
+    the bit (NumPy's ``add.reduceat`` sums pairwise and is not). Keys
+    come out ordered by conversation and metric in order of first
+    appearance, then window."""
+    if len(rows["window_ms"]) == 0:
+        return dict(rows)
+    win = rows["window_ms"] // window_ms * window_ms
+    conv, _ = pd.factorize(rows["conv_id"])
+    metric, metrics = pd.factorize(rows["metric"])
+    slot = (win - win.min()) // window_ms
+    key = (conv * len(metrics) + metric) * (int(slot.max()) + 1) + slot
+    _, inverse = np.unique(key, return_inverse=True)
+    order = np.argsort(inverse, kind="stable")
+    sizes = np.bincount(inverse)
+    starts = np.cumsum(sizes) - sizes
+    vsum = rows["vsum"][order]
+    total = np.zeros(sizes.size)
+    for k in range(int(sizes.max())):
+        live = np.flatnonzero(sizes > k)
+        total[live] += vsum[starts[live] + k]
+    head = order[starts]
+    return {
+        **{c: v[head] for c, v in rows.items()},
+        "window_ms": win[head],
+        "cnt": np.add.reduceat(rows["cnt"][order], starts),
+        "vmin": np.minimum.reduceat(rows["vmin"][order], starts),
+        "vmax": np.maximum.reduceat(rows["vmax"][order], starts),
+        "vsum": total,
+    }
+
+
+def _tier_table(rows: dict[str, np.ndarray], carry: list[pa.Field]) -> pa.Table:
+    schema = pa.schema([*TIER_ARROW_SCHEMA, *carry])
+    return pa.Table.from_pydict({**rows, "mean": rows["vsum"] / rows["cnt"]}, schema=schema)
+
+
+def tier_rows(
+    seg: pd.DataFrame, window_ms: int, interval_ms: int, carry: list[pa.Field]
+) -> pa.Table:
+    """`rollup_from_segments` inside a task: segment rows (per-series
+    segments or exploded group members, with the columns
+    `segment_partials` reads) -> their rollup rows at `window_ms`,
+    `TIER_ARROW_SCHEMA` and then the `carry` columns, taken from each
+    row's segment. Map-only at the fit interval, like
+    `rollup_from_segments`; otherwise the partials merge with
+    `merge_rows`."""
+    rows = _partial_columns(seg, window_ms, tuple(f.name for f in carry))
+    return _tier_table(rows if window_ms == interval_ms else merge_rows(rows, window_ms), carry)
+
+
+def cascade_rows(finer: pa.Table, window_ms: int) -> pa.Table:
+    """`rollup_cascade` inside a task: finer tier rows -> coarser ones,
+    the finer rows adding in the order given; columns past
+    `TIER_ARROW_SCHEMA` carry over."""
+    carry = [f for f in finer.schema if f.name not in TIER_ARROW_SCHEMA.names]
+    rows = {c: finer.column(c).to_numpy(zero_copy_only=False)
+            for c in [*ROLLUP_SCHEMA.names, *(f.name for f in carry)]}
+    return _tier_table(merge_rows(rows, window_ms), carry)
 
 
 def rollup_from_segments(

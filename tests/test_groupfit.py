@@ -545,3 +545,25 @@ def test_group_fit_matches_sequential_replay(spark, wide, gseg):
     assert set(got) == set(expected)
     for conv in got:
         assert sorted(got[conv]) == sorted(expected[conv]), conv
+
+
+def test_arrow_explode_matches_spark_explode(spark, sf_medium):
+    """`explode_group_members` (in a task, on Arrow rows) yields the
+    rows of `explode_group_segments`, in the same order, with the same
+    column types."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    from modelardb_spark.operators.groupfit import explode_group_members
+
+    wide = derive_series_wide(transcripts_from_events(spark, sf_medium))
+    gseg = fit_segments_grouped(wide, EngineConfig(error_bound=5.0)).cache()
+    try:
+        want = explode_group_segments(gseg)
+        got = explode_group_members(gseg.toArrow())
+        assert [f.dataType for f in from_arrow_schema(got.schema)] == [
+            f.dataType for f in want.schema]
+        assert got.column_names == want.columns
+        assert [tuple(d.values()) for d in got.to_pylist()] == [tuple(r) for r in want.collect()]
+        assert (pd.Series(got.column("gsize").to_numpy()) > 1).any()
+    finally:
+        gseg.unpersist()

@@ -310,3 +310,125 @@ def test_ingest_tiers_at_30s_interval(spark, tmp_path):
         raw = _raw_rollup(series, window_ms)
         assert stored.count() == raw.count(), tier
         assert _mismatches(stored, raw, keys).count() == 0, tier
+
+
+@pytest.fixture(scope="module")
+def tier_input(spark):
+    """Eight conversations over eight hours across a midnight, whose
+    turns per minute ramp from 20 to 64 and restart every 45 minutes,
+    with one turn of noise. At bound 5 they fit largely as Swing
+    segments, several to an hour, whose sums are not integers."""
+    base, minutes, convs = 1_704_657_600_000, 8 * 60, 8  # 2024-01-07 20:00 UTC
+    grid_ = spark.range(convs * minutes).select(
+        (F.col("id") % convs).alias("c"), (F.col("id") / convs).cast("long").alias("m"), "id")
+    turns = (20 + (F.col("m") + 7 * F.col("c")) % 45 + F.pmod(F.xxhash64("id"), F.lit(2)))
+    t = grid_.select("c", "m", F.explode(F.sequence(F.lit(1), turns.cast("int"))).alias("j"))
+    return t.select(
+        F.concat(F.lit("ramp"), F.col("c").cast("string")).alias("conv_id"),
+        F.timestamp_millis(F.lit(base) + F.col("m") * MINUTE_MS + F.col("j") * 500).alias("ts"),
+        F.when(F.col("j") % 3 == 0, F.lit("search")).alias("tool"),
+    ).cache()
+
+
+def _bits(rows):
+    """Rows with every float as its exact bit pattern, sorted."""
+    return sorted(tuple(v.hex() if isinstance(v, float) else v for v in r) for r in rows)
+
+
+def _assert_tier_parity(spark, root, cfg, grouped):
+    """Each stored tier equals the query-side rollup over the stored
+    segments, row for row and bit for bit."""
+    from modelardb_spark.io.tables import TableCatalog
+    from modelardb_spark.operators.groupfit import explode_group_segments
+
+    catalog = TableCatalog(root)
+    segs = catalog.read(spark, "segments")
+    members = explode_group_segments(segs) if grouped else segs
+    r1h = rollup_from_segments(members, HOUR_MS, cfg.interval_ms)
+    want = {
+        "rollup_1m": rollup_from_segments(members, MINUTE_MS, cfg.interval_ms),
+        "rollup_1h": r1h,
+        "rollup_1d": rollup_cascade(r1h, DAY_MS),
+    }
+    cols = ["conv_id", "metric", "window_ms", "cnt", "vmin", "vmax", "vsum", "mean"]
+    for tier, frame in want.items():
+        got = _bits(catalog.read(spark, tier).select(*cols).collect())
+        assert got == _bits(frame.select(*cols).collect()), tier
+    return catalog
+
+
+@pytest.mark.parametrize("bound", [0.0, 5.0])
+@pytest.mark.parametrize("grouped", [False, True])
+def test_ingest_tiers_match_query_rollups(spark, tier_input, tmp_path, bound, grouped):
+    """The tiers ingest derives inside its segments write equal
+    `rollup_from_segments`/`rollup_cascade` over the stored segments,
+    `vsum` to the bit."""
+    from modelardb_spark.jobs.ingest import ingest
+
+    cfg = EngineConfig(error_bound=bound)
+    root = str(tmp_path / "cat")
+    ingest(spark, tier_input, root, cfg, grouped=grouped)
+    catalog = _assert_tier_parity(spark, root, cfg, grouped)
+    if bound and not grouped:
+        # some sums are not integers (the group fit keeps this input's
+        # sums integral)
+        assert catalog.read(spark, "rollup_1h").where(
+            F.col("vsum") != F.floor("vsum")).count() > 0
+
+
+@pytest.mark.parametrize("grouped", [False, True])
+def test_ingest_tiers_of_a_day_split_across_batches(spark, tier_input, tmp_path, grouped):
+    """A write task that gets a day's segments in several Arrow batches
+    still derives the day's tiers from all of them."""
+    from modelardb_spark.io.tables import TableCatalog
+    from modelardb_spark.jobs.ingest import ingest
+
+    cfg = EngineConfig(error_bound=5.0)
+    root = str(tmp_path / "cat")
+    batch = 10
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(batch))
+    try:
+        ingest(spark, tier_input, root, cfg, grouped=grouped)
+    finally:
+        spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
+    per_day = TableCatalog(root).read(spark, "segments").groupBy("part_day").count()
+    assert per_day.agg(F.max("count")).first()[0] > 2 * batch
+    _assert_tier_parity(spark, root, cfg, grouped)
+
+
+def test_merge_rows_adds_like_a_hash_aggregate(spark):
+    """`merge_rows` adds each key's sums in row order, one at a time,
+    as Spark's hash aggregate adds one task's rows: on sums whose
+    order shows in the last bits, its rows equal `merge_partials` over
+    the same rows in one partition, to the bit."""
+    import pandas as pd
+
+    from modelardb_spark.operators.rollup import ROLLUP_SCHEMA, merge_partials, merge_rows
+
+    rng = np.random.default_rng(3)
+    n = 4000
+    rows = {
+        "conv_id": np.array([f"c{i}" for i in rng.integers(0, 40, n)], dtype=object),
+        "metric": np.array(["turn_rate", "tool_usage"], dtype=object)[rng.integers(0, 2, n)],
+        "window_ms": rng.integers(0, 6, n) * MINUTE_MS + rng.integers(0, MINUTE_MS, n),
+        "cnt": rng.integers(1, 60, n),
+        "vmin": rng.random(n).astype(np.float32),
+        "vmax": rng.random(n).astype(np.float32) + 1,
+        "vsum": rng.standard_normal(n) * 1e3,
+    }
+    got = merge_rows(rows, MINUTE_MS)
+    keys = list(zip(rows["conv_id"], rows["metric"], rows["window_ms"] // MINUTE_MS))
+    forward: dict = {}
+    backward: dict = {}
+    for k, v in zip(keys, rows["vsum"]):
+        forward[k] = forward.get(k, 0.0) + v
+    for k, v in zip(keys[::-1], rows["vsum"][::-1]):
+        backward[k] = backward.get(k, 0.0) + v
+    assert any(forward[k] != backward[k] for k in forward)  # the order shows
+    df = spark.createDataFrame(pd.DataFrame(rows), ROLLUP_SCHEMA).coalesce(1)
+    want = merge_partials(df.withColumn(
+        "window_ms", (F.col("window_ms") / MINUTE_MS).cast("long") * MINUTE_MS),
+        "conv_id", "metric", "window_ms")
+    cols = ["conv_id", "metric", "window_ms", "cnt", "vmin", "vmax", "vsum"]
+    assert _bits(zip(*(got[c].tolist() for c in cols))) == _bits(
+        [tuple(r) for r in want.select(*cols).collect()])

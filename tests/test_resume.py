@@ -431,3 +431,105 @@ def test_grouped_ingest_same_rollups(spark, transcripts, tmp_path):
     seg_b = TableCatalog(b).read(spark, "segments")
     assert "tids" in seg_b.columns and "gaps" in seg_b.columns
     assert seg_b.where(F.col("group_size") == 2).count() > 0
+
+
+@pytest.mark.parametrize("grouped", [False, True])
+def test_checkpoint_counts_come_from_the_write(spark, transcripts, tmp_path, grouped):
+    """Each day's checkpoint row holds the day's stored segments and
+    stored values (sum of `n`), as the write tasks count them, also
+    when one chunk holds days of unequal size."""
+    root = str(tmp_path / "cat")
+    m = ingest(spark, transcripts, root, EngineConfig(), snapshot_id="s1", grouped=grouped)
+    assert m["chunks"] == 1
+    want = {
+        str(r["part_day"]): (int(r["points"]), int(r["segs"]))
+        for r in TableCatalog(root).read(spark, "segments").groupBy("part_day")
+        .agg(F.count("*").alias("segs"), F.sum("n").alias("points")).collect()
+    }
+    assert len({segs for _, segs in want.values()}) > 1
+    got = {r["partition_id"]: (r["rows_in"], r["rows_out"])
+           for r in CheckpointStore(root).metrics("segments")}
+    assert got == want
+    assert m["segments_written"] == sum(segs for _, segs in want.values())
+
+
+@pytest.mark.parametrize("kind", ["dir", "cql"])
+@pytest.mark.parametrize("whole", [False, True])
+def test_failed_commit_keeps_each_partition(spark, tmp_path, monkeypatch, kind, whole):
+    """A write whose k-th `os.rename` fails, for every k, raises and
+    leaves each touched partition (for a whole-table overwrite, the
+    table) of each table it writes at its old or its new version, never
+    missing; a partition it does not touch keeps its old one, and no
+    staging directory is left behind."""
+    import shutil
+
+    from modelardb_spark.io.snapshots import make_catalog
+
+    def frame(days, v):
+        return spark.createDataFrame(
+            [(f"c{i}", "m", i, d, v) for d in days for i in range(3)],
+            "conv_id STRING, metric STRING, start_ms LONG, part_day LONG, v LONG")
+
+    # a derived table: one row per partition, its row count
+    derived = {} if whole else {
+        "t_rows": lambda rows, _, keys: rows.group_by(keys).aggregate([([], "count_all")])}
+    tables = ["t", *derived]
+
+    def write(root, df):
+        catalog = make_catalog(root, "parquet", kind)
+        if whole:
+            catalog.overwrite(df, "t", ["part_day"])
+        else:
+            catalog.overwrite_partitions(df, "t", ["part_day"], derived=derived)
+
+    def state(root):
+        catalog = make_catalog(root, "parquet", kind)
+        out = {}
+        for t in tables:
+            for r in catalog.read(spark, t).collect():
+                out.setdefault((t, r["part_day"]), []).append(tuple(r))
+        return {k: sorted(v) for k, v in out.items()}
+
+    base = str(tmp_path / "base")
+    write(base, frame([1, 2, 3], 0))
+    old = state(base)
+    new_frame = frame([2, 4] if whole else [2, 3], 1)
+    done = str(tmp_path / "done")
+    shutil.copytree(base, done)
+    real_rename, calls = os.rename, []
+
+    def counting(src, dst):
+        calls.append(src)
+        real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", counting)
+    write(done, new_frame)
+    monkeypatch.setattr(os, "rename", real_rename)
+    new = state(done)
+    renames = len(calls)
+    assert renames >= 4
+
+    for k in range(1, renames + 1):
+        root = str(tmp_path / f"k{k}")
+        shutil.copytree(base, root)
+        seen = []
+
+        def failing(src, dst):
+            seen.append(src)
+            if len(seen) == k:
+                raise OSError(f"injected failure of rename {k}")
+            real_rename(src, dst)
+
+        monkeypatch.setattr(os, "rename", failing)
+        with pytest.raises(OSError, match="injected"):
+            write(root, new_frame)
+        monkeypatch.setattr(os, "rename", real_rename)
+        got = state(root)
+        if whole:
+            assert got in (old, new), k
+        else:
+            for key in old.keys() | new.keys():
+                assert got.get(key) in (old.get(key), new.get(key)), (k, key)
+                if key not in new:
+                    assert got[key] == old[key], (k, key)
+        assert not [d for d in os.listdir(root) if d.startswith("_staging-")], k

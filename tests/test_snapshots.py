@@ -299,7 +299,7 @@ def test_expiry_grace_period_spares_in_flight_commit(spark, tmp_path):
     writer = SnapshotCatalog(str(tmp_path))
     staged_rows = writer._write_files(
         _df(spark, [("w", 2, 20)]), "t", ["part"]
-    )
+    )[0]["t"]
     gone = cat.expire_snapshots("t", keep_last=1, older_than_s=300)
     # aged v1 files reclaimed, fresh staged files spared
     assert gone["data_files"] >= 1

@@ -240,3 +240,24 @@ def test_transfer_checkpoints_each_days_own_rows_in(spark, edge_root, tmp_path):
         for r in CheckpointStore(cloud).metrics("transfer:segments")
     }
     assert got == want
+
+
+def test_failed_transfer_releases_its_cache(spark, edge_root, tmp_path, monkeypatch):
+    """A transfer that fails after caching its chunk leaves no cached
+    block behind, so a retry with the same plan reads the catalogs
+    afresh; the retry then ships every row."""
+    cloud = str(tmp_path / "cloud_retry")
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+
+    def fail(*a, **k):
+        raise RuntimeError("commit failed")
+
+    with monkeypatch.context() as m:
+        m.setattr(TableCatalog, "overwrite_partitions", fail)
+        with pytest.raises(RuntimeError, match="commit failed"):
+            transfer_segments(spark, edge_root, cloud)
+    assert set(jsc.getPersistentRDDs().keys()) == before
+    transfer_segments(spark, edge_root, cloud)
+    assert _sorted_rows(TableCatalog(cloud).read(spark, "segments")) == _sorted_rows(
+        TableCatalog(edge_root).read(spark, "segments"))
